@@ -2,9 +2,11 @@
 
 Baseline: brute-force cosine top-k — broadcast the (small) query set, fused
 array dot products (JVM, codegen'd, no Python), window top-k per query.
-Scale paths with the same scoring tail: random-hyperplane LSH buckets
-(Charikar 2002) and an IVF coarse quantizer (Faiss IVF-Flat layout as a
-DataFrame plan) — both turn neighbor search into an equi-join.
+One exact scale path (``gemm_cosine_topk``: Arrow-batched BLAS candidates,
+exact re-rank) and one approximate path (``ivf_cosine_topk``: an IVF coarse
+quantizer, the Faiss IVF-Flat layout as a DataFrame plan) share the same
+scoring tail. Random-hyperplane LSH buckets (Charikar 2002) are the
+equi-join candidate generator of the near-duplicate paths.
 
 Execution-model notes (learned the hard way, each measured at sf0.1):
 
@@ -25,7 +27,6 @@ Execution-model notes (learned the hard way, each measured at sf0.1):
 
 from __future__ import annotations
 
-import math
 import random
 
 import numpy as np
@@ -74,8 +75,8 @@ def with_vec_inv(df: DataFrame, vec_col: str, vec_out: str, inv_out: str,
     a NaN norm and without the guard a NaN vector would get inv = NaN and
     rank FIRST under ``cosine DESC`` — diverging from both the DuckDB twin
     (where ``CASE WHEN sqrt(...) > 0`` is false for NaN) and the Arrow
-    kernels (where pandas ``isna`` treats it as missing) — r6 review
-    finding. No unit-vector array is materialized (see module notes #3)."""
+    kernels (where pandas ``isna`` treats it as missing). No unit-vector
+    array is materialized (see module notes #3)."""
     staged = df.withColumn(
         vec_out, F.transform(F.col(vec_col), lambda x: x.cast("double")))
     n = _norm(F.col(vec_out), dim)
@@ -129,7 +130,7 @@ def _vec_matrix(series, dim: int) -> "np.ndarray":
     """One (rows × dim) float64 matrix from an Arrow column of vectors —
     NULL rows become zero rows (their NULL ``inv`` already excludes them
     from every score). The ONE construction shared by all BLAS kernels, so
-    NULL handling has a single definition (r6 review finding)."""
+    NULL handling has a single definition."""
     if not len(series):
         return np.zeros((0, dim))
     return np.vstack([
@@ -158,15 +159,15 @@ def _batch_sims(pdf: "pd.DataFrame", id_col: str, q_unit: "np.ndarray",
     sims = _unit_matrix(pdf, "v", "i", dim) @ q_unit.T  # (batch, q)
     sims[null_mask, :] = -np.inf
     # NULL ids can't be forwarded (and np.sort raises TypeError on a
-    # None-bearing object array — r6 advisor finding): drop them, matching
+    # None-bearing object array): drop them, matching
     # the brute-force path, where `id != query_id` null-rejects such rows.
     null_ids = b_ids[null_mask & ~pd.isna(b_ids)]
     return sims, b_ids, np.sort(null_ids)[:k + 1]
 
 
 def _select_topk_candidates(sims, b_ids, null_ids, q_ids, k: int):
-    """Shared per-batch candidate selection of the exact BLAS top-k kernels
-    (``gemm_cosine_topk``, ``knn_join``): for each query, keep everything
+    """Per-batch candidate selection of the exact BLAS top-k kernel
+    (``gemm_cosine_topk``): for each query, keep everything
     within 2e-6 of the batch's k-th best BLAS score (the margin that makes
     the exact re-rank provably lossless — see ``gemm_cosine_topk``), plus
     up to k NULL-vector ids (smallest — their final tiebreak). Self-matches
@@ -230,7 +231,7 @@ def gemm_cosine_topk(base: DataFrame, queries: DataFrame, k: int = 5,
         F.col(query_id_col), "vq", "iq")
     budget = int(spark.conf.get(
         "spark.sql.graft.blasBroadcastRows", str(_BLAS_BROADCAST_ROWS)))
-    # one pass decides AND fetches (see _blas_candidate_pairs — r12)
+    # one pass decides AND fetches (see _blas_candidate_pairs)
     qpdf = qv.limit(budget + 1).toPandas()
     if len(qpdf) > budget:
         raise ValueError(
@@ -265,69 +266,6 @@ def gemm_cosine_topk(base: DataFrame, queries: DataFrame, k: int = 5,
     return _topk(scored, query_id_col, id_col, k)
 
 
-def knn_join(base: DataFrame, queries: DataFrame, k: int = 5,
-             id_col: str = "vec_id", vec_col: str = "embedding",
-             query_id_col: str = "query_id", dim: int = VECTOR_DIM,
-             n_base_blocks: int = 8, n_query_blocks: int = 8) -> DataFrame:
-    """Exact cosine KNN JOIN — top-k base neighbors for EVERY query row when
-    BOTH sides are corpus-scale. Nothing is collected or broadcast: queries
-    block by ``pmod(xxhash64(qid), Bq)``, base by ``pmod(xxhash64(id), Bb)``,
-    and every (query-block × base-block) cell is scored by one cogrouped
-    ``applyInPandas`` task running a single BLAS matmul, emitting per-cell
-    top-k candidates (``_select_topk_candidates`` — same 2e-6 margin and
-    NULL forwarding as ``gemm_cosine_topk``, same losslessness argument:
-    the global top-k per query is contained in the union of its per-cell
-    top-k sets). The exact codegen re-rank then sees O(q·Bb·k) rows, so
-    results are bit-identical to ``cosine_topk`` at any block count.
-
-    Cost model: query rows replicate Bb times, base rows Bq times (shuffle
-    O(nq·Bb + nb·Bq) rows); per-task memory is one cell —
-    O((nq/Bq + nb/Bb)·dim). Pick Bq/Bb so a cell fits an executor. The
-    multiply count O(nq·nb·dim) is inherent to exact KNN; this distributes
-    it across Bq·Bb independent BLAS tasks. A pathological all-NULL/zero
-    QUERY vector ties every base row at score 0 and forwards whole cells as
-    candidates — still exact (ranked NULL-cosine, id ASC), just not pruned.
-    """
-    Bq, Bb = int(n_query_blocks), int(n_base_blocks)
-    if Bq < 1 or Bb < 1:
-        raise ValueError("knn_join: block counts must be >= 1")
-    b = with_vec_inv(base, vec_col, "v", "i", dim).select(
-        F.col(id_col), "v", "i")
-    qv = with_vec_inv(queries, vec_col, "vq", "iq", dim).select(
-        F.col(query_id_col), "vq", "iq")
-    brep = (b.withColumn("__bg", F.pmod(F.xxhash64(F.col(id_col)), F.lit(Bb)))
-            .withColumn("__qg", F.explode(F.sequence(F.lit(0), F.lit(Bq - 1)))))
-    qrep = (qv.withColumn("__qg", F.pmod(F.xxhash64(F.col(query_id_col)),
-                                         F.lit(Bq)))
-            .withColumn("__bg", F.explode(F.sequence(F.lit(0), F.lit(Bb - 1)))))
-    q_type = qv.schema[query_id_col].dataType.simpleString()
-    id_type = b.schema[id_col].dataType.simpleString()
-
-    def score(_key, qpdf, bpdf):
-        if not len(qpdf) or not len(bpdf):
-            return pd.DataFrame({query_id_col: qpdf[query_id_col][:0],
-                                 id_col: bpdf[id_col][:0]})
-        q_ids = qpdf[query_id_col].to_numpy()
-        q_unit = _unit_matrix(qpdf, "vq", "iq", dim)
-        sims, b_ids, null_ids = _batch_sims(bpdf, id_col, q_unit, dim, k)
-        out_q, out_b = _select_topk_candidates(sims, b_ids, null_ids,
-                                               q_ids, k)
-        if not out_q:
-            return pd.DataFrame({query_id_col: q_ids[:0], id_col: b_ids[:0]})
-        return pd.DataFrame({query_id_col: np.concatenate(out_q),
-                             id_col: np.concatenate(out_b)})
-
-    cand = (qrep.groupBy("__qg", "__bg")
-            .cogroup(brep.groupBy("__qg", "__bg"))
-            .applyInPandas(
-                score, schema=f"{query_id_col} {q_type}, {id_col} {id_type}"))
-    scored = (cand.join(b, id_col).join(qv, query_id_col)
-              .filter(F.col(id_col) != F.col(query_id_col))
-              .withColumn("cosine", _cosine(F.col("v"), F.col("vq"),
-                                            F.col("i"), F.col("iq"), dim)))
-    return _topk(scored, query_id_col, id_col, k)
-
-
 def _blas_candidate_pairs(v: DataFrame, id_col: str, threshold: float,
                           dim: int) -> DataFrame:
     """EXACT candidate generation for all-pairs cosine ≥ threshold via
@@ -354,15 +292,14 @@ def _blas_candidate_pairs(v: DataFrame, id_col: str, threshold: float,
     spark = v.sparkSession
     budget = int(spark.conf.get(
         "spark.sql.graft.blasBroadcastRows", str(_BLAS_BROADCAST_ROWS)))
-    # ONE pass decides AND fetches (r12 — the dedup_clusters r6 lesson
-    # applied to every BLAS build-side collect): the former separate
-    # limit(budget+1).count() probe paid a full extra job over the build
-    # relation per call — at corpus scale a whole scan just to count.
-    # limit+collect early-exits a few rows past the budget instead.
+    # ONE pass decides AND fetches: a separate limit(budget+1).count()
+    # probe would pay a full extra job over the build relation per call —
+    # at corpus scale a whole scan just to count. limit+collect
+    # early-exits a few rows past the budget instead.
     # Collect ONLY the scoring columns: with_vec_inv keeps every source
     # column, and an un-projected collect would haul raw embeddings plus
     # arbitrary payloads (text!) to the driver, making the row-count budget
-    # guard wildly underestimate bytes (r5 review finding)
+    # guard wildly underestimate bytes
     build = v.select(id_col, "v", "i").limit(budget + 1).toPandas()
     if len(build) > budget:
         raise ValueError(
@@ -390,7 +327,7 @@ def _blas_candidate_pairs(v: DataFrame, id_col: str, threshold: float,
             yield pd.DataFrame({"id_a": a_ids[rows_i], "id_b": b_ids[cols_j]})
 
     # pair schema follows the actual id type — a hardcoded 'long' would
-    # crash string-keyed corpora (same r4 finding as _cluster_blas_pairs)
+    # crash string-keyed corpora
     id_type = v.schema[id_col].dataType.simpleString()
     return v.select(id_col, "v", "i").mapInPandas(
         score, schema=f"id_a {id_type}, id_b {id_type}")
@@ -503,7 +440,7 @@ def _exact_verify_tail(cand: DataFrame, a: DataFrame, b: DataFrame,
     """THE exact-verification tail — one definition for the self-pair AND
     bipartite candidate generators, so the verify-tail convention
     (codegen'd flat dot chain, UNROUNDED ``>= threshold`` filter, rounded
-    projection — ADVICE r2) cannot drift between families. ``a`` must
+    projection) cannot drift between families. ``a`` must
     carry ``(a_id, va, ia)``, ``b`` ``(b_id, vb, ib)``.
     ``broadcast_cand`` hints the candidate side so a corpus-sized ``a``
     streams map-side through the join (candidates are margin-hit-sized;
@@ -548,7 +485,7 @@ def _plane_sign_bits(v, seed: int, n_planes: int, dim: int):
     fold form matters operationally: the flattened n_planes×dim
     multiply-add chain blows Spark's single-expression codegen budget and
     silently drops to interpreted evaluation — measured 7.0 s vs 0.4 s
-    for 16×64 over 5.7k rows at sf0.1 (r6 bench finding)."""
+    for 16×64 over 5.7k rows at sf0.1."""
     planes = hyperplanes(seed, n_planes, dim)
     sig = None
     for i, p in enumerate(planes):
@@ -590,11 +527,11 @@ def _multi_table_buckets(df: DataFrame, id_col: str, vec_col: str,
     Janino-compile-bound: ~2 s per extra table per stage at dim=64 —
     compile cost, not data cost. Map-only; constant-time in the plan.
 
-    ``fold`` (r11 — the oracle-portable config, the minhash ``md5``
+    ``fold`` (the oracle-portable config, the minhash ``md5``
     precedent): per-table plane dots with LEFT-ASSOCIATED index-order
     accumulation whose SIGNS a DuckDB literal chain reproduces (the
     ``embedding_lsh_near_dup`` parity argument; BLAS blocked summation
-    carries no such guarantee near zero dots). Since r12 the fold
+    carries no such guarantee near zero dots). The fold
     signatures are computed by an Arrow kernel whose ``np.cumsum``
     prefix scan performs the IDENTICAL float64 addition sequence as the
     ``aggregate(zip_with(...))`` expressions it replaces — same
@@ -614,7 +551,7 @@ def _multi_table_buckets(df: DataFrame, id_col: str, vec_col: str,
 
     ``carry`` names extra ``df`` columns to keep on the exploded rows
     (so callers like the signature-index builder need no corpus-sized
-    join-back — r6 review finding)."""
+    join-back)."""
     if sig_mode not in ("arrow", "fold"):
         raise ValueError(
             f"_multi_table_buckets: sig_mode={sig_mode!r} not in "
@@ -671,34 +608,6 @@ def _multi_table_buckets(df: DataFrame, id_col: str, vec_col: str,
         F.posexplode(F.col("__sigs")).alias("table", "bucket")))
 
 
-def lsh_cosine_topk(base: DataFrame, queries: DataFrame, k: int = 5,
-                    id_col: str = "vec_id", vec_col: str = "embedding",
-                    query_id_col: str = "query_id", n_planes: int = 8,
-                    n_tables: int = 4, dim: int = VECTOR_DIM) -> DataFrame:
-    """LSH-bucketed approximate top-k: candidates = base vectors sharing any
-    table's bucket with the query, then exact cosine rank on candidates.
-
-    With b bits/table and t tables, expected candidate fraction ≈
-    t·2^(−b)·(collision skew) — the knob for the recall/cost tradeoff.
-    """
-    bb = _multi_table_buckets(base, id_col, vec_col, n_planes, n_tables, dim)
-    qb = _multi_table_buckets(queries, query_id_col, vec_col, n_planes,
-                              n_tables, dim)
-    cands = (bb.join(F.broadcast(qb), ["table", "bucket"])
-             .select(id_col, query_id_col).distinct())
-    b = with_vec_inv(base, vec_col, "vb", "ib", dim).select(
-        F.col(id_col), "vb", "ib")
-    q = with_vec_inv(queries, vec_col, "vq", "iq", dim).select(
-        F.col(query_id_col), "vq", "iq")
-    scored = (
-        cands.join(b, id_col).join(F.broadcast(q), query_id_col)
-        .filter(F.col(id_col) != F.col(query_id_col))
-        .withColumn("cosine", _cosine(F.col("vb"), F.col("vq"),
-                                      F.col("ib"), F.col("iq"), dim))
-    )
-    return _topk(scored, query_id_col, id_col, k)
-
-
 def fit_ivf_centroids(base: DataFrame, vec_col: str = "embedding",
                       n_centroids: int = 16, seed: int = 42,
                       max_iter: int = 8, sample_size: int = 100_000,
@@ -722,7 +631,7 @@ def fit_ivf_centroids(base: DataFrame, vec_col: str = "embedding",
 
 def _sample_unit_matrix(base: DataFrame, vec_col: str, seed: int,
                         sample_size: int, dim: int) -> np.ndarray:
-    """Shared training preamble of the IVF and PQ fits: one corpus-wide
+    """Training preamble of the IVF fit: one corpus-wide
     Bernoulli sample of UNIT vectors as a numpy matrix (codebooks are
     KB-scale — only a sample is needed). Null and zero-norm vectors are
     excluded: they have no direction to train on."""
@@ -746,7 +655,7 @@ def _sample_unit_matrix(base: DataFrame, vec_col: str, seed: int,
               & (np.linalg.norm(x, axis=1) > 0.5)]
     if not len(x):
         # an empty training matrix would crash np.argmax deep inside the
-        # k-means loop with an obscure shape error (r5 review finding) —
+        # k-means loop with an obscure shape error —
         # fail at the boundary with the actual cause instead
         raise ValueError(
             "no trainable vectors: the corpus sample is empty or every "
@@ -842,423 +751,6 @@ def ivf_cosine_topk(base: DataFrame, queries: DataFrame, k: int = 5,
     return _topk(scored, query_id_col, id_col, k)
 
 
-def fit_pq_codebooks(base: DataFrame, vec_col: str = "embedding",
-                     n_subspaces: int = 8, n_codes: int = 16, seed: int = 42,
-                     max_iter: int = 8, sample_size: int = 100_000,
-                     dim: int = VECTOR_DIM) -> list[list[list[float]]]:
-    """Product-quantization codebooks (Jégou, Douze, Schmid 2011, "Product
-    Quantization for Nearest Neighbor Search" — the public PQ recipe): the
-    UNIT vector splits into ``n_subspaces`` contiguous sub-vectors; each
-    subspace gets its own ``n_codes``-centroid k-means codebook, trained
-    driver-side in numpy over the same corpus-wide Bernoulli sample as the
-    IVF fit (codebooks are KB-scale; a distributed fit would launch
-    max_iter jobs to compute a few KB). Unit vectors (not raw) so the ADC
-    inner product approximates COSINE.
-    """
-    if dim % n_subspaces:
-        raise ValueError(f"dim {dim} not divisible by {n_subspaces} subspaces")
-    x = _sample_unit_matrix(base, vec_col, seed, sample_size, dim)
-    return _fit_pq_from_matrix(x, n_subspaces, n_codes, seed, max_iter, dim)
-
-
-def _fit_pq_from_matrix(x: np.ndarray, n_subspaces: int, n_codes: int,
-                        seed: int, max_iter: int,
-                        dim: int) -> list[list[list[float]]]:
-    sub = dim // n_subspaces
-    rng = np.random.RandomState(seed)
-    books: list[list[list[float]]] = []
-    for j in range(n_subspaces):
-        xs = x[:, j * sub:(j + 1) * sub]
-        k = min(n_codes, len(xs))
-        cent = xs[rng.choice(len(xs), size=k, replace=False)].copy()
-        for _ in range(max_iter):
-            # nearest by L2: argmin ||x−c||² = argmax (x·c − ||c||²/2)
-            d = xs @ cent.T - 0.5 * (cent * cent).sum(axis=1)[None, :]
-            assign = np.argmax(d, axis=1)
-            for c in range(k):
-                members = xs[assign == c]
-                if len(members):
-                    cent[c] = members.mean(axis=0)
-        books.append([list(map(float, c)) for c in cent])
-    return books
-
-
-def pq_encode(df: DataFrame, codebooks: list[list[list[float]]],
-              id_col: str = "vec_id", vec_col: str = "embedding",
-              dim: int = VECTOR_DIM) -> DataFrame:
-    """Encode every vector to ``n_subspaces`` codebook indices:
-    ``(id, codes array<int>)`` — at 8 subspaces × 256 codes that is 8 bytes
-    per vector, the ~32× compression that lets a 100 TB embedding store
-    scan memory-resident. Map-only Arrow pass (one small matmul per
-    subspace per batch, codebooks closed over as numpy constants); no
-    shuffle — encoding streams with the scan, same scale shape as the IVF
-    assignment.
-
-    Null and zero-norm vectors encode to NULL codes (they have no cosine
-    direction) — the ADC scorers skip them, matching the exact paths'
-    behavior of surfacing such rows as NULL cosine that never makes top-k.
-    """
-    mats = [np.asarray(b, dtype=np.float64) for b in codebooks]
-    n_sub = len(mats)
-    sub = dim // n_sub
-
-    @F.pandas_udf("array<int>")
-    def encode(emb: pd.Series) -> pd.Series:
-        vals = [None if v is None else np.asarray(v, dtype=np.float64)
-                for v in emb]
-        valid = [i for i, v in enumerate(vals)
-                 if v is not None and v.shape == (dim,)
-                 and np.linalg.norm(v) > 0]
-        out: list = [None] * len(vals)
-        if valid:
-            m = np.vstack([vals[i] for i in valid])
-            m = m / np.linalg.norm(m, axis=1)[:, None]
-            codes = np.empty((len(m), n_sub), dtype=np.int32)
-            for j, cb in enumerate(mats):
-                xs = m[:, j * sub:(j + 1) * sub]
-                d = xs @ cb.T - 0.5 * (cb * cb).sum(axis=1)[None, :]
-                codes[:, j] = np.argmax(d, axis=1)
-            for row_i, i in enumerate(valid):
-                out[i] = codes[row_i]
-        return pd.Series(out)
-
-    return df.select(F.col(id_col), encode(F.col(vec_col)).alias("codes"))
-
-
-def pq_encode_fold(df: DataFrame, codebooks: list[list[list[float]]],
-                   id_col: str = "vec_id", vec_col: str = "embedding",
-                   dim: int = VECTOR_DIM,
-                   q_scale: int = 1 << 20) -> DataFrame:
-    """Bit-portable twin of :func:`pq_encode`'s code-assignment DECISION
-    (r10 VERDICT item 7 — the ``logreg_gate_fold`` recipe applied to the
-    PQ family): per subspace j and code c, the fixed-point score
-    ``z_q(c) = Σ_i floor(((v_i · inv) · cb[c][i]) · Q) +
-    floor(−0.5·‖cb[c]‖²·Q)`` — each term ONE deterministic IEEE product
-    chain (portable), the sum BIGINT (associativity-free) — and the code
-    is the argmax with ties to the LOWEST index (np.argmax's rule).
-    Emits ``(id, code0..code{n_sub−1})``; NULL/zero-norm/wrong-length
-    vectors emit NULL codes (the ``pq_encode`` convention — their NULL
-    ``inv`` NULLs every score). Production encoding stays on the Arrow
-    kernel (:func:`pq_encode`, whose float argmax this fold matches
-    whenever the top-2 scores are separated beyond quantization — the
-    planted-codebook unit asserts exact agreement on real data);
-    :func:`pq_encode_fold_sql` is the DuckDB twin built from the SAME
-    codebook constants. Map-only expressions, no Python, no shuffle."""
-    n_sub = len(codebooks)
-    sub = dim // n_sub
-    staged = with_vec_inv(df, vec_col, "__pqv", "__pqi", dim)
-    cols = [F.col(id_col)]
-    for j, cb in enumerate(codebooks):
-        scores = []
-        for cent in cb:
-            bias = math.floor(-0.5 * sum(x * x for x in cent) * q_scale)
-            z = F.lit(int(bias)).cast("long")
-            for i in range(sub):
-                term = F.floor(
-                    F.get(F.col("__pqv"), j * sub + i) * F.col("__pqi")
-                    * F.lit(float(cent[i])) * F.lit(float(q_scale))
-                ).cast("long")
-                z = z + term
-            scores.append(z)
-        code = None
-        for c in range(len(cb) - 1):
-            cond = None
-            for m in range(c + 1, len(cb)):
-                ge = scores[c] >= scores[m]
-                cond = ge if cond is None else (cond & ge)
-            code = (F.when(cond, F.lit(c)) if code is None
-                    else code.when(cond, F.lit(c)))
-        code = code.otherwise(F.lit(len(cb) - 1))
-        cols.append(F.when(F.col("__pqi").isNull()
-                           | (F.size(F.col("__pqv")) != dim),
-                           F.lit(None).cast("int"))
-                    .otherwise(code.cast("int")).alias(f"code{j}"))
-    return staged.select(*cols)
-
-
-def pq_encode_fold_sql(codebooks: list[list[list[float]]],
-                       dim: int = VECTOR_DIM, q_scale: int = 1 << 20,
-                       id_expr: str = "vec_id",
-                       vec_expr: str = "embedding",
-                       table: str = "embeddings") -> str:
-    """DuckDB twin of :func:`pq_encode_fold` from the SAME codebook
-    constants: identical ``((v_i · inv) · w) · Q`` product order per
-    term, BIGINT sums, identical ties-to-lowest CASE argmax."""
-    n_sub = len(codebooks)
-    sub = dim // n_sub
-    # isfinite conjunct mirrors with_vec_inv's ~isnan / < inf guard: an
-    # Inf-norm vector must yield NULL codes (not inv=0.0 → Inf·0 = NaN
-    # score terms whose CAST(FLOOR(NaN) AS BIGINT) errors in DuckDB) —
-    # r11 advisor finding.
-    inv = ("CASE WHEN isfinite(list_dot_product(ve, ve)) "
-           "AND sqrt(list_dot_product(ve, ve)) > 0 "
-           "THEN 1.0 / sqrt(list_dot_product(ve, ve)) END")
-    outs = []
-    for j, cb in enumerate(codebooks):
-        zs = []
-        for cent in cb:
-            bias = math.floor(-0.5 * sum(x * x for x in cent) * q_scale)
-            chain = " + ".join(
-                f"CAST(FLOOR(ve[{j * sub + i + 1}] * inv * {cent[i]!r} "
-                f"* {float(q_scale)!r}) AS BIGINT)"
-                for i in range(sub))
-            zs.append(f"(CAST({bias} AS BIGINT) + {chain})")
-        whens = " ".join(
-            "WHEN " + " AND ".join(f"z{j}_{c} >= z{j}_{m}"
-                                   for m in range(c + 1, len(cb)))
-            + f" THEN {c}" for c in range(len(cb) - 1))
-        outs.append((
-            ", ".join(f"{z} AS z{j}_{c}" for c, z in enumerate(zs)),
-            f"CASE WHEN inv IS NULL THEN NULL ELSE "
-            f"CASE {whens} ELSE {len(cb) - 1} END END AS code{j}"))
-    zcols = ",\n             ".join(o[0] for o in outs)
-    codes = ",\n           ".join(o[1] for o in outs)
-    return f"""
-    WITH v AS (
-      SELECT {id_expr} AS vec_id,
-             list_transform({vec_expr}, x -> CAST(x AS DOUBLE)) AS ve
-      FROM {table}
-    ), nv AS (
-      SELECT vec_id, ve,
-             CASE WHEN ve IS NULL OR len(ve) <> {dim} THEN NULL
-                  ELSE {inv} END AS inv
-      FROM v
-    ), z AS (
-      SELECT vec_id, inv,
-             {zcols}
-      FROM nv
-    )
-    SELECT vec_id,
-           {codes}
-    FROM z
-    """
-
-
-def _assign_and_encode_residual(df: DataFrame, centroids: list[list[float]],
-                                codebooks: list[list[list[float]]],
-                                id_col: str, vec_col: str,
-                                dim: int) -> DataFrame:
-    """Fused coarse assignment + RESIDUAL PQ encoding in ONE Arrow pass:
-    ``(id, cid, codes)`` where ``codes`` quantize ``unit(v) −
-    centroid[cid]`` — the Faiss IVFPQ residual layout. Map-only (both the
-    centroid matmul and the per-subspace codebook matmuls close over
-    KB-scale numpy constants); null and zero-norm vectors get NULL
-    cid/codes, matching ``pq_encode``'s convention."""
-    cmat = np.asarray(centroids, dtype=np.float64)
-    mats = [np.asarray(b, dtype=np.float64) for b in codebooks]
-    n_sub = len(mats)
-    sub = dim // n_sub
-
-    @F.pandas_udf("struct<cid:int, codes:array<int>>")
-    def enc(emb: pd.Series) -> pd.DataFrame:
-        vals = [None if v is None else np.asarray(v, dtype=np.float64)
-                for v in emb]
-        valid = [i for i, v in enumerate(vals)
-                 if v is not None and v.shape == (dim,)
-                 and np.linalg.norm(v) > 0]
-        cid_out: list = [None] * len(vals)
-        codes_out: list = [None] * len(vals)
-        if valid:
-            m = np.vstack([vals[i] for i in valid])
-            m = m / np.linalg.norm(m, axis=1)[:, None]
-            cids = np.argmax(m @ cmat.T, axis=1)
-            res = m - cmat[cids]
-            codes = np.empty((len(m), n_sub), dtype=np.int32)
-            for j, cb in enumerate(mats):
-                xs = res[:, j * sub:(j + 1) * sub]
-                d = xs @ cb.T - 0.5 * (cb * cb).sum(axis=1)[None, :]
-                codes[:, j] = np.argmax(d, axis=1)
-            for row_i, i in enumerate(valid):
-                cid_out[i] = int(cids[row_i])
-                codes_out[i] = codes[row_i]
-        return pd.DataFrame({"cid": cid_out, "codes": codes_out})
-
-    return (df.select(F.col(id_col), enc(F.col(vec_col)).alias("__e"))
-            .select(F.col(id_col), F.col("__e.cid").alias("cid"),
-                    F.col("__e.codes").alias("codes")))
-
-
-def _query_luts(queries: DataFrame, codebooks: list[list[list[float]]],
-                query_id_col: str, vec_col: str,
-                dim: int) -> tuple[np.ndarray, np.ndarray]:
-    """Per-query ADC lookup tables: ``(q_ids, luts, qm)`` with
-    ``luts[q][j][code] = q̂_subⱼ · codewordⱼ`` — one (n_queries × n_codes)
-    matmul per subspace, shared by both ADC scorers — plus the unit query
-    matrix ``qm`` (the residual IVF-PQ path needs ``q̂ · centroid`` terms).
-    Null and zero-norm queries are EXCLUDED (no cosine direction): the
-    exact paths surface them as NULL cosine that sorts last; the PQ paths
-    simply emit no rows for them."""
-    mats = [np.asarray(b, dtype=np.float64) for b in codebooks]
-    n_sub = len(mats)
-    sub = dim // n_sub
-    qrows = [r for r in
-             (with_vec_inv(queries, vec_col, "vq", "iq", dim)
-              .select(F.col(query_id_col), "vq", "iq").collect())
-             if r["vq"] is not None and r["iq"] is not None]
-    if not qrows:
-        n_codes = max((len(b) for b in codebooks), default=0)
-        return (np.asarray([], dtype=object),
-                np.zeros((0, n_sub, n_codes)), np.zeros((0, dim)))
-    # raw id values (object dtype): int-keyed corpora hash-match numpy
-    # int64s against python ints, and string/other key types pass through
-    # untouched instead of crashing int() (r5 review finding)
-    q_ids = np.asarray([r[0] for r in qrows], dtype=object)
-    qm = (np.asarray([list(r["vq"]) for r in qrows], dtype=np.float64)
-          * np.asarray([float(r["iq"]) for r in qrows])[:, None])
-    luts = np.stack([qm[:, j * sub:(j + 1) * sub] @ mats[j].T
-                     for j in range(n_sub)], axis=1)
-    return q_ids, luts, qm
-
-
-def pq_adc_topk(base_codes: DataFrame, queries: DataFrame,
-                codebooks: list[list[list[float]]], k: int = 5,
-                id_col: str = "vec_id", vec_col: str = "embedding",
-                query_id_col: str = "query_id",
-                dim: int = VECTOR_DIM) -> DataFrame:
-    """Asymmetric-distance (ADC) top-k over PQ codes: per query, precompute
-    lookup tables ``LUT[j][code] = q̂_subⱼ · codewordⱼ``; a base vector's
-    approximate cosine is then ``Σⱼ LUT[j][codes[j]]`` — table lookups and
-    adds only, never touching the original floats (Jégou et al. 2011 ADC).
-
-    Plan shape: queries are tiny → their LUTs broadcast (numpy closure);
-    ONE ``mapInPandas`` over the codes table scores every (base, query)
-    pair at m adds each — the compressed-domain brute-force scan — and a
-    window keeps the top-k per query. Map-only until the final (tiny)
-    top-k shuffle; composes with IVF (probe lists first, ADC-score the
-    candidates) when even the compressed scan is too much. Null-code base
-    rows are skipped; null/zero-norm queries produce no rows (see
-    ``_query_luts``).
-    """
-    n_sub = len(codebooks)
-    q_ids, luts, _ = _query_luts(queries, codebooks, query_id_col, vec_col,
-                                 dim)
-
-    # id types follow the inputs — hardcoded 'long' would crash
-    # string-keyed corpora (r5 review finding, same class as
-    # _cluster_blas_pairs' r4 fix)
-    id_type = base_codes.schema[id_col].dataType.simpleString()
-    q_type = queries.schema[query_id_col].dataType.simpleString()
-    out_schema = f"{query_id_col} {q_type}, {id_col} {id_type}, adc_score double"
-
-    def score(batches):
-        for pdf in batches:
-            keep = pdf["codes"].notna().to_numpy()
-            ids = pdf[id_col].to_numpy()[keep]
-            if not len(ids) or not len(q_ids):
-                continue
-            codes = np.vstack(pdf["codes"].to_numpy()[keep])  # (n, n_sub)
-            # gather per subspace: (n_queries, n_batch) accumulated
-            s = np.zeros((len(q_ids), len(ids)))
-            for j in range(n_sub):
-                s += luts[:, j, :][:, codes[:, j]]
-            qi, bi = np.indices(s.shape)
-            yield pd.DataFrame({
-                query_id_col: q_ids[qi.ravel()],
-                id_col: ids[bi.ravel()],
-                "adc_score": s.ravel(),
-            })
-
-    scored = base_codes.mapInPandas(score, out_schema)
-    scored = scored.filter(F.col(id_col) != F.col(query_id_col))
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("adc_score").desc(), F.col(id_col))
-    return (scored.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") <= k)
-            .select(query_id_col, id_col,
-                    F.round("adc_score", 6).alias("adc_score")))
-
-
-def ivfpq_cosine_topk(base: DataFrame, queries: DataFrame, k: int = 5,
-                      id_col: str = "vec_id", vec_col: str = "embedding",
-                      query_id_col: str = "query_id", n_centroids: int = 16,
-                      nprobe: int = 4, n_subspaces: int = 8,
-                      n_codes: int = 16, seed: int = 42,
-                      residual: bool = False,
-                      dim: int = VECTOR_DIM) -> DataFrame:
-    """IVF-PQ approximate top-k — the Faiss IVFPQ composition, the standard
-    billion-scale ANN layout: the coarse IVF quantizer routes each vector
-    to an inverted list (scan fraction ≈ nprobe/n_centroids), and PQ/ADC
-    scores the candidates in the compressed domain (8 code bytes per
-    vector, table lookups instead of float dot products). Both stages reuse
-    the standalone IVF and PQ machinery, so their individual contracts
-    (map-only assignment/encoding, equi-join candidates, null/zero-vector
-    exclusion) carry over unchanged — and both fits train from ONE shared
-    corpus sample (not two sampling passes).
-
-    ``residual=True`` is the full Jégou et al. 2011 §IV / Faiss layout: PQ
-    quantizes each vector's RESIDUAL to its coarse centroid (``unit(v) −
-    c``), whose variance is far below the raw unit vectors' — so the same
-    code budget reconstructs more accurately and recall rises. Scoring
-    stays ADC: ``q·v = q·c + q·r ≈ q·c_cid + Σⱼ LUT[j][codeⱼ]`` — the
-    LUTs are unchanged (residual codebooks are global, not per-list) plus
-    one per-candidate ``q̂·centroid`` lookup from a (queries × centroids)
-    table; assignment and residual encoding fuse into ONE map-only Arrow
-    pass (``_assign_and_encode_residual``). ``residual=False`` keeps the
-    simpler raw-unit-vector quantization (the r4 form, unit-pinned).
-    """
-    if dim % n_subspaces:
-        raise ValueError(f"dim {dim} not divisible by {n_subspaces} subspaces")
-    x = _sample_unit_matrix(base, vec_col, seed, 100_000, dim)
-    centroids = _fit_ivf_from_matrix(x, n_centroids, seed, max_iter=8)
-    if residual:
-        cmat = np.asarray(centroids, dtype=np.float64)
-        x_assign = np.argmax(x @ cmat.T, axis=1)
-        books = _fit_pq_from_matrix(x - cmat[x_assign], n_subspaces,
-                                    n_codes, seed, 8, dim)
-        coded = _assign_and_encode_residual(base, centroids, books,
-                                            id_col, vec_col, dim)
-        b_assign = coded.select(id_col, "cid")
-    else:
-        books = _fit_pq_from_matrix(x, n_subspaces, n_codes, seed, 8, dim)
-        coded = pq_encode(base, books, id_col, vec_col, dim)
-        b_assign = _nearest_centroids(base.select(id_col, vec_col), id_col,
-                                      vec_col, centroids, nprobe=1)
-    q_probe = _nearest_centroids(queries.select(query_id_col, vec_col),
-                                 query_id_col, vec_col, centroids,
-                                 nprobe=nprobe)
-    cands = (b_assign.join(F.broadcast(q_probe), "cid")
-             .select(id_col, query_id_col, "cid")
-             .filter(F.col(id_col) != F.col(query_id_col)))
-
-    n_sub = len(books)
-    q_ids, luts, qm = _query_luts(queries, books, query_id_col, vec_col, dim)
-    q_index = {q: i for i, q in enumerate(q_ids)}  # raw ids (see _query_luts)
-    # (queries × centroids) dot table for the residual form's q·c term
-    qc = (qm @ np.asarray(centroids, dtype=np.float64).T
-          if residual and len(qm) else None)
-
-    @F.pandas_udf("double")
-    def adc(qids: pd.Series, code_arrs: pd.Series,
-            cids: pd.Series) -> pd.Series:
-        if not len(qids):
-            return pd.Series([], dtype="float64")
-        qi = np.asarray([q_index[q] for q in qids])
-        codes_m = np.vstack(code_arrs.to_numpy())
-        s = np.zeros(len(qi))
-        for j in range(n_sub):
-            s += luts[qi, j, codes_m[:, j]]
-        if qc is not None:
-            s += qc[qi, cids.to_numpy(dtype=np.int64)]
-        return pd.Series(s)
-
-    valid_q = list(q_ids)
-    if not valid_q:  # every query null/zero-norm → empty result, same schema
-        cands = cands.filter(F.lit(False))
-        valid_q = [None]
-    join_cols = [id_col, "cid"] if residual else [id_col]
-    scored = (cands.filter(F.col(query_id_col).isin(valid_q))
-              .join(coded, join_cols)
-              .filter(F.col("codes").isNotNull())
-              .withColumn("adc_score", adc(F.col(query_id_col),
-                                           F.col("codes"), F.col("cid"))))
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("adc_score").desc(), F.col(id_col))
-    return (scored.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") <= k)
-            .select(query_id_col, id_col,
-                    F.round("adc_score", 6).alias("adc_score")))
-
-
 def _cluster_blas_pairs(v_cid: DataFrame, id_col: str, threshold: float,
                         dim: int) -> DataFrame:
     """Within-cluster candidate pairs via ONE GEMM per cluster:
@@ -1272,7 +764,7 @@ def _cluster_blas_pairs(v_cid: DataFrame, id_col: str, threshold: float,
     SemDeDup knob), exactly like a grouped-agg task."""
     margin = threshold - 1e-6
     # pair schema follows the actual id type — a hardcoded 'long' would
-    # crash string-keyed corpora (r4 review finding)
+    # crash string-keyed corpora
     id_type = v_cid.schema[id_col].dataType.simpleString()
 
     def score(key, pdf):
@@ -1316,7 +808,7 @@ def semantic_dedup(df: DataFrame, threshold: float = 0.95,
     answer (one cluster = full GEMM) — pinned by unit test.
 
     ``cluster_driver_budget`` forwards to ``dedup_clusters``'s
-    driver-union-find fast path (r12): near-dup pair lists are usually
+    driver-union-find fast path: near-dup pair lists are usually
     tiny relative to the corpus, and the iterative pointer-jumping
     machinery costs several fixed join+checkpoint jobs per call —
     ``incremental_semantic_dedup`` and ``prepare_training_corpus``
@@ -1354,12 +846,13 @@ def cosine_cross_pairs(left: DataFrame, right: DataFrame,
 
     Default plan collects the RIGHT side as the GEMM build matrix (budget-
     guarded like ``_blas_candidate_pairs`` — right is typically the small
-    benchmark). ``n_blocks=B`` switches to the cogrouped block-pair form
-    (the ``knn_join`` machinery with threshold emission instead of top-k):
-    nothing collected, per-task memory one (left-block × right-block)
-    cell, for the regime where BOTH sides are corpus-scale. Both paths
-    emit with the standard 1e-6 BLAS margin and share one exact codegen
-    verify tail — results are bit-identical to a theta cross-join.
+    benchmark). ``n_blocks=B`` switches to a cogrouped block-pair form
+    (``pmod(xxhash64(id), B)`` blocks on each side, one BLAS matmul per
+    block pair, threshold emission): nothing collected, per-task memory one
+    (left-block × right-block) cell, for the regime where BOTH sides are
+    corpus-scale. Both paths emit with the standard 1e-6 BLAS margin and
+    share one exact codegen verify tail — results are bit-identical to a
+    theta cross-join.
     """
     if left_id == right_id:
         raise ValueError(
@@ -1378,7 +871,7 @@ def cosine_cross_pairs(left: DataFrame, right: DataFrame,
     if n_blocks is not None:
         B = int(n_blocks)
         if B < 1:
-            # same guard as blocked_gemm_pairs/knn_join: pmod(x, 0) dies
+            # same guard as blocked_gemm_pairs: pmod(x, 0) dies
             # deep in the job under ANSI (or NULL-keys to an EMPTY result
             # without it — a fully contaminated corpus reported clean)
             raise ValueError("cosine_cross_pairs: n_blocks must be >= 1")
@@ -1408,7 +901,7 @@ def cosine_cross_pairs(left: DataFrame, right: DataFrame,
     else:
         budget = int(spark.conf.get(
             "spark.sql.graft.blasBroadcastRows", str(_BLAS_BROADCAST_ROWS)))
-        # one pass decides AND fetches (see _blas_candidate_pairs — r12)
+        # one pass decides AND fetches (see _blas_candidate_pairs)
         rpdf = rv.limit(budget + 1).toPandas()
         if len(rpdf) > budget:
             raise ValueError(
@@ -1500,13 +993,13 @@ def _nearest_centroid_fold(df: DataFrame, id_col: str, vec_col: str,
     """Exact-config assignment twin of :func:`_nearest_centroids` for
     oracle-checkable configurations: each centroid dot is a fold-form
     expression (the ``_plane_sign_bits`` convention — left-associated,
-    index-order accumulation; r7 note: SQL engines may reassociate long
+    index-order accumulation; SQL engines may reassociate long
     float chains by ~ulps, so parity is of the COMPARISONS these dots
     feed, not the raw values — see ``_lsh_bucket_oracle``) and
     the argmax is a sequential CASE with ties to the LOWER cid (matching
     the production kernel's stable argsort). NULL **and wrong-length**
     vectors assign to cid 0, exactly like the kernel's zero-row
-    convention (r7 advisor finding: without the explicit length override
+    convention (without the explicit length override
     a truncated vector's NULL dots fell through every WHEN to the ELSE —
     cid k-1 — silently diverging from the gemm twin). Interpreted-expression
     cost is the price of bit-portability — production assignment stays on
@@ -1517,8 +1010,8 @@ def _nearest_centroid_fold(df: DataFrame, id_col: str, vec_col: str,
     top-1 minus top-2 centroid dot (NULL for malformed rows) — the
     separation a cross-engine oracle needs to be SAFE against chain
     reassociation (an assignment can only flip between engines when the
-    top-2 dots are within reassociation ulps of equal; see the r7 advisor
-    note on the data-dependent centroid2 stage)."""
+    top-2 dots are within reassociation ulps of equal, as in the
+    data-dependent centroid2 stage)."""
     v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
     k = len(centroids)
     dots = []
@@ -1573,19 +1066,18 @@ def cluster_balanced_sample(df: DataFrame, quota_per_cluster: int,
     bias the sample toward early files), so GIVEN an assignment the kept
     set is rerun-, repartition-, and engine-stable. The codebook fit is
     seeded but trains on a Bernoulli SAMPLE whose composition follows the
-    input partitioning (shared property of all the IVF/PQ fits) — so
+    input partitioning (a property of the IVF fit) — so
     cluster ids are arbitrary labels, and a repartitioned input may draw
     different boundaries and hence a different (equally valid) sample;
     the quota cap and full-coverage flags hold under ANY assignment
     (unit-pinned). Pin the input layout where byte-stable reruns across
     relayouts matter. Ids are assumed unique (they key the flag join).
 
-    Plan (r8 — the r7 verdict's one confirmed wrong-at-100x shape,
-    fixed): quota selection is TWO-PHASE. The old single-window form
-    (``Window.partitionBy(cid)`` + ``row_number`` over the corpus)
-    shuffled EVERY row into exactly k reducer partitions and fully
-    sorted each cluster — at 100 TB, a handful of monster tasks each
-    sorting terabytes when only ``quota`` rows per cluster matter. Now:
+    Plan: quota selection is TWO-PHASE. A single-window form
+    (``Window.partitionBy(cid)`` + ``row_number`` over the corpus) would
+    shuffle EVERY row into exactly k reducer partitions and fully sort
+    each cluster — at 100 TB, a handful of monster tasks each sorting
+    terabytes when only ``quota`` rows per cluster matter. Instead:
     (1) a map-only per-input-partition prune keeps the ``quota`` best
     (hash-rank) rows per cid — at most quota·k rows per partition
     survive, NO exchange; (2) the global per-cid rank runs over that
@@ -1601,10 +1093,10 @@ def cluster_balanced_sample(df: DataFrame, quota_per_cluster: int,
     the ``ngram_jaccard_pairs`` convention) because the candidate branch
     and the flag join both consume it; re-deriving it would rescan the
     raw vector column. The machinery is the GENERIC
-    :func:`..sampling.balanced_sample_by_key` (r8) — the same operator
+    :func:`..sampling.balanced_sample_by_key` — the same operator
     caps domains or languages when the key is a string instead of a cid.
 
-    ``centroids`` (r7): a caller-supplied codebook skips the fit — the
+    ``centroids``: a caller-supplied codebook skips the fit — the
     PLANTED-constants configuration (:func:`planted_centroids`) that makes
     the row fully deterministic and SQL-expressible. ``assign='fold'``
     swaps the BLAS kernel for the bit-portable fold-expression twin
@@ -1613,7 +1105,7 @@ def cluster_balanced_sample(df: DataFrame, quota_per_cluster: int,
     production path — identical partition semantics, matmul-summation
     ulps may flip exact centroid ties.
 
-    ``refine_iters`` (r7): run that many distributed Lloyd refinement
+    ``refine_iters``: run that many distributed Lloyd refinement
     passes (:func:`kmeans_lloyd_refine`) over the FULL corpus before
     assigning. With a partitioning-independent init (``centroids=``
     :func:`planted_centroids` or a frozen prior codebook) this closes the
@@ -1665,8 +1157,7 @@ def _assign_with_vec(df: DataFrame, vec_col: str,
     bit-portable expression twin. NULL and wrong-length vectors are
     DROPPED here (they carry no direction for the M-step; leaving them in
     would crash the BLAS vstack or, on the fold path, silently vote their
-    truncated coordinates into cluster k-1 — the hazard the PQ kernels'
-    shape checks guard)."""
+    truncated coordinates into cluster k-1)."""
     dim = len(centroids[0])
     clean = df.filter(F.col(vec_col).isNotNull()
                       & (F.size(F.col(vec_col)) == dim))
@@ -1812,9 +1303,9 @@ def _guard_q_magnitude(scaled: "np.ndarray", what: str,
     q_scale (or pre-normalized vectors), and the message says so.
 
     ``rows`` is the ACCUMULATION WIDTH: how many per-row values the
-    kernel int64-sums into one cell after the cast (r7 advisor finding —
-    a per-element check alone lets elements in the 2^55–2^62 band pass
-    while the in-kernel block/batch sum wraps). The refusal bound is
+    kernel int64-sums into one cell after the cast (a per-element check
+    alone lets elements in the 2^55–2^62 band pass while the in-kernel
+    block/batch sum wraps). The refusal bound is
     ``max_element · rows >= 2^62`` — a factor-2 headroom under the true
     wrap point, and exactly the old per-element bound at rows=1."""
     m = float(np.abs(scaled).max()) if scaled.size else 0.0
@@ -1874,7 +1365,7 @@ def embedding_moments_exact(df: DataFrame, vec_col: str = "embedding",
                 xb = x[s:s + block]
                 prod = np.einsum("bi,bj->bij", xb, xb) * qf
                 # width = n: acc2 accumulates EVERY batch row into one
-                # int64 cell across the block loop (advisor r7 finding)
+                # int64 cell across the block loop
                 _guard_q_magnitude(prod, "embedding_moments_exact", rows=n)
                 acc2 += np.floor(prod).astype(np.int64).sum(axis=0)
             x1 = x * qf
@@ -1929,7 +1420,7 @@ def covariance_exact(df: DataFrame, vec_col: str = "embedding",
                 xb = x[s:s + block]
                 prod = np.einsum("bi,bj->bij", xb, xb) * qf
                 # width = n: acc2 accumulates EVERY batch row into one
-                # int64 cell across the block loop (advisor r7 finding)
+                # int64 cell across the block loop
                 _guard_q_magnitude(prod, "covariance_exact", rows=n)
                 acc2 += np.floor(prod).astype(np.int64).sum(axis=0)
             x1 = x * qf
@@ -2052,7 +1543,7 @@ def project_fold(df: DataFrame, model: dict, id_col: str = "vec_id",
     Two modes:
     - ``q_scale=None``: float fold ``Σ_i (x_i − μ_i)·w_ki`` in index
       order → ``(id, pos, coord)``. Deterministic within ONE engine, but
-      NOT cross-engine bit-portable: measured r7, DuckDB reassociates
+      NOT cross-engine bit-portable: measured, DuckDB reassociates
       long float ``+`` chains (up to ~20 ulp vs strict left-association),
       so chain VALUES differ across engines even with identical literals
       — only sign/comparison consumers (LSH bits, argmax assignment)
@@ -2164,7 +1655,7 @@ def embedding_signature_index(df: DataFrame, id_col: str = "vec_id",
     norm chain, and the LSH config rides every row as constant
     ``(planes, tables)`` columns (RLE ≈ free in parquet) so
     ``incremental_semantic_dedup`` can REFUSE a config-mismatched index
-    instead of silently matching nothing (r6 review findings). Built
+    instead of silently matching nothing. Built
     map-only: signatures and carried columns come from one scan, no
     join-back. ``sig_mode='fold'`` builds the signatures with the
     bit-portable fold expressions instead of the Arrow matmul (the
@@ -2182,8 +1673,8 @@ def embedding_signature_index(df: DataFrame, id_col: str = "vec_id",
     # disk roundtrip carries (read_signature_index's contract), so a
     # build→ingest handoff in one session takes the manifest fast path
     # instead of a full materialization of this relation just to read two
-    # constant columns (r12 perf finding: the fallback distinct scan was
-    # a whole extra fold-signature pass per ingest). Derived frames
+    # constant columns (the fallback distinct scan is a whole extra
+    # fold-signature pass per ingest). Derived frames
     # (filters, the updated-index union) drop the attribute and fall back
     # to the scan — mixed-config detection is preserved.
     out._index_manifest = {"planes": n_planes, "tables": n_tables}
@@ -2200,7 +1691,7 @@ def write_signature_index(index: DataFrame, table: str,
     only engages when the join keys exactly cover the bucket columns.
 
     The LSH config is additionally written as a ``_index_manifest.json``
-    sidecar (r9 VERDICT item 6, same contract as
+    sidecar (same contract as
     ``dedup.write_minhash_band_index``): :func:`read_signature_index`
     attaches it so ``incremental_semantic_dedup``'s config check becomes
     metadata-only; the constant columns stay as the no-manifest fallback.
@@ -2258,7 +1749,7 @@ def incremental_semantic_dedup(batch: DataFrame, index: DataFrame,
     finding; the streaming e2e test is the reference pattern).
 
     Plan: ONE pinned signature pass over the batch — CARRYING each row's
-    double vector and inverse norm (r12 fusion; the disk-for-stages trade
+    double vector and inverse norm (the disk-for-stages trade
     the index makes with ``keep_vec``) — feeds the within-batch self-join
     and the cross-batch index join (the index update re-derives
     signatures map-only over the small ``fresh`` set — cheaper than a
@@ -2277,7 +1768,7 @@ def incremental_semantic_dedup(batch: DataFrame, index: DataFrame,
     is not re-examined when a later batch would have clustered them
     differently — ingest order is part of the semantics.
 
-    Verification split (r11 — r10 VERDICT item 1): under the DEFAULT
+    Verification split: under the DEFAULT
     ``sig_mode='arrow'`` the multi-table signatures come from a numpy
     MATMUL, whose blocked/pairwise summation is not the left-associated
     index-order accumulation a SQL literal chain evaluates — near-zero
@@ -2300,7 +1791,7 @@ def incremental_semantic_dedup(batch: DataFrame, index: DataFrame,
 
     # refuse a config-mismatched index: signatures from a different
     # (n_planes, n_tables) silently match ~nothing in the (table, bucket)
-    # join and re-admit every indexed duplicate (r6 review finding). The
+    # join and re-admit every indexed duplicate. The
     # config rides the index rows as constant columns; the probe is one
     # KB-scale limit(1) job per (daily) ingest.
     missing = [c for c in _SIG_INDEX_COLS if c not in index.columns]
@@ -2308,12 +1799,12 @@ def incremental_semantic_dedup(batch: DataFrame, index: DataFrame,
         raise ValueError(
             f"incremental_semantic_dedup: index is missing columns "
             f"{missing} — build it with embedding_signature_index")
-    # config check: manifest fast path (metadata-only — r9 VERDICT
-    # item 6) when the index came through read_signature_index, else the
-    # distinct-scan fallback. Distinct, not limit(1): a heterogeneous
+    # config check: manifest fast path (metadata-only) when the index came
+    # through read_signature_index, else the distinct-scan fallback.
+    # Distinct, not limit(1): a heterogeneous
     # index (segments unioned from different configs) must be refused
     # too — one matching sample row would let the mismatched segment
-    # silently match nothing (review finding). Column-pruned scan of two
+    # silently match nothing. Column-pruned scan of two
     # constant RLE columns — cheap.
     manifest = getattr(index, "_index_manifest", None)
     if manifest is not None:
@@ -2338,12 +1829,11 @@ def incremental_semantic_dedup(batch: DataFrame, index: DataFrame,
                 f"({n_planes}, {n_tables}) — signatures would not match")
 
     # ONE staged pass: signatures AND the (v, inv-norm) verify columns
-    # ride the same exploded relation (r12 — r11 VERDICT item 3: the
-    # fused form; previously signatures were narrow and every verify
-    # joined back against a separate (id, v, i) relation, costing two
-    # extra join stages within-batch and one cross-batch). The carried
-    # vectors widen the batch's ONE signature exchange by n_tables× the
-    # vector payload — the same disk-for-stages trade the index itself
+    # ride the same exploded relation: with narrow signatures every
+    # verify would join back against a separate (id, v, i) relation,
+    # costing two extra join stages within-batch and one cross-batch. The
+    # carried vectors widen the batch's ONE signature exchange by n_tables×
+    # the vector payload — the same disk-for-stages trade the index itself
     # makes with keep_vec (module notes there); the batch is the daily
     # small side, and the join-backs it replaces shuffled comparable
     # bytes across three extra exchanges.
@@ -2392,16 +1882,15 @@ def incremental_semantic_dedup(batch: DataFrame, index: DataFrame,
                .select(id_col).distinct())
     # pinned: fresh feeds the caller's write AND the index update below —
     # unpinned, the documented write-fresh-then-write-index pattern would
-    # run the cross-batch scoring twice (r6 review finding)
+    # run the cross-batch scoring twice
     fresh = pin(survivors.join(hit_ids, id_col, "left_anti"))
 
     # (c) index update: the PINNED signature relation already carries
     # every fresh keeper's (table, bucket, v, i) — semi-join it to the
     # fresh ids instead of re-running a second signature pass over the
-    # fresh texts (r12: the sig build ran twice per ingest; the
-    # semi-join reads the cache). `v`/`i` are with_vec_inv's double-cast
-    # vector and inverse norm — exactly what embedding_signature_index
-    # would recompute as keep_vec/keep_inv.
+    # fresh texts (the semi-join reads the cache). `v`/`i` are
+    # with_vec_inv's double-cast vector and inverse norm — exactly what
+    # embedding_signature_index would recompute as keep_vec/keep_inv.
     updated = index.select(*_SIG_INDEX_COLS).unionByName(
         sigs.join(fresh.select(id_col), id_col, "left_semi")
         .select(F.col("table"), F.col("bucket"),

@@ -20,7 +20,7 @@ overwrites only the day it recomputes (dynamic partition overwrite).
 from __future__ import annotations
 
 import os
-from collections.abc import Iterable, Mapping, Sequence
+from collections.abc import Mapping, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -116,9 +116,9 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one driver star-schema table from ``{sf_dir}/{name}.parquet``.
 
     Small inputs come back repartitioned to ``defaultParallelism`` (the
-    input-parallelism floor above — r12): the driver testdata ships as
-    single-row-group parquet, which scans as ONE task and serialized the
-    whole map-heavy text/embedding family onto one core.
+    input-parallelism floor above): the driver testdata ships as
+    single-row-group parquet, which scans as ONE task and would serialize
+    the whole map-heavy text/embedding family onto one core.
 
     ``events.ts`` is normalized to session-zoned TIMESTAMP at this single
     boundary, whatever the parquet file stores:
@@ -158,9 +158,8 @@ def normalize_event_ts(df: DataFrame, ts_col: str = "ts") -> DataFrame:
     """Normalize an events frame's ``ts`` to session-zoned TIMESTAMP,
     whatever the parquet physical type delivered (nanos-as-long → micros
     truncation, ntz → cast). ONE implementation shared by the batch loader
-    and the streaming source (r5 review finding: the copy in
-    streaming.stream_events could silently diverge from the batch oracle's
-    normalization)."""
+    and the streaming source, so ``streaming.stream_events`` cannot
+    silently diverge from the batch oracle's normalization."""
     ts_type = dict(df.dtypes).get(ts_col)
     if ts_type == "bigint":
         df = df.withColumn(ts_col,
@@ -168,12 +167,6 @@ def normalize_event_ts(df: DataFrame, ts_col: str = "ts") -> DataFrame:
     elif ts_type == "timestamp_ntz":
         df = df.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
     return df
-
-
-def load_star(spark: SparkSession, sf_dir: str,
-              tables: Iterable[str] = STAR_TABLES) -> dict[str, DataFrame]:
-    """Load the star schema as a dict of lazy DataFrames."""
-    return {t: load_table(spark, sf_dir, t) for t in tables}
 
 
 def write_parquet(df: DataFrame, path: str, mode: str = "overwrite",
@@ -227,8 +220,8 @@ def _manifest_versions(spark, root: str) -> list[tuple[int, str]]:
 
 
 def _publish_manifest(manifest: DataFrame, root: str) -> str:
-    """Versioned manifest publish (r6 VERDICT item 6 — closes the old
-    delete→rename absence window): write ``<root>/v-<n+1>`` as a fresh
+    """Versioned manifest publish (no delete→rename absence window):
+    write ``<root>/v-<n+1>`` as a fresh
     parquet dir (committed atomically by the _SUCCESS marker), then flip
     the ``LATEST`` pointer FILE via create-temp → delete → rename. A
     reader that hits the (file-sized) pointer gap falls back to the
@@ -286,8 +279,8 @@ def read_shard_manifest(spark: SparkSession, path: str) -> DataFrame:
                  if fs.exists(jpath(root, f"{name}/_SUCCESS"))]
     if committed:
         return spark.read.parquet(f"{root}/{committed[0]}")
-    # legacy flat layout (pre-r7), or no manifest at all — let the reader
-    # surface Spark's own path error in the latter case
+    # legacy flat (unversioned) layout, or no manifest at all — let the
+    # reader surface Spark's own path error in the latter case
     return spark.read.parquet(root)
 
 
@@ -308,8 +301,8 @@ def write_training_shards(df: DataFrame, path: str, shard_col: str = "shard",
     the writer rolls files, no extra exchange.
 
     Every count in the manifest comes from the WRITTEN FILES, never from
-    ``df``'s lineage (r5+r6 advisor findings: a recomputed nondeterministic
-    upstream could diverge counts from disk). ``mode='overwrite'``
+    ``df``'s lineage (a recomputed nondeterministic upstream could diverge
+    counts from disk). ``mode='overwrite'``
     aggregates the directory back (one map-side-combinable groupBy over a
     cheap columnar scan). ``mode='append'`` lists the directory before and
     after the write and aggregates exactly the NEW files (``basePath``
@@ -317,9 +310,9 @@ def write_training_shards(df: DataFrame, path: str, shard_col: str = "shard",
     merges with the prior manifest. The per-shard ``n_files`` column makes
     the prior manifest self-validating: if the pre-write listing disagrees
     with the manifest's file total (a previous run crashed between data
-    write and manifest publish, leaving a stale manifest — the r6 advisor
-    hazard), the merge is abandoned and the manifest REBUILT from the full
-    directory, so staleness heals on the next ingest instead of
+    write and manifest publish, leaving a stale manifest), the merge is
+    abandoned and the manifest REBUILT from the full directory, so staleness
+    heals on the next ingest instead of
     compounding forever. Publish is versioned + pointer-flip
     (:func:`_publish_manifest`): readers never observe a missing or torn
     manifest. Single-writer remains assumed (concurrent ingests need an
@@ -382,8 +375,7 @@ def _escape_partition_value(value: str) -> str:
     outside the safe set become ``%XX``. Without this, an existence probe
     for e.g. a timestamp value ('2024-01-02 00:00:00') checks the unescaped
     path while the writer created 'snapshot_date=2024-01-02 00%3A00%3A00' —
-    the probe always misses and the idempotent sink rewrites every run
-    (r5 review finding)."""
+    the probe always misses and the idempotent sink rewrites every run."""
     return "".join(f"%{ord(ch):02X}" if ch in _PARTITION_ESCAPE_CHARS else ch
                    for ch in value)
 
@@ -424,8 +416,8 @@ def write_daily_snapshot(df: DataFrame, root: str, date_col: str = "snapshot_dat
         df = df.filter(F.col(date_col).cast("string").isin(missing))
     # save/restore: leaking dynamic mode session-wide would silently turn
     # every LATER partitioned mode='overwrite' write into a partial
-    # overwrite that leaves stale partitions on disk (r5 review finding;
-    # same conf hygiene as load_table's nanosAsLong handling)
+    # overwrite that leaves stale partitions on disk (same conf hygiene
+    # as load_table's nanosAsLong handling)
     key = "spark.sql.sources.partitionOverwriteMode"
     prev = spark.conf.get(key, None)
     spark.conf.set(key, "dynamic")
@@ -521,8 +513,8 @@ class TwoTierCache:
             # A type-switching set must not leave a stale shadow: drop the
             # session-tier entry AND any parquet of the same name — get()
             # probes parquet before json, so an old DataFrame value would
-            # otherwise keep winning (r5 review finding: 'get returns what
-            # was last set' is the write-through contract).
+            # otherwise keep winning ('get returns what was last set' is
+            # the write-through contract).
             self.invalidate(name)
             pq_fs, pq_jpath = _hadoop_fs(self.spark, pq_path)
             if pq_fs.exists(pq_jpath):
@@ -571,17 +563,3 @@ def records_to_df(spark: SparkSession, records: Sequence[Mapping], schema) -> Da
     the constructor stays the same.
     """
     return spark.createDataFrame(list(records), schema=schema)
-
-
-def union_by_name(dfs: Sequence[DataFrame], allow_missing: bool = True) -> DataFrame:
-    """U1/A11 concat of homogeneous frames (reference: historical_data_etl.py:173).
-
-    ``unionByName`` is metadata-only (no shuffle); missing columns become
-    nulls, matching pandas ``concat`` outer-column behavior.
-    """
-    if not dfs:
-        raise ValueError("union_by_name needs at least one DataFrame")
-    out = dfs[0]
-    for other in dfs[1:]:
-        out = out.unionByName(other, allowMissingColumns=allow_missing)
-    return out

@@ -50,8 +50,8 @@ def map_join(df: DataFrame, dim: DataFrame, key: str, value_col: str,
     construction — callers build dims from mapping literals via
     ``records_to_df``). A duplicate-keyed dim would fan out fact rows,
     which a dict lookup can never do; this function does not pay a
-    validation job to check it (r5 review note — dedupe upstream if the
-    dim comes from an appendable source)."""
+    validation job to check it — dedupe upstream if the dim comes from an
+    appendable source."""
     dim = F.broadcast(dim.select(F.col(key), F.col(value_col).alias("__mapped")))
     out = df.join(dim, on=key, how="left")
     fallback = F.col(default_col) if default_col else F.lit(None)
@@ -63,22 +63,6 @@ def ohlc_violation(close: str = "close", low: str = "low", high: str = "high",
     """P7 compound predicate (reference: data_quality_gate.py:52-56):
     close must lie in [low - tol, high + tol]."""
     return (F.col(close) < F.col(low) - tol) | (F.col(close) > F.col(high) + tol)
-
-
-def replace_inf_with_null(df: DataFrame, cols: Sequence[str]) -> DataFrame:
-    """F13 ±inf → null (reference: feature_calculation_functions.py:21).
-
-    Spark distinguishes null from NaN; the reference's pandas code treats
-    inf/NaN as missing. Normalizing at operator boundaries keeps aggregation
-    semantics (ignorenulls) aligned with pandas skipna.
-    """
-    out = df
-    for c in cols:
-        col = F.col(c)
-        out = out.withColumn(
-            c, F.when(col.isNull() | F.isnan(col) | (F.abs(col) == float("inf")),
-                      F.lit(None)).otherwise(col))
-    return out
 
 
 def pit_cutoff_join(fact: DataFrame, universe: DataFrame, fact_key: str,

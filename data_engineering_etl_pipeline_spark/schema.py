@@ -3,13 +3,12 @@
 The reference enforces schema only at the quality gate's required-column
 check (data_quality_gate.py:23,32-36) and in pytest assertions
 (test_data_integrity.py:40-41,317-328); everywhere else columns are probed
-defensively. Here each lake layer gets an explicit contract and a validator;
-defensive selection becomes a schema-aware helper.
+defensively. Here each lake layer gets an explicit contract and a validator.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterable, Sequence
+from collections.abc import Iterable
 
 from pyspark.sql import DataFrame
 
@@ -31,11 +30,3 @@ def validate_schema(df: DataFrame, required: Iterable[str]) -> None:
     missing = missing_columns(df, required)
     if missing:
         raise ValueError(f"Missing required columns: {missing}")
-
-
-def select_existing(df: DataFrame, wanted: Sequence[str]) -> DataFrame:
-    """P2 schema-defensive projection (reference: pipeline_helpers.py:253,326;
-    coinbase_universe_pipeline.py:158): keep only the wanted columns that
-    exist, in the wanted order."""
-    have = set(df.columns)
-    return df.select(*[c for c in wanted if c in have])

@@ -20,29 +20,33 @@ import tempfile
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
-
-def get_spark(app_name: str = "data_engineering_etl_pipeline_spark",
-              shuffle_partitions: str | int | None = None) -> SparkSession:
+def get_spark(
+        app_name: str = "data_engineering_etl_pipeline_spark") -> SparkSession:
     """Build (or reuse) the engine session.
 
-    ``spark.sql.shuffle.partitions`` defaults to the local core count; on a
+    ``spark.sql.shuffle.partitions`` is the local core count
+    (``SPARK_GRAFT_CPUS``, default 32), read once with the master URL; on a
     real cluster AQE coalescing makes the initial number a ceiling, not a
     target, so a larger value (e.g. 2-3× total cores) is safe at 100 TB.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    # Default heap: half the physical RAM, at most 16 GiB. A heap as large
+    # as the machine lets a long-lived local session grow until the kernel
+    # OOM-kills the JVM (a 16g heap on a 15 GiB host did, in the test suite).
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM",
+                                f"{min(16 << 10, ram_mb // 2)}m")
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions",
-                str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS))
+        .config("spark.sql.shuffle.partitions", cpus)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", driver_mem)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.filterPushdown", "true")
         # testdata events.parquet stores TIMESTAMP(NANOS) which the vectorized
@@ -70,8 +74,8 @@ def get_spark(app_name: str = "data_engineering_etl_pipeline_spark",
 
 def shuffle_partitions(spark: SparkSession, default: int = 32) -> int:
     """``spark.sql.shuffle.partitions`` as an int, tolerating the 'auto'
-    value AQE-managed platforms set (r5 review finding: ``int('auto')``
-    crashed at plan-build time) — falls back to the cluster's default
+    value AQE-managed platforms set (``int('auto')`` would crash at
+    plan-build time) — falls back to the cluster's default
     parallelism, then ``default``."""
     raw = spark.conf.get("spark.sql.shuffle.partitions", str(default))
     try:

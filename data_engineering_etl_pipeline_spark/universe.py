@@ -42,47 +42,3 @@ def monthly_top_n(df: DataFrame, date_col: str, id_col: str, value_col: str,
                         tiebreak=[id_col], rank_col="rank")
         .select("month", id_col, "agg_value", "rank")
     )
-
-
-def universe_to_json(universe: DataFrame, path: str, id_col: str,
-                     month_col: str = "month") -> None:
-    """S3: persist the universe as the reference's ``{\"YYYY-MM-01\": [ids]}``
-    JSON shape (universe_generation_pipeline.py:167-179). The universe is
-    months × top-N — KB-scale — so this is a deliberate driver-side write;
-    the relational (month, id) table stays the compute-side representation.
-    """
-    import json
-
-    rows = (universe.groupBy(month_col)
-            .agg(F.sort_array(F.collect_list(F.col(id_col))).alias("ids"))
-            .collect())
-    if any(r[0] is None for r in rows):
-        # a NULL month (e.g. NULL fact dates surviving trunc) would crash
-        # strftime mid-write after truncating the output file — fail BEFORE
-        # opening it, with the actual cause (r5 review finding)
-        raise ValueError(
-            "universe_to_json: NULL month group in the universe — "
-            "filter NULL dates upstream")
-    mapping = {
-        (m.strftime("%Y-%m-%d") if hasattr(m, "strftime") else str(m)):
-        list(ids) for m, ids in ((r[0], r[1]) for r in rows)}
-    with open(path, "w") as f:
-        json.dump(mapping, f, indent=2, sort_keys=True)
-
-
-def universe_from_json(spark, path: str, id_col: str,
-                       month_col: str = "month",
-                       id_type: str = "string") -> DataFrame:
-    """S3 inverse: ``{month: [ids]}`` JSON → (month, id) table, the shape the
-    PIT join consumes (historical_data_etl.py:111-132). ``id_type`` must
-    match the fact table\'s id column type (e.g. ``'bigint'`` for the
-    flagship o_custkey universe): the former hardcoded string schema
-    crashed on integer-id JSON and, coerced, would silently change the
-    PIT join\'s key type (r5 review finding)."""
-    import json
-
-    with open(path) as f:
-        mapping = json.load(f)
-    rows = [(m, i) for m, ids in mapping.items() for i in ids]
-    df = spark.createDataFrame(rows, f"{month_col} string, {id_col} {id_type}")
-    return df.withColumn(month_col, F.to_date(F.col(month_col)))

@@ -256,11 +256,10 @@ def embedding_smoke(mult: int) -> int:
     - all-pairs ≥0.95: broadcast-GEMM (driver collect) vs blocked
       block-pair GEMM (no collect) — same pair count by construction;
     - exact top-k for 32 queries: expression-chain + full n·q window
-      (cosine_topk) vs Arrow GEMM + pruned window (gemm_cosine_topk);
-    - knn_join with a corpus-scale query side (every 16th row).
+      (cosine_topk) vs Arrow GEMM + pruned window (gemm_cosine_topk).
     """
     from data_engineering_etl_pipeline_spark.extensions.similarity import (
-        cosine_near_dup_pairs, cosine_topk, gemm_cosine_topk, knn_join)
+        cosine_near_dup_pairs, cosine_topk, gemm_cosine_topk)
     from data_engineering_etl_pipeline_spark.io import load_table
     from data_engineering_etl_pipeline_spark.session import get_spark
 
@@ -291,7 +290,7 @@ def embedding_smoke(mult: int) -> int:
         """Warm pass (count — also the sanity/row-count read) then the
         timed steady-state noop write, so every machine pays JVM/codegen
         warmup OUTSIDE its measurement and ordering cannot bias the
-        comparison (the r6 persist reorder moved the cold-start penalty
+        comparison (persist order alone moved the cold-start penalty
         between paths — measured, hence this shape)."""
         df.count()
         t0 = time.time()
@@ -320,13 +319,6 @@ def embedding_smoke(mult: int) -> int:
          .select(F.col("vec_id").alias("query_id"), "embedding"))
     out["topk_window_seconds"] = run(cosine_topk(doubled, q, k=5))
     out["topk_gemm_seconds"] = run(gemm_cosine_topk(doubled, q, k=5))
-
-    qbig = (doubled.filter(F.col("vec_id") % 16 == 0)
-            .select(F.col("vec_id").alias("query_id"), "embedding"))
-    out["knn_queries"] = qbig.count()
-    out["knn_join_seconds"] = run(
-        knn_join(doubled, qbig, k=5, n_query_blocks=max(2, mult // 2),
-                 n_base_blocks=n_blocks))
     doubled.unpersist()
     print(json.dumps(out))
     return 0

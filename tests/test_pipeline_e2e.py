@@ -51,7 +51,7 @@ def test_pipeline_cells_match_python_oracle(result):
     world = _pandas_world()
 
     # oracle universe: monthly top-N canonical ids by avg of daily MAX-member
-    # mcap (duplicate listings of one asset must not double-weight it — r5)
+    # mcap (duplicate listings of one asset must not double-weight it)
     daily = (world.groupby(["canonical_id", "day"], as_index=False)
              .agg(mcap=("market_cap", "max")))
     daily["month"] = daily["day"].map(lambda d: d.replace(day=1))
@@ -92,7 +92,7 @@ def test_pipeline_n_members_counts_alt_coins(result):
 
 def test_registry_within_driver_check_budget():
     """The round driver verifies at most the FIRST 50 registered queries
-    (r2 VERDICT: entries past the cap silently lose driver verification).
+    (entries past the cap silently lose driver verification).
     Pin the budget, and pin that the oracle keys are a subset of queries."""
     from data_engineering_etl_pipeline_spark.queries import ORACLES, QUERIES
 
@@ -104,7 +104,7 @@ def test_registry_within_driver_check_budget():
 
 def test_readme_counts_match_registry():
     """README's registered/oracle counts are pinned to the registry so docs
-    cannot drift from code (r2 VERDICT item 4)."""
+    cannot drift from code."""
     import os
     import re
 
@@ -121,11 +121,11 @@ def test_readme_counts_match_registry():
 
 
 def test_bench_calibration_stability_flag():
-    """r9 VERDICT item 3: a BENCH record captured under a drifting host
-    (the r9 driver record: sentinel 1.625s -> 0.459s, 3.5x intra-run)
-    must carry calibration_unstable + re-run guidance; a stable record
-    carries only the ratio. Symmetric in drift direction; a zero
-    sentinel (clock glitch) flags rather than dividing by zero."""
+    """A BENCH record captured under a drifting host (e.g. sentinel 1.625s
+    -> 0.459s, 3.5x intra-run) must carry calibration_unstable + re-run
+    guidance; a stable record carries only the ratio. Symmetric in drift
+    direction; a zero sentinel (clock glitch) flags rather than dividing by
+    zero."""
     import bench
 
     stable = bench.calibration_stability(1.0, 1.1)
@@ -138,15 +138,15 @@ def test_bench_calibration_stability_flag():
         "calibration_unstable"] is True
     assert bench.calibration_stability(0.0, 1.0)[
         "calibration_unstable"] is True
-    # boundary: exactly the threshold is still stable (1.25 since r11 —
-    # r10 VERDICT item 4: the r10 record's 1.294 drift must now flag)
+    # boundary: exactly the threshold (1.25) is still stable, so a 1.294
+    # drift flags
     assert "calibration_unstable" not in bench.calibration_stability(
         1.25, 1.0)
     assert bench.calibration_stability(0.749, 0.579)[
         "calibration_unstable"] is True
-    # r12 multi-point form: a mid-run storm the endpoints straddle must
-    # flag (the r12 finding: a row inflated 2.6x under endpoint ratio
-    # 1.06), and an all-quiet path must not
+    # multi-point form: a mid-run storm the endpoints straddle must flag
+    # (a row can inflate 2.6x under an endpoint ratio of 1.06), and an
+    # all-quiet path must not
     mid = bench.calibration_stability(0.5, 0.52, 1.9, 0.51)
     assert mid["calibration_unstable"] is True
     assert "1.9s" in mid["calibration_note"]
@@ -157,8 +157,8 @@ def test_bench_calibration_stability_flag():
 def test_bench_and_smoke_names_exist_in_registry():
     """bench.py and scale_smoke.py run registry queries by name; a registry
     consolidation that renames a row must update them or the driver's
-    per-round bench crashes with a KeyError (this bit r4: two retired names
-    survived in bench.py)."""
+    per-round bench crashes with a KeyError (retired names surviving in
+    bench.py did exactly that)."""
     import os
     import re
 
@@ -178,3 +178,56 @@ def test_bench_and_smoke_names_exist_in_registry():
         missing = [n for n in names if n not in QUERIES]
         assert not missing, (
             f"scale_smoke.py references unknown queries: {missing}")
+
+
+def test_every_package_module_has_an_importer():
+    """Code stays only if something calls it: every package module other
+    than an ``__init__`` must be imported by another package module, by
+    ``__spark_entry__.py`` or by ``perfbench/``. A module that only its
+    own tests import is dead weight. Parsed with ``ast``, so imports
+    inside functions count and nothing is executed."""
+    import ast
+    import os
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    pkg = "data_engineering_etl_pipeline_spark"
+
+    def walk(top):
+        for d, _, files in os.walk(os.path.join(root, top)):
+            yield from (os.path.join(d, f) for f in files if f.endswith(".py"))
+
+    def dotted(path):
+        rel = os.path.relpath(path, root)[:-3].replace(os.sep, ".")
+        return rel[:-len(".__init__")] if rel.endswith(".__init__") else rel
+
+    def imported_names(path):
+        """Dotted names one file imports, relative imports resolved; for
+        ``from X import y`` both ``X`` and ``X.y`` (y may be a module)."""
+        me = dotted(path)
+        here = me if path.endswith("__init__.py") else me.rpartition(".")[0]
+        out = set()
+        for node in ast.walk(ast.parse(open(path).read(), path)):
+            if isinstance(node, ast.Import):
+                out.update(a.name for a in node.names)
+            elif isinstance(node, ast.ImportFrom):
+                base = node.module or ""
+                if node.level:
+                    parts = here.split(".")
+                    up = ".".join(parts[:len(parts) - node.level + 1])
+                    base = f"{up}.{base}" if base else up
+                out.add(base)
+                out.update(f"{base}.{a.name}" for a in node.names)
+        return out
+
+    modules = {dotted(p): p for p in walk(pkg)
+               if not p.endswith("__init__.py")}
+    importers = list(walk(pkg)) + list(walk("perfbench")) + [
+        os.path.join(root, "__spark_entry__.py")]
+    seen = set()
+    for path in importers:
+        me = dotted(path)
+        seen.update(n for n in imported_names(path) if n != me)
+    orphans = sorted(set(modules) - seen)
+    assert not orphans, (
+        f"package modules nothing imports (delete them or call them): "
+        f"{orphans}")

@@ -21,7 +21,7 @@ from .conftest import SF_DIR
 @pytest.fixture(autouse=True)
 def _floor_off(spark):
     """Pin the AT-SCALE plan shape: the io.load_table input-parallelism
-    floor (r12) repartitions sub-128 MB documents scans — a deliberate
+    floor repartitions sub-128 MB documents scans — a deliberate
     small-input-only exchange that is structurally absent at 100 TB
     (where scans have thousands of splits). Disabling it here keeps
     every shuffle-count pin about the operator's own shape; the floor
@@ -32,7 +32,7 @@ def _floor_off(spark):
 
 
 def test_small_scan_parallelism_floor(spark):
-    """The r12 input-parallelism floor: a small documents scan gains
+    """The input-parallelism floor: a small documents scan gains
     EXACTLY one round-robin repartition right above the scan (guide §2.5
     — the testdata ships single-row-group parquet, which otherwise scans
     as ONE task and serializes the text family onto one core), filters
@@ -80,7 +80,7 @@ def pushed_filters(plan: str) -> int:
 def test_region_revenue_broadcasts_all_dims(spark):
     """4-way dim join chain: every join must broadcast (dims are small at any
     SF), zero sort-merge joins, and the only shuffle is the final agg.
-    (Library query since r7 — registry slot consolidated into
+    (Library query — its registry slot is consolidated into
     sql_nation_revenue's grouping-sets star; the plan contract holds.)"""
     from data_engineering_etl_pipeline_spark.queries.joins import region_revenue
 
@@ -92,7 +92,7 @@ def test_region_revenue_broadcasts_all_dims(spark):
 
 
 def test_sql_nation_revenue_grouping_sets_one_agg_pass(spark):
-    """The r7 consolidation target: the enriched SQL star (five frames, two
+    """The consolidated enriched SQL star (five frames, two
     grains) still broadcasts every dim, pushes the date filter, and plans
     the GROUPING SETS as ONE expand+aggregate — a second grain must not
     cost a second scan or join pass."""
@@ -105,12 +105,12 @@ def test_sql_nation_revenue_grouping_sets_one_agg_pass(spark):
 
 
 def test_cluster_balanced_sample_two_phase_quota_selection(spark):
-    """The r8 scale fix for the r7 verdict's one confirmed wrong-at-100x
-    plan: the ranking window must consume the MAP-SIDE candidate prune
-    (mapInPandas, ≤ quota·k rows per partition), NOT the corpus — the old
-    shape shuffled every row into exactly k reducer partitions and fully
-    sorted each cluster. Assertions: (a) the fold assignment stays pure
-    expressions (no row-at-a-time Python worker); (b) at most two
+    """The scale contract of the quota selection: the ranking window must
+    consume the MAP-SIDE candidate prune (mapInPandas, ≤ quota·k rows per
+    partition), NOT the corpus — a single-window shape would shuffle every
+    row into exactly k reducer partitions and fully sort each cluster.
+    Assertions: (a) the fold assignment stays pure expressions (no
+    row-at-a-time Python worker); (b) at most two
     non-broadcast exchanges, BOTH bounded away from the corpus — the
     candidate-sized ranking shuffle and the keeper-sized duplicate-id
     dedup (the M-step stages are literal relations computed at build
@@ -132,7 +132,7 @@ def test_cluster_balanced_sample_two_phase_quota_selection(spark):
 
 
 def test_pca_moments_one_codebook_sized_exchange(spark):
-    """The r7 covariance row: exactly ONE Arrow mapInPandas kernel pass
+    """The covariance row: exactly ONE Arrow mapInPandas kernel pass
     (the compose-from-moments shape re-ran the O(n·d²) kernel three times
     — Catalyst does not dedupe common subplans), ONE non-broadcast
     exchange (the (i, j) reduce — d(d+1)/2 keys, map-side combined so the
@@ -179,7 +179,7 @@ def test_single_shuffle_operators(spark, name):
 
 
 def test_exact_dedup_shuffles_fingerprints_not_text(spark):
-    """r4 VERDICT item 1: the corpus-wide exact-dedup exchange must key on
+    """The corpus-wide exact-dedup exchange must key on
     the (xxhash64, length) fingerprint — 12-byte keys — never the raw
     document text. The only text-keyed aggregation left in the plan is the
     phase-2 collision resolver, which consumes candidate (multi-member
@@ -190,12 +190,12 @@ def test_exact_dedup_shuffles_fingerprints_not_text(spark):
     # phase-2 text agg exists but sits above the candidate semi-join, i.e.
     # every text-keyed exchange is downstream of a Join on the fingerprint.
     # EXACTLY one: the batch leg's collision resolver. The incremental legs
-    # (r6) must never add a text-keyed exchange — their within-batch window
+    # must never add a text-keyed exchange — their within-batch window
     # partitions by fingerprint-first and the index join keys on
     # fingerprints alone.
     assert p.count("hashpartitioning(text") == 1, \
         "text-keyed exchanges != 1 — raw documents are shuffling as keys"
-    # r6: the row is a 3-leg composition (batch + incr_fresh + index), so
+    # the row is a 3-leg composition (batch + incr_fresh + index), so
     # the absolute bound covers all legs; each leg's exchanges carry
     # fingerprints/ids, never text keys (asserted above)
     assert shuffles(p) <= 16, f"exact dedup grew extra shuffles:\n{p}"
@@ -203,7 +203,7 @@ def test_exact_dedup_shuffles_fingerprints_not_text(spark):
 
 def test_hml_factor_library_plan_single_shuffle(spark):
     """A10 long-short factor (library form — its registry row was
-    consolidated into hml_lag_compliance in r4): percent_rank + conditional
+    consolidated into hml_lag_compliance): percent_rank + conditional
     agg must stay ONE exchange."""
     from data_engineering_etl_pipeline_spark.queries.analytics import hml_factor
 
@@ -234,7 +234,7 @@ def test_asof_join_plan_is_joinless_single_shuffle(spark):
     """The as-of join must compile to union + sort-exchange + window — NO
     join operator at all (the naive key-join-then-filter plan is quadratic
     on hot keys; this shape is skew-immune by construction). The registry
-    row runs duplicates='resolve_max' (r5: deterministic under duplicate
+    row runs duplicates='resolve_max' (deterministic under duplicate
     right keys), whose right-side dedup pre-aggregate is the ONE extra,
     partial-aggregatable exchange beyond the library's single sort — the
     bare duplicates='allow' library form stays single-shuffle, asserted
@@ -267,7 +267,7 @@ def test_near_dup_stats_pruned_by_candidate_semi_join(spark, name):
     pruned to candidate-pair docs via a semi-join BEFORE the per-doc
     groupBy — without it the stats stage shuffles the whole corpus's
     shingles by doc_id, the kind of full-relation exchange that dies at
-    100 TB. (doc_ngram_jaccard is a library query since r11 — its
+    100 TB. (doc_ngram_jaccard is a library query — its
     driver-record surface is doc_minhash_lsh's `ngram` grain — but its
     plan contract is pinned standalone.)"""
     if name in QUERIES:
@@ -338,7 +338,7 @@ def test_substring_dedup_single_window_exchange(spark):
 
 
 def test_minhash_signature_build_runs_once(spark):
-    """r5 minhash design contract: the banding self-join's two sides are
+    """Minhash design contract: the banding self-join's two sides are
     the SAME signature-build subtree, and the plan intentionally carries
     no persist and no explicit repartition (both measured net costs,
     scripts/minhash_variants.py) — so correctness of the cost model rests
@@ -373,7 +373,7 @@ def test_map_only_cleaners_have_zero_shuffles(spark, name):
     no Python for the regexp families) so they stream through a 100 TB
     scan at scan speed. A shuffle appearing here means someone introduced
     an accidental wide dependency into a map-only cleaner.
-    ``doc_chunking`` left the registry in r12 (the ``chunk`` grain of
+    ``doc_chunking`` is not a registry row (it is the ``chunk`` grain of
     ``pack_sequences``, whose pack leg legitimately shuffles) — the
     map-only pin stays on the library builder."""
     if name == "doc_chunking":
@@ -391,7 +391,7 @@ def test_map_only_cleaners_have_zero_shuffles(spark, name):
 
 def test_lsh_near_dup_plan_is_bucket_join_no_python_no_collect(spark):
     """The driver row for the 100 TB similarity path must actually RUN the
-    bucketed plan (r5 VERDICT item 1): candidate generation is an equi-join
+    bucketed plan: candidate generation is an equi-join
     on the signature column — no Python worker anywhere (the exact-GEMM
     path would show MapInPandas/ArrowEvalPython), no cartesian product,
     and signatures are computed by codegen'd expressions, so the whole
@@ -404,7 +404,7 @@ def test_lsh_near_dup_plan_is_bucket_join_no_python_no_collect(spark):
 
 
 def test_incremental_dedup_bucketed_index_join_no_index_exchange(spark):
-    """The daily-ingest contract at 100 TB (r5 VERDICT item 4): with the
+    """The daily-ingest contract at 100 TB: with the
     fingerprint index persisted via write_fingerprint_index (bucketed on
     BOTH join-key columns), the incremental anti-join reads the index
     bucket-aligned — 'Bucketed: true' at the scan, NO exchange above it;
@@ -439,7 +439,7 @@ def test_incremental_dedup_bucketed_index_join_no_index_exchange(spark):
 
 
 def test_blocked_gemm_pairs_plan_is_grouped_map_no_corpus_broadcast(spark):
-    """The distributed exact all-pairs path (r6): candidate generation is a
+    """The distributed exact all-pairs path: candidate generation is a
     grouped-map GEMM over block pairs — FlatMapGroupsInPandas above ONE
     hash exchange on (__g1, __g2) — with no cartesian product and no
     broadcast-nested-loop of the corpus. (That nothing collects to the
@@ -458,30 +458,8 @@ def test_blocked_gemm_pairs_plan_is_grouped_map_no_corpus_broadcast(spark):
     assert shuffles(p) == 1, p  # ONE exchange: the block-pair groupBy
 
 
-def test_knn_join_plan_is_cogrouped_map_no_broadcast_sides(spark):
-    """knn_join (r6): both corpus-scale sides reach the scorer through the
-    cogrouped grouped-map operator (FlatMapCoGroupsInPandas) — neither side
-    is broadcast or cross-joined ahead of it. The post-candidate re-rank
-    joins are left to AQE (candidates are O(q*Bb*k), broadcastable at
-    runtime), so the pin is scoped to the candidate generator."""
-    from data_engineering_etl_pipeline_spark.extensions.similarity import (
-        knn_join)
-    from data_engineering_etl_pipeline_spark.io import load_table
-    from pyspark.sql import functions as F
-
-    emb = load_table(spark, SF_DIR, "embeddings")
-    q = (emb.filter(F.col("vec_id") % 11 == 0)
-         .select(F.col("vec_id").alias("query_id"), "embedding"))
-    p = plan_text(knn_join(emb, q, k=3, n_query_blocks=2, n_base_blocks=3))
-    assert "FlatMapCoGroupsInPandas" in p, p
-    head = p.split("FlatMapCoGroupsInPandas")[0]
-    # nothing broadcast/cartesian feeds the cogrouped scorer
-    assert "CartesianProduct" not in p, p
-    assert "BroadcastNestedLoop" not in head, head
-
-
 def test_incremental_semantic_dedup_bucketed_index_join_no_index_exchange(spark):
-    """The semantic daily-ingest contract (r6 — the embedding twin of the
+    """The semantic daily-ingest contract (the embedding twin of the
     fingerprint-index pin above): with the signature index persisted via
     write_signature_index (bucketed on BOTH join-key columns), the
     cross-batch candidate join reads the index bucket-aligned — 'Bucketed:
@@ -511,7 +489,7 @@ def test_incremental_semantic_dedup_bucketed_index_join_no_index_exchange(spark)
 
 
 def test_incremental_minhash_bucketed_index_join_no_index_exchange(spark):
-    """The lexical-LSH daily-ingest contract (r8 VERDICT item 3 — the
+    """The lexical-LSH daily-ingest contract (the
     minhash twin of the fingerprint/signature index pins above): with the
     band index persisted via write_minhash_band_index (bucketed on BOTH
     join-key columns), the cross-batch candidate join reads the index
@@ -547,7 +525,7 @@ def test_incremental_minhash_bucketed_index_join_no_index_exchange(spark):
 
 
 def test_doc_url_curation_plan_contracts(spark):
-    """The r8 URL-curation row: no cartesian product anywhere; the
+    """The URL-curation row: no cartesian product anywhere; the
     blocklist stage joins BROADCAST (LEFT ANTI — blocklists are MB-scale,
     the corpus streams map-side); the canon stage's dedup groups on the
     canonical URL's (md5, length) fingerprint so raw URLs never shuffle
@@ -569,7 +547,7 @@ def test_doc_url_curation_plan_contracts(spark):
 
 
 def test_token_budget_fill_two_phase_prefix_selection(spark):
-    """The r10 mixture fill (extensions/mixing.sample_to_token_budget)
+    """The mixture fill (extensions/mixing.sample_to_token_budget)
     must keep the sampling family's two-phase shape: (a) the window's
     cumulative sum consumes the MAP-SIDE prefix prune (MapInPandas), not
     the corpus — no scan between Window and the prune; (b) exactly two
@@ -602,7 +580,7 @@ def test_token_budget_fill_two_phase_prefix_selection(spark):
 
 
 def test_incremental_semantic_dedup_fused_verify_join_census(spark):
-    """r12 fusion pin (r11 VERDICT item 3): the within-batch exact verify
+    """Fusion pin: the within-batch exact verify
     rides the bucket self-join's filter and the cross-batch cosine runs
     directly on candidate rows that already CARRY (v, inv) from the one
     staged signature pass — no verify join-backs against a separate

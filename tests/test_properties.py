@@ -270,7 +270,7 @@ _texts_strategy = st.lists(
 @SET
 @given(texts=_texts_strategy, weak=st.booleans())
 def test_exact_dedup_two_phase_equals_text_groupby(spark, texts, weak):
-    """The two-phase fingerprint plan (r5) must be bit-identical to a plain
+    """The two-phase fingerprint plan must be bit-identical to a plain
     groupBy on raw text — for both the default xxhash64+length fingerprint
     and a deliberately colliding weak one (length only), which routes many
     distinct texts through the phase-2 exact resolver."""
@@ -334,7 +334,7 @@ def test_incremental_dedup_batch_split_invariant(spark, args):
 
     want = sorted(r["doc_id"] for r in exact_dedup_keep_first(
         spark.createDataFrame(rows, schema)).collect())
-    # both layouts (r8 VERDICT item 2): the in-batch phase is a keyed
+    # both layouts: the in-batch phase is a keyed
     # kernel — duplicate texts co-located in one partition must still
     # resolve to keep-first(min id)
     for coalesce in (False, True):
@@ -393,7 +393,7 @@ def test_blocked_gemm_pairs_equals_broadcast_property(spark, corpus,
     want = sorted((r.id_a, r.id_b, r.cosine)
                   for r in cosine_near_dup_pairs(
                       df, threshold=threshold, dim=dim).collect())
-    # both layouts (r8 VERDICT item 2): the GEMM batcher is a
+    # both layouts: the GEMM batcher is a
     # partition-local kernel — co-located duplicate vectors must not
     # change the pair set
     for layout, frame in partition_layouts(df):
@@ -406,18 +406,17 @@ def test_blocked_gemm_pairs_equals_broadcast_property(spark, corpus,
 
 @SET
 @given(corpus=_vec_corpus_strategy,
-       k=st.integers(1, 6),
-       blocks=st.tuples(st.integers(1, 4), st.integers(1, 4)))
-def test_gemm_and_knn_topk_equal_brute_property(spark, corpus, k, blocks):
-    """The two candidate-pruned exact top-k machines ≡ brute force on
-    randomized corpora: any k, any block shape, duplicate vectors (mass
-    rounded-cosine ties), zero vectors, corpora smaller than k. Queries =
+       k=st.integers(1, 6))
+def test_gemm_topk_equals_brute_property(spark, corpus, k):
+    """The candidate-pruned exact GEMM top-k ≡ brute force on randomized
+    corpora: any k, duplicate vectors (mass rounded-cosine ties), zero
+    vectors, corpora smaller than k. Queries =
     first three rows, so self-exclusion and query-as-duplicate cases
     occur naturally."""
     import random as _r
 
     from data_engineering_etl_pipeline_spark.extensions.similarity import (
-        cosine_topk, gemm_cosine_topk, knn_join)
+        cosine_topk, gemm_cosine_topk)
 
     dim = 8
     protos = [[_r.Random(200 + p).gauss(0, 1) for _ in range(dim)]
@@ -437,11 +436,6 @@ def test_gemm_and_knn_topk_equal_brute_property(spark, corpus, k, blocks):
     got_g = sorted((r.query_id, r.vec_id, r.cosine, r.rank)
                    for r in gemm_cosine_topk(df, q, k=k, dim=dim).collect())
     assert got_g == want
-    bq, bb = blocks
-    got_k = sorted((r.query_id, r.vec_id, r.cosine, r.rank)
-                   for r in knn_join(df, q, k=k, dim=dim, n_query_blocks=bq,
-                                     n_base_blocks=bb).collect())
-    assert got_k == want
 
 
 # (cid, vector) assignments with ragged magnitudes incl. negatives/zeros
@@ -504,7 +498,7 @@ def test_kmeans_update_exact_properties(spark, rows):
         assert merged == got
 
 
-# --- r8: URL canonicalization + generic balanced sampling properties ---
+# --- URL canonicalization + generic balanced sampling properties ---
 
 _url_strategy = st.lists(
     st.one_of(
@@ -559,9 +553,9 @@ _keyed_strategy = st.lists(
 @given(rows=_keyed_strategy, quota=st.integers(0, 5))
 def test_balanced_sample_by_key_properties(spark, rows, quota):
     """For ANY keyed input and quota, under BOTH the default partition
-    layout and forced single-partition co-location (r8 VERDICT item 2 —
-    on local[32], tiny inputs spread ~1 row per partition, so the
-    partition-local prune never sees co-located duplicate copies unless
+    layout and forced single-partition co-location (on local[32], tiny
+    inputs spread ~1 row per partition, so the partition-local prune never
+    sees co-located duplicate copies unless
     forced): (1) output has exactly the input rows (no inflation/loss);
     (2) per key, kept DISTINCT ids <= quota; (3) copies of one (id, key)
     share a flag; (4) when a key has <= quota distinct ids, ALL are kept
@@ -610,7 +604,7 @@ def test_balanced_sample_by_key_properties(spark, rows, quota):
 # random hosts over a tiny label alphabet so suffix matches, exact-suffix
 # hosts, deep subdomains, and unlisted TLDs all occur; the rule table is
 # drawn per example (possibly empty) with all three PSL rule classes so
-# wildcard/exception interplay (r9 VERDICT item 2) is exercised
+# wildcard/exception interplay is exercised
 _host_strategy = st.lists(
     st.one_of(
         st.none(),
@@ -688,7 +682,7 @@ _budget_map_strategy = st.fixed_dictionaries(
 def test_token_budget_fill_matches_python_reference(spark, rows, budgets):
     """For ANY keyed token-bearing input (duplicate ids, NULL keys, NULL
     and zero token counts) and ANY budget map, under BOTH partition
-    layouts (the r8 co-location discipline): the two-phase fill equals
+    layouts (the co-location discipline): the two-phase fill equals
     the naive reference — per key, distinct (id, key) at MAX tokens
     (NULL → 0; max is the layout-sound resolution, see the prune
     comment), sorted by (portable md5 of id+salt, id), kept while the

@@ -16,7 +16,7 @@ import random
 from pyspark.sql import functions as F
 
 from data_engineering_etl_pipeline_spark.extensions.similarity import (
-    cosine_topk, ivf_cosine_topk, lsh_cosine_topk)
+    cosine_topk, ivf_cosine_topk)
 from data_engineering_etl_pipeline_spark.io import load_table
 from .conftest import SF_DIR
 
@@ -55,14 +55,6 @@ def test_brute_force_finds_planted(spark):
     top = cosine_topk(emb, q, k=1)
     # the perturbed copy's nearest neighbor IS the source, at rank 1
     assert _hits(top, truth) == 1.0
-
-
-def test_lsh_recall_on_planted(spark):
-    emb, q, truth = _planted(spark)
-    approx = lsh_cosine_topk(emb, q, k=K, n_planes=8, n_tables=4, dim=64)
-    # cos≈0.99 ⇒ per-bit collision ≈ 1-angle/pi ≈ 0.955, per-table 0.955⁸≈0.69,
-    # miss probability over 4 tables ≈ (1-0.69)⁴ ≈ 1% per query
-    assert _hits(approx, truth) >= 0.8
 
 
 def test_ivf_recall_on_planted(spark):
@@ -113,7 +105,7 @@ def test_bucketed_near_dup_finds_planted_duplicates(spark):
 def test_blas_exact_path_refuses_oversized_build_side(spark):
     """The exact-GEMM near-dup path must refuse a build side past the
     broadcast budget with the bucket_signatures guidance, not collect it
-    toward a driver OOM (r3 VERDICT item 4)."""
+    toward a driver OOM."""
     import pytest
 
     from data_engineering_etl_pipeline_spark.extensions.similarity import (
@@ -126,84 +118,6 @@ def test_blas_exact_path_refuses_oversized_build_side(spark):
             cosine_near_dup_pairs(emb, threshold=0.95).collect()
     finally:
         spark.conf.unset("spark.sql.graft.blasBroadcastRows")
-
-
-def test_pq_adc_recall_on_planted(spark):
-    """PQ/ADC compressed-domain scan: planted near-dup queries (cosine
-    ≈ 0.99 to their source) must recover the source in the ADC top-k with
-    high recall — 8 subspaces × 16 codes on 64-dim random vectors is a
-    coarse quantizer, so the bar is recall ≥ 0.8 at k=5, not exactness
-    (the exact paths are the oracle-checked queries)."""
-    from data_engineering_etl_pipeline_spark.extensions.similarity import (
-        fit_pq_codebooks, pq_adc_topk, pq_encode)
-
-    emb, queries, truth = _planted(spark)
-    books = fit_pq_codebooks(emb, n_subspaces=8, n_codes=16)
-    codes = pq_encode(emb, books)
-    got = pq_adc_topk(codes, queries, books, k=K)
-    assert _hits(got, truth) >= 0.8
-
-
-def test_pq_encode_shape_and_determinism(spark):
-    """Codes are n_subspaces ints in [0, n_codes); encoding is
-    deterministic across runs (seeded fit, argmax ties stable)."""
-    from data_engineering_etl_pipeline_spark.extensions.similarity import (
-        fit_pq_codebooks, pq_encode)
-
-    emb = load_table(spark, SF_DIR, "embeddings")
-    books = fit_pq_codebooks(emb, n_subspaces=8, n_codes=16)
-    assert len(books) == 8 and all(len(b) <= 16 for b in books)
-    a = {r.vec_id: list(r.codes) for r in pq_encode(emb, books).collect()}
-    b = {r.vec_id: list(r.codes) for r in pq_encode(emb, books).collect()}
-    assert a == b
-    assert all(len(c) == 8 and all(0 <= x < 16 for x in c)
-               for c in a.values())
-
-
-def test_ivfpq_recall_on_planted(spark):
-    """The IVF-PQ composition (coarse lists bound the scan, ADC scores the
-    candidates compressed-domain) must still recover planted near-dups:
-    recall compounds both stages' losses, so the bar is ≥ 0.6 at k=5 with
-    nprobe=8 of 16 lists."""
-    from data_engineering_etl_pipeline_spark.extensions.similarity import (
-        ivfpq_cosine_topk)
-
-    emb, queries, truth = _planted(spark)
-    got = ivfpq_cosine_topk(emb, queries, k=K, n_centroids=16, nprobe=8,
-                            n_subspaces=8, n_codes=16)
-    assert _hits(got, truth) >= 0.6
-
-
-def test_pq_paths_handle_null_and_zero_vectors(spark):
-    """Null/zero-norm vectors must not crash or pollute the PQ paths: null
-    base rows encode to NULL codes and never appear in ADC top-k; null
-    queries are excluded (no rows) rather than raising driver-side."""
-    from data_engineering_etl_pipeline_spark.extensions.similarity import (
-        fit_pq_codebooks, ivfpq_cosine_topk, pq_adc_topk, pq_encode)
-
-    emb, queries, truth = _planted(spark)
-    weird = spark.createDataFrame(
-        [(900001, None), (900002, [0.0] * 64)],
-        "vec_id long, embedding array<double>")
-    base = emb.unionByName(weird, allowMissingColumns=True)
-    books = fit_pq_codebooks(base, n_subspaces=8, n_codes=16)
-    codes = pq_encode(base, books)
-    null_codes = {r.vec_id for r in
-                  codes.filter(F.col("codes").isNull()).collect()}
-    assert {900001, 900002} <= null_codes
-
-    wq = spark.createDataFrame([(999999, None)],
-                               "query_id long, embedding array<double>")
-    got = pq_adc_topk(codes, queries.unionByName(wq), books, k=K)
-    ids = {r.vec_id for r in got.collect()}
-    qids = {r.query_id for r in got.collect()}
-    assert not ({900001, 900002} & ids)   # null base rows never ranked
-    assert 999999 not in qids             # null query emits no rows
-    assert _hits(got, truth) >= 0.8       # real queries unaffected
-
-    got2 = ivfpq_cosine_topk(base, queries.unionByName(wq), k=K,
-                             n_centroids=16, nprobe=8)
-    assert 999999 not in {r.query_id for r in got2.collect()}
 
 
 def _doubled_embeddings(spark):
@@ -261,52 +175,10 @@ def test_semantic_dedup_clustered_finds_planted_copies(spark):
     # Subset guarantee holds for DROPPED MEMBER IDS only: when clustering
     # splits a multi-pair component, a correct drop can surface with a
     # different (higher) min-id keeper than the exact path's, so comparing
-    # (member, keeper) tuples would flag correct behavior (r4 review
-    # finding — latent under the current fixture, where components are
-    # planted pairs).
+    # (member, keeper) tuples would flag correct behavior (latent under
+    # the current fixture, where components are planted pairs).
     assert {m for m, _ in got} <= {m for m, _ in truth}, (
         "false positive survived the exact-verify tail")
-
-
-def test_ivfpq_residual_beats_plain_on_clustered(spark):
-    """Residual IVF-PQ (the full Jégou/Faiss layout: PQ over unit(v) −
-    coarse_centroid, ADC = q·c + Σ LUT) must beat raw-unit-vector PQ when
-    the corpus is CLUSTERED — the regime real embedding corpora live in,
-    where the coarse quantizer explains most variance and the residuals
-    are small. Full probe (nprobe = n_centroids) isolates the PQ
-    reconstruction error from list-miss error. On isotropic random
-    vectors the two are statistically indistinguishable (nothing for the
-    centroids to explain) — measured, and why THIS test plants cluster
-    structure. Everything is seeded, so the recalls are deterministic."""
-    import numpy as np
-
-    from data_engineering_etl_pipeline_spark.extensions.similarity import (
-        cosine_topk, ivfpq_cosine_topk)
-
-    rng = np.random.default_rng(5)
-    centers = rng.normal(size=(16, 64))
-    centers /= np.linalg.norm(centers, axis=1)[:, None]
-    rows = [(i, [float(x) for x in centers[i % 16] + 0.25 * rng.normal(size=64)])
-            for i in range(800)]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    q = (emb.filter(F.col("vec_id") < 20)
-         .select(F.col("vec_id").alias("query_id"), "embedding"))
-    truth: dict = {}
-    for r in cosine_topk(emb, q, k=K).collect():
-        truth.setdefault(r["query_id"], set()).add(r["vec_id"])
-
-    def recall(residual: bool) -> float:
-        got = ivfpq_cosine_topk(emb, q, k=K, n_centroids=16, nprobe=16,
-                                n_subspaces=8, n_codes=16, residual=residual)
-        byq: dict = {}
-        for r in got.collect():
-            byq.setdefault(r["query_id"], set()).add(r["vec_id"])
-        return (sum(len(t & byq.get(qid, set())) for qid, t in truth.items())
-                / sum(len(t) for t in truth.values()))
-
-    plain, res = recall(False), recall(True)
-    assert res > plain, (plain, res)   # measured 0.22 vs 0.32
-    assert res >= 0.28, res
 
 
 def _doubled(spark):
@@ -427,38 +299,16 @@ def test_gemm_topk_short_corpus_and_zero_vectors(spark):
     assert got[-1][2] is None  # zero vector sorts last
 
 
-def test_knn_join_bit_equals_brute(spark):
-    """knn_join (cogrouped block-pair BLAS, neither side collected or
-    broadcast) must reproduce cosine_topk bit-for-bit at any block shape,
-    including degenerate 1x1 (one cell holding everything) and blocks
-    exceeding the data's natural partitioning."""
-    from data_engineering_etl_pipeline_spark.extensions.similarity import (
-        knn_join)
-
-    emb = load_table(spark, SF_DIR, "embeddings")
-    q = (emb.filter(F.col("vec_id") % 11 == 0).limit(30)
-         .select(F.col("vec_id").alias("query_id"), "embedding"))
-    want = sorted((r.query_id, r.vec_id, r.cosine, r.rank)
-                  for r in cosine_topk(emb, q, k=K).collect())
-    assert want
-    for bq, bb in ((1, 1), (3, 2), (8, 8)):
-        got = sorted((r.query_id, r.vec_id, r.cosine, r.rank)
-                     for r in knn_join(emb, q, k=K, n_query_blocks=bq,
-                                       n_base_blocks=bb).collect())
-        assert got == want, f"blocks=({bq},{bb}) diverged"
-
-
 def test_distributed_gemm_family_string_keyed(spark):
-    """String-keyed corpora through the whole r6 distributed-GEMM family —
-    the r4 lesson (hardcoded 'long' schemas crashed the PQ family on
-    string ids) applied up front: pair/candidate schemas follow the id
+    """String-keyed corpora through the distributed-GEMM family (blocked
+    near-dup pairs and the GEMM top-k): a hardcoded 'long' schema would
+    crash on string ids, so pair/candidate schemas must follow the id
     type, and the numpy kernels (np.full / np.sort / np.minimum on object
     arrays) must handle non-numeric ids."""
     import random as _random
 
     from data_engineering_etl_pipeline_spark.extensions.similarity import (
-        blocked_gemm_pairs, cosine_near_dup_pairs, gemm_cosine_topk,
-        knn_join, with_vec_inv)
+        cosine_near_dup_pairs, gemm_cosine_topk)
 
     rnd = _random.Random(7)
     protos = [[rnd.gauss(0, 1) for _ in range(16)] for _ in range(4)]
@@ -481,15 +331,11 @@ def test_distributed_gemm_family_string_keyed(spark):
                       for r in cosine_topk(emb, q, k=3, dim=16).collect())
     got_gemm = sorted((r.query_id, r.vec_id, r.cosine, r.rank)
                       for r in gemm_cosine_topk(emb, q, k=3, dim=16).collect())
-    got_knn = sorted((r.query_id, r.vec_id, r.cosine, r.rank)
-                     for r in knn_join(emb, q, k=3, dim=16, n_query_blocks=2,
-                                       n_base_blocks=3).collect())
     assert got_gemm == want_top
-    assert got_knn == want_top
 
 
 def test_incremental_semantic_dedup_daily_ingest(spark):
-    """The daily-ingest form of embedding near-dup removal (r6 — the
+    """The daily-ingest form of embedding near-dup removal (the
     semantic twin of dedup.incremental_exact_dedup): day-1 corpus → index;
     day-2 batch = replayed exact copies (identical vectors collide in
     EVERY LSH table → deterministic recall 1.0, all must drop against the
@@ -540,40 +386,8 @@ def test_incremental_semantic_dedup_daily_ingest(spark):
     assert fresh2.count() == 0
 
 
-def test_pq_encode_fold_matches_duckdb_and_arrow(spark, duck):
-    """r10 VERDICT item 7 — the PQ family's code-assignment DECISION
-    hash-checked, closing the gap between 'recall-tested' and
-    'decision-verified': under a planted codebook (seeded-Gaussian unit
-    sub-centroids, constants shared verbatim), the fixed-point fold
-    twin's codes (a) hash-match the DuckDB twin exactly — integer sums,
-    ties-to-lowest argmax — and (b) equal the production Arrow kernel's
-    argmax on the real embeddings table (the float/fixed-point decisions
-    agree whenever top-2 scores separate beyond quantization; planted
-    Gaussian codebooks give macroscopic margins). NULL codes for a
-    zero vector in both (c)."""
-    from data_engineering_etl_pipeline_spark.extensions.similarity import (
-        planted_centroids, pq_encode, pq_encode_fold, pq_encode_fold_sql)
-
-    n_sub, sub, n_codes = 4, 16, 4
-    cbs = [planted_centroids(3000 + j, n_codes, sub) for j in range(n_sub)]
-    emb = load_table(spark, SF_DIR, "embeddings").select("vec_id", "embedding")
-    got = pq_encode_fold(emb, cbs, dim=64)
-    from .conftest import assert_matches_oracle
-    assert_matches_oracle(got, duck, pq_encode_fold_sql(cbs, dim=64),
-                          "pq_encode_fold")
-    fold = {r["vec_id"]: tuple(r[f"code{j}"] for j in range(n_sub))
-            for r in got.collect()}
-    arrow = {r["vec_id"]: tuple(r["codes"]) for r in
-             pq_encode(emb, cbs, dim=64).collect()}
-    assert fold == arrow
-    zero = spark.createDataFrame([(1, [0.0] * 64)],
-                                 "vec_id long, embedding array<double>")
-    z = pq_encode_fold(zero, cbs, dim=64).collect()[0]
-    assert all(z[f"code{j}"] is None for j in range(n_sub))
-
-
 def test_fold_kernel_matches_fold_expressions(spark):
-    """r12: `sig_mode='fold'` signatures are computed by an Arrow kernel
+    """`sig_mode='fold'` signatures are computed by an Arrow kernel
     whose np.cumsum prefix scan must perform the IDENTICAL float64
     addition sequence as the `aggregate(zip_with(...))` expression folds
     it replaced (the oracle-portability contract). Pin bucket-for-bucket
@@ -622,7 +436,7 @@ def test_fold_kernel_matches_fold_expressions(spark):
 
 
 def test_fold_signatures_agree_with_arrow_and_drive_ingest(spark):
-    """r11 (r10 VERDICT item 1): the bit-portable `sig_mode='fold'`
+    """The bit-portable `sig_mode='fold'`
     signature expressions must agree bucket-for-bucket with the Arrow
     matmul path on real embeddings (same seeded plane constants; a
     disagreement means a plane dot sat within reassociation ulps of
@@ -700,7 +514,7 @@ def test_incremental_semantic_dedup_refuses_config_mismatch(spark):
     """An index built at one (n_planes, n_tables) must be REFUSED at
     another: signatures from a different config silently match nothing in
     the (table, bucket) join and would re-admit every indexed duplicate
-    (r6 review finding — the config rides the index rows)."""
+    (the config rides the index rows)."""
     import pytest
 
     from data_engineering_etl_pipeline_spark.extensions.similarity import (
@@ -713,9 +527,10 @@ def test_incremental_semantic_dedup_refuses_config_mismatch(spark):
 
 
 def test_semantic_index_manifest_config_check_is_metadata_only(spark):
-    """r9 VERDICT item 6, semantic twin: write_signature_index writes the
-    LSH config as a manifest sidecar; read_signature_index attaches it;
-    incremental_semantic_dedup validates against the MANIFEST (rows say
+    """Semantic twin of the minhash manifest check: write_signature_index
+    writes the LSH config as a manifest sidecar; read_signature_index
+    attaches it; incremental_semantic_dedup validates against the MANIFEST
+    (rows say
     the right config here, the tampered manifest says another — a data
     scan would have passed, so the refusal proves the metadata-only
     path)."""
@@ -742,7 +557,7 @@ def test_semantic_index_manifest_config_check_is_metadata_only(spark):
 def test_incremental_semantic_dedup_preserves_batch_columns(spark):
     """fresh must carry EVERY batch column (the incremental_exact_dedup
     contract this operator mirrors): payload projected away silently loses
-    data on the daily sink (r6 review finding)."""
+    data on the daily sink."""
     from data_engineering_etl_pipeline_spark.extensions.similarity import (
         embedding_signature_index, incremental_semantic_dedup)
 
@@ -765,8 +580,7 @@ def test_gemm_topk_nan_vector_parity(spark):
     paths. Spark orders NaN above every number, so an unguarded inv would
     rank the NaN cosine FIRST in brute force while the Arrow kernel treats
     it as missing — with_vec_inv now nulls NaN norms (matching the DuckDB
-    twin's CASE semantics), so both paths rank it with the NULL group
-    (r6 review finding)."""
+    twin's CASE semantics), so both paths rank it with the NULL group."""
     from data_engineering_etl_pipeline_spark.extensions.similarity import (
         gemm_cosine_topk)
 
@@ -785,13 +599,13 @@ def test_gemm_topk_nan_vector_parity(spark):
     assert got == want
     # NaN AND Inf vectors rank in the NULL-cosine group (last), not first
     # (Inf: norm=inf -> inv would be 0.0 -> NaN cosine ranked FIRST by
-    # Spark and dropped by numpy without the finite guard — r6 review)
+    # Spark and dropped by numpy without the finite guard)
     assert want[0][1] not in (2, 4)
     assert {t[1] for t in want if t[2] is None} == {2, 4}
 
 
 def test_cosine_cross_pairs_both_paths_equal_theta_join(spark):
-    """Bipartite exact pairs (r6): broadcast-GEMM and cogrouped block
+    """Bipartite exact pairs: broadcast-GEMM and cogrouped block
     paths must both reproduce the naive theta cross-join bit-for-bit."""
     from data_engineering_etl_pipeline_spark.extensions.similarity import (
         _cosine, cosine_cross_pairs, with_vec_inv)
@@ -848,7 +662,7 @@ def test_semantic_decontamination_flags_planted(spark):
 def test_incremental_semantic_dedup_refuses_heterogeneous_index(spark):
     """A UNION of segments built at different LSH configs must be refused —
     a limit(1) probe would pass on a matching sample row while the other
-    segment silently matches nothing (r6 review finding)."""
+    segment silently matches nothing."""
     import pytest
 
     from data_engineering_etl_pipeline_spark.extensions.similarity import (
@@ -905,7 +719,7 @@ def test_cluster_balanced_sample_flattens_planted_clusters(spark):
                  emb, quota_per_cluster=20, n_clusters=3, dim=16).collect()}
     assert rerun == got
     # repartitioned input: the codebook trains on a partition-dependent
-    # Bernoulli sample (shared property of the IVF/PQ fits), so both cid
+    # Bernoulli sample (a property of the IVF fit), so both cid
     # labels AND boundaries may shift — the invariants that survive any
     # assignment are the quota cap per cluster and full row coverage
     rp = cluster_balanced_sample(emb.repartition(7), quota_per_cluster=20,
@@ -918,7 +732,7 @@ def test_cluster_balanced_sample_flattens_planted_clusters(spark):
 
 
 def test_tfidf_bridge_drives_incremental_semantic_dedup(spark):
-    """r6 VERDICT item 3 — the advertised text→vector bridge COMPOSED with
+    """The advertised text→vector bridge COMPOSED with
     the daily-ingest semantic dedup, end-to-end on text: day 1 fits the
     idf, vectorizes the corpus (hashed TF-IDF), and builds the signature
     index; day 2 vectorizes a TEXT batch under the FROZEN day-1 idf (the
@@ -994,11 +808,11 @@ def test_tfidf_bridge_drives_incremental_semantic_dedup(spark):
 
 
 def test_fold_and_gemm_assignment_agree_on_malformed_rows(spark):
-    """r7 advisor finding: a wrong-length vector's NULL dots used to fall
-    through every WHEN of the fold CASE to the ELSE (cid k-1) while the
-    gemm kernel zero-filled it to cid 0 — the two assignment twins
-    silently disagreed on malformed rows. Both must now send NULL AND
-    wrong-length vectors to cid 0."""
+    """Without an explicit length override a wrong-length vector's NULL
+    dots fall through every WHEN of the fold CASE to the ELSE (cid k-1)
+    while the gemm kernel zero-fills it to cid 0 — the two assignment
+    twins would silently disagree on malformed rows. Both must send NULL
+    AND wrong-length vectors to cid 0."""
     from data_engineering_etl_pipeline_spark.extensions.similarity import (
         _nearest_centroid_fold, _nearest_centroids, planted_centroids)
 
@@ -1017,7 +831,7 @@ def test_fold_and_gemm_assignment_agree_on_malformed_rows(spark):
 
 
 def test_semantic_incr_mutant_margin_floor():
-    """r11 advisor finding: the incremental semantic-dedup oracle's hash
+    """The incremental semantic-dedup oracle's hash
     parity near the 0.94 threshold rests on the planted zero-tail mutants
     keeping a decision margin far beyond the cross-engine float-chain
     reassociation window (~20 ulp). Re-measure that margin over EVERY
