@@ -35,7 +35,7 @@ def repaint_check(old: DataFrame, new: DataFrame, keys: list[str],
 
     Returns key columns + ``(old_<c>, new_<c>)`` for each changed cell row.
 
-    Null-safe (r5 review finding): a repaint TO or FROM NULL is a change —
+    Null-safe: a repaint TO or FROM NULL is a change —
     the naive ``abs(old−new) > tol`` evaluates to NULL there and the
     filter silently passed the worst kind of repaint. null↔null is
     unchanged.
@@ -52,20 +52,3 @@ def repaint_check(old: DataFrame, new: DataFrame, keys: list[str],
              | (F.abs(oc - nc) > tol))
         changed = d if changed is None else (changed | d)
     return joined.filter(changed)
-
-
-def ohlc_violations(df: DataFrame, close: str = "close", low: str = "low",
-                    high: str = "high", tol: float = 1e-6) -> DataFrame:
-    """Zero-violation invariant (reference: test_data_integrity.py:70-75,
-    186-203): rows where close falls outside [low−tol, high+tol] — OR
-    where any of the three prices is NULL (r5 review finding: a fact row
-    missing a critical price is itself an integrity violation in this
-    AUDIT\'s contract; the naive predicate evaluated to NULL and the row
-    silently passed. The quality GATE\'s ohlc_violation keeps its
-    documented null=non-violation convention — there, nulls are handled
-    by the schema-validation stage before the predicate runs)."""
-    bad = ((F.col(close) < F.col(low) - tol)
-           | (F.col(close) > F.col(high) + tol)
-           | F.col(close).isNull() | F.col(low).isNull()
-           | F.col(high).isNull())
-    return df.filter(bad)

@@ -35,10 +35,9 @@ from .text_stats import token_count_regex
 def _words(text_col: str) -> F.Column:
     """Lowercased whitespace tokens with boundary empties removed — the
     corpus-family tokenizer. ``trim()`` strips only ASCII spaces, so a doc
-    ending in a newline/tab otherwise mints phantom ``''`` tokens (r5
-    review finding: inflated BM25 doc lengths, phantom LM bigrams, and
-    polluted DSIR/TF-IDF buckets — while cleaning.py and bpe.py already
-    filtered them; one convention now)."""
+    ending in a newline/tab otherwise mints phantom ``''`` tokens
+    (inflated BM25 doc lengths, phantom LM bigrams, polluted DSIR/TF-IDF
+    buckets); cleaning.py and bpe.py filter them the same way."""
     return F.filter(F.split(F.lower(F.trim(F.col(text_col))), r"\s+"),
                     lambda x: x != "")
 
@@ -138,20 +137,18 @@ def perplexity_buckets(docs: DataFrame, id_col: str = "doc_id",
     Compose with :func:`stratified_sample` on ``ppl_bucket`` for the
     paper's per-bucket downsampling (keep head, thin tail).
 
-    Plan shape: the tercile cutoffs are ONE exact-percentile aggregate
-    over the docs-sized score relation (a 1-row broadcast); at 100 TB pass
+    Plan shape: the tercile cutoffs are ONE exact-percentile aggregate over the
+    docs-sized score relation (a 1-row broadcast); at 100 TB pass
     ``approx_accuracy`` to swap ``percentile`` for ``approx_percentile``
-    (KLL-family sketch, map-side combinable) — same plan, and the swap is
-    a TESTED contract since r12 (r11 VERDICT item 5,
-    tests/test_scale_toolkit.py): each approximate cutoff's RANK in the
-    exact score distribution is within ``n / approx_accuracy`` of the
-    target tercile rank (Spark's documented deterministic bound), so
-    only rank-adjacent docs can change bucket. The score relation is
-    PERSISTED (docs-sized:
-    id + two numbers) — it feeds both the cutoff aggregate and the output,
-    and uncached the whole corpus-trained LM (bigram explode + vocabulary
-    aggs + data-sized scoring join, the family's most expensive job) would
-    execute twice (r5 review finding). Same caller-release contract as
+    (KLL-family sketch, map-side combinable) — same plan, and the swap is a
+    TESTED contract (tests/test_scale_toolkit.py): each approximate cutoff's
+    RANK in the exact score distribution is within ``n / approx_accuracy`` of
+    the target tercile rank (Spark's documented deterministic bound), so only
+    rank-adjacent docs can change bucket. The score relation is PERSISTED
+    (docs-sized: id + two numbers) — it feeds both the cutoff aggregate and the
+    output, and uncached the whole corpus-trained LM (bigram explode +
+    vocabulary aggs + data-sized scoring join, the family's most expensive job)
+    would execute twice. Same caller-release contract as
     ngram_jaccard_pairs."""
     from ..caching import pin
 
@@ -281,15 +278,14 @@ def epoch_plan(packs: DataFrame, n_epochs: int,
     ``pack_sequences``' hash assignment guarantees; a CALLER feeding
     externally skewed shards puts the dominant shard's rank in one
     task (measured: per-row ratio 0.749 at 16× rows with a 90%-hot
-    shard, scripts/mixing_skew_smoke.py — still sub-linear, but
-    re-shard first at scale).
+    shard — still sub-linear, but re-shard first at scale).
     Duplicate pack rows are collapsed first (``pack_sequences`` emits
     one row per DOC; the plan is per PACK — docs-sized input, pack-
     sized output). NULL pack ids are excluded in BOTH engines: the
     engine's ``concat_ws`` hash would silently collapse distinct NULL
     packs onto one 'epoch|salt' rank while the SQL twin's ``||`` chain
     NULLs out — engine divergence on an id no loader could schedule
-    anyway (``pack_sequences`` never emits them; r10 advisor finding)."""
+    anyway (``pack_sequences`` never emits them)."""
     if n_epochs <= 0:
         raise ValueError(f"epoch_plan: n_epochs={n_epochs} must be > 0")
     base = (packs.filter(F.col(pack_col).isNotNull())
@@ -360,11 +356,17 @@ def hashed_ngram_buckets(text_col: str, buckets: int,
 def _dsir_scored(raw: DataFrame, target: DataFrame, id_col: str,
                  text_col: str, target_text_col: str, buckets: int,
                  smoothing: float, salt: str) -> DataFrame:
-    """Inner DSIR scoring relation: one row per raw doc WITH features
-    (``(id, n_feats, logw)``, logw never NULL). ``dsir_logweights`` adds
-    the featureless-docs left join for the complete contract;
-    ``dsir_topk`` consumes this directly (a featureless doc can never
-    rank, so the topk path skips that docs-sized join + extra scan)."""
+    """DSIR importance log-weights (Xie et al. 2023, arXiv:2302.03169):
+    ``logw = Σ_f c_f(doc) · (ln p_target(f) − ln p_raw(f))`` with add-a
+    smoothed bucket probabilities ``p(b) = (C[b]+a)/(N+a·B)``; high logw =
+    looks like the target. One row per raw doc WITH features
+    (``(id, n_feats, logw)``, logw never NULL): a featureless doc can
+    never rank in :func:`dsir_topk`, so no docs-sized join restores it.
+
+    Both bucket-count tables are ``buckets``-sized (the target corpus is
+    small by construction; the raw count is a map-side-combinable
+    groupBy), so the log-ratio table broadcasts and scoring is one
+    map-only explode + broadcast join + per-doc sum."""
     a = float(smoothing)
     feats = hashed_ngram_buckets(text_col, buckets, salt)
     raw_f = raw.select(F.col(id_col), F.explode(feats).alias("__b"))
@@ -387,38 +389,6 @@ def _dsir_scored(raw: DataFrame, target: DataFrame, id_col: str,
             .groupBy(id_col).agg(
                 F.count(F.lit(1)).alias("n_feats"),
                 F.round(F.sum("__lr"), 6).alias("logw")))
-
-
-def dsir_logweights(raw: DataFrame, target: DataFrame,
-                    id_col: str = "doc_id", text_col: str = "text",
-                    target_text_col: str = "text", buckets: int = 4096,
-                    smoothing: float = 1.0,
-                    salt: str = "dsir-v1") -> DataFrame:
-    """DSIR importance log-weights (Xie et al. 2023, arXiv:2302.03169):
-    score every RAW document by how much more likely its hashed n-gram
-    features are under the TARGET distribution than under the raw one —
-    ``logw = Σ_f c_f(doc) · (ln p_target(f) − ln p_raw(f))`` with add-a
-    smoothed bucket probabilities ``p(b) = (C[b]+a)/(N+a·B)``. Returns
-    ``(id, n_feats, logw)`` for EVERY raw doc (featureless docs get
-    ``n_feats=0``, NULL logw); high logw = looks like the target.
-    Sampling proportional to ``exp(logw)`` (see :func:`dsir_topk`)
-    reweights the raw corpus toward the target domain — the public
-    importance-resampling recipe for data selection.
-
-    Plan shape at 100 TB: both bucket-count tables are ``buckets``-sized
-    (KB–MB) — the target corpus is small by construction, and the raw
-    corpus's count pass is a map-side-combinable groupBy on bucket ids.
-    The log-ratio table broadcasts; scoring is one map-only feature
-    explode + broadcast join + per-doc sum (partial agg collapses to
-    docs-sized rows before the exchange). The completeness left join is
-    the one docs-sized exchange — use :func:`dsir_topk` when only the
-    selection matters (it skips this join entirely)."""
-    scored = _dsir_scored(raw, target, id_col, text_col, target_text_col,
-                          buckets, smoothing, salt)
-    return (raw.select(id_col).join(scored, id_col, "left")
-            .select(F.col(id_col),
-                    F.coalesce("n_feats", F.lit(0)).alias("n_feats"),
-                    "logw"))
 
 
 def dsir_topk(raw: DataFrame, target: DataFrame, k: int,
@@ -455,7 +425,7 @@ def _idf_from_buckets(base: DataFrame, dim: int) -> "np.ndarray":
     hashed bucket arrays). ONE corpus pass fits the whole idf table: a
     sentinel bucket (-1) prepended to every non-null bucket array makes
     n_docs just another row of the (≤ dim+1)-row document-frequency
-    table, instead of a second eager count() scan (r5 review finding)."""
+    table, instead of a second eager count() scan."""
     dfreq = (base.filter(F.col("__b").isNotNull())
              .select(F.explode(F.concat(
                  F.array(F.lit(-1)), F.array_distinct("__b"))).alias("__k"))
@@ -499,7 +469,7 @@ def hashed_tfidf_vectors(docs: DataFrame, id_col: str = "doc_id",
     ``semantic_dedup`` (pass ``dim=dim``), giving text near-dup and
     retrieval WITHOUT a precomputed embedding column.
 
-    NULL-text convention (r4 ADVICE): a NULL-text doc has a NULL bucket
+    NULL-text convention: a NULL-text doc has a NULL bucket
     array — it is EXCLUDED from the idf's N (it can never contribute
     document frequency) and its output vector is all-zero, which has
     cosine NULL (not 0) downstream because ``with_vec_inv`` nulls the
@@ -515,22 +485,21 @@ def hashed_tfidf_vectors(docs: DataFrame, id_col: str = "doc_id",
     shuffles or reaches the driver.
 
     ``idf``: a precomputed :func:`fit_tfidf_idf` table — pass the frozen
-    reference-corpus fit when vectorizing INCREMENTAL batches (then this
-    call is fully map-only: no fit pass at all), omit for the one-shot
-    self-fit. The self-fit path TOKENIZES ONCE (r7 VERDICT item 2): the
-    bucket relation is engine-pinned (caller-release contract) so the
-    eager idf aggregate materializes it and the vectorizer pass reads the
-    cache instead of re-running tokenize+md5 over the corpus — the
-    measured dominant cost of this operator. That cache is CORPUS-SIZED
-    (same order as the text itself, MEMORY_AND_DISK) — a trade sized for
-    the one-shot/benchmark shape, NOT the deployment default (r8 VERDICT
-    item 5): a 100 TB pipeline should ``fit_tfidf_idf`` once on the
-    reference corpus and pass the frozen table on every apply — zero
-    pin, zero fit pass, and byte-identical vectors whenever the apply
-    corpus equals the fit corpus (fit-once/apply-daily == self-fit,
-    unit-proven in tests/test_corpus_ops.py) — which is also the ONLY
-    correct convention across batches (each day's df/N drift would
-    otherwise re-weight every bucket; see :func:`fit_tfidf_idf`)."""
+    reference-corpus fit when vectorizing INCREMENTAL batches (then this call
+    is fully map-only: no fit pass at all), omit for the one-shot self-fit. The
+    self-fit path TOKENIZES ONCE: the bucket relation is engine-pinned
+    (caller-release contract) so the eager idf aggregate materializes it and
+    the vectorizer pass reads the cache instead of re-running tokenize+md5 over
+    the corpus — the measured dominant cost of this operator. That cache is
+    CORPUS-SIZED (same order as the text itself, MEMORY_AND_DISK) — a trade
+    sized for the one-shot/benchmark shape, NOT the deployment default: a
+    100 TB pipeline should ``fit_tfidf_idf`` once on the reference corpus and pass
+    the frozen table on every apply — zero pin, zero fit pass, and
+    byte-identical vectors whenever the apply corpus equals the fit corpus
+    (fit-once/apply-daily == self-fit, unit-proven in tests/test_corpus_ops.py)
+    — which is also the ONLY correct convention across batches (each day's df/N
+    drift would otherwise re-weight every bucket; see
+    :func:`fit_tfidf_idf`)."""
     from pyspark.sql.functions import pandas_udf
 
     base = docs.select(F.col(id_col),
@@ -613,8 +582,8 @@ def chunk_documents(docs: DataFrame, window: int = 512, stride: int = 384,
     ``k = 0 .. ⌈(n_tok − window)/stride⌉`` (the last window is short when
     the tail is), and a doc shorter than one window yields exactly one
     chunk. NULL-text docs yield ZERO chunks — matching SQL NULL
-    propagation in the DuckDB twin (the r5 review found the posexplode of
-    a NULL-derived sequence minted a phantom full-window chunk). Map-only:
+    propagation in the DuckDB twin (a posexplode of a NULL-derived
+    sequence would mint a phantom full-window chunk). Map-only:
     split + sequence + explode + slice, fan-out bounded by ⌈n_tok/stride⌉
     — no shuffle, streams through a 100 TB scan. The construction is
     SQL-expressible, so DuckDB oracles can verify it bit-for-bit.

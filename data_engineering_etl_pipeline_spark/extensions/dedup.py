@@ -30,7 +30,7 @@ def _default_fingerprint(text_col: str) -> list:
     Length rides along for free (it is already computed during the scan)
     and cheaply splits same-hash groups before any text comparison.
 
-    TOTAL by construction (r6): ``xxhash64(NULL)`` is the non-null seed
+    TOTAL by construction: ``xxhash64(NULL)`` is the non-null seed
     hash, and NULL text's length maps to the sentinel ``-1`` (no real text
     has it), so the fingerprint columns are never NULL. That keeps SQL
     group semantics for the NULL-text group AND lets the incremental index
@@ -180,35 +180,11 @@ def doc_fingerprints(docs: DataFrame, id_col: str = "doc_id",
     # never NULL) — attach that as metadata so a build→ingest handoff in
     # one session skips incremental_exact_dedup's NULL-__fplen migration
     # probe, which would otherwise EAGERLY materialize this whole
-    # aggregate once just for take(1) (r12 — the index-manifest fix
-    # applied family-wide). Derived frames drop the attribute and fall
-    # back to the probe — pre-total persisted indexes are still refused.
+    # aggregate once just for take(1). Derived frames drop the attribute
+    # and fall back to the probe — pre-total persisted indexes are still
+    # refused.
     out._index_manifest = {"fp_total": True}
     return out
-
-
-def write_fingerprint_index(index: DataFrame, table: str,
-                            n_buckets: int = 8) -> None:
-    """Persist a :func:`doc_fingerprints` index BUCKETED by ``(__fp,
-    __fplen)`` — the write-once pre-shuffle that makes every later
-    incremental-dedup join exchange-free on the index side (r5 VERDICT
-    item 4: the docstring contract 'bucket by __fp' now has a concrete
-    writer + a plan pin in tests/test_plans.py). Both join-key columns
-    bucket+sort: v1 bucketing only engages when the join keys exactly
-    cover the bucket columns. Daily at 100 TB: the historical index (KB
-    per million docs) is read back bucket-aligned, so only the new
-    batch's own rows ever shuffle; the index never re-exchanges."""
-    from ..scale import write_bucketed
-
-    write_bucketed(index.select("__fp", "__fplen", "keep_id"), table,
-                   bucket_col=["__fp", "__fplen"], n_buckets=n_buckets,
-                   sort_col=["__fp", "__fplen"])
-
-
-def read_fingerprint_index(spark, table: str) -> DataFrame:
-    """Read a bucketed fingerprint index back with its bucket metadata (so
-    joins on ``__fp`` need no exchange)."""
-    return spark.table(table)
 
 
 def incremental_exact_dedup(new_docs: DataFrame, index: DataFrame,
@@ -235,24 +211,23 @@ def incremental_exact_dedup(new_docs: DataFrame, index: DataFrame,
     """
     batch = exact_dedup_keep_first(new_docs, id_col, text_col)
     with_fp = batch.select("*", *_default_fingerprint(text_col))
-    # PLAIN equality, not the null-safe helper: _default_fingerprint is
-    # total (never NULL), so the semantics are identical — and only plain
-    # keys let the planner use a bucketed index's layout (a <=> join
-    # rewrites keys to coalesce/isnull and disables bucketing).
-    # MIGRATION GUARD (r6 advisor finding — mirror the semantic path's
-    # loud refusal): indexes persisted BEFORE the fingerprint became
-    # total store the NULL-text group with __fplen NULL; plain equality
-    # would no longer match it and silently re-admit indexed NULL-text
-    # duplicates every batch. Probe cost: one column-pruned scan that
-    # short-circuits on the first NULL (take(1)); per-DAILY-ingest, over a
-    # KB-per-million-docs index. Patching the column on read instead
-    # (coalesce(__fplen, -1)) would fix the match but WRAP the bucket
-    # column in an expression, silently disabling the exchange-free
+    # PLAIN equality, not the null-safe helper: _default_fingerprint is total
+    # (never NULL), so the semantics are identical — and only plain keys let
+    # the planner use a bucketed index's layout (a <=> join rewrites keys to
+    # coalesce/isnull and disables bucketing).
+    # MIGRATION GUARD (mirrors the semantic path's loud refusal): indexes
+    # persisted BEFORE the fingerprint became total store the NULL-text group
+    # with __fplen NULL; plain equality would no longer match it and silently
+    # re-admit indexed NULL-text duplicates every batch. Probe cost: one
+    # column-pruned scan that short-circuits on the first NULL (take(1));
+    # per-DAILY-ingest, over a KB-per-million-docs index. Patching the column
+    # on read instead (coalesce(__fplen, -1)) would fix the match but WRAP the
+    # bucket column in an expression, silently disabling the exchange-free
     # bucketed join this path exists for — hence refuse-and-rebuild.
-    # Fast path (r12): a doc_fingerprints-built frame carries
-    # fp_total=True as metadata — skip the probe entirely (an in-memory
-    # build→ingest handoff would otherwise pay one full eager
-    # materialization of the index aggregate just for take(1)).
+    # Fast path: a doc_fingerprints-built frame carries fp_total=True as
+    # metadata — skip the probe entirely (an in-memory build→ingest handoff
+    # would otherwise pay one full eager materialization of the index
+    # aggregate just for take(1)).
     manifest = getattr(index, "_index_manifest", None)
     fp_total = bool(manifest and manifest.get("fp_total"))
     if not fp_total and index.filter(F.col("__fplen").isNull()).take(1):
@@ -278,8 +253,7 @@ def tokenized_docs(docs: DataFrame, id_col: str = "doc_id",
     bytes, nothing shingle-expanded) so every corpus-wide consumer shares
     one parquet scan and one split; MEMORY_AND_DISK so at 100 TB it spills
     like a shuffle write instead of evicting. Persisting the exploded
-    shingle relation instead would pin a many-× larger dataset (the r2
-    VERDICT non-starter)."""
+    shingle relation instead would pin a many-× larger dataset."""
     return docs.select(
         F.col(id_col), F.split(F.trim(F.col(text_col)), r"\s+").alias("__toks"))
 
@@ -311,34 +285,14 @@ def word_shingles(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text
     """Distinct word n-gram shingles per doc: ``(id, shingle)`` —
     ``shingles_from_tokens`` over a fresh ``tokenized_docs`` projection,
     or over a caller-supplied token array column (``tokens_col``) so a
-    pipeline that already materialized the split pays it once (r5 VERDICT
-    item 3 — prepare_training_corpus threads ONE tokenization through the
+    pipeline that already materialized the split pays it once
+    (prepare_training_corpus threads ONE tokenization through the
     near-dup, decontamination, and quality stages)."""
     if tokens_col is not None:
         tok = docs.select(F.col(id_col), F.col(tokens_col).alias("__toks"))
     else:
         tok = tokenized_docs(docs, id_col, text_col)
     return shingles_from_tokens(tok, id_col, n)
-
-
-def _df_capped_index(sh: DataFrame, id_col: str, max_df: int | None) -> DataFrame:
-    """Inverted-index pruning: drop shingles whose document frequency exceeds
-    ``max_df`` from the CANDIDATE-GENERATION index (verification still uses
-    the full shingle sets, so surviving pairs keep their exact Jaccard).
-
-    This is the 100 TB skew guard: a stopword trigram appearing in k docs
-    contributes k² rows to the self-join — one corpus-wide boilerplate
-    shingle would otherwise dominate the whole job. The trade-off (standard
-    inverted-index practice) is that a pair sharing ONLY hot shingles is
-    never considered; for near-dup thresholds that pair is boilerplate
-    overlap, not duplication.
-    """
-    if max_df is None:
-        return sh
-    hot = (sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("__df"))
-           .filter(F.col("__df") > max_df).select("shingle"))
-    # left_anti on the (small) hot list; Catalyst broadcasts it.
-    return sh.join(F.broadcast(hot), "shingle", "left_anti")
 
 
 def _verify_pairs(tok: DataFrame, id_col: str, n: int,
@@ -355,14 +309,14 @@ def _verify_pairs(tok: DataFrame, id_col: str, n: int,
     set, then a candidate-sized explode) — only docs that appear in some
     candidate pair need a shingle set, and in a near-dup regime that is ≪
     the corpus, so no corpus-sized shingle relation is shuffled here and
-    no second parquet scan or re-split is paid (r3 VERDICT perf item: the
-    raw-docs re-scan was the minhash regression). Trade-off: a doc's
+    no second parquet scan or re-split is paid (a raw-docs re-scan here
+    made minhash measurably slower). Trade-off: a doc's
     whole shingle set must fit in one row (fine — shingle sets are
     document-sized); for adversarially huge docs, cap shingles upstream.
     ``candidates`` is an engine pin (it feeds the id list twice and the
     final join) — released like every engine cache by
-    ``caching.release_engine_pins`` (a bare .cache() here escaped the r6
-    release contract the docstrings advertise — review finding)."""
+    ``caching.release_engine_pins`` (a bare .cache() here would escape
+    the release contract the docstrings advertise)."""
     candidates = pin(candidates)
     cand_ids = (candidates.select(F.col("id_a").alias(id_col))
                 .unionByName(candidates.select(F.col("id_b").alias(id_col)))
@@ -425,16 +379,15 @@ def ngram_jaccard_pairs(docs: DataFrame, id_col: str = "doc_id",
     long-lived session releases exactly them with
     ``caching.release_engine_pins()`` (bench.py does this between queries)
     or wraps the materialization in ``caching.engine_pin_scope()`` —
-    releasing before the action is safe (recompute), never wrong (r6:
-    formalizes the former clearCache docstring convention).
+    releasing before the action is safe (recompute), never wrong.
     """
     # ONE parquet scan + ONE regex split for the whole job: the token
     # projection is persisted (spillable) and feeds the hot-list agg, both
     # sides of the pair self-join, and the candidate stats pass. The
     # exploded SHINGLE relation stays unpersisted — pinning it would hold a
-    # many-× larger dataset (r2 VERDICT item 7); re-running the cheap
-    # explode against cached tokens is the right trade (r3 VERDICT item 2:
-    # the uncached-everything form re-scanned and re-split the corpus 3×).
+    # many-× larger dataset; re-running the cheap explode against cached
+    # tokens is the right trade (the uncached-everything form re-scanned
+    # and re-split the corpus 3×).
     if tokens_col is not None:
         # caller already materialized (and owns the cache of) the token
         # array — reuse it, pin nothing new
@@ -459,8 +412,8 @@ def ngram_jaccard_pairs(docs: DataFrame, id_col: str = "doc_id",
     # re-running the explode + anti-join and writing its own shuffle) —
     # measured ~40% off the pair-join stage at sf0.1, identical pairs.
     # Scale-safe: the DF cap has already removed hot shingles BEFORE this
-    # exchange, so per-task postings stay bounded (the r3-rejected design
-    # co-located UNCAPPED postings; this one does not).
+    # exchange, so per-task postings stay bounded (co-locating UNCAPPED
+    # postings would not).
     from ..session import shuffle_partitions
     n_parts = shuffle_partitions(docs.sparkSession)
     part = index.repartition(n_parts, "shingle")
@@ -469,7 +422,7 @@ def ngram_jaccard_pairs(docs: DataFrame, id_col: str = "doc_id",
     # engine-pinned: the pair relation is tiny (near-dup candidates) and
     # feeds three subtrees — the candidate-id semi-join below (twice) and
     # the final stats join. pin(), not bare .cache(): every engine cache
-    # must be releasable by caching.release_engine_pins (review finding).
+    # must be releasable by caching.release_engine_pins.
     inter = pin(
         a.join(b, "shingle")
         .filter(F.col("id_a") < F.col("id_b"))
@@ -531,7 +484,7 @@ def minhash_token_hash(hash_fn: str = "xxhash64"):
     - ``'md5'``: the first 8 hex digits of ``md5(shingle)`` parsed
       base-16, mod p — ~3× the per-token cost, but md5 exists
       BIT-IDENTICALLY in DuckDB (the ``simhash64_portable`` recipe
-      applied to minhash, r9 VERDICT item 1), so signatures — and with
+      applied to minhash), so signatures — and with
       them every LSH band and every signature-estimated Jaccard
       DECISION — are reproducible in ANSI SQL and hash-checkable by the
       driver. The verification twin, not the default."""
@@ -564,8 +517,8 @@ def minhash_signatures(shingles: DataFrame, id_col: str, num_perm: int = 64,
     :func:`minhash_token_hash`. One groupBy computes all ``num_perm``
     mins (map-side partial agg keeps the shuffle tiny).
 
-    The base hash ``h`` is HOISTED into a projection below the aggregate
-    (r12): inlined into all ``num_perm`` update expressions it would run
+    The base hash ``h`` is HOISTED into a projection below the aggregate:
+    inlined into all ``num_perm`` update expressions it would run
     once per permutation per shingle — aggregate update expressions get
     no guaranteed subexpression elimination — which for the md5-portable
     config is 64 md5+conv chains per shingle instead of one. The projection is
@@ -648,12 +601,11 @@ def minhash_lsh_pairs(docs: DataFrame, id_col: str = "doc_id",
     # and the relation is NOT persisted: the banding self-join's two sides
     # are identical subtrees, so Spark's ReuseExchange/AQE stage reuse runs
     # the signature build once and replays its shuffle output for the other
-    # side. The r4 shape (persist sig, re-project bands, explicit
-    # repartition before the join) was measured 1.8× slower at sf0.1
-    # (scripts/minhash_variants.py: 6.7s → 3.6s): the persist paid a full
-    # docs-sized write+read and the hardcoded-width repartition defeated
-    # AQE partition coalescing (r4 ADVICE item 1) while saving nothing the
-    # exchange reuse didn't already save.
+    # side. Persisting sig, re-projecting bands and repartitioning
+    # explicitly before the join was measured 1.8× slower at sf0.1
+    # (6.7s vs 3.6s): the persist paid a full docs-sized write+read and
+    # the hardcoded-width repartition defeated AQE partition coalescing
+    # while saving nothing the exchange reuse didn't already save.
     banded = minhash_signatures(sh, id_col, num_perm).select(
         F.col(id_col), *_band_hash_cols(rows, bands))
     bucket = _explode_band_rows(banded, id_col, bands)
@@ -707,9 +659,9 @@ def minhash_band_index(docs: DataFrame, id_col: str = "doc_id",
     (keeper doc, band) with ``(band, bh, keep_id, keep_sig)``, where
     ``keep_sig`` is the keeper's full ``num_perm``-component signature
     carried ON the row so a future batch's verification needs no second
-    join against a signature store. Store it parquet-bucketed by
-    ``(band, bh)`` (:func:`write_minhash_band_index`) and tomorrow's
-    ingest joins it exchange-free on the index side.
+    join against a signature store. Stored parquet-bucketed by
+    ``(band, bh)``, tomorrow's ingest joins it exchange-free on the index
+    side.
 
     Trade documented (same as the semantic index's ``keep_vec``):
     carrying the signature per band duplicates it ``bands``× (~8 KB per
@@ -739,63 +691,14 @@ def minhash_band_index(docs: DataFrame, id_col: str = "doc_id",
         F.lit(num_perm).alias("nperm"), F.lit(bands).alias("nbands"),
         F.lit(n).alias("ngram"), F.lit(seed).alias("mhseed"),
         F.lit(hash_fn).alias("mhhash"))
-    # The builder KNOWS the config — attach the same manifest the disk
-    # roundtrip carries (read_minhash_band_index's contract), so a
+    # The builder KNOWS the config — attach it as a manifest, so a
     # build→ingest handoff in one session takes the metadata-only fast
     # path instead of the fallback distinct scan, which costs a whole
-    # extra signature pass over the index just to read five constants
-    # (r12 — the embedding_signature_index fix applied family-wide).
+    # extra signature pass over the index just to read five constants.
     # Derived frames drop the attribute and fall back to the scan.
     out._index_manifest = {"nperm": num_perm, "nbands": bands, "ngram": n,
                            "mhseed": seed, "mhhash": hash_fn}
     return out
-
-
-def write_minhash_band_index(index: DataFrame, table: str,
-                             n_buckets: int = 8) -> None:
-    """Persist a :func:`minhash_band_index` BUCKETED by ``(band, bh)`` —
-    the write-once pre-shuffle that makes every later incremental
-    near-dup join exchange-free on the index side (the
-    :func:`write_fingerprint_index` contract, lexical-LSH form). Daily at
-    100 TB: the historical index is read back bucket-aligned, so only the
-    new batch's own band rows ever shuffle; the index never
-    re-exchanges.
-
-    The LSH config is additionally written as a ``_index_manifest.json``
-    sidecar inside the table directory (r9 VERDICT item 6):
-    :func:`read_minhash_band_index` attaches it to the returned frame so
-    :func:`incremental_minhash_lsh_dedup`'s config check becomes
-    METADATA-ONLY — zero index scans per ingest; the constant config
-    columns stay on the rows as the no-manifest fallback (and for
-    segment-union refusal)."""
-    from ..scale import write_bucketed, write_table_manifest
-
-    write_bucketed(index.select(*_MH_INDEX_COLS), table,
-                   bucket_col=["band", "bh"], n_buckets=n_buckets,
-                   sort_col=["band", "bh"])
-    cfg = [r.asDict() for r in
-           index.select("nperm", "nbands", "ngram", "mhseed", "mhhash")
-           .distinct().limit(2).collect()]
-    if len(cfg) == 1:
-        write_table_manifest(index.sparkSession, table, cfg[0])
-    # a mixed-config index gets NO manifest: the incremental probe's
-    # distinct-scan fallback then sees and refuses the mix (writing one
-    # of the configs would let the other segment silently match nothing)
-
-
-def read_minhash_band_index(spark, table: str) -> DataFrame:
-    """Read a bucketed minhash band index back with its bucket metadata
-    (so joins on ``(band, bh)`` need no index-side exchange). The
-    manifest sidecar, when present, rides along as ``_index_manifest``
-    on the returned DataFrame — the metadata-only fast path of
-    :func:`incremental_minhash_lsh_dedup`'s config check."""
-    from ..scale import read_table_manifest
-
-    df = spark.table(table)
-    manifest = read_table_manifest(spark, table)
-    if manifest is not None:
-        df._index_manifest = manifest
-    return df
 
 
 def incremental_minhash_lsh_dedup(new_docs: DataFrame, index: DataFrame,
@@ -808,15 +711,15 @@ def incremental_minhash_lsh_dedup(new_docs: DataFrame, index: DataFrame,
                                   ) -> tuple[DataFrame, DataFrame]:
     """Incremental MinHash-LSH near-dup dedup — the continuous-crawl form
     of :func:`minhash_lsh_pairs`, mirroring
-    :func:`incremental_exact_dedup`'s contract (r8 VERDICT item 3):
+    :func:`incremental_exact_dedup`'s contract:
     returns ``(fresh, updated_index)`` where ``fresh`` is the batch minus
     (a) within-batch near-dup cluster non-keepers and (b) rows whose
     signature matches an indexed keeper sharing a band — PRESERVING every
     batch column — and ``updated_index`` is the union index to persist
     for the next batch. The historical corpus participates only through
     its band index (:func:`minhash_band_index`); it is never re-banded or
-    rescanned — the gap the r8 verdict named first (a daily crawl ingest
-    re-running banding over the full corpus).
+    rescanned (a daily crawl ingest must not re-run banding over the full
+    corpus).
 
     Verification convention, documented honestly: WITHIN the batch,
     candidates are exact-Jaccard-verified over shingle sets (the texts
@@ -832,7 +735,7 @@ def incremental_minhash_lsh_dedup(new_docs: DataFrame, index: DataFrame,
     not re-examined when a later batch would have clustered them
     differently — ingest order is part of the semantics.
 
-    ``hash_fn='md5'`` (r9 VERDICT item 1) swaps the per-shingle base
+    ``hash_fn='md5'`` swaps the per-shingle base
     hash for the SQL-portable md5 recipe (:func:`minhash_token_hash`):
     the signatures, and therefore the estimated-Jaccard DECISION above,
     become bit-reproducible in DuckDB, which is what puts this
@@ -842,29 +745,25 @@ def incremental_minhash_lsh_dedup(new_docs: DataFrame, index: DataFrame,
     configs can never be silently mixed.
 
     Plan: ONE pinned token projection feeds the signature build, the
-    within-batch exact verify, and nothing else; ONE pinned signature
-    relation feeds the within-batch self-join, the cross-batch index
-    join, and the estimated-Jaccard verify; the index update re-derives
-    band rows map-only over the small ``fresh`` set. With the index
-    persisted via :func:`write_minhash_band_index` the cross-batch join
-    reads it bucket-aligned (no index exchange — plan-pinned in
-    tests/test_plans.py). A long-running caller — a foreachBatch stream
-    especially — MUST call ``caching.release_engine_pins()`` (or wrap the
-    batch in ``caching.engine_pin_scope()``) after materializing both
-    outputs, like the exact and semantic forms."""
+    within-batch exact verify, and nothing else; ONE pinned signature relation
+    feeds the within-batch self-join, the cross-batch index join, and the
+    estimated-Jaccard verify; the index update re-derives band rows map-only
+    over the small ``fresh`` set. A long-running caller — a foreachBatch stream
+    especially — MUST call ``caching.release_engine_pins()`` (or wrap the batch
+    in ``caching.engine_pin_scope()``) after materializing both outputs, like
+    the exact and semantic forms."""
     _check_bands(num_perm, bands, "incremental_minhash_lsh_dedup")
     missing = [c for c in _MH_INDEX_COLS if c not in index.columns]
     if missing:
         raise ValueError(
             f"incremental_minhash_lsh_dedup: index is missing columns "
             f"{missing} — build it with minhash_band_index")
-    # config check. Fast path (r9 VERDICT item 6): an index read through
-    # read_minhash_band_index carries its manifest sidecar — validate
-    # METADATA-ONLY, zero index scans. Fallback (in-memory frames,
-    # pre-manifest tables): distinct over the five constant RLE columns —
-    # distinct, not limit(1), because a heterogeneous index (segments
-    # unioned from different configs) must be refused too; column-pruned,
-    # KB-scale per (daily) ingest.
+    # config check. Fast path: an index built by minhash_band_index carries its
+    # config as a manifest — validate METADATA-ONLY, zero index scans. Fallback
+    # (derived or re-read frames): distinct over the five constant RLE columns
+    # — distinct, not limit(1), because a heterogeneous index (segments unioned
+    # from different configs) must be refused too; column-pruned, KB-scale per
+    # (daily) ingest.
     manifest = getattr(index, "_index_manifest", None)
     if manifest is not None:
         got = tuple(manifest.get(k) for k in
@@ -920,10 +819,10 @@ def incremental_minhash_lsh_dedup(new_docs: DataFrame, index: DataFrame,
     # (b) cross-batch: survivors' band rows vs the index on (band, bh) —
     # exchange-free on a bucketed index — then one dedup to (row, keeper)
     # grain and the estimated-Jaccard verify against the carried keep_sig.
-    # The batch row's own ``sig`` rides its band rows (r12 — the
-    # incremental_semantic_dedup fusion applied to the lexical twin;
-    # previously the verify joined back against the pinned signature
-    # relation, one extra shuffle join per ingest). The carried signature
+    # The batch row's own ``sig`` rides its band rows (the
+    # incremental_semantic_dedup fusion applied to the lexical twin), so
+    # the verify needs no join back against the pinned signature
+    # relation — one shuffle join fewer per ingest. The carried signature
     # widens the batch's band rows by num_perm longs — the keep_sig trade
     # the index itself makes, on the daily small side only; ``sig`` is
     # functionally dependent on ``id_col``, so the (id, keep_id) dedup
@@ -952,13 +851,12 @@ def incremental_minhash_lsh_dedup(new_docs: DataFrame, index: DataFrame,
     # pinned: fresh feeds the caller's write AND the index update below
     fresh = pin(survivors.join(hits, id_col, "left_anti"))
 
-    # (c) index update: the PINNED sig-carrying band rows already hold
-    # every fresh keeper's (band, bh, sig) — semi-join them to the fresh
-    # ids instead of re-tokenizing and re-hashing the fresh texts through
-    # a second minhash_band_index pass (r12: the md5 signature build ran
-    # TWICE per ingest — once into the pin, once for the update; the
-    # semi-join reads the cache). Shingle-less fresh docs have no band
-    # rows in either construction — identical index contents.
+    # (c) index update: the PINNED sig-carrying band rows already hold every
+    # fresh keeper's (band, bh, sig) — semi-join them to the fresh ids instead
+    # of re-tokenizing and re-hashing the fresh texts through a second
+    # minhash_band_index pass (which would run the signature build TWICE per
+    # ingest; the semi-join reads the cache). Shingle-less fresh docs have no
+    # band rows in either construction — identical index contents.
     updated = index.select(*_MH_INDEX_COLS).unionByName(
         band_sig.join(fresh.select(id_col), id_col, "left_semi")
         .select(F.col("band"), F.col("bh"),
@@ -972,10 +870,8 @@ def incremental_minhash_lsh_dedup(new_docs: DataFrame, index: DataFrame,
 
 def _simhash_from_votes(votes: DataFrame, docs: DataFrame | None,
                         id_col: str) -> DataFrame:
-    """Shared sign→bit OR-fold + token-less-doc restore of both SimHash
-    variants (xxhash64 and the md5-portable oracle twin): one copy so a
-    tie-breaking or restore change cannot silently desynchronize the
-    twins (r5 review finding). ``votes`` carries ``v_0..v_63`` per doc.
+    """Sign→bit OR-fold + token-less-doc restore of
+    :func:`simhash64_portable`. ``votes`` carries ``v_0..v_63`` per doc.
 
     Each bit term is INDEPENDENT and OR-chained linearly — folding ``sim``
     into both branches of a when() would duplicate the subtree per bit
@@ -985,8 +881,8 @@ def _simhash_from_votes(votes: DataFrame, docs: DataFrame | None,
     formulation). ``docs=None`` skips the restore and returns the bare
     ``(id, simhash)`` relation — for callers that already hold a
     one-row-per-doc relation and reattach with their OWN left join +
-    coalesce(0), saving this function's extra source scan (r12:
-    doc_text_stats folds the restore into its existing join)."""
+    coalesce(0), saving this function's extra source scan
+    (doc_text_stats folds the restore into its existing join)."""
     masks = [(1 << i) if i < 63 else -(1 << 63) for i in range(64)]
     sim = F.lit(0).cast("long")
     for i, m in enumerate(masks):
@@ -1008,18 +904,17 @@ def simhash64_portable(docs: DataFrame, id_col: str = "doc_id",
                        tokens_col: str | None = None,
                        restore: bool = True) -> DataFrame:
     """SimHash-64 over an ENGINE-PORTABLE token hash: md5 exists bit-for-bit
-    identically in Spark and DuckDB, so this variant is oracle-checkable
-    (unlike ``simhash64``'s xxhash64, which has no DuckDB twin).
+    identically in Spark and DuckDB, so the fingerprint is oracle-checkable
+    (an xxhash64 token hash would be ~3× cheaper per token but has no
+    DuckDB twin).
 
     Token hash bits: hex digit j of md5(token) (j = 0..15 → 64 bits), bit
-    ``i`` = bit ``3 − i%4`` of digit ``i//4``. Same vote aggregate shape as
-    ``simhash64`` (one map-side-combinable hash aggregate, 64 codegen'd
-    sums) and the SAME shared sign/OR-fold tail (``_simhash_from_votes``);
-    md5 is ~3× the cost of xxhash64 per token, so the xxhash64 variant
-    remains the 100 TB default and this one is the verification twin.
+    ``i`` = bit ``3 − i%4`` of digit ``i//4``. One map-side-combinable
+    vote aggregate (64 codegen'd sums), then the sign/OR-fold tail
+    (``_simhash_from_votes``).
     ``tokens_col``: consume a pre-materialized whitespace token array
-    instead of re-splitting (doc_text_stats passes its shared projection —
-    r6 review finding: the consolidation's 'one split' invariant).
+    instead of re-splitting (doc_text_stats passes its shared projection,
+    so the whole row splits its text once).
     ``restore=False`` returns the bare ``(id, simhash)`` relation without
     the token-less-doc restore join — see ``_simhash_from_votes``."""
     toks = (F.col(tokens_col) if tokens_col is not None
@@ -1059,7 +954,7 @@ def _release_local_checkpoint(df: DataFrame) -> None:
 
 
 def _resolve_checkpoint_backend(spark, checkpoint: str) -> bool:
-    """Pick the iterative-snapshot backend (r6 VERDICT item 1). Returns
+    """Pick the iterative-snapshot backend. Returns
     True for RELIABLE ``DataFrame.checkpoint()`` (snapshot written to the
     session checkpoint dir — replicated/durable storage, so a lost
     executor mid-iteration re-reads the round's labels instead of killing
@@ -1097,7 +992,7 @@ def dedup_clusters(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b",
     with cluster_id = min member id. The step production dedup needs after
     pair generation: each cluster keeps one representative.
 
-    ``driver_budget`` (r6, the train_bpe/codebook-on-sample pattern): when
+    ``driver_budget`` (the train_bpe/codebook-on-sample pattern): when
     set and the pair list fits the budget (probed with ``limit``), resolve
     components with a driver-side union-find — identical output, none of
     the per-round join+checkpoint job overhead that dominates small graphs
@@ -1137,21 +1032,21 @@ def dedup_clusters(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b",
     """
     if driver_budget is not None:
         # ONE pass decides AND fetches (a separate count probe would run
-        # pair generation twice — the train_bpe r4 lesson); Arrow transfer
-        # (toPandas), not collect(): 1M pairs is ~16 MB of Arrow columns
-        # vs hundreds of MB of Row objects, so the over-budget discard is
-        # cheap on the driver (r6 review finding).
+        # pair generation twice); Arrow transfer (toPandas), not
+        # collect(): 1M pairs is ~16 MB of Arrow columns vs hundreds of MB
+        # of Row objects, so the over-budget discard is cheap on the
+        # driver.
         pdf = pairs.select(id_a, id_b).limit(driver_budget + 1).toPandas()
         if len(pdf) <= driver_budget:
             return _driver_union_find(pairs, list(
                 zip(pdf[id_a].tolist(), pdf[id_b].tolist())), id_a)
-    # Snapshot backend (r6 VERDICT item 1): reliable checkpoint() on a
+    # Snapshot backend: reliable checkpoint() on a
     # cluster — each round's labels land on replicated/durable storage, so
     # a lost executor re-reads them (localCheckpoint state would be
     # unrecoverable: lineage is truncated, blocks unreplicated). Local
     # single-JVM runs keep the zero-filesystem fast path. The checkpoint
     # write job reads the round's PERSISTED blocks instead of recomputing
-    # the plan (persist-before-checkpoint below, r7 VERDICT item 8), so
+    # the plan (persist-before-checkpoint below), so
     # durability costs one cached read per snapshot, not a second compute
     # — round caches are pair-graph-sized. Superseded RELIABLE
     # snapshot files are GC'd by the ContextCleaner
@@ -1159,7 +1054,7 @@ def dedup_clusters(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b",
     # session.get_spark); the explicit block release below applies to the
     # local backend only.
     reliable = _resolve_checkpoint_backend(pairs.sparkSession, checkpoint)
-    # persist-before-checkpoint (r7 VERDICT item 8): reliable
+    # persist-before-checkpoint: reliable
     # DataFrame.checkpoint() RE-RUNS the plan in a second job to write the
     # snapshot files after the first action; persisting the round's labels
     # first makes that write job read the cached blocks instead — the
@@ -1168,10 +1063,10 @@ def dedup_clusters(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b",
     # checkpoint is durable; lazy ones after the materializing count
     # (`settle` below), so at most one round's cache is ever held.
     # (snapshot, cache) pairs matched by snapshot IDENTITY — holding the
-    # strong reference is the point (r8 advisor finding: a dict keyed by
-    # id(out) alone held no reference to the snapshot, so a GC'd lazy
-    # snapshot could leak its persist and a later object reusing the same
-    # CPython id would unpersist the wrong cache).
+    # strong reference is the point (a dict keyed by id(out) alone would
+    # hold no reference to the snapshot, so a GC'd lazy snapshot could
+    # leak its persist and a later object reusing the same CPython id
+    # would unpersist the wrong cache).
     _pending_caches: list[tuple[DataFrame, DataFrame]] = []
 
     def snapshot(df: DataFrame, eager: bool) -> DataFrame:
@@ -1325,31 +1220,6 @@ def _driver_union_find(pairs: DataFrame, rows, id_a: str) -> DataFrame:
     schema = StructType([StructField("member_id", id_type),
                          StructField("cluster_id", id_type)])
     return pairs.sparkSession.createDataFrame(out, schema)
-
-
-def simhash64(docs: DataFrame, id_col: str = "doc_id",
-              text_col: str = "text") -> DataFrame:
-    """64-bit SimHash per document (Charikar): sign-sum of token-hash bits.
-
-    Plan shape: explode distinct tokens → xxhash64 → ONE hash aggregate with
-    64 codegen'd ``sum(when(bit set, +1, -1))`` votes → sign → bit, OR-fold.
-    Spark's higher-order lambdas (``aggregate``/``transform``) run on the
-    interpreted expression path, so 64 per-row array folds were ~5× slower
-    than this map-side-combinable aggregate; at 100 TB the explode + partial
-    agg also keeps the shuffle to (doc_id, 64 longs) per doc.
-    """
-    masks = [(1 << i) if i < 63 else -(1 << 63) for i in range(64)]
-    tok = docs.select(
-        F.col(id_col),
-        F.explode(F.array_distinct(F.split(F.trim(F.col(text_col)), r"\s+")))
-        .alias("__tok"),
-    ).select(F.col(id_col), F.xxhash64(F.col("__tok")).alias("__h"))
-    votes = tok.groupBy(id_col).agg(*[
-        F.sum(F.when(F.col("__h").bitwiseAND(F.lit(m)) != 0, 1).otherwise(-1))
-        .alias(f"v_{i}")
-        for i, m in enumerate(masks)
-    ])
-    return _simhash_from_votes(votes, docs, id_col)
 
 
 def duplicate_window_spans(docs: DataFrame, id_col: str = "doc_id",

@@ -3,7 +3,7 @@
 UDFs over ``mapInPandas``.
 
 The decode is REAL for every container reachable without codec libraries:
-PPM (P6) images, PNG (r12 — stdlib ``zlib`` IDAT inflate + numpy scanline
+PPM (P6) images, PNG (stdlib ``zlib`` IDAT inflate + numpy scanline
 unfiltering for 8-bit gray/RGB/RGBA, all five filter types), raw unsigned
 8-bit PCM audio, and Y4M (YUV4MPEG2 — text header + uncompressed YUV
 frames) video, each parsed in pure Python/numpy. Genuinely codec-bound
@@ -220,8 +220,8 @@ def _y4m_bytes(media_id: int, w: int, h: int, n_frames: int) -> bytes:
 
 
 def make_fake_media(spark, n: int = 64) -> DataFrame:
-    """Deterministic synthetic media table: REAL image blobs (PPM and —
-    r12 — PNG containers alternating over the SAME pixel recipe, so the
+    """Deterministic synthetic media table: REAL image blobs (PPM and
+    PNG containers alternating over the SAME pixel recipe, so the
     oracle's closed-form mean is container-independent while the PNG
     inflate + all-five-filters unfilter path sits on the driver hash),
     real raw u8 PCM audio blobs, real Y4M video blobs — closed-form byte
@@ -249,13 +249,12 @@ def make_fake_media(spark, n: int = 64) -> DataFrame:
 def decode_image(blob: bytes) -> tuple[int, int, float]:
     """Decode one image payload → (width, height, mean_pixel).
 
-    Real parse for PPM(P6) and PNG (magic dispatch → :func:`decode_png`,
-    stdlib zlib + numpy unfiltering — r12, closing the most common
-    compressed-format seam with zero new dependencies); JPEG genuinely
-    needs codec libraries not present here — the NotImplementedError
-    marks the PIL/opencv seam. The mean is an integer sum divided once at
-    the end, so it is bit-equal to the oracle's integer-list construction.
-    """
+    Real parse for PPM(P6) and PNG (magic dispatch → :func:`decode_png`, stdlib
+    zlib + numpy unfiltering: the most common compressed format, with zero new
+    dependencies); JPEG genuinely needs codec libraries not present here — the
+    NotImplementedError marks the PIL/opencv seam. The mean is an integer sum
+    divided once at the end, so it is bit-equal to the oracle's integer-list
+    construction. """
     if bytes(blob)[:8] == _PNG_SIG:
         return decode_png(blob)
     if blob[:2] != b"P6":
@@ -365,7 +364,7 @@ def extract_features(media: DataFrame) -> DataFrame:
             for kind, blob in zip(pdf["kind"], pdf["content"]):
                 w = h = ns = mv = None
                 ok = True
-                # Per-row robustness (r5 review finding): one corrupt blob
+                # Per-row robustness: one corrupt blob
                 # must flag ITS row (decode_ok=False, NULL metrics), not
                 # kill the whole stage after task retries — that is what
                 # the decode_ok column is FOR. NotImplementedError is NOT
@@ -402,18 +401,6 @@ def extract_features(media: DataFrame) -> DataFrame:
     return media.mapInPandas(run, schema=FEATURE_SCHEMA)
 
 
-def frame_sample_plan(media: DataFrame, every_n: int = 10) -> DataFrame:
-    """Video frame-sampling PLAN: explode a frame-index row per video from
-    metadata alone (no blob touched) — the cheap side of the two-step
-    sample: plan rows can be repartitioned/filtered before any decode."""
-    videos = media.filter(F.col("kind") == "video")
-    idx = F.sequence(F.lit(0), F.col("n_frames") - 1, F.lit(every_n))
-    return videos.select(
-        "media_id",
-        F.explode(idx).alias("frame_idx"),
-    )
-
-
 FRAME_SCHEMA = "media_id bigint, frame_idx int, frame_mean double"
 
 
@@ -427,8 +414,8 @@ def sample_frames(media: DataFrame, every_n: int = 10) -> DataFrame:
     video). Sampled frames are SLICED at their container offsets — an
     index walk over the FRAME markers plus one ``frombuffer`` per sampled
     frame — so the (every_n−1)/every_n unsampled frames are never
-    materialized (r5 review finding: the old full decode-then-discard held
-    every frame in memory). A real ffmpeg seek-based sampler replaces this
+    materialized (a full decode-then-discard would hold every frame in
+    memory). A real ffmpeg seek-based sampler replaces this
     here; the Spark-side shape — filter → mapInPandas → explode-like
     output — is the production one."""
     videos = media.filter(F.col("kind") == "video")

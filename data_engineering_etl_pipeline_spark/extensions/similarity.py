@@ -842,7 +842,7 @@ def cosine_cross_pairs(left: DataFrame, right: DataFrame,
     """EXACT bipartite cosine pairs: every ``(left_id, right_id, cosine)``
     with cosine ≥ threshold between two DIFFERENT relations — the
     cross-corpus member of the GEMM family (self-all-pairs is
-    ``cosine_near_dup_pairs``). Powers :func:`semantic_decontamination`.
+    ``cosine_near_dup_pairs``).
 
     Default plan collects the RIGHT side as the GEMM build matrix (budget-
     guarded like ``_blas_candidate_pairs`` — right is typically the small
@@ -937,40 +937,6 @@ def cosine_cross_pairs(left: DataFrame, right: DataFrame,
                               broadcast_cand=True)
 
 
-def semantic_decontamination(corpus_emb: DataFrame, bench_emb: DataFrame,
-                             threshold: float = 0.95,
-                             id_col: str = "vec_id",
-                             bench_id_col: str = "bench_id",
-                             vec_col: str = "embedding",
-                             dim: int = VECTOR_DIM,
-                             n_blocks: int | None = None) -> DataFrame:
-    """Embedding-space benchmark decontamination — the SEMANTIC twin of
-    ``corpus.flag_contaminated``'s 13-gram recipe: flag every corpus
-    vector within ``threshold`` cosine of ANY benchmark vector (paraphrased
-    eval contamination that n-gram overlap misses; the standard companion
-    check in public LLM-data pipelines). Returns ``(id_col, contaminated)``
-    for every corpus row — filter with ``~F.col("contaminated")``.
-
-    Plan: :func:`cosine_cross_pairs` generates exact pairs (benchmark
-    broadcast-GEMM by default; ``n_blocks`` for corpus-scale benchmarks),
-    then one distinct on the hit-id set and a left join back — the corpus
-    pays one Arrow scoring pass and never shuffles, matching the n-gram
-    path's 'corpus never shuffles' contract. The hit set is broadcast by
-    the same deliberate trade as ``flag_contaminated``: it is
-    benchmark-overlap-sized in any sane deployment, and the hint is what
-    keeps the flag join map-side (a degenerate corpus that is MOSTLY
-    contaminated would want the hint removed)."""
-    hits = (cosine_cross_pairs(corpus_emb, bench_emb, threshold, id_col,
-                               bench_id_col, vec_col, dim, n_blocks)
-            .select(id_col).distinct()
-            .withColumn("__c", F.lit(True)))
-    return (corpus_emb.select(id_col)
-            .join(F.broadcast(hits), id_col, "left")
-            .select(F.col(id_col),
-                    F.coalesce(F.col("__c"), F.lit(False))
-                    .alias("contaminated")))
-
-
 def planted_centroids(seed: int, n_clusters: int, dim: int) -> list[list[float]]:
     """Seeded-Gaussian UNIT centroids — ONE generator shared by the Spark
     fold-assignment expression and the DuckDB oracle builder
@@ -1003,8 +969,8 @@ def _nearest_centroid_fold(df: DataFrame, id_col: str, vec_col: str,
     a truncated vector's NULL dots fell through every WHEN to the ELSE —
     cid k-1 — silently diverging from the gemm twin). Interpreted-expression
     cost is the price of bit-portability — production assignment stays on
-    the BLAS kernel; this is the verification twin (the simhash64 /
-    md5-simhash pattern). ``keep`` forwards additional input columns
+    the BLAS kernel; this is the verification twin (the md5-minhash
+    pattern). ``keep`` forwards additional input columns
     through the assignment (e.g. the vector itself for a centroid-update
     consumer) without a join back. ``emit_margin`` appends ``__margin`` =
     top-1 minus top-2 centroid dot (NULL for malformed rows) — the
@@ -1641,9 +1607,9 @@ def embedding_signature_index(df: DataFrame, id_col: str = "vec_id",
     ``dedup.doc_fingerprints``: one row per (keeper, LSH table) with
     ``(table, bucket, keep_id, keep_vec)``, where ``keep_vec`` is the
     keeper's double-cast vector carried ON the row so a future batch's
-    candidate join needs no second join against a vector store. Store it
-    parquet-bucketed by ``(table, bucket)`` (``scale.write_bucketed``) and
-    tomorrow's ingest joins it exchange-free on the index side.
+    candidate join needs no second join against a vector store. Stored
+    parquet-bucketed by ``(table, bucket)``, tomorrow's ingest joins it
+    exchange-free on the index side.
 
     Trade documented: carrying the vector per table duplicates it
     ``n_tables``× (at 100 TB: 4× of the keeper vectors — which are the
@@ -1669,8 +1635,7 @@ def embedding_signature_index(df: DataFrame, id_col: str = "vec_id",
         F.col(id_col).alias("keep_id"), "table", "bucket", "keep_vec",
         "keep_inv", F.lit(n_planes).alias("planes"),
         F.lit(n_tables).alias("tables"))
-    # The builder KNOWS the config — attach it as the same metadata the
-    # disk roundtrip carries (read_signature_index's contract), so a
+    # The builder KNOWS the config — attach it as a manifest, so a
     # build→ingest handoff in one session takes the manifest fast path
     # instead of a full materialization of this relation just to read two
     # constant columns (the fallback distinct scan is a whole extra
@@ -1679,47 +1644,6 @@ def embedding_signature_index(df: DataFrame, id_col: str = "vec_id",
     # to the scan — mixed-config detection is preserved.
     out._index_manifest = {"planes": n_planes, "tables": n_tables}
     return out
-
-
-def write_signature_index(index: DataFrame, table: str,
-                          n_buckets: int = 8) -> None:
-    """Persist an :func:`embedding_signature_index` BUCKETED by ``(table,
-    bucket)`` — the write-once pre-shuffle that makes the daily ingest's
-    cross-batch candidate join exchange-free on the index side (the same
-    contract as ``dedup.write_fingerprint_index``; plan-pinned in
-    tests/test_plans.py). Both join-key columns bucket+sort: v1 bucketing
-    only engages when the join keys exactly cover the bucket columns.
-
-    The LSH config is additionally written as a ``_index_manifest.json``
-    sidecar (same contract as
-    ``dedup.write_minhash_band_index``): :func:`read_signature_index`
-    attaches it so ``incremental_semantic_dedup``'s config check becomes
-    metadata-only; the constant columns stay as the no-manifest fallback.
-    A mixed-config index gets no manifest — the fallback scan then
-    refuses the mix."""
-    from ..scale import write_bucketed, write_table_manifest
-
-    write_bucketed(index.select(*_SIG_INDEX_COLS), table,
-                   bucket_col=["table", "bucket"], n_buckets=n_buckets,
-                   sort_col=["table", "bucket"])
-    cfg = [r.asDict() for r in
-           index.select("planes", "tables").distinct().limit(2).collect()]
-    if len(cfg) == 1:
-        write_table_manifest(index.sparkSession, table, cfg[0])
-
-
-def read_signature_index(spark, table: str) -> DataFrame:
-    """Read a bucketed signature index back with its bucket metadata (so
-    joins on ``(table, bucket)`` need no index-side exchange); the
-    manifest sidecar, when present, rides along as ``_index_manifest``
-    for the metadata-only config check."""
-    from ..scale import read_table_manifest
-
-    df = spark.table(table)
-    manifest = read_table_manifest(spark, table)
-    if manifest is not None:
-        df._index_manifest = manifest
-    return df
 
 
 def incremental_semantic_dedup(batch: DataFrame, index: DataFrame,
@@ -1800,7 +1724,7 @@ def incremental_semantic_dedup(batch: DataFrame, index: DataFrame,
             f"incremental_semantic_dedup: index is missing columns "
             f"{missing} — build it with embedding_signature_index")
     # config check: manifest fast path (metadata-only) when the index came
-    # through read_signature_index, else the distinct-scan fallback.
+    # from embedding_signature_index, else the distinct-scan fallback.
     # Distinct, not limit(1): a heterogeneous
     # index (segments unioned from different configs) must be refused
     # too — one matching sample row would let the mismatched segment

@@ -552,14 +552,3 @@ class TwoTierCache:
     def clear(self) -> None:
         for name in list(self._session):
             self.invalidate(name)
-
-
-def records_to_df(spark: SparkSession, records: Sequence[Mapping], schema) -> DataFrame:
-    """S4-S7: driver-side fetched rows (REST payload pages) → DataFrame.
-
-    The reference builds ``pd.DataFrame(list_of_dicts)`` from paginated API
-    responses (pipeline_helpers.py:208-210, universe…py:86). At cluster scale
-    the fetch itself moves into ``mapInPandas`` over a partitioned URL frame;
-    the constructor stays the same.
-    """
-    return spark.createDataFrame(list(records), schema=schema)

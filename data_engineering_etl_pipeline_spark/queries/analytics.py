@@ -10,9 +10,9 @@ from pyspark.sql import functions as F
 
 from ..aggregates import canonical_aggregate
 from ..io import load_table
-from ..windows import (dominance_share, long_short_factor, pct_change,
-                       rank_desc_average, rolling_mean, rolling_std,
-                       rolling_zscore, w_cross, w_entity)
+from ..windows import (dominance_share, pct_change, rank_desc_average,
+                       rolling_mean, rolling_std, rolling_zscore, w_cross,
+                       w_entity)
 from . import register
 
 
@@ -37,7 +37,7 @@ def customer_order_returns(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_custkey", "o_orderkey",
         F.round(pct_change("o_totalprice", 1, w), 6).alias("ret_1"),
         F.round(pct_change("o_totalprice", 3, w), 6).alias("ret_3"),
-        # try_divide (r5 convention, like pct_change): a zero price yields
+        # try_divide (like pct_change): a zero price yields
         # NULL instead of raising under ANSI, matching DuckDB's x/0 → NULL
         F.round(F.try_divide(F.lead("o_totalprice", 1).over(w),
                              F.col("o_totalprice")) - 1, 6)
@@ -107,25 +107,6 @@ def daily_share_and_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(dominance_share("l_extendedprice", wd), 6).alias("price_share"),
         F.round("__rank_avg", 1).alias("price_rank"),
     )
-
-
-def hml_factor(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A10/W13/O4 daily long-short factor: mean of top-30% minus bottom-30%
-    by score, null for thin dates (reference get_hml,
-    test_data_integrity.py:117-123) — percent_rank + conditional averages,
-    one shuffle, no per-group Python.
-
-    Library form, not a registry row (r3 VERDICT consolidation): the
-    driver's CORRECTNESS coverage moved to ``hml_lag_compliance``
-    (queries/quality.py), whose ``factor_stored`` column IS this query's
-    output computed by the same ``long_short_factor`` — the standalone row
-    was a redundant slot under the 50-entry cap. The one-shuffle plan
-    contract is still pinned in tests/test_plans.py."""
-    li = load_table(spark, sf_dir, "lineitem")
-    out = long_short_factor(li, "l_shipdate", "l_extendedprice", "l_discount",
-                            frac=0.3, min_group=10)
-    return out.select(F.to_date("l_shipdate").alias("d"),
-                      (F.round("factor", 6) + F.lit(0.0)).alias("factor"))
 
 
 @register(

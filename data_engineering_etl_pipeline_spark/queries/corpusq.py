@@ -1,8 +1,7 @@
 """Corpus-operator registry rows (§2.11 extension family, extensions/corpus.py):
 BM25 ranked retrieval, bigram-LM quality scoring, stratified data mixing, and
 token-budget sequence packing, each oracle-checked against DuckDB by the
-driver (r3 VERDICT item 1: these ops previously had only unit-level oracles
-because the registry sat at the 50-row cap; consolidation freed the slots).
+driver (consolidating other rows freed the slots under the 50-row cap).
 
 The library implementations and their scale rationale live in
 extensions/corpus.py; tests/test_corpus_ops.py keeps the unit-level oracle
@@ -29,10 +28,8 @@ _MD5_32 = """list_sum(list_transform(range(0, 8), i ->
              AS BIGINT) << CAST((7 - i) * 4 AS INT)))"""
 
 
-# BM25 SQL twin, consumed by the consolidated dsir_select row below (the
-# standalone `bm25_scores` row was stage-tagged into it in r7 — headroom
-# plan consolidation #2; the freed slot registered embedding_pca_moments).
-# References a shared `base` CTE of (doc_id, lang, t).
+# BM25 SQL twin, consumed by the ``bm25`` grain of the dsir_select row
+# below. References a shared `base` CTE of (doc_id, lang, t).
 _BM25_CTES = """
     stats AS (
       SELECT COUNT(*) AS n, AVG(len(t)) AS avgdl FROM base
@@ -57,8 +54,8 @@ _BM25_CTES = """
 
 
 # The standalone `lm_cross_entropy` row was folded into
-# `ccnet_perplexity_mix` below (r4 registry curation under the 50-row
-# cap): the mix row recomputes the identical add-k bigram LM per doc —
+# `ccnet_perplexity_mix` below (registry curation under the 50-row cap):
+# the mix row recomputes the identical add-k bigram LM per doc —
 # scores, cutoffs, buckets, and the surviving sample are all
 # hash-checked — and the FULL per-doc contract (including NULL xent on
 # short docs) keeps its DuckDB hash-match unit in
@@ -150,12 +147,10 @@ def ccnet_perplexity_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     terciles (one exact 1-row percentile agg), then keep head=100% /
     middle=50% / tail=10% via the deterministic md5 per-stratum sampler
     (extensions/corpus.py perplexity_buckets + stratified_sample — the
-    r4 consolidation of the former standalone ``stratified_sample`` row
-    into a strictly richer query: the oracle must reproduce the scores,
-    the tercile cutoffs, the bucket assignment, AND the exact surviving
-    sample bit-for-bit).
+    oracle must reproduce the scores, the tercile cutoffs, the bucket
+    assignment, AND the exact surviving sample bit-for-bit).
 
-    ``mix`` (late r10): the temperature-mixture token-budget fill
+    ``mix``: the temperature-mixture token-budget fill
     (extensions/mixing.py ``sample_to_token_budget``) over the
     documents table — per-language whitespace-token mass, FIXED planted
     budgets (``_MIX_BUDGETS``: truncating, zero, and absent languages
@@ -242,9 +237,7 @@ def ccnet_perplexity_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two query/target-conditioned corpus scorers in one stage-tagged row
-    (r7 consolidation of the former standalone ``bm25_scores`` row —
-    headroom plan #2; the freed slot registered ``embedding_pca_moments``;
-    both value surfaces stay fully hash-checked):
+    (both value surfaces fully hash-checked):
 
     ``bm25``: Okapi BM25 ranked retrieval for a fixed bag-of-words query
     (extensions/corpus.py bm25_scores; the exploded token stream is
@@ -271,11 +264,10 @@ def dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bm.unionByName(ds)
 
 
-#: doc_chunking's standalone construction (registry row r5–r11; retired to
-#: the ``chunk`` grain of ``pack_sequences`` in r12 — headroom
-#: consolidation #5, same token-window grain family). Kept verbatim as the
-#: library twin's full value oracle (tests/test_queries_oracle.py), the
-#: retired-row convention.
+#: ``corpus.chunk_documents(docs, window=64, stride=48)`` over the raw
+#: documents table — the full value oracle of the library chunker
+#: (tests/test_queries_oracle.py::
+#: test_doc_chunking_library_query_matches_oracle).
 DOC_CHUNKING_ORACLE = """
     WITH t AS (SELECT doc_id, string_split_regex(trim(text), '\\s+') AS tk
                FROM documents WHERE text IS NOT NULL),
@@ -331,20 +323,21 @@ DOC_CHUNKING_ORACLE = """
 )
 def pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token-window constructions over the documents table, two
-    stage-tagged grains (r12 headroom consolidation #5):
+    stage-tagged grains:
 
     ``pack``: token-budget sequence packing into training packs —
     per-shard window cumsum, no global sort (extensions/corpus.py
     pack_sequences). Uses the portable md5 shard so the oracle reproduces
     the full shard → offset → pack assignment, not just the arithmetic.
 
-    ``chunk``: the former ``doc_chunking`` row — overlapping token-window
-    chunking (window 64, stride 48 → 16-token overlap), the long-document
-    split that precedes packing (extensions/corpus.py chunk_documents).
-    Map-only explode with bounded fan-out ⌈n_tok/stride⌉; every token
-    lands in ≥1 chunk (coverage/overlap invariants unit-tested). The
-    standalone builder keeps its full value oracle as a unit
-    (``DOC_CHUNKING_ORACLE``, tests/test_queries_oracle.py)."""
+    ``chunk``: overlapping token-window chunking (window 64, stride 48 →
+    16-token overlap), the long-document split that precedes packing
+    (extensions/corpus.py chunk_documents). Map-only explode with bounded
+    fan-out ⌈n_tok/stride⌉; every token lands in ≥1 chunk
+    (coverage/overlap invariants unit-tested). The chunker over the raw
+    documents table keeps its full value oracle as a unit
+    (``DOC_CHUNKING_ORACLE``, tests/test_queries_oracle.py::
+    test_doc_chunking_library_query_matches_oracle)."""
     docs = load_table(spark, sf_dir, "documents")
     packed = corpus.pack_sequences(docs, budget=512, n_shards=8,
                                    portable_shard=True)
@@ -473,9 +466,7 @@ def _schedule_oracle() -> str:
 
 @register("corpus_schedule", oracle=_schedule_oracle())
 def corpus_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The continuous-ingest mixing/epoch surface ON the driver record
-    (r10 VERDICT item 3; the slot came from headroom consolidation #4,
-    ``doc_ngram_jaccard`` → ``doc_minhash_lsh``'s ``ngram`` grain) —
+    """The continuous-ingest mixing/epoch surface ON the driver record —
     four stage-tagged grains over the training-schedule family:
 
     ``epoch``: :func:`extensions.corpus.epoch_plan` over the SAME packed
@@ -571,9 +562,8 @@ def doc_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _prep_oracle() -> str:
-    """DuckDB twin of the ENTIRE prepare_training_corpus composition (new
-    r6 — the registry's last rows-only non-connector row becomes fully
-    value-checked). Each CTE is the proven construction from the stage's
+    """DuckDB twin of the ENTIRE prepare_training_corpus composition.
+    Each CTE is the proven construction from the stage's
     own registry oracle, chained: synthetic pages (doc_cleaning_suite's
     ``_C4_PAGE_SQL``) → C4 line clean + page gate → PII scrub
     (``scrub_pii_sql``) → exact dedup (min id per identical text — the SQL
@@ -593,8 +583,8 @@ def _prep_oracle() -> str:
     cleaned = "array_to_string(" + c4_kept_lines_sql("text") + ", chr(10))"
     hv_text = _MD5_32.format(arg="text")
     hv_id = _MD5_32.format(arg="CAST(doc_id AS VARCHAR)")
-    # the 'profile' stage grain (r8 headroom consolidation #1): the former
-    # corpus_split_profile row's construction verbatim — raw documents,
+    # the 'profile' stage grain: corpus_split_profile's construction
+    # verbatim — raw documents,
     # salted content-hash 90/10 split, per-(split, lang) length quantiles
     hv_split = _MD5_32.format(arg="text || '|split-v1'")
     # doc_text_stats' quality expression (rounded — quality_score rounds to
@@ -749,11 +739,11 @@ def prep_training_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     line → a shared 13-gram with its own raw page; doc 42's page is
     C4-dropped first).
 
-    FULL value oracle since r6 (previously rows-only): ``_prep_oracle``
-    chains every stage's already-proven SQL construction end-to-end, so
-    the driver hash-checks the composition itself — stage wiring bugs
-    (wrong input relation, filter on the wrong side of a join) are now
-    caught, not just per-stage math. ``portable_shard=True`` is the same
+    FULL value oracle: ``_prep_oracle`` chains every stage's
+    already-proven SQL construction end-to-end, so the driver hash-checks
+    the composition itself — stage wiring bugs (wrong input relation,
+    filter on the wrong side of a join) are caught, not just per-stage
+    math. ``portable_shard=True`` is the same
     oracle convention as the ``pack_sequences`` row (md5 shard instead of
     xxhash64, so DuckDB reproduces shard/pack_id bit-for-bit).
     max_df=50 on the near-dup index: the planted boilerplate lines appear
@@ -761,9 +751,8 @@ def prep_training_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-wide shingles out of the pair self-join; the oracle reproduces
     the cap AND the exact hot-shingle overlap add-back.
 
-    ``profile`` stage grain (r8 — headroom consolidation #1, the
-    ``media_pipeline`` stage-tag pattern): the former
-    ``corpus_split_profile`` row rides this row as a second grain — the
+    ``profile`` stage grain (the ``media_pipeline`` stage-tag pattern):
+    ``corpus_split_profile`` rides this row as a second grain — the
     salted content-hash 90/10 split of the RAW documents table profiled
     by exact per-(split, language) length quantiles. Both value surfaces
     stay hash-checked under one registry slot; the standalone builder
@@ -797,34 +786,21 @@ def prep_training_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     return doc_rows.unionByName(prof_rows)
 
 
-def doc_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Overlapping token-window chunking (window 64, stride 48 → 16-token
-    overlap) — the long-document split that precedes packing
-    (extensions/corpus.py chunk_documents). Map-only explode with bounded
-    fan-out ⌈n_tok/stride⌉; every token lands in ≥1 chunk (coverage/overlap
-    invariants unit-tested). Registry row r5–r11; rides ``pack_sequences``
-    as the ``chunk`` grain since r12 (headroom consolidation #5) — this
-    standalone builder stays library surface with its full value oracle as
-    a unit (``DOC_CHUNKING_ORACLE``, tests/test_queries_oracle.py)."""
-    docs = load_table(spark, sf_dir, "documents")
-    return corpus.chunk_documents(docs, window=64, stride=48)
-
-
 _BPE_MERGES = 24
 _BPE_MIN_FREQ = 2
 
 
 def _bpe_merge_oracle() -> str:
-    """DuckDB twin of the FULL BPE tokenizer-training decision surface
-    (r11 VERDICT items 1b + 4): the learned merge SEQUENCE — argmax pair
-    count per round, lexicographic ties, stop-when-nothing-repeats — as a
-    bounded-rounds unrolled CTE chain (extensions/bpe.bpe_sql_ctes: merge
-    = left-to-right non-overlapping string REPLACE over chr(31)-wrapped
-    symbol strings), the ``min_freq`` distributed floor DECISION (the
-    planted per-doc rare words flip the top merges if the floor fails —
-    (q,z) would count once per doc), and the per-doc ENCODE counts under
-    the learned merges, including sub-floor (unseen-in-training) words —
-    rank-order merge application, provably the lowest-rank-pair loop."""
+    """DuckDB twin of the FULL BPE tokenizer-training decision surface:
+    the learned merge SEQUENCE — argmax pair count per round, lexicographic
+    ties, stop-when-nothing-repeats — as a bounded-rounds unrolled CTE chain
+    (extensions/bpe.bpe_sql_ctes: merge = left-to-right non-overlapping string
+    REPLACE over chr(31)-wrapped symbol strings), the ``min_freq`` distributed
+    floor DECISION (the planted per-doc rare words flip the top merges if the
+    floor fails — (q,z) would count once per doc), and the per-doc ENCODE
+    counts under the learned merges, including sub-floor (unseen-in-training)
+    words — rank-order merge application, provably the lowest-rank-pair
+    loop."""
     from ..extensions.bpe import _SEP2, bpe_sql_ctes
 
     ctes, merges_select, vfinal = bpe_sql_ctes(
@@ -870,10 +846,7 @@ def _bpe_merge_oracle() -> str:
 
 @register("bpe_merge_sequence", oracle=_bpe_merge_oracle())
 def bpe_merge_sequence(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BPE merge learning + encoding ON the driver record (r11 VERDICT
-    items 1b and 4 — the last LLM-family decision surface that was
-    unit-only; the slot came from headroom consolidation #5,
-    ``doc_chunking`` → ``pack_sequences``'s ``chunk`` grain). Two
+    """BPE merge learning + encoding ON the driver record. Two
     stage-tagged grains over a corpus of the documents text plus ONE
     planted unique rare word per doc (``qz<doc_id>q`` — freq 1 each, so
     the shared (q, z) character pair would rank top-of-list if the
@@ -881,7 +854,7 @@ def bpe_merge_sequence(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ``merge``: the learned merge sequence from
     :func:`extensions.bpe.train_bpe` at ``min_freq=2`` — the distributed
-    frequency-floor prefilter (r11 item 1a, the SentencePiece/HF
+    frequency-floor prefilter (the SentencePiece/HF
     web-scale recipe) runs BEFORE the guarded vocabulary collect; the
     driver-side loop itself (deterministic: lexicographic ties, stop
     below count 2) is recomputed by the oracle's unrolled
@@ -933,7 +906,7 @@ def bpe_merge_sequence(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def bpe_word_frequencies(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The DISTRIBUTED surface of BPE tokenizer training on the driver
-    record (r5 VERDICT item 8): `extensions/bpe.word_frequencies` — the
+    record: `extensions/bpe.word_frequencies` — the
     only corpus-scale step of the trainer (explode → map-side partial agg
     → vocabulary-sized exchange). The driver-side merge loop is
     legitimately not SQL-expressible and stays unit-verified

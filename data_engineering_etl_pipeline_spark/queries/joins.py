@@ -16,53 +16,9 @@ from ..universe import monthly_top_n
 from . import register
 
 
-#: region_revenue's value oracle — registry slot consolidated in r7 (the
-#: r6 VERDICT item 8 plan): the J1 five-frame stitch surface is covered on
-#: the driver record by ``sql_nation_revenue``'s enriched GROUPING SETS
-#: star query (region ⋈ nation ⋈ customer ⋈ orders ⋈ lineitem, two
-#: grains); this query keeps its full value oracle as a unit
-#: (tests/test_queries_oracle.py) and stays in the library surface.
-REGION_REVENUE_ORACLE = """
-    SELECT r.r_name AS region_name, n.n_name AS nation_name,
-           ROUND(SUM(l.l_extendedprice * (1 - l.l_discount)), 2) AS revenue,
-           COUNT(*) AS n_items
-    FROM lineitem l
-    JOIN orders o   ON l.l_orderkey = o.o_orderkey
-    JOIN customer c ON o.o_custkey = c.c_custkey
-    JOIN nation n   ON c.c_nationkey = n.n_nationkey
-    JOIN region r   ON n.n_regionkey = r.r_regionkey
-    GROUP BY 1, 2
-    """
-
-
-def region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J1/J4/J5 multi-join chain: big fact ⋈ broadcast dims, revenue rollup.
-
-    Broadcast hints only on the CONSTANT-size dims (nation=25, region=5
-    rows at any SF). customer scales linearly with SF, so it gets NO
-    unconditional hint (r5 review: a forced broadcast would OOM past the
-    8 GB broadcast limit at real scale) — Catalyst/AQE auto-broadcasts it
-    while it fits the threshold, which it does at every test SF, so the
-    plan pin (three BroadcastHashJoins, one agg shuffle) still holds
-    (reference's chained left-merges, pipeline_helpers.py:364-369, minus
-    the Python)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    o = load_table(spark, sf_dir, "orders")
-    c = load_table(spark, sf_dir, "customer")
-    n = load_table(spark, sf_dir, "nation")
-    r = load_table(spark, sf_dir, "region")
-    return (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
-        .groupBy(F.col("r_name").alias("region_name"), F.col("n_name").alias("nation_name"))
-        .agg(
-            F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2)
-             .alias("revenue"),
-            F.count(F.lit(1)).alias("n_items"),
-        )
-    )
+# The J1 five-frame stitch (region ⋈ nation ⋈ customer ⋈ orders ⋈
+# lineitem) is on the driver record through ``sqlq.sql_nation_revenue``'s
+# GROUPING SETS star query.
 
 
 @register(
@@ -91,11 +47,9 @@ def region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def daily_activity_stitch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J2/J3/J4 join-shapes suite in one registry row (r3 VERDICT
-    consolidation: the former ``daily_activity_outer`` +
-    ``segment_union_align`` rows merged to free slots under the driver's
-    50-entry cap; the union-align shape now lives in
-    ``scalar_function_suite``).
+    """J2/J3/J4 join-shapes suite in one registry row (one row keeps the
+    registry under the driver's 50-entry cap; the union-align shape lives
+    in ``scalar_function_suite``).
 
     Multi-key (date, returnflag) LEFT backfill of the high-discount
     sub-segment onto the full shipped panel (reference market×onchain
@@ -171,5 +125,3 @@ def pit_universe_history(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.sum("o_totalprice"), 2).alias("total_value"),
         )
     )
-
-

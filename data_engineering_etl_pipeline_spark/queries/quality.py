@@ -107,9 +107,7 @@ def repaint_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # P12/U5 row-level dedup (reference set-based dedup,
 # historical_data_etl.py:132) is driver-checked through `doc_exact_dedup`
-# (hash-groupBy dedup with injected duplicates) and unit-tested via
-# relational.distinct_keys — the former `orderkey_dedup` row was retired to
-# keep the registry inside the driver's 50-entry check budget (r2 VERDICT).
+# (hash-groupBy dedup with injected duplicates).
 
 
 # Decimal length of a 2-dp price, computed EXACTLY cross-engine: cents =

@@ -30,16 +30,11 @@ _REVENUE_SQL = """
 def sql_nation_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-join revenue rollup as SQL TEXT through ``spark.sql`` (the
     DuckDB oracle is the IDENTICAL string — both dialects accept it) —
-    the engine's SQL front door. Enriched in r7 to absorb the retired
-    ``region_revenue`` registry row (r6 VERDICT item 8's consolidation
-    plan): the full FIVE-frame star stitch (region ⋈ nation ⋈ customer ⋈
-    orders ⋈ lineitem — the J1 surface) at TWO grains via GROUPING SETS
-    ((region, nation, yr), (region, yr)) — strictly richer than either
-    predecessor (region_revenue lacked the year dimension and the rollup
-    grain; the old sql row lacked region). One aggregate pass computes
-    both grains (Spark plans grouping sets as a single expand+agg — no
-    second scan); Catalyst broadcasts the constant dims and pushes the
-    date filter exactly as in the DataFrame form (tests/test_plans.py
-    family). region_revenue itself stays in the library with its value
-    oracle unit-checked (tests/test_queries_oracle.py)."""
+    the engine's SQL front door. The full FIVE-frame star stitch (region ⋈
+    nation ⋈ customer ⋈ orders ⋈ lineitem — the J1 surface) at TWO grains
+    via GROUPING SETS ((region, nation, yr), (region, yr)). One aggregate
+    pass computes both grains (Spark plans grouping sets as a single
+    expand+agg — no second scan); Catalyst broadcasts the constant dims
+    and pushes the date filter exactly as in the DataFrame form
+    (tests/test_plans.py family)."""
     return run_sql(spark, sf_dir, _REVENUE_SQL)

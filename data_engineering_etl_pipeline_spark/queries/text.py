@@ -17,9 +17,8 @@ from ..extensions.pii import (pii_counts, pii_counts_sql, scrub_pii,
                               scrub_pii_sql)
 from ..extensions.cleaning import (c4_stats, c4_stats_sql, gopher_stats,
                                    gopher_stats_sql)
-from ..extensions.text_stats import (TOKEN_PATTERN, duplicate_line_fraction,
-                                     predict_lang, quality_score,
-                                     rolling_fingerprint_udf,
+from ..extensions.text_stats import (duplicate_line_fraction, predict_lang,
+                                     quality_score, rolling_fingerprint_udf,
                                      token_count_regex, tokens,
                                      top_ngram_fraction_udf)
 from ..caching import pin
@@ -73,11 +72,11 @@ def doc_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-wide exchange groups on (xxhash64(text), length) — 12-byte keys —
     and only candidate rows (multi-member fingerprint groups) pay the exact
     text-equality resolver, so raw documents never shuffle as groupBy keys
-    (r4 VERDICT item 1; plan pinned in tests/test_plans.py). Deterministic
+    (plan pinned in tests/test_plans.py). Deterministic
     duplicates injected (every 7th doc re-appended) so the operator has work
     at every scale factor; output is bit-identical to a groupBy on text.
 
-    ``incr_fresh``/``index`` (new r6 — r5 VERDICT item 4): the operator a
+    ``incr_fresh``/``index``: the operator a
     production pipeline runs DAILY. Day-1 corpus → fingerprint index
     (:func:`doc_fingerprints`); day-2 ingest = replayed duplicates (every
     7th doc under a shifted id — all must drop against the index) plus
@@ -88,10 +87,7 @@ def doc_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     state, not just the batch result. The oracle recomputes all three
     legs at raw-text level — the fingerprint plan must be bit-identical
     to text grouping (the Hypothesis property pins collision resolution;
-    batch-split invariance is pinned at tests/test_properties.py:313).
-    The bucketed on-disk form of the index
-    (:func:`write_fingerprint_index`, exchange-free daily join) is
-    plan-pinned in tests/test_plans.py."""
+    batch-split invariance is pinned in tests/test_properties.py)."""
     from ..extensions.dedup import doc_fingerprints, incremental_exact_dedup
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -109,8 +105,7 @@ def doc_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pinned: the day-1 index subtree feeds BOTH the anti-join and the
     # updated-index union — unpinned, the fingerprint aggregate over the
     # day-1 scan would run twice; the builder-attached fp_total manifest
-    # also skips the migration probe's eager materialization (r12 — the
-    # index-manifest fix applied family-wide)
+    # also skips the migration probe's eager materialization
     from ..caching import pin
 
     index = pin(doc_fingerprints(docs, "doc_id", "text"))
@@ -142,11 +137,10 @@ _SHINGLE_CTE = """
 """
 
 
-#: full value oracle of the standalone trigram-Jaccard builder — the row
-#: left the driver registry in r11 (headroom consolidation #4: its pair
-#: grain rides ``doc_minhash_lsh`` as the ``ngram`` stage, same documents
-#: table, same pair grain); the standalone keeps this hash-checked twin as
-#: a unit (tests/test_queries_oracle.py), the retired-row convention.
+#: ``ngram_jaccard_pairs(docs, "doc_id", "text", n=3, threshold=0.5)``
+#: over the raw documents table — the full value oracle of the
+#: trigram-Jaccard builder (tests/test_queries_oracle.py::
+#: test_doc_ngram_jaccard_library_query_matches_oracle).
 NGRAM_JACCARD_ORACLE = _SHINGLE_CTE + """
     SELECT id_a, id_b,
            ROUND(ni * 1.0 / (sa.sz + sb.sz - ni), 6) AS jaccard
@@ -155,17 +149,6 @@ NGRAM_JACCARD_ORACLE = _SHINGLE_CTE + """
     JOIN sizes sb ON sb.doc_id = id_b
     WHERE ni * 1.0 / (sa.sz + sb.sz - ni) >= 0.5
     """
-
-
-def doc_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact word-trigram Jaccard near-dup pairs (threshold 0.5) via an
-    inverted shingle index — equi-join on shingle, never a cross product.
-    The integer ratio ni/(sa+sb-ni) is float-exact cross-engine.
-    Library query since r11 — its driver-record surface is the ``ngram``
-    stage grain of ``doc_minhash_lsh`` (registry consolidation under the
-    50-row cap; the freed slot registered ``corpus_schedule``)."""
-    docs = load_table(spark, sf_dir, "documents")
-    return ngram_jaccard_pairs(docs, "doc_id", "text", n=3, threshold=0.5)
 
 
 def _minhash_coeff_cte() -> str:
@@ -191,7 +174,7 @@ def _minhash_incremental_oracle() -> str:
     'pairs' leg (exact all-pairs Jaccard ≥ 0.8 over day-1 docs; valid
     because every LSH pair is exact-verified and the 32×2 band config's
     false-negative probability is ≈ 6e-15 per qualifying pair) PLUS the
-    r9-verdict-item-1 incremental legs, recomputed from raw text:
+    incremental legs, recomputed from raw text:
     portable-md5 minhash signatures (``minhash_token_hash_sql`` — the
     simhash64_portable recipe applied to minhash, bit-identical
     cross-engine), band keys as the signature-slice string (equal
@@ -199,8 +182,8 @@ def _minhash_incremental_oracle() -> str:
     the same astronomically-improbable caveat the 'pairs' leg already
     documents), within-batch exact-Jaccard verify + transitive-closure
     clustering, cross-batch SIGNATURE-estimated Jaccard (agreeing
-    components / 64 ≥ 0.5) against day-1 keepers — the DECISION the r9
-    verdict wanted hash-verified."""
+    components / 64 ≥ 0.5) against day-1 keepers, so the cross-batch
+    DECISION is hash-verified."""
     from ..extensions.dedup import minhash_token_hash_sql
 
     h_expr = minhash_token_hash_sql("shingle")
@@ -334,8 +317,8 @@ def _minhash_incremental_oracle() -> str:
 @register("doc_minhash_lsh", oracle=_minhash_incremental_oracle())
 def doc_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash-LSH near-dup dedup — batch AND incremental — in one
-    stage-tagged row (r9 VERDICT item 1: the cross-batch DECISION joins
-    the driver's hash-verified record).
+    stage-tagged row (the cross-batch DECISION is on the driver's
+    hash-verified record).
 
     ``pairs``: MinHash(64 perms) + LSH(32 bands × 2 rows) candidate
     pairs over the documents table, verified with exact Jaccard ≥ 0.8.
@@ -360,15 +343,15 @@ def doc_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-verified end-to-end, closing the one unverified decision
     surface of the dedup family.
 
-    ``ngram`` (r11 — headroom consolidation #4): the exact word-trigram
-    Jaccard near-dup pairs (threshold 0.5) of the former standalone
-    ``doc_ngram_jaccard`` row ride this row as a fourth grain — same
+    ``ngram``: the exact word-trigram Jaccard near-dup pairs (threshold
+    0.5) of :func:`ngram_jaccard_pairs` as a fourth grain — same
     documents table, same (id_a, id_b, jaccard) pair grain, and the
     oracle's existing day-1 pair CTE serves both thresholds, so the
     whole inverted-shingle-index machinery (hot-shingle DF cap included)
-    stays value-verified under one slot. The standalone builder keeps
-    its full oracle as a unit (``NGRAM_JACCARD_ORACLE``,
-    tests/test_queries_oracle.py)."""
+    stays value-verified under one slot. The builder over the raw
+    documents table keeps its full oracle as a unit
+    (``NGRAM_JACCARD_ORACLE``, tests/test_queries_oracle.py::
+    test_doc_ngram_jaccard_library_query_matches_oracle)."""
     from ..extensions.dedup import (incremental_minhash_lsh_dedup,
                                     minhash_band_index)
 
@@ -400,8 +383,7 @@ def doc_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # join and the updated-index union — unpinned, the md5 signature
     # expressions (the row's priciest codegen) would run twice; the
     # builder-attached manifest makes the ingest config check
-    # metadata-only (r12 — the embedding_signature_index fix applied
-    # family-wide)
+    # metadata-only
     from ..caching import pin
 
     index = pin(minhash_band_index(docs, "doc_id", "text", n=3, num_perm=64,
@@ -453,19 +435,9 @@ def doc_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup_clusters(pairs)
 
 
-# The xxhash64 `simhash64` (the 100 TB default — cheaper per token) has no
-# DuckDB twin, so its former rows-only registry row was retired (r2 VERDICT
-# budget curation); the md5-portable twin is oracle-checked end-to-end as
-# the `simhash` column of `doc_text_stats` (r6 consolidation of the former
-# `doc_simhash_portable` row) and the xxhash64 variant keeps invariance
-# units in tests/test_engine_units.py.
-
-
 #: md5-portable SimHash-64 CTE chain (tokenize → distinct → hash → 64 bit
-#: votes → sign → OR-fold), joined into the ``doc_text_stats`` oracle since
-#: r6 (registry consolidation — the freed slot registers the bucketed
-#: hyperplane-LSH near-dup row). xxhash64 stays the 100 TB default (cheaper
-#: per token); the fold keeps the full construction driver-verified.
+#: votes → sign → OR-fold), joined into the ``doc_text_stats`` oracle so
+#: the full construction is driver-verified.
 _SIMHASH_CTE = """
     stoks AS (
       SELECT doc_id,
@@ -504,7 +476,7 @@ _LANG_SCORE_SQL = "\n".join(
         ",".join(f"'{w}'" for w in ws), code)
     for code, ws in _LANG_SETS.items()).rstrip(",")
 
-#: planted trained-lang-ID model for the r10 `pred_lang_trained` columns —
+#: planted trained-lang-ID model for the `pred_lang_trained` columns —
 #: the `quality_classifier_gate` recipe (seeded constants both engines
 #: embed verbatim) applied to the lang-ID decision machinery: hashed
 #: char-bigram featurization → K fixed-point score folds → argmax with
@@ -628,15 +600,11 @@ def doc_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``top_ngram_fraction_udf`` — the expression fold is interpreted at
     ~2-3 ms/doc and lives on as the pure-SQL twin, equality unit-pinned;
     the oracle recomputes the mode the relational way, so the kernel's
-    construction is what the driver verifies). Lang-ID was folded in from the
-    former ``doc_lang_id`` row (r2 registry curation) and the quality +
-    repetition columns from the former ``doc_quality_score`` row (r4 —
-    freed the slot for ``doc_c4_line_filter``): ONE token split feeds all
-    the stats. Since r6 the row also carries the md5-portable SimHash-64
-    signature (former standalone ``doc_simhash_portable`` row — registry
-    consolidation; same hash-checked construction, now joined on doc_id).
+    construction is what the driver verifies). ONE token split feeds all
+    the stats. The row also carries the md5-portable SimHash-64
+    signature, joined on doc_id.
 
-    r10 adds the TRAINED lang-ID decision surface
+    It also carries the TRAINED lang-ID decision surface
     (``pred_lang_trained``/``zq_trained``): the production
     ``langid.predict_lang_trained`` path — hashed char-bigram
     relative-frequency featurization, one fixed-point score fold per
@@ -655,7 +623,7 @@ def doc_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # inlining the split into every consumer re-runs the regex per reference).
     docs = raw.select("doc_id", "lang", "text", tokens("text").alias("__toks"))
     t = F.col("__toks")
-    # ONE map-only pipeline (r12 — guide §2.4): the trained-lang-ID
+    # ONE map-only pipeline: the trained-lang-ID
     # prediction rides the same projection via carry_cols instead of a
     # third documents scan joined back on doc_id (two exchanges gone at
     # scale; the join was corpus × corpus), and the simhash vote
@@ -680,8 +648,8 @@ def doc_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(avg_len, 4).alias("avg_token_len"),
         fingerprint.alias("fingerprint"),
         # raw tokens: stopword_count lowers per element anyway, and
-        # lower() is idempotent — the former transform(t, lower) argument
-        # paid one extra full array pass per language count (r12)
+        # lower() is idempotent — a transform(t, lower) argument would pay
+        # one extra full array pass per language count
         predict_lang(t).alias("pred_lang"),
         # share the materialized token array (quality_score would
         # otherwise re-split the text for its alpha-token fraction)
@@ -697,11 +665,9 @@ def doc_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                         F.coalesce(F.col("simhash"), F.lit(0).cast("long"))))
 
 
-#: corpus_split_profile's value oracle — registry slot consolidated in r8
-#: (headroom plan #1: the profile became the 'profile' stage grain of
-#: prep_training_corpus's chained oracle); the construction keeps this
-#: full hash-checked twin as a unit (tests/test_queries_oracle.py) and
-#: stays in the library surface.
+#: corpus_split_profile's value oracle: the profile is the 'profile' stage
+#: grain of prep_training_corpus's chained oracle, and this full twin
+#: checks the construction alone (tests/test_queries_oracle.py).
 CORPUS_SPLIT_PROFILE_ORACLE = """
     WITH h AS (
       SELECT doc_id, lang, length(text) AS n_chars,
@@ -727,15 +693,13 @@ CORPUS_SPLIT_PROFILE_ORACLE = """
 
 def corpus_split_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic content-hash train/val split (90/10) PROFILED by exact
-    per-(split, language) document-length quantiles — the r3 VERDICT
-    registry consolidation of the former ``doc_train_val_split`` +
-    ``doc_length_quantiles`` rows into one strictly-richer query (the
-    hash-split assignment feeds the group key, so a single misassigned doc
-    breaks both the counts and the quantiles; the per-doc split twin keeps
-    a unit oracle in tests/test_corpus_ops.py). Left the driver registry
-    in r8 (headroom plan #1: now the 'profile' stage grain of
-    ``prep_training_corpus``); the full value oracle stays hash-checked
-    as a unit via ``CORPUS_SPLIT_PROFILE_ORACLE``.
+    per-(split, language) document-length quantiles (the hash-split
+    assignment feeds the group key, so a single misassigned doc breaks
+    both the counts and the quantiles; the per-doc split twin keeps a
+    unit oracle in tests/test_corpus_ops.py). On the driver record as the
+    'profile' stage grain of ``prep_training_corpus``; the full value
+    oracle stays hash-checked as a unit via
+    ``CORPUS_SPLIT_PROFILE_ORACLE``.
 
     Split: pure function of the text + salt (md5 first 8 hex digits →
     32-bit value mod 100) — leakage-safe, stable across reruns and
@@ -743,7 +707,7 @@ def corpus_split_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     the profile agg. Quantiles: Spark's exact ``percentile`` (linear
     interpolation, same semantics as DuckDB ``quantile_cont``); at 100 TB
     swap in ``approx_percentile`` (KLL-family sketch, map-side combinable)
-    — same plan shape, and a TESTED contract since r12: per-group rank
+    — same plan shape, and a TESTED contract: per-group rank
     error of every quantile within n_g/accuracy + 1 at sf0.1
     (tests/test_scale_toolkit.py)."""
     docs = load_table(spark, sf_dir, "documents")
@@ -762,11 +726,6 @@ def corpus_split_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.element_at("__q", 3), 4).alias("len_p75"),
         F.round(F.element_at("__q", 4), 4).alias("len_p95"),
     )
-
-
-# Lang-ID's standalone row (`doc_lang_id`) was folded into `doc_text_stats`
-# above (identical construction, one shared token split) — r2 VERDICT
-# registry-budget curation.
 
 
 # Deterministic multi-line page construction for the cleaning suite: the
@@ -800,11 +759,6 @@ _C4_PAGE_SQL = """
       || ' done today.'
       || chr(10) || 'That is all. Nothing else!'
 """
-
-
-# (former standalone `doc_c4_line_filter` registration — merged with the
-# PII row into `doc_cleaning_suite` below, r6 registry consolidation; the
-# freed slot registers `bpe_word_frequencies`.)
 
 
 def synthetic_page() -> F.Column:
@@ -869,11 +823,10 @@ _PII_AUG_SQL = """
     + ",\n       " + scrub_pii_sql("__t") + " AS scrubbed\nFROM aug",
 )
 def doc_cleaning_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The full map-only document-cleaning suite in ONE projection (r6
-    merge of the former ``doc_c4_line_filter`` + ``doc_pii_scrub`` rows —
-    both were single-scan map-only passes over ``documents``, so the fold
-    is a strict improvement: one scan, still zero shuffle, zero Python,
-    every column of both rows hash-checked).
+    """The full map-only document-cleaning suite in ONE projection — C4
+    line filtering and PII scrubbing are both single-scan map-only passes
+    over ``documents``, so one scan serves both: zero shuffle, zero
+    Python, every column hash-checked.
 
     C4 line rules (Raffel et al. 2020 §2.2): keep lines ending in
     terminal punctuation with >=5 words and no 'javascript'; drop pages
@@ -966,7 +919,7 @@ _MD5_32 = """list_sum(list_transform(range(0, 8), i ->
 )
 def doc_tfidf_near_dup(spark: SparkSession, sf_dir: str,
                        idf=None) -> DataFrame:
-    """Text→similarity bridge (new r5 driver row, r4 VERDICT item 3): text
+    """Text→similarity bridge: text
     → hashed TF-IDF vectors (extensions/corpus.py hashed_tfidf_vectors —
     md5 unigram+bigram feature hashing, smoothed idf, l2-normalized
     float32 output) → embedding-cosine near-dup pairs
@@ -982,13 +935,12 @@ def doc_tfidf_near_dup(spark: SparkSession, sf_dir: str,
     so both the vectorizer and the near-dup machinery are hash-checked
     end-to-end.
 
-    ``idf``: optional frozen :func:`fit_tfidf_idf` table (r8 VERDICT
-    item 5) — the driver row self-fits (sf-bench-appropriate: one corpus
-    in hand, one pass), but a DEPLOYMENT running this shape daily at
-    100 TB should fit once on the reference corpus and pass the frozen
-    table here, which makes vectorization fully map-only and skips the
-    corpus-sized self-fit pin entirely (byte-identical vectors —
-    unit-proven in tests/test_corpus_ops.py)."""
+    ``idf``: optional frozen :func:`fit_tfidf_idf` table — the driver row
+    self-fits (sf-bench-appropriate: one corpus in hand, one pass), but a
+    DEPLOYMENT running this shape daily at 100 TB should fit once on the
+    reference corpus and pass the frozen table here, which makes vectorization
+    fully map-only and skips the corpus-sized self-fit pin entirely
+    (byte-identical vectors — unit-proven in tests/test_corpus_ops.py)."""
     from ..extensions.corpus import hashed_tfidf_vectors
     from ..extensions.similarity import cosine_near_dup_pairs
 
@@ -1059,7 +1011,7 @@ def doc_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return duplicate_window_spans(docs, "doc_id", "text", width=10)
 
 
-# --- URL zoo (r8): deterministic synthetic URL per doc_id, identical
+# --- URL zoo: deterministic synthetic URL per doc_id, identical
 # construction in both engines — exercises every canonicalization rule
 # (scheme case, www., default/explicit ports, tracking params, param
 # order, fragments, trailing slashes, co.uk-class domains, schemeless,
@@ -1109,11 +1061,11 @@ SYNTHETIC_URL_SQL = """
 """
 
 # one full-host entry, one messy (case/whitespace/subdomain) entry —
-# both sides must normalize them identically (r8 review finding)
+# both sides must normalize them identically
 _URL_BLOCKLIST = ("www.example3.com", "shop7.co.uk",
                   " Tracker.Example11.COM ")
 
-#: fixed PSL rule table for the r10 ``psl`` grain — every rule class
+#: fixed PSL rule table for the ``psl`` grain — every rule class
 #: lands on real zoo hosts at every scale factor: the private-suffix
 #: rule hits exampleN.com at N==7 (host IS a suffix → ''), the wildcard
 #: makes every shopN.co.uk a public suffix (registered = the sub.
@@ -1128,8 +1080,8 @@ def _url_curation_oracle() -> str:
     constants as the Spark expressions (regex/param/TLD tables via the
     weburl ``*_sql`` builders; the zoo via ``SYNTHETIC_URL_SQL``). The
     blocklist stage normalizes its entries through the SAME SQL builders
-    as the Spark side (lower+trim+www-strip → registered domain — r8
-    review finding: a hand-simplified literal list would silently diverge
+    as the Spark side (lower+trim+www-strip → registered domain — a
+    hand-simplified literal list would silently diverge
     on subdomain/case/whitespace-bearing entries) and guards NULL domains
     explicitly: SQL ``NOT IN`` is NULL-poisoned while Spark's anti join
     keeps unmatched NULLs — the classic three-valued-logic divergence,
@@ -1183,9 +1135,8 @@ def _url_curation_oracle() -> str:
 
 @register("doc_url_curation", oracle=_url_curation_oracle())
 def doc_url_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """URL/domain curation ON the driver record (r8 — the web-crawl half
-    of the training-data pipeline, extensions/weburl.py, registered in
-    the slot freed by headroom consolidation #3): three stage-tagged
+    """URL/domain curation ON the driver record (the web-crawl half of
+    the training-data pipeline, extensions/weburl.py): four stage-tagged
     grains over the deterministic URL zoo —
 
     - ``canon``: URL canonicalization (scheme/host case, www, default
@@ -1199,7 +1150,7 @@ def doc_url_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     - ``blocklist``: broadcast LEFT ANTI domain blocklist survivors,
       with one full-host blocklist entry proving both sides normalize to
       the registered domain;
-    - ``psl`` (r10): the FULL publicsuffix.org matcher
+    - ``psl``: the FULL publicsuffix.org matcher
       (:func:`with_registered_domain_psl`) under a fixed rule table
       exercising every rule class against real zoo hosts — plain +
       private suffixes, a wildcard (every ``shopN.co.uk`` becomes a
@@ -1219,7 +1170,7 @@ def doc_url_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # engine-pinned (caller-release contract): the three stages each scan
     # the docs relation — uncached, the parquet scan + the synthetic-URL
-    # CASE would run once per stage (r8 review finding)
+    # CASE would run once per stage
     docs = pin(load_table(spark, sf_dir, "documents").select(
         "doc_id", synthetic_url().alias("url")))
     nul = F.lit(None).cast("string")

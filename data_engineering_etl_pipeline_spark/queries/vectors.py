@@ -1,6 +1,6 @@
 """Similarity-search queries over the ``embeddings`` table (SURVEY.md §2.11):
-brute-force cosine top-k, exact/semantic near-dup, and — since r6 — the
-bucketed hyperplane-LSH near-dup path, ALL oracle-checked (the LSH oracle
+brute-force cosine top-k, exact/semantic near-dup, and the bucketed
+hyperplane-LSH near-dup path, ALL oracle-checked (the LSH oracle
 rebuilds the seeded plane constants and reproduces every signature bit
 exactly, so even the "approximate" path is value-verified at this config).
 """
@@ -57,9 +57,7 @@ _TOPK_SQL = """
 )
 def embedding_topk_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact cosine top-5 for 10 query vectors by THREE independent machines
-    under one oracle (the r4→r5 consolidation of the former
-    ``embedding_cosine_topk`` + ``embedding_ivf_full_probe`` rows; the
-    ``gemm`` leg is new in r6):
+    under one oracle:
 
     - ``brute``: broadcast the query side, fused codegen'd dot products,
       round-before-rank so float ties break deterministically by id;
@@ -157,27 +155,24 @@ def embedding_topk_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§2.11 embedding-cosine near-dup pairs (threshold 0.95) + array-column
-    profiling in one stage-tagged row (the r5 consolidation of the former
-    standalone ``embedding_label_stats`` row — the freed slot registers
-    ``embedding_semantic_dedup`` below; both legs stay fully hash-checked).
+    profiling in one stage-tagged row (every leg fully hash-checked).
 
     ``pairs``: deterministic duplicates injected (every 7th vector
     re-appended under a shifted id — same recipe as doc_exact_dedup) so
     the operator has work at every scale factor. Exact all-pairs here (the
     oracle shape), by TWO independent machines that must both match the SQL
-    pair set: the broadcast-GEMM path and — new r6 — the fully distributed
+    pair set: the broadcast-GEMM path and the fully distributed
     block-pair GEMM (``pairs_blocked``, ``n_blocks=4``), which collects
     nothing to the driver and is the exact-semantics plan past the
     broadcast budget. The recall-traded 100 TB candidate generator
     (hyperplane-LSH bucketing) has its own oracle-checked row,
     ``embedding_lsh_near_dup``.
 
-    ``xpairs`` (late r6): the BIPARTITE machine — ``cosine_cross_pairs``
-    between the doubled corpus and a benchmark of every-17th vectors
-    scaled ×2 (scaling must cancel through the inverse norms, proving
-    normalization) — the exact pair engine behind
-    ``semantic_decontamination``, the embedding twin of the 13-gram
-    decontamination row.
+    ``xpairs``: the BIPARTITE machine — ``cosine_cross_pairs`` between the
+    doubled corpus and a benchmark of every-17th vectors scaled ×2
+    (scaling must cancel through the inverse norms, proving
+    normalization) — the exact pair engine for embedding-space
+    decontamination against a benchmark.
 
     ``label_stats``: per-label vector counts, mean L2 norm, and
     first-dimension extrema — the fused-array-expression (no UDF) pattern."""
@@ -232,15 +227,15 @@ _ISD_PLANES, _ISD_TABLES, _ISD_THRESHOLD, _ISD_TAIL = 8, 2, 0.94, 8
 def _semantic_incr_oracle() -> str:
     """DuckDB twin of the FULL embedding_semantic_dedup row — the batch
     ``drops`` leg (exact all-pairs SemDeDup at n_clusters=1, the
-    original oracle) PLUS the r10-verdict-item-1 incremental legs,
+    original oracle) PLUS the incremental legs,
     recomputed from raw embeddings: per-table fold signatures from the
     SAME ``hyperplanes(100 + t)`` constants the Spark fold expressions
     embed (signs only — the ``_lsh_bucket_oracle`` parity argument),
     within-batch bucket-candidate pairs → exact cosine verify →
     recursive-closure keeper resolution, cross-batch survivor-vs-index
     bucket join → carried-vector cosine ``>= threshold`` (unrounded,
-    the verify-tail convention) — the keeper DECISION the r10 verdict
-    wanted hash-verified. Day-2 ingest: replayed exact copies (every
+    the verify-tail convention), so the keeper DECISION is hash-verified.
+    Day-2 ingest: replayed exact copies (every
     7th, id+1e6 — cosine 1, must drop), zero-tail mutants (every 5th,
     id+2e6, last {tail} of {dim} components zeroed — cosine spreads
     around the 0.94 threshold, measured min decision margin ≥ 1e-4 at
@@ -382,8 +377,8 @@ def _semantic_incr_oracle() -> str:
 
 @register("embedding_semantic_dedup", oracle=_semantic_incr_oracle())
 def embedding_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SemDeDup (Abbas et al. 2023, arXiv:2303.09540) on the driver record
-    (new r5 row, r4 VERDICT 'What's missing' item 1): k-means-partitioned
+    """SemDeDup (Abbas et al. 2023, arXiv:2303.09540) on the driver record:
+    k-means-partitioned
     embedding space → within-cluster cosine pairs → connected duplicate
     groups → drop every non-minimum member. Run here at ``n_clusters=1``,
     which provably degenerates to the exact all-pairs answer (one cluster
@@ -396,8 +391,7 @@ def embedding_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle recomputes the drop set via a recursive transitive closure over
     the exact pair graph (keeper = min reachable id).
 
-    ``incr_fresh``/``index`` (r11 — r10 VERDICT item 1, the last
-    unoracled ingest-decision surface): the operator a continuous
+    ``incr_fresh``/``index``: the operator a continuous
     embedding pipeline runs DAILY
     (:func:`similarity.incremental_semantic_dedup` under the PORTABLE
     ``sig_mode='fold'`` config, 8 planes × 2 tables, threshold 0.94 —
@@ -412,8 +406,7 @@ def embedding_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     test_semantic_incr_mutant_margin_floor — measured 8.5e-5–3.6e-4
     across the driver SFs, far beyond the ~ulp cross-engine
     chain-reassociation window; a too-close regenerated mutant fails
-    there as a data problem, not here as a hash mismatch — r11 advisor
-    finding) and sign-flipped
+    there as a data problem, not here as a hash mismatch) and sign-flipped
     vectors (every 9th, id+3e6 — every signature bit flips, cosine −1,
     must survive). ``incr_fresh`` emits the surviving ids; ``index``
     the updated index's distinct keeper ids. The oracle recomputes
@@ -431,7 +424,7 @@ def embedding_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cluster_driver_budget: the pair list here is KB-scale, so closure
     # runs the driver union-find (identical output; the distributed
     # pointer-jumping path keeps its own driver row, doc_dedup_clusters,
-    # and its bounded-rounds smoke — r12 perf, r11 VERDICT item 3)
+    # and its bounded-rounds smoke)
     drops = (semantic_dedup(doubled, threshold=0.95, n_clusters=1,
                             cluster_driver_budget=1_000_000)
              .select(F.lit("drops").alias("stage"), "vec_id", "keeper_id"))
@@ -457,8 +450,8 @@ def embedding_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pinned: the day-1 index subtree feeds BOTH the cross-batch candidate
     # join and the updated-index union below — unpinned, the fold
     # signature expressions (the row's priciest codegen) would run twice
-    # (r12 — r11 VERDICT item 3; the builder's attached manifest makes
-    # the ingest config check metadata-only, so the pin materializes once)
+    # (the builder's attached manifest makes the ingest config check
+    # metadata-only, so the pin materializes once)
     from ..caching import pin
 
     index = pin(embedding_signature_index(dv, n_planes=_ISD_PLANES,
@@ -480,8 +473,8 @@ def _lsh_bucket_oracle(seed: int = 42, n_planes: int = 16, dim: int = 64,
     """DuckDB twin of the bucketed hyperplane-LSH near-dup plan, built from
     the SAME `hyperplanes(seed)` constants the Spark expression embeds.
 
-    Sign-bit parity, precisely (r7 measurement superseding the original
-    "bit-equal" claim): DuckDB REASSOCIATES long float ``+`` chains
+    Sign-bit parity, precisely (measured; the dots are NOT bit-equal):
+    DuckDB REASSOCIATES long float ``+`` chains
     (measured up to ~20 ulp vs strict left-association), so the dot
     VALUES are not cross-engine bit-equal — but this oracle consumes only
     their SIGNS, which agree unless a dot lies within that ulp window of
@@ -550,7 +543,7 @@ def _cluster_sample_oracle() -> str:
     planted-Gaussian constants. The quota ranking is the engine's
     portable-md5 convention, so ``kept`` agrees row-for-row.
 
-    The ``centroid`` stage (r7) reproduces one exact distributed Lloyd
+    The ``centroid`` stage reproduces one exact distributed Lloyd
     M-step (``similarity.kmeans_update_exact``) over the SAME assignment:
     per-(cid, pos) member counts, the fixed-point coordinate sum
     ``Σ floor(x·2^20)`` (exact integer arithmetic — order-independent in
@@ -559,7 +552,7 @@ def _cluster_sample_oracle() -> str:
     quantize → posexplode → codebook-sized partial-agg reduce — that
     ``kmeans_lloyd_refine`` iterates.
 
-    The ``centroid2`` stage (late r7) closes the LOOP: iteration-2
+    The ``centroid2`` stage closes the LOOP: iteration-2
     REASSIGNMENT against the iteration-1 means (each mean is one
     CAST/multiply/divide from the exact integer sums — bit-identical
     doubles in both engines, so the fold chains against them are too),
@@ -605,7 +598,7 @@ def _cluster_sample_oracle() -> str:
       -- NULL vectors assign to cid 0 (the Spark fold's explicit
       -- override); without this guard the NULL dots would fall through
       -- every WHEN to the ELSE (cid k-1) and silently diverge — latent
-      -- until a fixture carries a NULL embedding (r7 review finding)
+      -- until a fixture carries a NULL embedding
       SELECT vec_id,
              CASE WHEN vnull THEN 0 ELSE {case} END AS cid
       FROM d
@@ -665,27 +658,24 @@ def _cluster_sample_oracle() -> str:
 
 @register("cluster_balanced_sample", oracle=_cluster_sample_oracle())
 def cluster_balanced_sample_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cluster-balanced curation sampling ON the driver record (r6 VERDICT
-    item 2 — was unit-only): partition the embedding space and keep at
-    most ``quota`` rows per cluster, flagging every row. Run under the
-    planted-centroid + fold-assignment configuration
+    """Cluster-balanced curation sampling ON the driver record: partition the
+    embedding space and keep at most ``quota`` rows per cluster, flagging
+    every row. Run under the planted-centroid + fold-assignment configuration
     (``similarity.cluster_balanced_sample(centroids=..., assign='fold')``),
     which makes the WHOLE row deterministic and oracle-expressible — the
-    ``embedding_lsh_near_dup`` seeded-constants trick applied to the
-    k-means partition: assignment constants are shared verbatim with the
-    SQL twin, and the within-cluster quota ranking is the portable-md5
-    hash order, so the oracle value-checks both the partition and the
-    quota machinery. The production path (seeded k-means fit + BLAS
-    assignment) keeps its invariants unit-pinned in
-    tests/test_similarity_recall.py (quota cap, full coverage, bijection,
-    rerun stability). Plan shape (r8 two-phase selection — the r7
-    verdict's scale fix): map-only fold assignment → map-only
-    per-partition quota prune (mapInPandas, no exchange) → ONE
-    candidate-sized ranking shuffle (≤ quota·k·P rows) → broadcast keeper
-    flag join; the corpus never feeds a partitionBy(cid) sort
+    ``embedding_lsh_near_dup`` seeded-constants trick applied to the k-means
+    partition: assignment constants are shared verbatim with the SQL twin, and
+    the within-cluster quota ranking is the portable-md5 hash order, so the
+    oracle value-checks both the partition and the quota machinery. The
+    production path (seeded k-means fit + BLAS assignment) keeps its invariants
+    unit-pinned in tests/test_similarity_recall.py (quota cap, full coverage,
+    bijection, rerun stability). Plan shape (two-phase selection): map-only
+    fold assignment → map-only per-partition quota prune (mapInPandas, no
+    exchange) → ONE candidate-sized ranking shuffle (≤ quota·k·P rows) →
+    broadcast keeper flag join; the corpus never feeds a partitionBy(cid) sort
     (plan-pinned in tests/test_plans.py).
 
-    ``centroid`` stage (r7, stage-tag extension — same slot): ONE exact
+    ``centroid`` stage (stage-tag extension — same slot): ONE exact
     distributed Lloyd M-step (``similarity.kmeans_update_exact``) over the
     same fold assignment — per-(cluster, coordinate) member counts, the
     fixed-point sum ``Σ floor(x·2^20)`` and the mean coordinate. The
@@ -715,7 +705,7 @@ def cluster_balanced_sample_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and nothing stays pinned behind the returned plan — the old shape
     # cached the iteration-1 M-step for a second in-plan consumer, so
     # every registry build leaked one InMemoryRelation until
-    # release_engine_pins (r7 advisor finding).
+    # release_engine_pins.
     assigned = _nearest_centroid_fold(emb, "vec_id", "embedding", cents,
                                       keep=("embedding",))
     _CENT_SCHEMA = "cid int, pos int, n_members long, sum_q long, coord double"
@@ -747,9 +737,9 @@ def cluster_balanced_sample_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # means are DATA-DEPENDENT, so nothing structural guarantees top-2
     # separation as fixtures/SF grow — and a vector whose top-2 dots sit
     # within reassociation ulps could assign differently in DuckDB
-    # (~20-ulp + chain reassociation measured r7), breaking the
+    # (~20-ulp + chain reassociation measured), breaking the
     # zero-tolerance hash NONDETERMINISTICALLY. Refuse loudly at build
-    # time instead (r7 advisor finding) — the same pattern as the
+    # time instead — the same pattern as the
     # empty-cluster check above. Build-time persist, released before
     # return: two aggregations (M-step + min margin) share one fold scan.
     assigned2 = _nearest_centroid_fold(clean, "vec_id", "embedding",
@@ -806,7 +796,7 @@ def _pca_project_sql() -> str:
     deterministic IEEE product (portable); integer addition is
     associativity-free, so the chain is bit-equal to Spark's long fold
     REGARDLESS of either engine's summation strategy. (The float-chain
-    form is NOT portable: measured r7, DuckDB reassociates long double
+    form is NOT portable: measured, DuckDB reassociates long double
     ``+`` chains up to ~20 ulp vs strict left-association — fine for the
     sign/argmax consumers the other oracles feed, fatal for hashed
     VALUES. See ``project_fold``'s mode docs.)"""
@@ -870,7 +860,7 @@ _PCA_MOMENTS_ORACLE = f"""
 @register("embedding_pca_moments", oracle=_PCA_MOMENTS_ORACLE)
 def embedding_pca_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact distributed covariance of the embedding corpus — the fit
-    surface of the r7 PCA/whitening operator (``similarity.fit_pca_exact``
+    surface of the PCA/whitening operator (``similarity.fit_pca_exact``
     / ``apply_pca``, the OPQ-ish rotation step embedding-curation
     pipelines run before cosine dedup or PQ): upper-triangle cells
     ``(i, j, n, sum_q, sum_qi, sum_qj, cov)``.
@@ -891,7 +881,7 @@ def embedding_pca_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle is codebook-sized at ANY corpus scale; first-moment partials
     ride the triangle rows, no join.
 
-    ``project`` stage (late r7, stage-tag extension — same slot): the
+    ``project`` stage (stage-tag extension — same slot): the
     APPLY surface. A planted deterministic model
     (:func:`planted_projection` — seeded Gram-Schmidt orthonormal
     components + seeded mean, constants shared verbatim with the SQL
@@ -929,8 +919,8 @@ def embedding_pca_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("embedding_lsh_near_dup", oracle=_lsh_bucket_oracle())
 def embedding_lsh_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The designated 100 TB similarity path ON the driver record (r5
-    VERDICT item 1): near-dup pairs whose candidate generation is the
+    """The designated 100 TB similarity path ON the driver record:
+    near-dup pairs whose candidate generation is the
     bucketed hyperplane-LSH equi-join (`hyperplane_lsh_buckets` →
     `cosine_near_dup_pairs(bucket_signatures=...)`), NOT the
     broadcast-bounded exact-GEMM path that `embedding_near_dup` exercises.
@@ -959,7 +949,7 @@ _QCG_SEED, _QCG_DIM, _QCG_THRESHOLD = 909, 64, 0.62
 
 def _classifier_gate_oracle() -> str:
     """DuckDB twin of the learned quality gate's DECISION surface under
-    the PLANTED-model configuration (r7 VERDICT item 4): the keep/drop
+    the PLANTED-model configuration: the keep/drop
     rule sigma(w.x+b) >= t  <=>  w.x+b >= logit(t), evaluated as the exact
     fixed-point fold z_q = floor(b*Q) + SUM_i floor(x_i*w_i*Q) against the
     integer literal floor(logit(t)*Q) — each term one deterministic IEEE
@@ -999,7 +989,7 @@ def _classifier_gate_oracle() -> str:
 @register("quality_classifier_gate", oracle=_classifier_gate_oracle())
 def quality_classifier_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The learned quality classifier's keep/drop DECISION on the driver
-    record (r7 VERDICT item 4 — the fit/score surface stays unit-only
+    record (the fit/score surface stays unit-only
     because libm exp is not cross-engine bit-stable, but the GATE decision
     sigma(z) >= t <=> z >= logit(t) needs no exp): a planted-model
     (``classifier.planted_logreg`` — seeded weights, the

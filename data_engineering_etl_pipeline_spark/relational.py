@@ -2,12 +2,9 @@
 (SURVEY.md §2.2 P1-P12, §2.3 J1-J9, §2.7 U1-U5).
 
 Everything here is a thin, intention-revealing composition of built-in
-DataFrame ops — Catalyst handles pushdown, pruning, join selection. The two
-patterns that deserve names:
+DataFrame ops — Catalyst handles pushdown, pruning, join selection. The
+pattern that deserves a name:
 
-- ``map_join``: the reference's dict-lookup "joins" (``col.map(ticker_map)``,
-  pipeline_helpers.py:250; historical_data_etl.py:186) become broadcast hash
-  joins against a tiny dimension — the scale-correct form of a Python dict.
 - ``pit_cutoff_join``: the point-in-time universe slice
   (historical_data_etl.py:159-168) becomes a theta join
   ``fact.date <= universe.month_end`` with the (small) universe broadcast, so
@@ -29,8 +26,9 @@ def canonicalize(df: DataFrame, col: str, mapping: Mapping[str, str],
     Reference: ``df[col].map(canonical_map).fillna(df[col])``
     (historical_data_etl.py:186, live_data_pipeline.py:152,
     coinbase_universe_pipeline.py:145). Implemented as a literal MapType
-    expression (constant-folded by Catalyst) — no shuffle, no UDF. For maps
-    too big to inline (>~10k entries) use ``map_join`` instead.
+    expression (constant-folded by Catalyst) — no shuffle, no UDF; a map
+    too big to inline (>~10k entries) belongs in a broadcast join against
+    a dimension table instead.
     """
     out_col = out_col or col
     if not mapping:
@@ -38,24 +36,6 @@ def canonicalize(df: DataFrame, col: str, mapping: Mapping[str, str],
     pairs = [F.lit(x) for kv in mapping.items() for x in kv]
     m = F.create_map(*pairs)
     return df.withColumn(out_col, F.coalesce(m[F.col(col)], F.col(col)))
-
-
-def map_join(df: DataFrame, dim: DataFrame, key: str, value_col: str,
-             out_col: str, default_col: str | None = None) -> DataFrame:
-    """J5 as a broadcast join: left-join a small dim ``(key, value_col)`` and
-    coalesce with a fallback column — the distributed form of
-    ``col.map(d).fillna(col)``.
-
-    PRECONDITION: ``dim`` keys must be unique (a dict's keys are by
-    construction — callers build dims from mapping literals via
-    ``records_to_df``). A duplicate-keyed dim would fan out fact rows,
-    which a dict lookup can never do; this function does not pay a
-    validation job to check it — dedupe upstream if the dim comes from an
-    appendable source."""
-    dim = F.broadcast(dim.select(F.col(key), F.col(value_col).alias("__mapped")))
-    out = df.join(dim, on=key, how="left")
-    fallback = F.col(default_col) if default_col else F.lit(None)
-    return out.withColumn(out_col, F.coalesce(F.col("__mapped"), fallback)).drop("__mapped")
 
 
 def ohlc_violation(close: str = "close", low: str = "low", high: str = "high",
@@ -80,12 +60,6 @@ def pit_cutoff_join(fact: DataFrame, universe: DataFrame, fact_key: str,
         on=[fact[fact_key] == universe[uni_key], fact[fact_date] <= universe[uni_month]],
         how="inner",
     )
-
-
-def distinct_keys(df: DataFrame, cols: Sequence[str]) -> DataFrame:
-    """P12/U5 row dedup via distinct projection (reference:
-    historical_data_etl.py:132 set-comprehension)."""
-    return df.select(*cols).distinct()
 
 
 def asof_join(left: DataFrame, right: DataFrame, key: str, left_time: str,

@@ -25,12 +25,15 @@ def get_spark(
         app_name: str = "data_engineering_etl_pipeline_spark") -> SparkSession:
     """Build (or reuse) the engine session.
 
-    ``spark.sql.shuffle.partitions`` is the local core count
-    (``SPARK_GRAFT_CPUS``, default 32), read once with the master URL; on a
-    real cluster AQE coalescing makes the initial number a ceiling, not a
-    target, so a larger value (e.g. 2-3× total cores) is safe at 100 TB.
+    ``spark.sql.shuffle.partitions`` is the local core count: the CPUs
+    this process may run on, overridable with ``SPARK_GRAFT_CPUS`` and read
+    once with the master URL. More local task slots than cores only adds
+    scheduling and shuffle-file overhead. On a real cluster AQE coalescing
+    makes the initial number a ceiling, not a target, so a larger value
+    (e.g. 2-3× total cores) is safe at 100 TB.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS",
+                          str(len(os.sched_getaffinity(0))))
     # Default heap: half the physical RAM, at most 16 GiB. A heap as large
     # as the machine lets a long-lived local session grow until the kernel
     # OOM-kills the JVM (a 16g heap on a 15 GiB host did, in the test suite).

@@ -32,8 +32,8 @@ from collections.abc import Callable, Iterator, Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
-from pyspark.sql.types import (DateType, DoubleType, LongType, StringType,
-                               StructField, StructType)
+from pyspark.sql.types import (DateType, DoubleType, StringType, StructField,
+                               StructType)
 
 MARKET_SCHEMA = StructType([
     StructField("coin_id", StringType()),
@@ -72,7 +72,7 @@ def synthetic_fetch(coin: str, start_day: int, n_days: int) -> list[tuple]:
     (reference parse at pipeline_helpers.py:208-213). Every value is a
     closed-form md5/floor expression, so the connector-sourced pipeline
     queries carry full DuckDB value oracles (the fact CTE rebuilds this
-    generator arithmetically in SQL — r5 VERDICT item 5)."""
+    generator arithmetically in SQL)."""
     import datetime
     out = []
     for d in range(start_day, start_day + n_days):
@@ -169,8 +169,7 @@ def fetch_history_distributed(spark: SparkSession, coins: Sequence[str],
     n_parts = parallelism or max(1, min(64, len(coins)))
     # partition on the FULL (coin, chunk) key: keying on coin_id alone
     # collapses a one-coin/long-history fetch into one serial task — the
-    # unit of parallelism is the API page/chunk, not the coin (r5 review
-    # finding)
+    # unit of parallelism is the API page/chunk, not the coin
     chunks = chunks.repartition(n_parts, "coin_id", "from_day")
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -183,96 +182,6 @@ def fetch_history_distributed(spark: SparkSession, coins: Sequence[str],
     return chunks.mapInPandas(run, schema=MARKET_SCHEMA)
 
 
-#: DeFiLlama TVL fact schema (reference pipeline_helpers.py:256-294 —
-#: epoch-s dates, one liquidity value per day)
-TVL_SCHEMA = StructType([
-    StructField("day", DateType()),
-    StructField("tvl", DoubleType()),
-])
-
-
-def _coerce_f(x) -> float | None:
-    """``pd.to_numeric(errors='coerce')`` + the ±inf guard as one scalar:
-    non-numeric → None, non-finite → None (reference
-    derivatives_snapshot_etl.py:86; feature_calculation_functions.py:21)."""
-    try:
-        v = float(x)
-    except (TypeError, ValueError):
-        return None
-    return v if math.isfinite(v) else None
-
-
-def parse_coingecko_market_chart(coin_id: str, payload: dict) -> list[tuple]:
-    """Parse the PUBLIC CoinGecko ``/coins/{id}/market_chart`` JSON shape —
-    ``{"prices": [[epoch_ms, v], ...], "market_caps": [[epoch_ms, v], ...],
-    "total_volumes": [[epoch_ms, v], ...]}`` — into ``MARKET_SCHEMA`` rows:
-    the reference's 3-way timestamp stitch + epoch-ms → UTC-midnight date
-    normalization (pipeline_helpers.py:201-213, the J1 left-merge chain
-    with prices as the driving series). Missing cap/volume points for a
-    price timestamp carry NULL (left semantics); malformed numerics
-    coerce to NULL (F7/F13). Pure function of the payload — runs inside
-    an executor-side fetcher closure, no Spark types needed."""
-    import datetime
-
-    def series(key: str) -> dict:
-        items = payload.get(key)
-        if not isinstance(items, list):
-            return {}  # a non-list series coerces to empty, never raises
-        out = {}
-        for item in items:
-            try:
-                ts = int(item[0])
-                v = _coerce_f(item[1]) if len(item) > 1 else None
-            except (TypeError, ValueError, IndexError, KeyError):
-                # KeyError too: item[0] on a DICT point raises KeyError,
-                # not IndexError (r8 review finding — an executor-side
-                # crash here fails the whole fetch job after task
-                # retries, the opposite of coerce-to-NULL)
-                continue  # a malformed point has no join key — skip
-            out[ts] = v
-        return out
-
-    caps = series("market_caps")
-    vols = series("total_volumes")
-    rows = []
-    for ts, price in sorted(series("prices").items()):
-        day = datetime.datetime.fromtimestamp(
-            ts / 1000.0, tz=datetime.timezone.utc).date()
-        rows.append((coin_id, day, price, vols.get(ts), caps.get(ts)))
-    return rows
-
-
-def parse_defillama_tvl(payload) -> list[tuple]:
-    """Parse the PUBLIC DeFiLlama TVL JSON shapes into ``TVL_SCHEMA`` rows:
-    either the protocol form ``{"tvl": [{"date": epoch_s,
-    "totalLiquidityUSD": v}, ...]}`` or the chain form
-    ``[{"date": epoch_s, "tvl": v}, ...]`` (reference
-    pipeline_helpers.py:256-294 — epoch-s → UTC date with
-    errors='coerce': a malformed epoch drops the point, a malformed
-    value coerces to NULL)."""
-    import datetime
-
-    items = payload.get("tvl") if isinstance(payload, dict) else payload
-    if not isinstance(items, list):
-        # DeFiLlama's non-history endpoints return a bare number under
-        # 'tvl' — coerce to no rows instead of a TypeError that would
-        # fail the executor task (r8 review finding)
-        return []
-    rows = []
-    for it in items:
-        if not isinstance(it, dict):
-            continue
-        try:
-            sec = int(float(it.get("date")))
-        except (TypeError, ValueError):
-            continue  # no date = no row key (the coerce-then-drop path)
-        day = datetime.datetime.fromtimestamp(
-            sec, tz=datetime.timezone.utc).date()
-        v = it.get("totalLiquidityUSD", it.get("tvl"))
-        rows.append((day, _coerce_f(v)))
-    return rows
-
-
 def with_retry(fetcher: Callable, retries: int = 3, backoff_s: float = 65.0,
                is_rate_limited: Callable[[Exception], bool] | None = None,
                sleeper: Callable[[float], None] = time.sleep) -> Callable:
@@ -281,7 +190,7 @@ def with_retry(fetcher: Callable, retries: int = 3, backoff_s: float = 65.0,
     concern, engine-agnostic; ``sleeper`` injectable for tests.
     ``retries`` counts TOTAL attempts and must be >= 1 — retries=0 would
     otherwise run zero attempts and raise a bare TypeError from ``raise
-    None`` (r5 review finding)."""
+    None``."""
     if retries < 1:
         raise ValueError("with_retry: retries counts total attempts, need >= 1")
     limited = is_rate_limited or (lambda e: "429" in str(e))

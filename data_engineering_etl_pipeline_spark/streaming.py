@@ -119,97 +119,6 @@ def windowed_agg(df: DataFrame, ts_col: str, window_len: str,
     )
 
 
-def dedup_stream(df: DataFrame, key_cols: list[str], ts_col: str,
-                 watermark: str = "1 hour",
-                 fingerprint_col: str | None = None) -> DataFrame:
-    """Streaming exact dedup: emit each key's FIRST occurrence, drop
-    replays — the exactly-once ingest-dedup step in front of an append
-    sink (at-least-once sources re-deliver; the lake must not).
-
-    ``dropDuplicatesWithinWatermark`` keys the state store on ``key_cols``
-    and the watermark bounds state: a key older than the watermark horizon
-    is evicted, so state is O(keys per horizon), not O(corpus) — the only
-    shape that survives an unbounded stream. Dedup by content: pass
-    ``fingerprint_col`` naming an expression-derived column (e.g.
-    ``xxhash64(text)``) so the state store carries 8-byte keys, never
-    document bodies. On a batch frame this degrades to a DETERMINISTIC
-    keep-first: the earliest-``ts_col`` row per key (row_number, ties by
-    the remaining columns) — plain ``dropDuplicates`` keeps an ARBITRARY
-    row, which is no oracle at all when re-delivered duplicates carry
-    differing non-key columns (r5 review finding); the streaming path
-    keeps the first ARRIVAL, and event-time order is the faithful batch
-    analog of arrival order for a replayed log.
-    """
-    keys = list(key_cols) + ([fingerprint_col] if fingerprint_col else [])
-    if not df.isStreaming:
-        # Tiebreak only over ORDERABLE columns: a map (or a struct holding
-        # one) cannot appear in a sort and would fail the whole frame with
-        # AnalysisException where dropDuplicates worked (r5 advisor
-        # finding). Callers needing a stable tiebreak across such columns
-        # should derive an orderable fingerprint column.
-        tiebreak = [F.col(f.name).asc() for f in df.schema.fields
-                    if f.name != ts_col and f.name not in keys
-                    and _is_orderable(f.dataType)]
-        w = Window.partitionBy(*keys).orderBy(F.col(ts_col).asc(), *tiebreak)
-        return (df.withColumn("__rn", F.row_number().over(w))
-                .filter(F.col("__rn") == 1).drop("__rn"))
-    return (df.withWatermark(ts_col, watermark)
-            .dropDuplicatesWithinWatermark(keys))
-
-
-def _is_orderable(dt) -> bool:
-    """True iff a column of this type may appear in ORDER BY / a window
-    sort (mirrors Catalyst's RowOrdering.isOrderable: maps are not
-    orderable, and neither is any type containing one)."""
-    from pyspark.sql import types as T
-    if isinstance(dt, T.MapType):
-        return False
-    if isinstance(dt, T.ArrayType):
-        return _is_orderable(dt.elementType)
-    if isinstance(dt, T.StructType):
-        return all(_is_orderable(f.dataType) for f in dt.fields)
-    return True
-
-
-def interval_join_stream(left: DataFrame, right: DataFrame, key: str,
-                         left_ts: str, right_ts: str,
-                         window_seconds: int = 3600,
-                         watermark: str = "2 hours") -> DataFrame:
-    """Stream-stream interval join: pair every left event with the same
-    key's right events in ``(left_ts, left_ts + window_seconds]`` — the
-    funnel/attribution shape (signup ⋈ clicks-in-the-next-hour) as a TRUE
-    stream-stream join, the §2.9 surface no batch twin replaces when both
-    sides are unbounded.
-
-    Both sides are watermarked and the join condition bounds event-time
-    distance, so Spark can expire buffered rows: left state is held
-    ``watermark + window`` past the right watermark, right state
-    ``watermark`` past the left's (the documented state-cleanup rule for
-    time-interval stream-stream joins). An unbounded-condition
-    stream-stream join would buffer forever — the time bound IS the scale
-    contract. On batch inputs the identical condition degrades to a plain
-    theta join, so the batch form (or `relational.binned_interval_join`,
-    its skew-immune equi-join twin) is the oracle.
-
-    Column naming: output carries the left columns plus the right's
-    ``value_cols`` suffixed ``_r`` where names collide.
-    """
-    lw = left.withWatermark(left_ts, watermark) if left.isStreaming else left
-    rw = (right.withWatermark(right_ts, watermark)
-          if right.isStreaming else right)
-    # disambiguate right columns before the condition references them
-    ren = {c: (c + "_r" if c in left.columns else c)
-           for c in right.columns if c != key}
-    rw = rw.select(F.col(key).alias("__rk"),
-                   *[F.col(c).alias(n) for c, n in ren.items()])
-    rts = ren[right_ts]
-    cond = ((F.col(key) == F.col("__rk"))
-            & (F.col(rts) > F.col(left_ts))
-            & (F.col(rts) <= F.col(left_ts)
-               + F.expr(f"INTERVAL {int(window_seconds)} SECONDS")))
-    return lw.join(rw, cond, "inner").drop("__rk")
-
-
 def sessionize_batch(df: DataFrame, entity_col: str, ts_col: str,
                      gap_minutes: int = 30) -> DataFrame:
     """Gap-based sessionization on bounded data: a new session starts when
@@ -236,33 +145,6 @@ def sessionize_batch(df: DataFrame, entity_col: str, ts_col: str,
             F.max(ts_col).alias("session_end"),
             F.count(F.lit(1)).alias("n_events"),
             F.round(F.sum("value"), 4).alias("sum_value"),
-        )
-    )
-
-
-def sessionize_stream(df: DataFrame, entity_col: str, ts_col: str,
-                      gap_minutes: int = 30,
-                      watermark: str | None = "1 hour") -> DataFrame:
-    """Streaming-native sessionization via ``session_window`` (dynamic-gap
-    merging windows; state bounded by the watermark).
-
-    Session identity matches ``sessionize_batch`` (same gap rule); the
-    reported ``session_end`` differs by construction — ``session_window.end``
-    is last-event-ts + gap, the batch form reports the last event ts. Counts,
-    sums and starts are identical, which is what the equivalence test pins.
-    """
-    if df.isStreaming and watermark:
-        df = df.withWatermark(ts_col, watermark)
-    win = F.session_window(F.col(ts_col), f"{gap_minutes} minutes")
-    return (
-        df.groupBy(F.col(entity_col), win)
-        .agg(F.count(F.lit(1)).alias("n_events"),
-             F.round(F.sum("value"), 4).alias("sum_value"))
-        .select(
-            entity_col,
-            F.col("session_window.start").alias("session_start"),
-            F.col("session_window.end").alias("session_end_padded"),
-            "n_events", "sum_value",
         )
     )
 

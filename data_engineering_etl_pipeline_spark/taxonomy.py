@@ -1,58 +1,30 @@
 """Precedence-based category classifier (SURVEY.md §2.10 UD5; reference:
 cg_attributes/coingecko_asset_attributes_pipeline.py:82-103,147-149).
 
-The reference walks a precedence-ordered taxonomy: explicit id overrides
-first, then the first taxonomy bucket whose keyword matches any of the
-asset's category tags. Row-wise Python there; here it is one chained
-``F.when`` expression — whole-stage-codegen'd, zero Python at runtime,
-and constant-folded when the taxonomy is a literal.
+The reference walks a precedence-ordered taxonomy: the first taxonomy
+bucket whose keyword matches wins. Row-wise Python there; here it is one
+chained ``F.when`` expression — whole-stage-codegen'd, zero Python at
+runtime, and constant-folded when the taxonomy is a literal.
 """
 
 from __future__ import annotations
 
-from collections.abc import Mapping, Sequence
+from collections.abc import Sequence
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def classify_by_keywords(tags_col: str | Column,
-                         taxonomy: Sequence[tuple[str, Sequence[str]]],
-                         overrides: Mapping[str, str] | None = None,
-                         id_col: str | Column | None = None,
-                         default: str = "Other") -> Column:
-    """Return the first taxonomy label whose keywords intersect the tag array.
-
-    ``taxonomy`` is precedence-ordered ``[(label, [keyword, ...]), ...]``;
-    a tag matches a keyword by substring containment, mirroring the
-    reference's ``keyword in tag`` check (cg_attributes…py:100).
-    ``overrides`` maps ids → labels and wins over keywords (:91-94).
-    """
-    tags = F.col(tags_col) if isinstance(tags_col, str) else tags_col
-
-    def tag_hit(kw: str) -> Column:
-        # closure (not default-arg): F.exists inspects the lambda's arity
-        return F.exists(tags, lambda t: t.contains(kw))
-
-    expr: Column = F.lit(default)
-    for label, keywords in reversed(list(taxonomy)):
-        cond = None
-        for kw in keywords:
-            hit = tag_hit(kw)
-            cond = hit if cond is None else (cond | hit)
-        expr = F.when(cond, F.lit(label)).otherwise(expr)
-    if overrides and id_col is not None:
-        idc = F.col(id_col) if isinstance(id_col, str) else id_col
-        pairs = [F.lit(x) for kv in overrides.items() for x in kv]
-        expr = F.coalesce(F.create_map(*pairs)[idc], expr)
-    return expr
-
-
 def classify_scalar_by_keywords(text_col: str | Column,
                                 taxonomy: Sequence[tuple[str, Sequence[str]]],
                                 default: str = "Other") -> Column:
-    """Same precedence walk over a scalar string column (star-schema analog:
-    classify ``p_type`` by keyword)."""
+    """Return the first taxonomy label with a keyword contained in the
+    string column (star-schema analog: classify ``p_type`` by keyword).
+
+    ``taxonomy`` is precedence-ordered ``[(label, [keyword, ...]), ...]``;
+    a match is substring containment, mirroring the reference's
+    ``keyword in tag`` check (cg_attributes…py:100).
+    """
     text = F.col(text_col) if isinstance(text_col, str) else text_col
     expr: Column = F.lit(default)
     for label, keywords in reversed(list(taxonomy)):

@@ -96,7 +96,7 @@ def _skewed_events(spark, mult: int, hot_frac_inv: int = 10):
 
 
 def skew_smoke(mult: int) -> int:
-    """Hot-key stress for the as-of and interval joins (r2 VERDICT item 3):
+    """Hot-key stress for the as-of and interval joins:
     one user holds ~10% of ALL events; wall time of the skew-immune plans
     vs the naive key-equi-join-then-filter twins, plus the naive plans'
     ANALYTIC intermediate row count (Σ_user |purchases|·|views|) so the
@@ -174,12 +174,18 @@ def dedup_smoke(mult: int) -> int:
     token-salted replicas keep each original near-dup pair appearing once
     per replica with its original jaccard, i.e. pairs scale exactly
     linearly, like a real corpus growing."""
+    from data_engineering_etl_pipeline_spark.extensions.dedup import (
+        ngram_jaccard_pairs)
+    from data_engineering_etl_pipeline_spark.io import load_table
     from data_engineering_etl_pipeline_spark.queries import QUERIES
-    # library query since r11 (its driver-record surface is the `ngram`
-    # grain of doc_minhash_lsh) — smoke it directly
-    from data_engineering_etl_pipeline_spark.queries.text import (
-        doc_ngram_jaccard)
     from data_engineering_etl_pipeline_spark.session import get_spark
+
+    def doc_ngram_jaccard(spark, sf_dir):
+        # exact trigram Jaccard over the raw documents table (on the driver
+        # record only as the `ngram` grain of doc_minhash_lsh)
+        docs = load_table(spark, sf_dir, "documents")
+        return ngram_jaccard_pairs(docs, "doc_id", "text", n=3,
+                                   threshold=0.5)
 
     spark = get_spark("dedup-smoke")
     out_dir = f"/tmp/etl_spark_scale_smoke/docs_x{mult}"
@@ -213,7 +219,7 @@ def dedup_smoke(mult: int) -> int:
 
 
 def bpe_smoke(mult: int) -> int:
-    """BPE word-frequency-stage scaling (r4 VERDICT item 5): the ONE
+    """BPE word-frequency-stage scaling: the ONE
     corpus-wide shuffle of the tokenizer trainer is the word-frequency
     aggregate; everything after it operates on the vocabulary-sized table.
     Inflate with token-salted replicas (suffixed tokens → replica-unique
@@ -245,7 +251,7 @@ def bpe_smoke(mult: int) -> int:
 
 
 def embedding_smoke(mult: int) -> int:
-    """Distributed exact-GEMM family scaling (r6): inflate embeddings
+    """Distributed exact-GEMM family scaling: inflate embeddings
     ``mult``× with per-replica deterministic SIGN FLIPS (replica r
     multiplies dimension i by ±1 from xxhash64(r, i)) — identical within-
     replica geometry (planted duplicates stay cosine 1.0) while the SAME
@@ -325,7 +331,7 @@ def embedding_smoke(mult: int) -> int:
 
 
 def moments_smoke(mult: int) -> int:
-    """Exact-moment family scaling (r7: covariance_exact / fit_pca_exact /
+    """Exact-moment family scaling (covariance_exact / fit_pca_exact /
     kmeans_lloyd_refine): inflate embeddings ``mult``× with the sign-flip
     recipe (identical within-replica geometry, deterministic) and time the
     covariance kernel, the full PCA fit (kernel + collect + eigh), and one
@@ -401,7 +407,7 @@ def dedup_inflate_only(spark, mult: int, out_dir: str) -> None:
 
 
 def ta_hot_smoke(mult: int, hot_frac_inv: int = 10) -> int:
-    """Hot-entity stress for the TA kernel (r4 VERDICT item 5): inflate
+    """Hot-entity stress for the TA kernel: inflate
     lineitem ``mult``× and remap ~1/``hot_frac_inv`` of ALL rows to ONE
     suppkey, then run the full recurrence kernel. The chunked
     ``mapInPandas`` form (ta.py run_partition) holds O(one Arrow batch +
@@ -486,7 +492,7 @@ def prep_smoke(mult: int) -> int:
 
 
 def dedup_hot_smoke(mult: int, hot_frac_inv: int = 10) -> int:
-    """Hot-CLUSTER stress for dedup_clusters (r5 VERDICT item 7): the
+    """Hot-CLUSTER stress for dedup_clusters: the
     adversarial shape for pointer jumping is ONE giant near-dup cluster
     (the boilerplate corpus). The dedup smoke scales uniformly; here
     ~1/``hot_frac_inv`` of a ``mult``×5000-doc corpus forms a single

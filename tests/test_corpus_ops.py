@@ -1,7 +1,6 @@
 """BM25 ranked retrieval and token-budget sequence packing vs DuckDB
 oracles on the real documents table — the same hash-match discipline as the
-driver gate, run here because the 50-entry registry budget is full
-(r2 VERDICT curation)."""
+driver gate, run here because the 50-entry registry budget is full."""
 
 from __future__ import annotations
 
@@ -198,7 +197,7 @@ def test_corpus_ops_plans_stay_jvm_side(spark):
     """BM25 / packing / sampling / LM are pure Catalyst plans — no Python
     evaluation nodes anywhere (the ops must stream through codegen at
     100 TB), and the sampler adds no shuffle at all (map-only filter).
-    The r12 input-parallelism floor is disabled for the scan here: it
+    The small-scan input-parallelism floor is disabled for the scan here: it
     adds a deliberate small-input-only exchange that is structurally
     absent at scale (pinned separately in
     test_plans.py::test_small_scan_parallelism_floor) — this pin is
@@ -398,9 +397,9 @@ FROM h
 
 
 def test_train_val_split_per_doc_oracle(spark, duck):
-    """Per-doc twin of the `corpus_split_profile` registry row (the r4
-    consolidation aggregated the driver check to (split, lang) groups; this
-    keeps the doc-level hash assignment oracle-verified)."""
+    """Per-doc twin of `corpus_split_profile` (which checks only (split,
+    lang) groups; this keeps the doc-level hash assignment
+    oracle-verified)."""
     docs = load_table(spark, SF_DIR, "documents")
     hv = F.conv(F.substring(F.md5(F.concat(F.col("text"), F.lit("|split-v1"))),
                             1, 8), 16, 10).cast("long")
@@ -423,7 +422,7 @@ def test_top_ngram_fraction_udf_matches_expression(spark):
     edge = spark.createDataFrame(
         [(100001, ""), (100002, "one"), (100003, "a b a b a b"),
          (100004, "  padded   tokens  here  "), (100005, "x x x x x"),
-         # Java-vs-Python whitespace semantics (r4 review finding): a
+         # Java-vs-Python whitespace semantics: a
          # trailing newline/tab yields a KEPT empty token in Spark's
          # split(trim(.)), and NBSP must NOT split (Java \s is ASCII)
          (100006, "a b\n"), (100007, "a b\t"), (100008, "\ta b"),
@@ -443,9 +442,9 @@ _HV = """list_sum(list_transform(range(0, 8), i ->
            AS BIGINT) << CAST((7 - i) * 4 AS INT)))"""
 
 
-def _dsir_sql(k: int | None = None) -> str:
-    """DuckDB twin of dsir_logweights / dsir_topk: raw = documents,
-    target = the English documents, buckets=512, smoothing=1.0."""
+def _dsir_sql(k: int) -> str:
+    """DuckDB twin of dsir_topk: raw = documents, target = the English
+    documents, buckets=512, smoothing=1.0."""
     hv_g = _HV.format(e="g || '|dsir-v1'")
     hv_id = _HV.format(e="CAST(doc_id AS VARCHAR) || '|dsir-v1'")
     base = """
@@ -481,8 +480,6 @@ ratio AS (
   FROM documents d LEFT JOIN scored s USING (doc_id)
 )
 """.format(hv_g=hv_g)
-    if k is None:
-        return base + "SELECT doc_id, n_feats, logw FROM lw"
     return base + f"""
 SELECT doc_id, logw,
        ROUND(logw + -(LN(-LN(({hv_id} + 1) / 4294967297.0))), 6)
@@ -492,24 +489,16 @@ ORDER BY dsir_score DESC, doc_id LIMIT {k}
 """
 
 
-def test_dsir_logweights_match_duckdb(spark, duck):
-    from data_engineering_etl_pipeline_spark.extensions.corpus import (
-        dsir_logweights)
-    docs = load_table(spark, SF_DIR, "documents")
-    got = dsir_logweights(docs, docs.filter(F.col("lang") == "en"),
-                          buckets=512)
-    assert_matches_oracle(got, duck, _dsir_sql(), "dsir_logweights")
-
-
 def test_dsir_upweights_target_like_docs(spark):
     """With the English documents as target, English raw docs must score
     higher on average than every other language (the whole point of
     importance resampling)."""
     from data_engineering_etl_pipeline_spark.extensions.corpus import (
-        dsir_logweights)
+        _dsir_scored)
     docs = load_table(spark, SF_DIR, "documents")
-    lw = dsir_logweights(docs, docs.filter(F.col("lang") == "en"),
-                         buckets=512)
+    lw = _dsir_scored(docs, docs.filter(F.col("lang") == "en"), "doc_id",
+                      "text", "text", buckets=512, smoothing=1.0,
+                      salt="dsir-v1")
     means = {r["lang"]: r["m"] for r in
              lw.join(docs.select("doc_id", "lang"), "doc_id")
              .groupBy("lang").agg(F.avg("logw").alias("m")).collect()}
@@ -540,7 +529,7 @@ def _ref_tfidf(texts: dict[int, str], dim: int, salt: str = "tfidf-v1"):
 
     def buckets(text):
         # mirrors corpus._words: whitespace split with boundary empties
-        # removed (r5 — an empty/whitespace-only text yields NO features
+        # removed (an empty/whitespace-only text yields NO features
         # and therefore a zero vector)
         toks = [x for x in re.split(r"\s+", text.strip().lower())
                 if x != ""]
@@ -663,7 +652,7 @@ def test_hashed_tfidf_null_text_yields_zero_vector(spark):
 
 
 def test_hashed_tfidf_self_fit_tokenizes_once(spark):
-    """r8 (the doc_tfidf_near_dup accounting fix): the self-fit path pins
+    """The self-fit path pins
     the bucket relation, so the eager idf aggregate materializes it and
     the returned vectorizer plan reads the CACHE instead of re-running
     tokenize+md5 over the corpus — regression pin: the plan must read an
@@ -700,7 +689,7 @@ def test_hashed_tfidf_self_fit_tokenizes_once(spark):
 
 
 def test_fit_once_apply_daily_equals_self_fit_bytewise(spark):
-    """r8 VERDICT item 5: the 100 TB path — fit_tfidf_idf once on the
+    """The 100 TB path — fit_tfidf_idf once on the
     reference corpus, then apply the frozen table — produces vectors
     BYTE-IDENTICAL to the one-shot self-fit over the same corpus (so
     switching a deployment from the self-fit pin to the frozen-idf path
@@ -773,7 +762,7 @@ def test_epoch_plan_matches_duckdb_and_is_a_permutation(spark, duck):
     assert order_of[0] != order_of[1]  # epochs reshuffle
     with _pytest.raises(ValueError, match="n_epochs"):
         epoch_plan(packed, n_epochs=0)
-    # r10 advisor: NULL pack ids are excluded in BOTH engines (the
+    # NULL pack ids are excluded in BOTH engines (the
     # concat_ws hash would otherwise collapse distinct NULL packs onto
     # one rank while the SQL twin's || chain NULLs out)
     withnull = spark.createDataFrame(

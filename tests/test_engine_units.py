@@ -1,6 +1,6 @@
 """Engine-module unit tests: semantics that the oracle queries can't cover —
-canonical-agg backfill, circuit breaker, TA kernel vs native twin, taxonomy
-precedence, idempotent snapshot sink, multimodal plumbing."""
+canonical-agg backfill, circuit breaker, TA kernel vs native twin,
+idempotent snapshot sink, multimodal plumbing."""
 
 from __future__ import annotations
 
@@ -17,7 +17,6 @@ from data_engineering_etl_pipeline_spark.io import write_daily_snapshot
 from data_engineering_etl_pipeline_spark.quality_gate import (
     CircuitBreakerTripped, apply_gate)
 from data_engineering_etl_pipeline_spark.ta import ta_features
-from data_engineering_etl_pipeline_spark.taxonomy import classify_by_keywords
 from data_engineering_etl_pipeline_spark.extensions.multimodal import (
     extract_features, make_fake_media)
 
@@ -110,7 +109,7 @@ def test_ta_vectorized_equals_per_asset_twin(spark):
     pdf = pd.DataFrame(rows, columns=["k", "i", "close", "high", "low"])
     # explicit per-group loop instead of GroupBy.apply: pandas is flipping
     # apply's include_groups default, which would silently drop the group
-    # column from the twin (r4 VERDICT item 8)
+    # column from the twin
     want = (pd.concat([_ta_one_asset(g, ["i"], "close", "high", "low")
                        for _, g in pdf.groupby("k")])
             .sort_values(["k", "i"]).reset_index(drop=True))
@@ -148,18 +147,6 @@ def test_ta_rsi_constant_series(spark):
     df = spark.createDataFrame(rows, "k long, i long, close double")
     out = ta_features(df, "k", ["i"], "close").filter(F.col("i") == 29).collect()[0]
     assert out["rsi_14"] == pytest.approx(100.0)
-
-
-def test_taxonomy_precedence(spark):
-    df = spark.createDataFrame(
-        [("a", ["layer-1", "meme"]), ("b", ["meme-token"]), ("c", ["unknown"]),
-         ("d", ["defi-protocol"])],
-        "id string, tags array<string>")
-    taxonomy = [("L1", ["layer-1"]), ("Meme", ["meme"]), ("DeFi", ["defi"])]
-    out = {r["id"]: r["cat"] for r in df.select(
-        "id", classify_by_keywords("tags", taxonomy, overrides={"d": "Override"},
-                                   id_col="id").alias("cat")).collect()}
-    assert out == {"a": "L1", "b": "Meme", "c": "Other", "d": "Override"}
 
 
 def test_idempotent_snapshot_sink(spark):
@@ -210,19 +197,6 @@ def test_multimodal_real_ppm_decode(spark):
             assert row["decode_ok"]
 
 
-def test_multimodal_frame_sample_fanout(spark):
-    from data_engineering_etl_pipeline_spark.extensions.multimodal import (
-        frame_sample_plan)
-
-    media = make_fake_media(spark, n=12)  # 4 videos (every 3rd row), 30 frames
-    plan = frame_sample_plan(media, every_n=10).toPandas()
-    n_videos = media.filter("kind = 'video'").count()
-    assert n_videos == 4
-    # stride 10 over 30 frames -> indices {0, 10, 20} per video
-    assert len(plan) == n_videos * 3
-    assert set(plan["frame_idx"]) == {0, 10, 20}
-
-
 def test_multimodal_sampled_frame_means_match_recipe(spark):
     """sample_frames really decodes the Y4M container: every sampled
     frame's mean equals the closed-form payload recipe."""
@@ -244,8 +218,8 @@ def test_multimodal_sampled_frame_means_match_recipe(spark):
 
 def test_multimodal_compressed_decode_stub_raises():
     """JPEG/MP4 magic bytes hit the honest NotImplementedError seams
-    where PIL/opencv/ffmpeg would plug in (PNG left the seam list in r12 —
-    it decodes for real); malformed payloads fail loudly too."""
+    where PIL/opencv/ffmpeg would plug in (PNG is not a seam — it decodes
+    for real); malformed payloads fail loudly too."""
     from data_engineering_etl_pipeline_spark.extensions.multimodal import (
         decode_image, decode_video)
 
@@ -296,7 +270,7 @@ def _rfc2083_unfilter(rows, ch):
 
 
 def test_png_decode_matches_recipe_all_filters():
-    """r11 VERDICT item 6: PNG decodes for real. The deterministic encoder
+    """PNG decodes for real. The deterministic encoder
     cycles scanline filter types 0-4 (h ≥ 5 covers all five), the decoder
     must invert every one of them to land on the container-independent
     closed-form mean — the exact value PPM yields over the same recipe —
@@ -465,7 +439,7 @@ def test_binned_interval_join_boundaries(spark):
 
 
 def test_asof_join_null_values_and_atomicity(spark):
-    """Row-level as-of semantics (ADVICE r2): when the most-recent prior
+    """Row-level as-of semantics: when the most-recent prior
     right row carries a NULL value, the output is NULL — not an older
     non-null value — and with multiple value_cols every output column comes
     from the SAME matched right row (struct-packed carry)."""
@@ -509,7 +483,7 @@ def test_asof_join_duplicate_right_modes(spark):
 def test_load_table_restores_nanos_conf(spark, tmp_path):
     """load_table('events') must not leave nanosAsLong=true behind: a later
     unrelated nanos-parquet read in the same session would silently get
-    bigint (ADVICE r2). Self-contained: writes a TIMESTAMP(NANOS) events
+    bigint. Self-contained: writes a TIMESTAMP(NANOS) events
     parquet with pyarrow, so the nanos fallback stays verified even though
     current driver testdata stores micros (ts arrives timestamp_ntz and the
     fallback is a no-op there — also asserted)."""
@@ -587,47 +561,13 @@ def test_exact_dedup_collision_path(spark):
 
 def test_dedup_clusters_nonconvergence_raises(spark):
     """A component deeper than max_iter must fail loudly (partial labels
-    would silently be wrong clusters — ADVICE r2)."""
+    would silently be wrong clusters)."""
     from data_engineering_etl_pipeline_spark.extensions.dedup import dedup_clusters
 
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(1, 8)], "id_a long, id_b long")
     with pytest.raises(RuntimeError, match="converge"):
         dedup_clusters(chain, max_iter=1)
-
-
-def test_distinct_keys_row_dedup(spark):
-    """P12/U5 (reference set-comprehension dedup,
-    historical_data_etl.py:132): distinct projection removes injected
-    duplicate rows exactly (driver-checked via doc_exact_dedup; this unit
-    keeps the relational primitive covered after orderkey_dedup's registry
-    row was retired)."""
-    from data_engineering_etl_pipeline_spark.relational import distinct_keys
-
-    df = spark.createDataFrame(
-        [(1, "a"), (1, "a"), (2, "b"), (2, "c")], "k long, v string")
-    got = sorted((r["k"], r["v"]) for r in distinct_keys(df, ["k", "v"]).collect())
-    assert got == [(1, "a"), (2, "b"), (2, "c")]
-    assert df.dropDuplicates().count() == 3
-
-
-def test_simhash64_invariants(spark):
-    """The xxhash64 SimHash (100 TB default; registry row retired in favor
-    of the oracle-checked md5 twin): identical texts → identical hash,
-    token-order invariance (bag-of-distinct-tokens), empty text → 0, and
-    agreement with the portable twin on WHICH pairs are hamming-close is
-    not required (different token hashes) — but self-consistency is."""
-    from data_engineering_etl_pipeline_spark.extensions.dedup import simhash64
-
-    docs = spark.createDataFrame(
-        [(1, "alpha beta gamma"), (2, "gamma beta alpha"),
-         (3, "alpha beta gamma"), (4, None), (5, "wholly different text")],
-        "doc_id long, text string")
-    out = {r["doc_id"]: r["simhash"] for r in
-           simhash64(docs, "doc_id", "text").collect()}
-    assert out[1] == out[2] == out[3]   # order-invariant, deterministic
-    assert out[4] == 0                  # token-less (null-text) doc restored
-    assert out[5] != out[1]
 
 
 def test_rolling_fingerprint_udf_matches_fold_and_expression(spark):
@@ -650,8 +590,8 @@ def test_rolling_fingerprint_udf_matches_fold_and_expression(spark):
 
     def fold(t):
         if t is None:
-            return None  # NULL → NULL in all three forms (r5 review fix:
-            # the UDF used to map NULL to 0, colliding with empty docs)
+            return None  # NULL → NULL in all three forms (mapping NULL
+            # to 0 would collide with empty docs)
         h = 0
         for ch in t:
             h = (h * 31 + ord(ch)) % 1_000_000_007
@@ -714,11 +654,11 @@ def test_incremental_exact_dedup_across_batches(spark):
 
 
 def test_incremental_exact_dedup_legacy_index_refused(spark):
-    """The NULL-__fplen migration guard (r6 advisor finding): an index
+    """The NULL-__fplen migration guard: an index
     persisted BEFORE the fingerprint became total must be refused loudly
     (plain-equality keys would silently re-admit indexed NULL-text
     duplicates every batch). A doc_fingerprints-built frame carries
-    fp_total metadata and skips the probe (r12 fast path) — but the
+    fp_total metadata and skips the probe (fast path) — but the
     metadata dies with derived frames, so a legacy index can never
     smuggle itself past the guard by construction."""
     from pyspark.sql import functions as F
@@ -792,11 +732,11 @@ def test_write_training_shards_manifest_and_layout(spark, tmp_path):
 
 
 def test_shard_manifest_stale_heals_on_next_append(spark, tmp_path):
-    """r6 advisor finding: a crash between data write and manifest publish
-    used to leave the manifest one batch stale FOREVER (appends merged on
-    top of the stale prior). Now the prior manifest's n_files total is
-    validated against the pre-write directory listing — a mismatch
-    abandons the merge and rebuilds from the full directory."""
+    """A crash between data write and manifest publish must not leave the
+    manifest one batch stale FOREVER (appends merging on top of the stale
+    prior): the prior manifest's n_files total is validated against the
+    pre-write directory listing — a mismatch abandons the merge and rebuilds
+    from the full directory."""
     from data_engineering_etl_pipeline_spark.io import (read_shard_manifest,
                                                         write_training_shards)
 
@@ -820,7 +760,7 @@ def test_shard_manifest_stale_heals_on_next_append(spark, tmp_path):
 
 
 def test_shard_manifest_concurrent_reader_never_sees_gap(spark, tmp_path):
-    """r6 VERDICT item 6: during publishes a concurrent reader must always
+    """During publishes a concurrent reader must always
     resolve SOME complete manifest — never a missing path, never a torn
     (partially-visible) one."""
     import threading
@@ -868,7 +808,7 @@ def test_shard_manifest_concurrent_reader_never_sees_gap(spark, tmp_path):
 def test_daily_snapshot_restores_partition_overwrite_mode(spark, tmp_path):
     """write_daily_snapshot must not leak partitionOverwriteMode=dynamic
     into the session: a later full partitioned overwrite would silently
-    keep stale partitions (r5 review finding)."""
+    keep stale partitions."""
     from data_engineering_etl_pipeline_spark.io import write_daily_snapshot
 
     key = "spark.sql.sources.partitionOverwriteMode"
@@ -882,7 +822,7 @@ def test_daily_snapshot_restores_partition_overwrite_mode(spark, tmp_path):
 def test_snapshot_exists_escapes_partition_values(spark, tmp_path):
     """Partition values with characters Spark escapes in directory names
     (e.g. ':' in a timestamp) must still be found by the idempotency
-    probe — otherwise every rerun rewrites (r5 review finding)."""
+    probe — otherwise every rerun rewrites."""
     from data_engineering_etl_pipeline_spark.io import (snapshot_exists,
                                                        write_daily_snapshot)
 
@@ -897,8 +837,8 @@ def test_snapshot_exists_escapes_partition_values(spark, tmp_path):
 
 def test_media_corrupt_blob_flags_row_not_job(spark):
     """One corrupt blob must flag ITS row (decode_ok=False, NULL metrics)
-    instead of killing the stage — that is what decode_ok is for (r5
-    review). The unsupported-codec seam still raises: it is a documented
+    instead of killing the stage — that is what decode_ok is for. The
+    unsupported-codec seam still raises: it is a documented
     boundary, not bad data."""
     from data_engineering_etl_pipeline_spark.extensions.multimodal import (
         MEDIA_SCHEMA, _ppm_bytes, extract_features)
@@ -928,7 +868,7 @@ def test_media_corrupt_blob_flags_row_not_job(spark):
 def test_repaint_check_flags_null_repaints(spark):
     """A repaint TO or FROM NULL must surface as a violation — the naive
     abs-diff predicate evaluated NULL and silently passed the worst kind
-    of repaint (r5 review); null↔null stays unchanged."""
+    of repaint; null↔null stays unchanged."""
     from data_engineering_etl_pipeline_spark.audits import repaint_check
 
     old = spark.createDataFrame(
@@ -942,27 +882,12 @@ def test_repaint_check_flags_null_repaints(spark):
         repaint_check(old, new, ["k"], [])
 
 
-def test_ohlc_audit_flags_null_prices(spark):
-    """The AUDIT flavor flags rows missing any critical price (a fact row
-    with no close is itself an integrity violation); the quality GATE's
-    predicate keeps its documented null=non-violation convention."""
-    from data_engineering_etl_pipeline_spark.audits import ohlc_violations
-
-    df = spark.createDataFrame(
-        [(5.0, 4.0, 6.0),      # fine
-         (9.0, 4.0, 6.0),      # out of band
-         (None, 4.0, 6.0),     # null close -> violation
-         (5.0, None, 6.0)],    # null low -> violation
-        "close double, low double, high double")
-    assert ohlc_violations(df).count() == 3
-
-
 def test_run_sql_survives_new_session_and_sf_switch(spark):
     """Temp views are per-SparkSession: a sibling from spark.newSession()
     shares the applicationId but NOT the views, so an appId-keyed memo
-    skipped registration and queries failed with TABLE_OR_VIEW_NOT_FOUND
-    (r5 advisor finding). Also: a direct register_star_views call between
-    run_sql calls must not leave run_sql trusting stale views."""
+    skipped registration and queries failed with TABLE_OR_VIEW_NOT_FOUND.
+    Also: a direct register_star_views call between run_sql calls must not
+    leave run_sql trusting stale views."""
     from data_engineering_etl_pipeline_spark.sql_interface import (
         register_star_views, run_sql)
     from .conftest import SF_DIR
@@ -986,7 +911,7 @@ def test_run_sql_survives_new_session_and_sf_switch(spark):
 
 
 def test_engine_pin_release_leaves_caller_caches_alone(spark):
-    """The persist-release contract (r5 VERDICT item 6): engine-internal
+    """The persist-release contract: engine-internal
     persists route through caching.pin and release_engine_pins drops
     exactly them — a caller's own persisted frame survives, so long-lived
     sessions no longer need (or risk) blanket clearCache."""
@@ -1021,19 +946,15 @@ def test_engine_pin_release_leaves_caller_caches_alone(spark):
     caller.unpersist()
 
 
-def test_fingerprint_index_bucketed_roundtrip_dedup(spark):
-    """Values through the DISK path: write the day-1 index with
-    write_fingerprint_index (bucketed+sorted on both key columns), read it
-    back, and run the day-2 incremental dedup against the disk copy — the
-    fresh set must equal the in-memory-index run exactly (the plan pin in
-    test_plans.py proves the join is exchange-free; this proves the
-    bucketed write/read loses no rows, including the NULL-text sentinel
-    group)."""
-    from pyspark.sql import functions as F
-
+def test_fingerprint_index_parquet_roundtrip_dedup(spark, tmp_path):
+    """Values through the DISK path: persist the day-1 index as parquet,
+    read it back, and run the day-2 incremental dedup against the disk
+    copy — the fresh set must equal the in-memory-index run exactly. The
+    re-read frame carries no manifest, so this also runs the NULL-__fplen
+    migration probe, and the write/read must lose no rows, including the
+    NULL-text sentinel group."""
     from data_engineering_etl_pipeline_spark.extensions.dedup import (
-        doc_fingerprints, incremental_exact_dedup, read_fingerprint_index,
-        write_fingerprint_index)
+        doc_fingerprints, incremental_exact_dedup)
 
     day1 = spark.createDataFrame(
         [(1, "alpha beta"), (2, "gamma"), (3, None), (4, "alpha beta")],
@@ -1050,8 +971,8 @@ def test_fingerprint_index_bucketed_roundtrip_dedup(spark):
     want = {r["doc_id"] for r in fresh_mem.collect()}
     assert want == {12, 14}
 
-    write_fingerprint_index(index, "b_fp_roundtrip")
-    disk = read_fingerprint_index(spark, "b_fp_roundtrip")
+    index.write.parquet(str(tmp_path / "fp_index"))
+    disk = spark.read.parquet(str(tmp_path / "fp_index"))
     fresh_disk, updated = incremental_exact_dedup(day2, disk,
                                                   "doc_id", "text")
     assert {r["doc_id"] for r in fresh_disk.collect()} == want

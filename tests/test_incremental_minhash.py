@@ -1,11 +1,10 @@
-"""Incremental MinHash-LSH near-dup index (r8 VERDICT item 3): the
-lexical twin of incremental_semantic_dedup — a persisted (band, bh,
-keep_id, keep_sig) index lets each ingest batch near-dup-dedup against
-everything seen so far WITHOUT re-banding the corpus. Units: cross-batch
-drop equals the batch rerun, idempotent replay, config refusal,
-disk==memory index, shingle-less docs pass through un-indexed. The
-index-side no-exchange plan pin lives in tests/test_plans.py; the
-foreachBatch streaming e2e in tests/test_streaming.py.
+"""Incremental MinHash-LSH near-dup index: the lexical twin of
+incremental_semantic_dedup — a persisted (band, bh, keep_id, keep_sig)
+index lets each ingest batch near-dup-dedup against everything seen so far
+WITHOUT re-banding the corpus. Units: cross-batch drop equals the batch
+rerun, idempotent replay, config refusal, the metadata-only config check,
+shingle-less docs pass through un-indexed. The foreachBatch streaming e2e
+lives in tests/test_streaming.py.
 """
 
 from __future__ import annotations
@@ -16,7 +15,7 @@ from pyspark.sql import functions as F
 from data_engineering_etl_pipeline_spark.caching import engine_pin_scope
 from data_engineering_etl_pipeline_spark.extensions.dedup import (
     dedup_clusters, incremental_minhash_lsh_dedup, minhash_band_index,
-    minhash_lsh_pairs, read_minhash_band_index, write_minhash_band_index)
+    minhash_lsh_pairs)
 
 _SCHEMA = "doc_id long, text string"
 _BASE_A = ("the quick brown fox jumps over the lazy dog and runs far "
@@ -120,28 +119,10 @@ def test_replay_is_idempotent_and_preserves_columns(spark):
         assert fresh2.count() == 0
 
 
-def test_disk_index_equals_memory_index(spark):
-    """An index persisted via write_minhash_band_index and read back
-    bucket-aligned produces the same drop decisions as the in-memory
-    relation (the semantic form's disk==memory contract)."""
-    with engine_pin_scope():
-        day1 = spark.createDataFrame([(1, _BASE_A), (2, _BASE_B)], _SCHEMA)
-        index_mem = minhash_band_index(day1)
-        write_minhash_band_index(index_mem, "t_mh_index")
-        index_disk = read_minhash_band_index(spark, "t_mh_index")
-        day2 = spark.createDataFrame(
-            [(10, _BASE_A), (11, _BASE_C)], _SCHEMA)
-        fresh_mem, _ = incremental_minhash_lsh_dedup(day2, index_mem)
-        fresh_disk, _ = incremental_minhash_lsh_dedup(day2, index_disk)
-        a = sorted(r["doc_id"] for r in fresh_mem.collect())
-        b = sorted(r["doc_id"] for r in fresh_disk.collect())
-        assert a == b == [11]
-
-
 def test_config_mismatch_and_missing_columns_refused(spark):
     """A mismatched (num_perm, bands, n, seed) index would silently match
     nothing and re-admit every indexed duplicate — refuse loudly, like
-    the semantic form (r6 review finding)."""
+    the semantic form."""
     with engine_pin_scope():
         day1 = spark.createDataFrame([(1, _BASE_A)], _SCHEMA)
         index = minhash_band_index(day1, num_perm=64, bands=16)
@@ -159,7 +140,7 @@ def test_config_mismatch_and_missing_columns_refused(spark):
         with pytest.raises(ValueError, match="must divide"):
             incremental_minhash_lsh_dedup(batch, index, num_perm=64,
                                           bands=7)
-        # r10: a base-hash mismatch (portable md5 index probed under the
+        # a base-hash mismatch (portable md5 index probed under the
         # xxhash64 default, or vice versa) is a config mismatch too
         with pytest.raises(ValueError, match="built with"):
             incremental_minhash_lsh_dedup(batch, index, hash_fn="md5")
@@ -169,46 +150,39 @@ def test_config_mismatch_and_missing_columns_refused(spark):
 
 
 def test_manifest_config_check_is_metadata_only(spark):
-    """r9 VERDICT item 6: a persisted index carries its LSH config in a
-    _index_manifest.json sidecar; read_minhash_band_index attaches it
-    and the incremental probe validates against IT — zero index scans.
-    Proof of no-scan: an index whose ROWS say the default config but
-    whose attached manifest says another is refused on the manifest
-    (a data scan would have passed it). Mixed-config writes get no
-    manifest, so the fallback scan still refuses the mix."""
-    from data_engineering_etl_pipeline_spark.scale import (
-        read_table_manifest)
-
+    """minhash_band_index attaches its LSH config to the built frame as
+    ``_index_manifest`` and the incremental probe validates against IT —
+    zero index scans. Proof of no-scan: an index whose ROWS say the
+    default config but whose attached manifest says another is refused on
+    the manifest (a data scan would have passed it). A derived frame such
+    as a mixed-config union carries no manifest, so the fallback scan
+    still refuses the mix."""
     with engine_pin_scope():
         day1 = spark.createDataFrame([(1, _BASE_A)], _SCHEMA)
         batch = spark.createDataFrame([(2, _BASE_B)], _SCHEMA)
         index = minhash_band_index(day1)
-        write_minhash_band_index(index, "t_mh_manifest")
-        assert read_table_manifest(spark, "t_mh_manifest") == {
+        assert index._index_manifest == {
             "nperm": 64, "nbands": 16, "ngram": 3, "mhseed": 42,
             "mhhash": "xxhash64"}
-        disk = read_minhash_band_index(spark, "t_mh_manifest")
-        assert disk._index_manifest["nperm"] == 64
         # happy path: manifest matches the call -> runs
-        fresh, _ = incremental_minhash_lsh_dedup(batch, disk)
+        fresh, _ = incremental_minhash_lsh_dedup(batch, index)
         assert sorted(r["doc_id"] for r in fresh.collect()) == [2]
         # manifest mismatch refuses, and on the MANIFEST: rows carry the
         # default config, so a scan-based check would have passed
-        disk._index_manifest = dict(disk._index_manifest, nbands=8)
+        lying = minhash_band_index(day1)
+        lying._index_manifest = dict(lying._index_manifest, nbands=8)
         with pytest.raises(ValueError, match="manifest says"):
-            incremental_minhash_lsh_dedup(batch, disk)
-        # a mixed-config index gets NO manifest; the fallback distinct
-        # scan refuses the mix
+            incremental_minhash_lsh_dedup(batch, lying)
+        # a mixed-config union is a derived frame with NO manifest; the
+        # fallback distinct scan refuses the mix
         mixed = index.unionByName(minhash_band_index(day1, bands=8))
-        write_minhash_band_index(mixed, "t_mh_manifest_mixed")
-        assert read_table_manifest(spark, "t_mh_manifest_mixed") is None
-        mixed_disk = read_minhash_band_index(spark, "t_mh_manifest_mixed")
+        assert getattr(mixed, "_index_manifest", None) is None
         with pytest.raises(ValueError, match="mixes LSH configs"):
-            incremental_minhash_lsh_dedup(batch, mixed_disk)
+            incremental_minhash_lsh_dedup(batch, mixed)
 
 
 def test_portable_md5_minhash_matches_duckdb(spark):
-    """r9 VERDICT item 1, the cross-engine keystone: the md5 minhash
+    """The cross-engine keystone: the md5 minhash
     config's per-shingle base hash AND full signature stream are
     BIT-identical in DuckDB — Spark's conv(substring(md5)) against the
     SQL strpos-digit fold, shared (a_i, b_i) coefficients. This is what

@@ -6,7 +6,9 @@ table).
 
 from __future__ import annotations
 
+import ast
 import datetime
+import os
 
 import pandas as pd
 import pytest
@@ -180,33 +182,38 @@ def test_bench_and_smoke_names_exist_in_registry():
             f"scale_smoke.py references unknown queries: {missing}")
 
 
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_PKG = "data_engineering_etl_pipeline_spark"
+
+
+def _walk(top):
+    for d, _, files in os.walk(os.path.join(_ROOT, top)):
+        yield from (os.path.join(d, f) for f in files if f.endswith(".py"))
+
+
+def _dotted(path):
+    rel = os.path.relpath(path, _ROOT)[:-3].replace(os.sep, ".")
+    return rel[:-len(".__init__")] if rel.endswith(".__init__") else rel
+
+
+def _parse(path):
+    with open(path) as f:
+        return ast.parse(f.read(), path)
+
+
 def test_every_package_module_has_an_importer():
     """Code stays only if something calls it: every package module other
     than an ``__init__`` must be imported by another package module, by
     ``__spark_entry__.py`` or by ``perfbench/``. A module that only its
     own tests import is dead weight. Parsed with ``ast``, so imports
     inside functions count and nothing is executed."""
-    import ast
-    import os
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    pkg = "data_engineering_etl_pipeline_spark"
-
-    def walk(top):
-        for d, _, files in os.walk(os.path.join(root, top)):
-            yield from (os.path.join(d, f) for f in files if f.endswith(".py"))
-
-    def dotted(path):
-        rel = os.path.relpath(path, root)[:-3].replace(os.sep, ".")
-        return rel[:-len(".__init__")] if rel.endswith(".__init__") else rel
-
     def imported_names(path):
         """Dotted names one file imports, relative imports resolved; for
         ``from X import y`` both ``X`` and ``X.y`` (y may be a module)."""
-        me = dotted(path)
+        me = _dotted(path)
         here = me if path.endswith("__init__.py") else me.rpartition(".")[0]
         out = set()
-        for node in ast.walk(ast.parse(open(path).read(), path)):
+        for node in ast.walk(_parse(path)):
             if isinstance(node, ast.Import):
                 out.update(a.name for a in node.names)
             elif isinstance(node, ast.ImportFrom):
@@ -219,15 +226,98 @@ def test_every_package_module_has_an_importer():
                 out.update(f"{base}.{a.name}" for a in node.names)
         return out
 
-    modules = {dotted(p): p for p in walk(pkg)
+    modules = {_dotted(p): p for p in _walk(_PKG)
                if not p.endswith("__init__.py")}
-    importers = list(walk(pkg)) + list(walk("perfbench")) + [
-        os.path.join(root, "__spark_entry__.py")]
+    importers = list(_walk(_PKG)) + list(_walk("perfbench")) + [
+        os.path.join(_ROOT, "__spark_entry__.py")]
     seen = set()
     for path in importers:
-        me = dotted(path)
+        me = _dotted(path)
         seen.update(n for n in imported_names(path) if n != me)
     orphans = sorted(set(modules) - seen)
     assert not orphans, (
         f"package modules nothing imports (delete them or call them): "
         f"{orphans}")
+
+
+#: Package functions no root reaches that stay on purpose, one reason each.
+KEEP = {
+    # the live refresh and its failure path (reaches write_daily_snapshot,
+    # snapshot_exists and engine_pin_scope)
+    "refresh_world_snapshot": "live pipeline: daily world re-snapshot",
+    "with_retry": "live pipeline: the fetcher's 429 retry/backoff",
+    "TwoTierCache": "the reference's DataPersistenceLayer",
+    # references that tests compare live code against
+    "_ta_one_asset": "pandas reference for ta._ta_partition",
+    "epoch_plan_sql": "DuckDB twin of corpus.epoch_plan",
+    "mixture_weights_sql": "DuckDB twin of mixing.mixture_weights",
+    "rolling_fingerprint": "expression twin of rolling_fingerprint_udf",
+    "top_ngram_fraction": "expression twin of top_ngram_fraction_udf",
+    "apply_pca": "BLAS reference project_fold is checked against",
+    # the train half of live predict paths
+    "fit_logreg_exact": "trains the model logreg_gate_fold applies",
+    "fit_lang_id": "trains the model predict_lang_trained applies",
+    "fit_tfidf_idf": "fits the frozen idf hashed_tfidf_vectors accepts",
+    "fit_pca_exact": "fits the model project_fold applies",
+    # drive live operators as streams in tests/test_streaming.py
+    "stream_events": "streaming source for the live operators",
+    "run_stream_to_memory": "streaming sink for the live operators",
+}
+
+
+def test_every_package_function_is_reachable():
+    """Code stays only if something calls it, per function: every
+    top-level def or class in the package must be reachable from a root —
+    a ``@register`` row, package module-level code, ``__spark_entry__.py``,
+    ``bench.py``, ``perfbench/`` (not its tests) — or be named in ``KEEP``
+    with a reason. The closure is name-based (``ast.Name``,
+    ``ast.Attribute`` and in-function ``from ... import`` names), so it
+    over-approximates what is reachable: anything it flags cannot be
+    called from a root."""
+    def names_in(node):
+        out = set()
+        for n in ast.walk(node):
+            if isinstance(n, ast.Name):
+                out.add(n.id)
+            elif isinstance(n, ast.Attribute):
+                out.add(n.attr)
+            elif isinstance(n, ast.ImportFrom):
+                out.update(a.name for a in n.names)
+        return out
+
+    defs, roots = {}, set(KEEP)
+    for path in _walk(_PKG):
+        for stmt in _parse(path).body:
+            if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef,
+                                 ast.ClassDef)):
+                defs.setdefault(stmt.name, []).append((_dotted(path), stmt))
+                for dec in stmt.decorator_list:
+                    roots |= names_in(dec)
+                    if (isinstance(dec, ast.Call)
+                            and getattr(dec.func, "id", None) == "register"):
+                        roots.add(stmt.name)
+            elif not isinstance(stmt, (ast.Import, ast.ImportFrom)):
+                roots |= names_in(stmt)
+    entry_points = [os.path.join(_ROOT, "__spark_entry__.py"),
+                    os.path.join(_ROOT, "bench.py")] + [
+        p for p in _walk("perfbench")
+        if os.sep + "tests" + os.sep not in p]
+    for path in entry_points:
+        roots |= names_in(_parse(path))
+
+    missing = sorted(set(KEEP) - set(defs))
+    assert not missing, f"KEEP names no top-level def: {missing}"
+    seen, todo = set(), [n for n in roots if n in defs]
+    while todo:
+        name = todo.pop()
+        if name in seen:
+            continue
+        seen.add(name)
+        for _, node in defs[name]:
+            todo.extend(n for n in names_in(node) if n in defs)
+    dead = sorted(f"{mod}.{name}" for name, where in defs.items()
+                  if name not in seen for mod, _ in where)
+    assert not dead, (
+        f"{len(dead)} package functions no registry row, pipeline or "
+        f"workload reaches (delete them, call them, or KEEP them with a "
+        f"reason): {dead}")

@@ -77,20 +77,6 @@ def pushed_filters(plan: str) -> int:
                if "PushedFilters: [" in line and "PushedFilters: []" not in line)
 
 
-def test_region_revenue_broadcasts_all_dims(spark):
-    """4-way dim join chain: every join must broadcast (dims are small at any
-    SF), zero sort-merge joins, and the only shuffle is the final agg.
-    (Library query — its registry slot is consolidated into
-    sql_nation_revenue's grouping-sets star; the plan contract holds.)"""
-    from data_engineering_etl_pipeline_spark.queries.joins import region_revenue
-
-    p = plan_text(region_revenue(spark, SF_DIR))
-    assert p.count("BroadcastHashJoin") >= 3
-    assert p.count("SortMergeJoin") == 0
-    assert shuffles(p) == 1
-    assert pushed_filters(p) >= 1
-
-
 def test_sql_nation_revenue_grouping_sets_one_agg_pass(spark):
     """The consolidated enriched SQL star (five frames, two
     grains) still broadcasts every dim, pushes the date filter, and plans
@@ -202,13 +188,16 @@ def test_exact_dedup_shuffles_fingerprints_not_text(spark):
 
 
 def test_hml_factor_library_plan_single_shuffle(spark):
-    """A10 long-short factor (library form — its registry row was
-    consolidated into hml_lag_compliance): percent_rank + conditional
-    agg must stay ONE exchange."""
-    from data_engineering_etl_pipeline_spark.queries.analytics import hml_factor
+    """A10 long-short factor (``windows.long_short_factor``, on the driver
+    record through hml_lag_compliance): percent_rank + conditional agg
+    must stay ONE exchange."""
+    from data_engineering_etl_pipeline_spark.io import load_table
+    from data_engineering_etl_pipeline_spark.windows import long_short_factor
 
-    p = plan_text(hml_factor(spark, SF_DIR))
-    assert shuffles(p) == 1, f"hml_factor grew extra shuffles:\n{p}"
+    li = load_table(spark, SF_DIR, "lineitem")
+    p = plan_text(long_short_factor(li, "l_shipdate", "l_extendedprice",
+                                    "l_discount", frac=0.3, min_group=10))
+    assert shuffles(p) == 1, f"long_short_factor grew extra shuffles:\n{p}"
 
 
 def test_feature_matrix_three_shuffles_two_sorts(spark):
@@ -267,16 +256,19 @@ def test_near_dup_stats_pruned_by_candidate_semi_join(spark, name):
     pruned to candidate-pair docs via a semi-join BEFORE the per-doc
     groupBy — without it the stats stage shuffles the whole corpus's
     shingles by doc_id, the kind of full-relation exchange that dies at
-    100 TB. (doc_ngram_jaccard is a library query — its
-    driver-record surface is doc_minhash_lsh's `ngram` grain — but its
-    plan contract is pinned standalone.)"""
+    100 TB. (doc_ngram_jaccard is ``ngram_jaccard_pairs`` over the raw
+    documents table — on the driver record only as doc_minhash_lsh's
+    `ngram` grain — so its plan contract is pinned on its own.)"""
     if name in QUERIES:
         p = plan_of(spark, name)
     else:
-        from data_engineering_etl_pipeline_spark.queries.text import (
-            doc_ngram_jaccard)
+        from data_engineering_etl_pipeline_spark.extensions.dedup import (
+            ngram_jaccard_pairs)
+        from data_engineering_etl_pipeline_spark.io import load_table
 
-        p = plan_text(doc_ngram_jaccard(spark, SF_DIR))
+        docs = load_table(spark, SF_DIR, "documents")
+        p = plan_text(ngram_jaccard_pairs(docs, "doc_id", "text", n=3,
+                                          threshold=0.5))
     assert "LeftSemi" in p, f"{name} lost the candidate-id stats prune:\n{p}"
 
 
@@ -339,13 +331,13 @@ def test_substring_dedup_single_window_exchange(spark):
 
 def test_minhash_signature_build_runs_once(spark):
     """Minhash design contract: the banding self-join's two sides are
-    the SAME signature-build subtree, and the plan intentionally carries
-    no persist and no explicit repartition (both measured net costs,
-    scripts/minhash_variants.py) — so correctness of the cost model rests
-    on Spark reusing the exchange at runtime. Pin it empirically: at least
-    one stage of the job must be skipped (its shuffle output replayed from
-    the reused exchange), proving the corpus shingle pass + signature
-    aggregation executed once, not per join side."""
+    the SAME signature-build subtree, and the plan intentionally carries no
+    persist and no explicit repartition (both measured net costs; see the
+    comment above the banding in ``dedup.minhash_lsh_pairs``) — so correctness
+    of the cost model rests on Spark reusing the exchange at runtime. Pin it
+    empirically: at least one stage of the job must be skipped (its shuffle
+    output replayed from the reused exchange), proving the corpus shingle pass
+    + signature aggregation executed once, not per join side."""
     sc = spark.sparkContext
     group = "minhash-exchange-reuse-contract"
     sc.setJobGroup(group, "exchange-reuse pin")
@@ -373,14 +365,16 @@ def test_map_only_cleaners_have_zero_shuffles(spark, name):
     no Python for the regexp families) so they stream through a 100 TB
     scan at scan speed. A shuffle appearing here means someone introduced
     an accidental wide dependency into a map-only cleaner.
-    ``doc_chunking`` is not a registry row (it is the ``chunk`` grain of
+    ``doc_chunking`` is ``corpus.chunk_documents`` over the raw documents
+    table, not a registry row (it is the ``chunk`` grain of
     ``pack_sequences``, whose pack leg legitimately shuffles) — the
-    map-only pin stays on the library builder."""
+    map-only pin stays on the library chunker."""
     if name == "doc_chunking":
-        from data_engineering_etl_pipeline_spark.queries.corpusq import (
-            doc_chunking)
+        from data_engineering_etl_pipeline_spark.extensions import corpus
+        from data_engineering_etl_pipeline_spark.io import load_table
 
-        p = plan_text(doc_chunking(spark, SF_DIR))
+        docs = load_table(spark, SF_DIR, "documents")
+        p = plan_text(corpus.chunk_documents(docs, window=64, stride=48))
     else:
         p = plan_of(spark, name)
     assert shuffles(p) == 0, f"{name} gained a shuffle:\n{p}"
@@ -403,41 +397,6 @@ def test_lsh_near_dup_plan_is_bucket_join_no_python_no_collect(spark):
     assert "CartesianProduct" not in p and "BroadcastNestedLoop" not in p, p
 
 
-def test_incremental_dedup_bucketed_index_join_no_index_exchange(spark):
-    """The daily-ingest contract at 100 TB: with the
-    fingerprint index persisted via write_fingerprint_index (bucketed on
-    BOTH join-key columns), the incremental anti-join reads the index
-    bucket-aligned — 'Bucketed: true' at the scan, NO exchange above it;
-    the only shuffle in the join is the new batch's own rows. Requires the
-    fingerprint to be total (plain equality keys): a null-safe <=> join
-    rewrites keys to coalesce/isnull and the planner disables bucketing."""
-    from pyspark.sql import functions as F
-
-    from data_engineering_etl_pipeline_spark.extensions.dedup import (
-        _default_fingerprint, doc_fingerprints, read_fingerprint_index,
-        write_fingerprint_index)
-    from data_engineering_etl_pipeline_spark.io import load_table
-
-    docs = load_table(spark, SF_DIR, "documents").select("doc_id", "text")
-    write_fingerprint_index(doc_fingerprints(docs), "b_fp_index")
-    index = read_fingerprint_index(spark, "b_fp_index")
-    batch = (docs.withColumn("doc_id", F.col("doc_id") + 5000000)
-             .select("*", *_default_fingerprint("text")))
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        j = batch.join(index.select("__fp", "__fplen"),
-                       ["__fp", "__fplen"], "left_anti")
-        p = plan_text(j)
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-    assert "Bucketed: true" in p, p
-    # exactly ONE shuffle — the batch side; the index side reads in place
-    # (with the index bucketed AND the batch shuffled, one exchange total
-    # means the index scan feeds the join directly)
-    assert shuffles(p) == 1, p
-
-
 def test_blocked_gemm_pairs_plan_is_grouped_map_no_corpus_broadcast(spark):
     """The distributed exact all-pairs path: candidate generation is a
     grouped-map GEMM over block pairs — FlatMapGroupsInPandas above ONE
@@ -456,72 +415,6 @@ def test_blocked_gemm_pairs_plan_is_grouped_map_no_corpus_broadcast(spark):
     assert "__g1" in p and "__g2" in p, p
     assert "CartesianProduct" not in p and "BroadcastNestedLoop" not in p, p
     assert shuffles(p) == 1, p  # ONE exchange: the block-pair groupBy
-
-
-def test_incremental_semantic_dedup_bucketed_index_join_no_index_exchange(spark):
-    """The semantic daily-ingest contract (the embedding twin of the
-    fingerprint-index pin above): with the signature index persisted via
-    write_signature_index (bucketed on BOTH join-key columns), the
-    cross-batch candidate join reads the index bucket-aligned — 'Bucketed:
-    true' at the scan, one exchange total (the batch's own signatures)."""
-    from pyspark.sql import functions as F
-
-    from data_engineering_etl_pipeline_spark.extensions.similarity import (
-        _multi_table_buckets, embedding_signature_index,
-        read_signature_index, write_signature_index)
-    from data_engineering_etl_pipeline_spark.io import load_table
-
-    emb = load_table(spark, SF_DIR, "embeddings").select("vec_id", "embedding")
-    write_signature_index(embedding_signature_index(emb), "b_sig_index")
-    index = read_signature_index(spark, "b_sig_index")
-    batch_sigs = _multi_table_buckets(
-        emb.withColumn("vec_id", F.col("vec_id") + 5000000),
-        "vec_id", "embedding", 16, 4, 64)
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        j = batch_sigs.join(index, ["table", "bucket"])
-        p = plan_text(j)
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-    assert "Bucketed: true" in p, p
-    assert shuffles(p) == 1, p
-
-
-def test_incremental_minhash_bucketed_index_join_no_index_exchange(spark):
-    """The lexical-LSH daily-ingest contract (the
-    minhash twin of the fingerprint/signature index pins above): with the
-    band index persisted via write_minhash_band_index (bucketed on BOTH
-    join-key columns), the cross-batch candidate join reads the index
-    bucket-aligned — 'Bucketed: true' at the scan, and the only exchange
-    is the batch's own band rows."""
-    from pyspark.sql import functions as F
-
-    from data_engineering_etl_pipeline_spark.extensions.dedup import (
-        _doc_band_signatures, _explode_band_rows, minhash_band_index,
-        read_minhash_band_index, tokenized_docs, write_minhash_band_index)
-    from data_engineering_etl_pipeline_spark.io import load_table
-
-    docs = load_table(spark, SF_DIR, "documents").select("doc_id", "text")
-    write_minhash_band_index(minhash_band_index(docs), "b_mh_index")
-    index = read_minhash_band_index(spark, "b_mh_index")
-    batch = docs.withColumn("doc_id", F.col("doc_id") + 5_000_000)
-    band_rows = _explode_band_rows(
-        _doc_band_signatures(tokenized_docs(batch), "doc_id", 3, 64, 16,
-                             42), "doc_id", 16)
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        j = band_rows.join(index, ["band", "bh"])
-        p = plan_text(j)
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-    assert "Bucketed: true" in p, p
-    # exchanges: the batch side's signature aggregate (keys on doc_id) and
-    # the batch band rows' join partitioning — the INDEX side contributes
-    # NONE (its scan is bucket-aligned on the join keys)
-    assert shuffles(p) == 2, p
-    assert "hashpartitioning(band" in p, p
 
 
 def test_doc_url_curation_plan_contracts(spark):

@@ -29,23 +29,10 @@ def test_entry_smoke(spark):
     assert set(e.oracle_sql()) <= set(e.queries())
 
 
-def test_region_revenue_library_query_matches_oracle(spark, duck):
-    """region_revenue left the driver registry in r7 (slot consolidated
-    into sql_nation_revenue's grouping-sets star) but remains library
-    surface — its full value oracle moves here so the J1 stitch keeps a
-    hash-checked twin."""
-    from data_engineering_etl_pipeline_spark.queries.joins import (
-        REGION_REVENUE_ORACLE, region_revenue)
-
-    assert_matches_oracle(region_revenue(spark, SF_DIR), duck,
-                          REGION_REVENUE_ORACLE, "region_revenue")
-
-
 def test_event_time_windows_library_query_matches_oracle(spark, duck):
-    """event_time_windows left the driver registry in r8 (headroom
-    consolidation #3: tumbling/sliding ride user_sessions as grains) but
-    remains library surface — its full value oracle moves here so both
-    window families keep a hash-checked standalone twin."""
+    """event_time_windows is on the driver record only as user_sessions'
+    tumbling/sliding grains; its full value oracle keeps both window
+    families hash-checked on their own."""
     from data_engineering_etl_pipeline_spark.queries.events import (
         EVENT_TIME_WINDOWS_ORACLE, event_time_windows)
 
@@ -54,35 +41,39 @@ def test_event_time_windows_library_query_matches_oracle(spark, duck):
 
 
 def test_doc_ngram_jaccard_library_query_matches_oracle(spark, duck):
-    """doc_ngram_jaccard left the driver registry in r11 (headroom
-    consolidation #4: its pair grain rides doc_minhash_lsh as the
-    'ngram' stage) but remains library surface — its full value oracle
-    moves here so the standalone builder keeps a hash-checked twin."""
+    """ngram_jaccard_pairs over the raw documents table against its full
+    value oracle (on the driver record it is only doc_minhash_lsh's
+    'ngram' grain)."""
+    from data_engineering_etl_pipeline_spark.extensions.dedup import (
+        ngram_jaccard_pairs)
+    from data_engineering_etl_pipeline_spark.io import load_table
     from data_engineering_etl_pipeline_spark.queries.text import (
-        NGRAM_JACCARD_ORACLE, doc_ngram_jaccard)
+        NGRAM_JACCARD_ORACLE)
 
-    assert_matches_oracle(doc_ngram_jaccard(spark, SF_DIR), duck,
-                          NGRAM_JACCARD_ORACLE, "doc_ngram_jaccard")
+    docs = load_table(spark, SF_DIR, "documents")
+    assert_matches_oracle(
+        ngram_jaccard_pairs(docs, "doc_id", "text", n=3, threshold=0.5),
+        duck, NGRAM_JACCARD_ORACLE, "doc_ngram_jaccard")
 
 
 def test_doc_chunking_library_query_matches_oracle(spark, duck):
-    """doc_chunking left the driver registry in r12 (headroom
-    consolidation #5: its token-window grain rides pack_sequences as the
-    'chunk' stage) but remains library surface — its full value oracle
-    moves here so the standalone chunker keeps a hash-checked twin."""
+    """chunk_documents over the raw documents table against its full
+    value oracle (on the driver record it is only pack_sequences' 'chunk'
+    grain)."""
+    from data_engineering_etl_pipeline_spark.extensions import corpus
+    from data_engineering_etl_pipeline_spark.io import load_table
     from data_engineering_etl_pipeline_spark.queries.corpusq import (
-        DOC_CHUNKING_ORACLE, doc_chunking)
+        DOC_CHUNKING_ORACLE)
 
-    assert_matches_oracle(doc_chunking(spark, SF_DIR), duck,
-                          DOC_CHUNKING_ORACLE, "doc_chunking")
+    docs = load_table(spark, SF_DIR, "documents")
+    assert_matches_oracle(corpus.chunk_documents(docs, window=64, stride=48),
+                          duck, DOC_CHUNKING_ORACLE, "doc_chunking")
 
 
 def test_corpus_split_profile_library_query_matches_oracle(spark, duck):
-    """corpus_split_profile left the driver registry in r8 (headroom
-    consolidation #1: it rides prep_training_corpus as the 'profile'
-    stage grain) but remains library surface — its full value oracle
-    moves here so the split+quantile construction keeps a hash-checked
-    standalone twin."""
+    """corpus_split_profile is on the driver record only as
+    prep_training_corpus' 'profile' grain; its full value oracle keeps the
+    split+quantile construction hash-checked on its own."""
     from data_engineering_etl_pipeline_spark.queries.text import (
         CORPUS_SPLIT_PROFILE_ORACLE, corpus_split_profile)
 

@@ -479,37 +479,6 @@ def test_fold_signatures_agree_with_arrow_and_drive_ingest(spark):
                              sig_mode="blas")
 
 
-def test_incremental_semantic_dedup_disk_index_roundtrip(spark):
-    """The on-disk (bucketed) signature index must drive incremental
-    semantic dedup to the exact same fresh set and updated keepers as the
-    in-memory index — the disk path is the production path (mirrors the
-    fingerprint-index roundtrip test)."""
-    from data_engineering_etl_pipeline_spark.extensions.similarity import (
-        embedding_signature_index, incremental_semantic_dedup,
-        read_signature_index, write_signature_index)
-
-    emb = load_table(spark, SF_DIR, "embeddings").select("vec_id", "embedding")
-    index_mem = embedding_signature_index(emb)
-    write_signature_index(index_mem, "rt_sig_index")
-    index_disk = read_signature_index(spark, "rt_sig_index")
-
-    batch = (emb.filter(F.col("vec_id") % 5 == 0)
-             .withColumn("vec_id", F.col("vec_id") + 1000000)
-             .unionByName(
-                 emb.filter(F.col("vec_id") % 9 == 0)
-                 .withColumn("vec_id", F.col("vec_id") + 2000000)
-                 .withColumn("embedding",
-                             F.transform(F.col("embedding"), lambda x: -x))))
-    fm, um = incremental_semantic_dedup(batch, index_mem)
-    fd, ud = incremental_semantic_dedup(batch, index_disk)
-    assert ({r.vec_id for r in fm.collect()}
-            == {r.vec_id for r in fd.collect()})
-    assert ({(r.table, r.bucket, r.keep_id) for r in
-             um.select("table", "bucket", "keep_id").collect()}
-            == {(r.table, r.bucket, r.keep_id) for r in
-                ud.select("table", "bucket", "keep_id").collect()})
-
-
 def test_incremental_semantic_dedup_refuses_config_mismatch(spark):
     """An index built at one (n_planes, n_tables) must be REFUSED at
     another: signatures from a different config silently match nothing in
@@ -527,31 +496,24 @@ def test_incremental_semantic_dedup_refuses_config_mismatch(spark):
 
 
 def test_semantic_index_manifest_config_check_is_metadata_only(spark):
-    """Semantic twin of the minhash manifest check: write_signature_index
-    writes the LSH config as a manifest sidecar; read_signature_index
-    attaches it; incremental_semantic_dedup validates against the MANIFEST
-    (rows say
-    the right config here, the tampered manifest says another — a data
-    scan would have passed, so the refusal proves the metadata-only
-    path)."""
+    """Semantic twin of the minhash manifest check:
+    embedding_signature_index attaches its LSH config to the built frame
+    as ``_index_manifest``; incremental_semantic_dedup validates against
+    the MANIFEST (rows say the right config here, the tampered manifest
+    says another — a data scan would have passed, so the refusal proves
+    the metadata-only path)."""
     import pytest
 
     from data_engineering_etl_pipeline_spark.extensions.similarity import (
-        embedding_signature_index, incremental_semantic_dedup,
-        read_signature_index, write_signature_index)
-    from data_engineering_etl_pipeline_spark.scale import (
-        read_table_manifest)
+        embedding_signature_index, incremental_semantic_dedup)
 
     emb = load_table(spark, SF_DIR, "embeddings").select("vec_id",
                                                          "embedding")
-    write_signature_index(embedding_signature_index(emb), "mf_sig_index")
-    assert read_table_manifest(spark, "mf_sig_index") == {
-        "planes": 16, "tables": 4}
-    disk = read_signature_index(spark, "mf_sig_index")
-    assert disk._index_manifest == {"planes": 16, "tables": 4}
-    disk._index_manifest = {"planes": 8, "tables": 4}
+    index = embedding_signature_index(emb)
+    assert index._index_manifest == {"planes": 16, "tables": 4}
+    index._index_manifest = {"planes": 8, "tables": 4}
     with pytest.raises(ValueError, match="manifest says"):
-        incremental_semantic_dedup(emb, disk)
+        incremental_semantic_dedup(emb, index)
 
 
 def test_incremental_semantic_dedup_preserves_batch_columns(spark):
@@ -606,7 +568,10 @@ def test_gemm_topk_nan_vector_parity(spark):
 
 def test_cosine_cross_pairs_both_paths_equal_theta_join(spark):
     """Bipartite exact pairs: broadcast-GEMM and cogrouped block
-    paths must both reproduce the naive theta cross-join bit-for-bit."""
+    paths must both reproduce the naive theta cross-join bit-for-bit, and
+    an id-name collision between the sides is refused."""
+    import pytest
+
     from data_engineering_etl_pipeline_spark.extensions.similarity import (
         _cosine, cosine_cross_pairs, with_vec_inv)
 
@@ -631,29 +596,6 @@ def test_cosine_cross_pairs_both_paths_equal_theta_join(spark):
                                                n_blocks=3).collect())
     assert got_b == want
     assert got_k == want
-
-
-def test_semantic_decontamination_flags_planted(spark):
-    """Every corpus vector identical (or scaled-identical) to a benchmark
-    vector must flag; everything else on this near-orthogonal corpus must
-    not. Same id-name collision guard as the underlying pair op."""
-    import pytest
-
-    from data_engineering_etl_pipeline_spark.extensions.similarity import (
-        cosine_cross_pairs, semantic_decontamination)
-
-    emb = load_table(spark, SF_DIR, "embeddings").select("vec_id", "embedding")
-    bench = (emb.filter(F.col("vec_id") % 17 == 0)
-             .select(F.col("vec_id").alias("bench_id"),
-                     F.transform(F.col("embedding"),
-                                 lambda x: x * 2.0).alias("embedding")))
-    flags = {r.vec_id: r.contaminated
-             for r in semantic_decontamination(emb, bench, 0.95).collect()}
-    planted = {r.bench_id for r in bench.select("bench_id").collect()}
-    assert planted
-    assert flags.keys() == {r.vec_id for r in emb.select("vec_id").collect()}
-    for vid, flag in flags.items():
-        assert flag == (vid in planted), vid
     with pytest.raises(ValueError, match="distinct column names"):
         cosine_cross_pairs(emb, emb, 0.95, left_id="vec_id",
                            right_id="vec_id")

@@ -108,7 +108,7 @@ def test_synthetic_fetch_shape():
 
 
 # ---------------------------------------------------------------------------
-# Real HTTP boundary (r6 VERDICT item 4): a local-socket stdlib fixture
+# Real HTTP boundary: a local-socket stdlib fixture
 # server — no external network — exercises the fetcher seam end-to-end:
 # URL building, JSON (de)serialization in EXECUTOR processes, HTTP error
 # propagation into with_retry's 429 contract.
@@ -244,135 +244,3 @@ def test_http_fetcher_distributed_retry_on_executors(spark):
         spark, ["btc"], n_days=200).collect()))
     assert got == want
     assert all(v == 2 for v in hits.values())  # one 429 + one success per page
-
-
-# ---------------------------------------------------------------------------
-# Upstream API payload shapes (r7 VERDICT item 7): canned CoinGecko
-# market_chart / DeFiLlama TVL JSON served by the same local fixture,
-# parsed through the S4/S5 paths into the canonical fact schemas.
-# ---------------------------------------------------------------------------
-
-def _coingecko_payload(coin: str, start_day: int, n_days: int) -> dict:
-    """The public /coins/{id}/market_chart shape, built FROM synthetic_fetch
-    so payload→schema parity is provable bit-for-bit."""
-    rows = synthetic_fetch(coin, start_day, n_days)
-    ms = [(r[1].toordinal() - 719163) * 86400000 for r in rows]
-    return {"prices": [[t, r[2]] for t, r in zip(ms, rows)],
-            "total_volumes": [[t, r[3]] for t, r in zip(ms, rows)],
-            "market_caps": [[t, r[4]] for t, r in zip(ms, rows)]}
-
-
-def test_parse_coingecko_market_chart_matches_synthetic_shape():
-    from data_engineering_etl_pipeline_spark.sources import (
-        parse_coingecko_market_chart)
-
-    expect = synthetic_fetch("btc", 19000, 7)
-    got = parse_coingecko_market_chart("btc", _coingecko_payload("btc", 19000, 7))
-    assert got == expect  # coin, UTC date, price, volume, mcap — bit-equal
-
-
-def test_parse_coingecko_left_stitch_and_coercion():
-    """Missing cap/volume points carry NULL (the reference's left-merge
-    onto prices); malformed numerics coerce; a point with no parseable
-    timestamp is dropped (no join key)."""
-    from data_engineering_etl_pipeline_spark.sources import (
-        parse_coingecko_market_chart)
-
-    payload = {
-        "prices": [[86400000, 2.5], [172800000, "bad"], ["junk", 9.9]],
-        "market_caps": [[86400000, float("inf")]],
-        "total_volumes": [[172800000, 7.0]],
-    }
-    got = parse_coingecko_market_chart("x", payload)
-    import datetime
-    assert got == [
-        ("x", datetime.date(1970, 1, 2), 2.5, None, None),   # inf cap -> NULL
-        ("x", datetime.date(1970, 1, 3), None, 7.0, None),   # bad price -> NULL
-    ]
-
-
-def test_parse_defillama_tvl_both_shapes():
-    from data_engineering_etl_pipeline_spark.sources import parse_defillama_tvl
-
-    import datetime
-    proto = {"tvl": [{"date": 86400, "totalLiquidityUSD": 123.5},
-                     {"date": "not-a-date", "totalLiquidityUSD": 1.0},
-                     {"date": 172800, "totalLiquidityUSD": "oops"}]}
-    chain = [{"date": 86400, "tvl": 9.25}, "junk", {"tvl": 3.0}]
-    assert parse_defillama_tvl(proto) == [
-        (datetime.date(1970, 1, 2), 123.5),
-        (datetime.date(1970, 1, 3), None)]
-    assert parse_defillama_tvl(chain) == [(datetime.date(1970, 1, 2), 9.25)]
-    assert parse_defillama_tvl({}) == [] and parse_defillama_tvl(None) == []
-
-
-def test_coingecko_payload_through_distributed_fetch(spark):
-    """End-to-end: executors fetch the CANNED CoinGecko payload over real
-    HTTP and parse it with parse_coingecko_market_chart — the resulting
-    DataFrame must be row-identical to the synthetic in-process path
-    (payload→schema parity through the S5 machinery)."""
-    import json
-    import threading
-    from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
-    from urllib.parse import parse_qs, urlparse
-
-    from data_engineering_etl_pipeline_spark.sources import (
-        fetch_history_distributed)
-
-    class Handler(BaseHTTPRequestHandler):
-        def log_message(self, *a):
-            pass
-
-        def do_GET(self):
-            u = urlparse(self.path)
-            q = parse_qs(u.query)
-            coin = u.path.rsplit("/", 2)[-2]  # /coins/{id}/market_chart
-            body = json.dumps(_coingecko_payload(
-                coin, int(q["start"][0]), int(q["n"][0]))).encode()
-            self.send_response(200)
-            self.send_header("Content-Type", "application/json")
-            self.end_headers()
-            self.wfile.write(body)
-
-    srv = ThreadingHTTPServer(("127.0.0.1", 0), Handler)
-    threading.Thread(target=srv.serve_forever, daemon=True).start()
-    base = f"http://127.0.0.1:{srv.server_address[1]}"
-
-    def cg_fetch(coin: str, start_day: int, n_days: int):
-        import json as _json
-        from urllib.request import urlopen
-
-        from data_engineering_etl_pipeline_spark.sources import (
-            parse_coingecko_market_chart)
-
-        url = f"{base}/coins/{coin}/market_chart?start={start_day}&n={n_days}"
-        with urlopen(url, timeout=10) as resp:
-            return parse_coingecko_market_chart(coin, _json.load(resp))
-
-    try:
-        coins = ["btc", "eth", "sol"]
-        via_http = fetch_history_distributed(
-            spark, coins, start_day=19000, n_days=30, chunk_days=7,
-            fetcher=cg_fetch)
-        in_proc = fetch_history_distributed(
-            spark, coins, start_day=19000, n_days=30, chunk_days=7)
-        assert sorted(map(tuple, via_http.collect())) == \
-            sorted(map(tuple, in_proc.collect()))
-    finally:
-        srv.shutdown()
-
-
-def test_payload_parsers_never_raise_on_malformed_containers():
-    """r8 review finding: an executor-side parser crash fails the whole
-    fetch job after task retries — malformed containers must coerce to
-    empty/skipped, matching the documented coerce-to-NULL contract."""
-    from data_engineering_etl_pipeline_spark.sources import (
-        parse_coingecko_market_chart, parse_defillama_tvl)
-
-    assert parse_coingecko_market_chart("x", {"prices": [{"t": 1}]}) == []
-    assert parse_coingecko_market_chart("x", {"prices": 5}) == []
-    assert parse_coingecko_market_chart("x", {"prices": [[1000, 1.0], None]}) \
-        == [("x", __import__("datetime").date(1970, 1, 1), 1.0, None, None)]
-    assert parse_defillama_tvl({"tvl": 123.4}) == []
-    assert parse_defillama_tvl({"tvl": "oops"}) == []
-    assert parse_defillama_tvl(42) == []

@@ -2,21 +2,20 @@
 for the streaming plan over the same bounded data.
 
 Covers: file-source micro-batch read, tumbling-window agg with watermark,
-session_window sessionization vs the batch lag+cumsum form, and the
-foreachBatch idempotent daily-snapshot sink (S10 streaming analog).
+the foreachBatch idempotent daily-snapshot sink (S10 streaming analog), and
+live batch operators (MACD, incremental dedup, cleaning, covariance,
+k-means) driven as streams.
 """
 
 from __future__ import annotations
 
 import os
 
-import pytest
 from pyspark.sql import functions as F
 
 from data_engineering_etl_pipeline_spark.io import load_table, snapshot_exists
 from data_engineering_etl_pipeline_spark.streaming import (
-    dedup_stream, run_stream_to_memory, sessionize_batch, sessionize_stream,
-    stream_events, windowed_agg)
+    run_stream_to_memory, stream_events, windowed_agg)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SMOKE_DIR", "/root/testdata/sf0.001")
 
@@ -41,29 +40,6 @@ def test_streaming_windowed_agg_matches_batch(spark):
         F.col("window.start").alias("ws"), "event_type", "n_events", "sum_value")
 
     cols = ["ws", "event_type", "n_events", "sum_value"]
-    assert _collect_sorted(got, cols) == _collect_sorted(want, cols)
-    assert got.count() > 0
-
-
-def test_streaming_sessionize_matches_batch(spark):
-    """session_window sessions == batch lag+cumsum sessions on identity
-    (entity, start, n_events, sum_value); padded end == last event + gap."""
-    gap = 30
-    stream = stream_events(spark, SF_DIR)
-    sess = sessionize_stream(stream, "user_id", "ts", gap_minutes=gap,
-                             watermark="2 hours")
-    run_stream_to_memory(sess, "sess_test", output_mode="complete")
-    got = spark.table("sess_test")
-
-    batch = load_table(spark, SF_DIR, "events")
-    want = sessionize_batch(batch, "user_id", "ts", gap_minutes=gap).select(
-        "user_id", "session_start",
-        (F.col("session_end") + F.expr(f"INTERVAL {gap} MINUTES"))
-        .alias("session_end_padded"),
-        "n_events", "sum_value")
-
-    cols = ["user_id", "session_start", "session_end_padded", "n_events",
-            "sum_value"]
     assert _collect_sorted(got, cols) == _collect_sorted(want, cols)
     assert got.count() > 0
 
@@ -184,39 +160,6 @@ def test_streaming_macd_state_spans_batches(spark, tmp_path):
     assert got.count() > 0
 
 
-def test_dedup_stream_drops_replays_across_batches(spark, tmp_path):
-    """At-least-once replay: two micro-batch files sharing 5 rows — the
-    streaming dedup must emit each (user_id, ts) exactly once, matching the
-    batch dropDuplicates twin over the unioned data."""
-    import datetime
-
-    base = datetime.datetime(2024, 3, 1)
-    rows = [(i % 3, base + datetime.timedelta(minutes=i), float(i))
-            for i in range(15)]
-    src = tmp_path / "src"
-    src.mkdir()
-    sdf = spark.createDataFrame(rows, "user_id long, ts timestamp, value double")
-    sdf.filter(F.minute("ts") < 10).coalesce(1).write.parquet(str(src / "a"))
-    sdf.filter(F.minute("ts") >= 5).coalesce(1).write.parquet(str(src / "b"))
-    schema = sdf.schema
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 1)
-              .option("recursiveFileLookup", "true").parquet(str(src)))
-    out = dedup_stream(stream, ["user_id", "ts"], "ts", watermark="240 hours")
-    q = (out.writeStream.outputMode("append").format("memory")
-         .queryName("dedup_stream_test")
-         .option("checkpointLocation", str(tmp_path / "ckpt"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination(180)
-    q.stop()
-    got = spark.table("dedup_stream_test")
-    union = spark.read.option("recursiveFileLookup", "true").parquet(str(src))
-    want = dedup_stream(union, ["user_id", "ts"], "ts")   # batch twin
-    assert got.count() == 15
-    cols = ["user_id", "ts", "value"]
-    assert _collect_sorted(got, cols) == _collect_sorted(want, cols)
-
-
 def test_windowed_agg_drops_late_data_after_window_eviction(spark, tmp_path):
     """Late-data DROP semantics, as the engine actually guarantees them: a
     straggler whose window has ALREADY been evicted (watermark crossed the
@@ -279,114 +222,6 @@ def test_windowed_agg_drops_late_data_after_window_eviction(spark, tmp_path):
              .select(F.col("window.start").alias("ws"), "n_events",
                      "sum_value").collect()}
     assert batch[d(10)] == (3, 102.0)  # batch twin keeps the straggler
-
-
-def test_stream_stream_interval_join_matches_batch(spark):
-    """TRUE stream-stream join (both sides unbounded, watermarked, time-
-    interval condition): signup ⋈ same user's clicks in the next hour must
-    produce exactly the batch theta-join's pairs over the same bounded
-    data. State cleanup needs both watermarks + the interval bound — an
-    unbounded-condition join would buffer forever."""
-    from data_engineering_etl_pipeline_spark.streaming import (
-        interval_join_stream)
-
-    def legs(df):
-        s = (df.filter(F.col("event_type") == "signup")
-             .select("event_id", "user_id", F.col("ts").alias("s_ts")))
-        c = (df.filter(F.col("event_type") == "click")
-             .select("user_id", F.col("ts").alias("c_ts"), "value"))
-        return s, c
-
-    stream = stream_events(spark, SF_DIR)
-    s, c = legs(stream)
-    joined = interval_join_stream(s, c, key="user_id", left_ts="s_ts",
-                                  right_ts="c_ts", window_seconds=3600)
-    run_stream_to_memory(joined, "ss_join_test", output_mode="append")
-    got = spark.table("ss_join_test")
-
-    batch = load_table(spark, SF_DIR, "events")
-    sb, cb = legs(batch)
-    want = interval_join_stream(sb, cb, key="user_id", left_ts="s_ts",
-                                right_ts="c_ts", window_seconds=3600)
-    cols = ["event_id", "user_id", "s_ts", "c_ts", "value"]
-    got = got.select("event_id", "user_id", "s_ts",
-                     F.col("c_ts").alias("c_ts"), "value")
-    assert _collect_sorted(got, cols) == _collect_sorted(want.select(*cols), cols)
-    assert got.count() > 0
-
-
-def test_stream_stream_interval_join_drops_late_right_rows(spark, tmp_path):
-    """State expiry on the stream-stream join itself (r4 VERDICT item 7):
-    a right-side straggler arriving after BOTH watermarks + the interval
-    bound have passed produces NO pair — the buffered left row has been
-    evicted and the late input is watermark-dropped — while an on-time
-    click in the same window did pair. This is the join's scale contract:
-    without it, left state would grow forever."""
-    import datetime
-
-    from data_engineering_etl_pipeline_spark.streaming import (
-        interval_join_stream)
-
-    def d(h, m=0):
-        return datetime.datetime(2024, 3, 1, h, m)
-
-    s_schema = "event_id long, user_id long, s_ts timestamp"
-    c_schema = "user_id long, c_ts timestamp, value double"
-    s_batches = [
-        [(100, 1, d(10))],          # the signup under test
-        [(101, 999, d(15))],        # advances the left watermark
-    ]
-    c_batches = [
-        [(1, d(10, 30), 5.0)],      # on-time click -> pairs with signup 100
-        [(999, d(15), 1.0)],        # advances the right watermark
-        # filler batch: joins run BEFORE state eviction within a batch, so
-        # the eviction driven by the 14:30 watermark lands at this batch's
-        # end — one batch of separation between wm-advance and straggler
-        [(998, d(15, 10), 1.0)],    # keyless filler — pairs with nothing
-        [(1, d(10, 20), 99.0)],     # straggler: in-window but past both wms
-    ]
-
-    def stage_dir(name, batches, schema):
-        stage = tmp_path / name
-        stage.mkdir()
-        for i, rows in enumerate(batches):
-            out = str(tmp_path / f"{name}_p{i}")
-            spark.createDataFrame(rows, schema).coalesce(1).write.parquet(out)
-            src = [f for f in os.listdir(out) if f.endswith(".parquet")][0]
-            dst = os.path.join(str(stage), f"{i:02d}.parquet")
-            os.rename(os.path.join(out, src), dst)
-            os.utime(dst, (1_700_000_000 + i * 60, 1_700_000_000 + i * 60))
-        return (spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", 1).parquet(str(stage)))
-
-    s = stage_dir("signups", s_batches, s_schema)
-    c = stage_dir("clicks", c_batches, c_schema)
-    joined = interval_join_stream(s, c, key="user_id", left_ts="s_ts",
-                                  right_ts="c_ts", window_seconds=3600,
-                                  watermark="30 minutes")
-    q = (joined.writeStream.outputMode("append").format("memory")
-         .queryName("ss_join_late_test")
-         .option("checkpointLocation", str(tmp_path / "ckpt"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination(180)
-    dropped = sum(op.get("numRowsDroppedByWatermark", 0)
-                  for p in q.recentProgress
-                  for op in p.get("stateOperators", []))
-    q.stop()
-    pairs = [(r.event_id, r.user_id, r.c_ts, r.value) for r in
-             spark.table("ss_join_late_test").collect()]
-    # exactly the on-time pair; the straggler (value 99.0, in the signup's
-    # window but behind the watermark) never appears
-    assert pairs == [(100, 1, d(10, 30), 5.0)], pairs
-    assert dropped >= 1  # the straggler was counted as watermark-dropped
-
-    # batch twin over the union keeps the straggler — the drop is a
-    # streaming-state decision, not a semantic one
-    sb = spark.read.parquet(str(tmp_path / "signups"))
-    cb = spark.read.parquet(str(tmp_path / "clicks"))
-    batch = interval_join_stream(sb, cb, key="user_id", left_ts="s_ts",
-                                 right_ts="c_ts", window_seconds=3600)
-    assert batch.count() == 2
 
 
 def test_cleaning_family_streams_map_only(spark, tmp_path):
@@ -485,31 +320,8 @@ def test_streaming_incremental_dedup_foreachbatch(spark, tmp_path):
         "__fp", "__fplen", "keep_id"}
 
 
-def test_dedup_stream_batch_tolerates_unorderable_columns(spark):
-    """A map column (unorderable) must not break the batch keep-first path:
-    the tiebreak is restricted to orderable columns (r5 advisor finding).
-    The keep-first-by-ts semantics survive."""
-    import datetime as dt
-
-    from data_engineering_etl_pipeline_spark.streaming import dedup_stream
-
-    t0 = dt.datetime(2024, 1, 1, 0, 0, 0)
-    rows = [
-        ("k1", t0, {"src": "a"}, 1.0),
-        ("k1", t0 + dt.timedelta(minutes=5), {"src": "b"}, 2.0),
-        ("k2", t0 + dt.timedelta(minutes=1), {"src": "c"}, 3.0),
-    ]
-    df = spark.createDataFrame(
-        rows, "k string, ts timestamp, meta map<string,string>, v double")
-    out = dedup_stream(df, ["k"], "ts")
-    got = {r["k"]: (r["ts"], r["v"]) for r in out.collect()}
-    assert got["k1"] == (t0, 1.0)
-    assert got["k2"][1] == 3.0
-    assert len(got) == 2
-
-
 def test_streaming_incremental_semantic_dedup_foreachbatch(spark, tmp_path):
-    """The semantic twin of the ingest-dedup e2e above (r6): micro-batches
+    """The semantic twin of the ingest-dedup e2e above: micro-batches
     of embeddings arrive as files; foreachBatch runs
     incremental_semantic_dedup against a parquet-persisted signature
     index, so every batch near-dup-dedups against everything seen so far
@@ -586,8 +398,8 @@ def test_streaming_incremental_semantic_dedup_foreachbatch(spark, tmp_path):
 
 
 def test_streaming_incremental_minhash_foreachbatch(spark, tmp_path):
-    """The lexical-LSH twin of the two ingest-dedup e2es above (r8 VERDICT
-    item 3): micro-batches of documents arrive as files; foreachBatch runs
+    """The lexical-LSH twin of the two ingest-dedup e2es above:
+    micro-batches of documents arrive as files; foreachBatch runs
     incremental_minhash_lsh_dedup against a parquet-persisted band index,
     so every batch NEAR-dup-dedups (not just exact) against everything
     seen so far at index-join cost — the historical corpus is never
@@ -671,8 +483,8 @@ def test_streaming_incremental_minhash_foreachbatch(spark, tmp_path):
 
 
 def test_streaming_incremental_fill_foreachbatch(spark, tmp_path):
-    """The mixture-budget twin of the ingest-dedup e2es above (r11 —
-    the corpus_schedule family operationally): micro-batches of curated
+    """The mixture-budget twin of the ingest-dedup e2es above (the
+    corpus_schedule family operationally): micro-batches of curated
     docs arrive as files; foreachBatch runs
     incremental_token_budget_fill against a parquet-persisted
     (key, consumed) state, so the run fills each source's REMAINING
@@ -804,7 +616,7 @@ def test_streaming_kmeans_update_matches_batch_bitwise(spark, tmp_path):
 
 
 def test_streaming_url_dedup_foreachbatch(spark, tmp_path):
-    """r8: the weburl canonicalizer composes with the streaming ingest
+    """The weburl canonicalizer composes with the streaming ingest
     dedup UNCHANGED — micro-batches of (doc_id, url) dedup against a
     parquet-persisted fingerprint index keyed on the CANONICAL URL, so a
     later batch's tracking-param/www/port/fragment variant of an earlier

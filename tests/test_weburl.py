@@ -3,7 +3,7 @@ registered-domain extraction, URL-keyed exact dedup, per-domain caps,
 blocklist filtering — every construction value-checked against a DuckDB
 twin built from the SAME pattern constants (the family lives outside the
 50-row driver registry, so the full hash units live here — the
-corpus_split_profile/region_revenue library-oracle convention).
+corpus_split_profile library-oracle convention).
 
 The fixture URL is synthesized deterministically from the documents table
 (doc_id arithmetic) in BOTH engines, exercising every rule: scheme case,
@@ -170,8 +170,8 @@ def test_domain_sample_plan_is_two_phase(spark):
 
 
 def test_fragment_with_question_mark_is_not_resurrected(spark, duck):
-    """r8 review finding: an unanchored query regex matched a '?' INSIDE
-    the fragment, resurrecting fragment content as the query — two URLs
+    """An unanchored query regex would match a '?' INSIDE the fragment,
+    resurrecting fragment content as the query — two URLs
     identical up to fragment must canonicalize identically (both
     engines: shared constant)."""
     from data_engineering_etl_pipeline_spark.extensions.weburl import (
@@ -193,7 +193,7 @@ def test_fragment_with_question_mark_is_not_resurrected(spark, duck):
 
 
 def test_blocklist_full_host_entries_block_registered_domain(spark):
-    """r8 review finding: real blocklists carry full hosts — a
+    """Real blocklists carry full hosts — a
     'www.evil.com' or 'bad.evil.com' entry must block the evil.com
     registered domain, not be silently inert."""
     docs = spark.createDataFrame(
@@ -224,7 +224,7 @@ def test_canonicalize_is_idempotent_on_the_url_zoo(spark):
 
 
 def test_psl_registered_domain_point_cases(spark):
-    """r8 VERDICT item 4: the PSL-backed registered domain — longest
+    """The PSL-backed registered domain — longest
     listed suffix + one label, private suffixes (github.io-class)
     honored, a host that IS a suffix has no registrable part, unlisted
     TLDs fall back to the implicit '*' rule, NULL/'' preserved."""
@@ -273,7 +273,7 @@ def test_psl_plan_is_map_only_broadcast_joins(spark):
     assert "BroadcastHashJoin" in p, p
     assert "Exchange hashpartitioning" not in p, p
     assert "MapInPandas" not in p and "BatchEvalPython" not in p, p
-    # r10: the full rule grammar (wildcard + exception tables -> up to
+    # the full rule grammar (wildcard + exception tables -> up to
     # 3K broadcast joins) keeps the same shape - still ZERO corpus
     # shuffles, no Python
     from data_engineering_etl_pipeline_spark.extensions.weburl import (
@@ -295,8 +295,8 @@ def test_psl_plan_is_map_only_broadcast_joins(spark):
 def test_psl_blocklist_and_cap_use_private_suffix_grain(spark):
     """With the suffix table supplied, a user.github.io blocklist entry
     blocks exactly that user's site (not all of github.io), and the
-    domain cap keys each user site separately — the mis-grouping the r8
-    verdict named."""
+    domain cap keys each user site separately (grouping them under
+    github.io would be the mis-grouping)."""
     from data_engineering_etl_pipeline_spark.extensions.weburl import (
         domain_balanced_sample, filter_blocklisted)
 
@@ -315,7 +315,7 @@ def test_psl_blocklist_and_cap_use_private_suffix_grain(spark):
     assert sorted(r["doc_id"] for r in kept_h.collect()) == [4]
     # an entry that IS a public suffix gets SUFFIX semantics under the
     # PSL grain (otherwise it would normalize to '' and silently block
-    # nothing — the r8 inert-entry lesson): github.io blocks every user
+    # nothing — an inert entry): github.io blocks every user
     # site under it, ok.com survives
     bl_sfx = spark.createDataFrame([("github.io",)], "domain string")
     kept_s = filter_blocklisted(docs, bl_sfx, suffixes=sfx)
@@ -333,10 +333,10 @@ def test_psl_blocklist_and_cap_use_private_suffix_grain(spark):
 
 
 def test_psl_loader_normalizes_and_classifies_rules(spark):
-    """r9 VERDICT item 2: the loader accepts the real PSL grammar —
-    wildcard rows stored as their parent with kind='wildcard', exception
-    rows with kind='exception' — and refuses entries deeper than the
-    match cap (r9 ADVICE: deeper entries would silently never match)."""
+    """The loader accepts the real PSL grammar — wildcard rows stored as
+    their parent with kind='wildcard', exception rows with
+    kind='exception' — and refuses entries deeper than the match cap
+    (deeper entries would silently never match)."""
     import pytest
 
     from data_engineering_etl_pipeline_spark.extensions.weburl import (
@@ -359,8 +359,8 @@ def test_psl_loader_normalizes_and_classifies_rules(spark):
 
 
 def test_psl_wildcard_and_exception_vectors(spark):
-    """The publicsuffix.org test vectors for the *.ck / !www.ck pair
-    (r9 VERDICT item 2 done-criteria): every direct child of a wildcard
+    """The publicsuffix.org test vectors for the *.ck / !www.ck pair:
+    every direct child of a wildcard
     parent is a public suffix; the exception prevails and is itself the
     registered domain."""
     from data_engineering_etl_pipeline_spark.extensions.weburl import (
@@ -383,7 +383,7 @@ def test_psl_wildcard_and_exception_vectors(spark):
            with_registered_domain_psl(df, sfx, host_col="host").collect()}
     assert got == {1: "", 2: "", 3: "b.test.ck", 4: "b.test.ck",
                    5: "www.ck", 6: "www.ck", 7: "example.com"}
-    # PSL label-count rule (r10 regression): a wildcard rule only
+    # PSL label-count rule: a wildcard rule only
     # matches hosts with MORE labels than its parent — a host that IS
     # the parent falls through to the implicit '*' (the *.co.uk / co.uk
     # divergence: '' would claim the host is a public suffix; the spec
@@ -400,7 +400,7 @@ def test_psl_wildcard_and_exception_vectors(spark):
 
 
 def test_psl_official_vector_suite(spark):
-    """r10 VERDICT item 6: the vendored publicsuffix.org checkPublicSuffix
+    """The vendored publicsuffix.org checkPublicSuffix
     vector suite (tests/fixtures/psl_tests.txt) run end-to-end through
     load_suffix_rows + with_registered_domain_psl against the vendored
     real-list rule subset (tests/fixtures/psl_rules.txt — real file
@@ -459,7 +459,7 @@ def test_psl_official_vector_suite(spark):
 
 
 def test_psl_suffix_table_duplicates_do_not_fan_out(spark):
-    """r9 ADVICE (medium): duplicate suffix entries (ICANN+private union)
+    """Duplicate suffix entries (ICANN+private union)
     must not duplicate corpus rows through the broadcast left joins."""
     from data_engineering_etl_pipeline_spark.extensions.weburl import (
         with_registered_domain_psl)
@@ -477,7 +477,7 @@ def test_psl_suffix_table_duplicates_do_not_fan_out(spark):
 
 
 def test_psl_blocklist_suffix_entry_blocks_apex_host(spark):
-    """r9 ADVICE (low) / verdict watch item 2 closed: a suffix-class
+    """A suffix-class
     blocklist entry (github.io) blocks pages served at the apex host
     itself, not only sites under it — no doc with registered domain ''
     is silently unblockable."""
