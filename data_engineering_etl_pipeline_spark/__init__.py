@@ -9,7 +9,8 @@ plumbing) a 100 TB pipeline needs.
 Design principles (see SURVEY.md §7):
 - DataFrame/SQL declarative plans; let Catalyst+AQE pick physical strategies.
 - Built-in ``pyspark.sql.functions`` in the hot path; Arrow-batched
-  ``applyInPandas`` only for true recurrences (RSI/MACD/ATR EMA state).
+  ``mapInPandas`` per partition, partitions sized by AQE, only for true
+  recurrences (RSI/MACD/ATR EMA state).
 - Broadcast small dimensions, partition/bucket big facts, AQE for skew.
 """
 

@@ -10,10 +10,12 @@ Python ``groupby().apply`` that, per ``(canonical_id, date)`` group,
   3. backfills any still-null critical column from any member that has it.
 
 That Python-loop-per-group shape is the reference's single biggest
-bottleneck; here it is pure native Spark: one hash aggregate with
+bottleneck; here it is pure native Spark: one aggregate with
 ``max_by(struct(values), priority)`` + ``sum`` + ``first(ignorenulls)``.
-Map-side partial aggregation and whole-stage codegen come free — no Python
-in the hot path, one shuffle on the group key.
+The planner makes it a ``SortAggregate`` on both the partial and the final
+side, not a hash aggregate: the ``max_by`` struct buffer is not
+fixed-width. Map-side partial aggregation still comes free — no Python in
+the hot path, one shuffle on the group key.
 """
 
 from __future__ import annotations

@@ -414,9 +414,7 @@ def ngram_jaccard_pairs(docs: DataFrame, id_col: str = "doc_id",
     # Scale-safe: the DF cap has already removed hot shingles BEFORE this
     # exchange, so per-task postings stay bounded (co-locating UNCAPPED
     # postings would not).
-    from ..session import shuffle_partitions
-    n_parts = shuffle_partitions(docs.sparkSession)
-    part = index.repartition(n_parts, "shingle")
+    part = index.repartition("shingle")
     a = part.select(F.col(id_col).alias("id_a"), "shingle")
     b = part.select(F.col(id_col).alias("id_b"), "shingle")
     # engine-pinned: the pair relation is tiny (near-dup candidates) and
@@ -1265,9 +1263,7 @@ def duplicate_window_spans(docs: DataFrame, id_col: str = "doc_id",
         .withColumn("whash", F.md5(F.concat_ws(
             " ", F.slice(F.col("__toks"), F.col("start"), w))))
         .drop("__toks"))
-    from ..session import shuffle_partitions
-    n_parts = shuffle_partitions(docs.sparkSession)
-    wins_part = wins.repartition(n_parts, "whash")
+    wins_part = wins.repartition("whash")
     dup_hashes = (wins_part.groupBy("whash")
                   .agg(F.count(F.lit(1)).alias("__c"))
                   .filter(F.col("__c") > 1).select("whash"))

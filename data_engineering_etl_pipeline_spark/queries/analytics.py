@@ -146,7 +146,8 @@ def canonical_part_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     else the max-priority member's values, sum volumes across members.
 
     Native exprs only — ``max_by(value, struct(native, priority, tiebreak))``
-    + ``sum`` in ONE hash aggregate (vs the reference's per-group Python);
+    + ``sum`` in ONE aggregate, planned as ``SortAggregate`` because the
+    struct buffer is not fixed-width (vs the reference's per-group Python);
     the oracle reproduces the same pick via a ROW_NUMBER priority sort."""
     li = load_table(spark, sf_dir, "lineitem")
     base = li.select(

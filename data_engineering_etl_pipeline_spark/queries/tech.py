@@ -1,6 +1,7 @@
 """Technical-indicator queries (SURVEY.md §2.5 W9-W12): native Bollinger
 (oracle-checked — SMA-based, a true window expression) and the
-recurrence indicators RSI/MACD/ATR via the applyInPandas kernel (rows-only:
+recurrence indicators RSI/MACD/ATR via the ``mapInPandas`` kernel (per
+partition, partitions sized by AQE; rows-only:
 EMA recurrences are not ANSI-SQL-expressible; the kernel is cross-checked
 against its native Bollinger twin in tests).
 """
@@ -19,8 +20,8 @@ from . import register
 # W11 Bollinger is driver-checked INSIDE `supplier_ta_indicators` below
 # (native window SMA±2σ columns alongside the kernel's recurrence columns,
 # same window-SQL oracle construction that the former standalone
-# `supplier_bollinger` row hash-matched in r1+r2) — the standalone row was
-# retired to keep the registry inside the driver's 50-entry check budget.
+# `supplier_bollinger` row hash-matched) — the standalone row was retired
+# to keep the registry inside its 50-entry oracle-check budget.
 # The kernel's own pandas-rolling Bollinger twin stays pinned against the
 # native windows in tests/test_engine_units.py.
 
@@ -109,13 +110,14 @@ JOIN bb b ON b.suppkey = r.suppkey AND b.rn = r.rn
 
 @register("supplier_ta_indicators", oracle=_TA_ORACLE_SQL)
 def supplier_ta_indicators(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """W9/W10/W12 RSI-14 / MACD(12,26,9) / ATR-14 via the grouped Arrow
-    kernel (reference feature_calculation_functions.py:44-92) + W11
+    """W9/W10/W12 RSI-14 / MACD(12,26,9) / ATR-14 via the Arrow kernel
+    (reference feature_calculation_functions.py:44-92) + W11
     Bollinger(20,2) as NATIVE window expressions over the kernel output
     (same per-suppkey clustering, no extra exchange needed). Wilder/EMA
-    recurrences carry infinite-memory per-entity state → applyInPandas;
-    Bollinger is SMA-based → pure window SQL, the oracle pairing that
-    hash-matched standalone in r1+r2. Oracle: DuckDB recursive CTE for the
+    recurrences carry infinite-memory per-entity state → ``mapInPandas``
+    per partition, partitions sized by AQE; Bollinger is SMA-based → pure
+    window SQL, the oracle pairing that also hash-matched as a standalone
+    row. Oracle: DuckDB recursive CTE for the
     recurrences (see _TA_ORACLE_SQL notes) joined with a window CTE for the
     bands; kernel additionally validated in tests against closed-form cases
     and the native Bollinger twin."""
@@ -210,9 +212,10 @@ def supplier_ta_indicators(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def media_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """§2.11 multimodal pipeline — the r5 consolidation of the former
-    ``media_feature_extract`` + ``media_frame_sample`` rows into one
-    stage-tagged union (both machines stay fully oracle-checked):
+    """§2.11 multimodal pipeline — the former ``media_feature_extract`` +
+    ``media_frame_sample`` rows folded into one stage-tagged union, which
+    keeps the registry inside its 50-entry oracle-check budget (both
+    machines stay fully oracle-checked):
 
     - ``features``: binary media columns → mapInPandas feature extraction
       with REAL codec-free decoders for all three kinds (PPM header+pixel

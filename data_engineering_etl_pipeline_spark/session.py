@@ -74,17 +74,3 @@ def get_spark(
             or os.path.join(tempfile.gettempdir(), "spark-graft-checkpoints"))
     return spark
 
-
-def shuffle_partitions(spark: SparkSession, default: int = 32) -> int:
-    """``spark.sql.shuffle.partitions`` as an int, tolerating the 'auto'
-    value AQE-managed platforms set (``int('auto')`` would crash at
-    plan-build time) — falls back to the cluster's default
-    parallelism, then ``default``."""
-    raw = spark.conf.get("spark.sql.shuffle.partitions", str(default))
-    try:
-        return int(raw)
-    except (TypeError, ValueError):
-        try:
-            return int(spark.sparkContext.defaultParallelism)
-        except Exception:
-            return default

@@ -232,7 +232,10 @@ def streaming_macd(df: DataFrame, entity_col: str, ts_col: str,
     # 100k rows × 1500 entities). Instead: hash-repartition by entity, one
     # mapInPandas per partition, pandas groupby().ewm (Cython per-group
     # iteration) — the same ewm(adjust=False) fold the empty-state stream
-    # path runs, so batch output remains the streaming oracle.
+    # path runs, so batch output remains the streaming oracle. The
+    # repartition names no count, so AQE may coalesce it: every Python task
+    # pays a fixed worker set-up, and merged hash partitions still keep
+    # each entity whole.
     def run_partition(batches):
         chunks = list(batches)
         if not chunks:
@@ -252,10 +255,8 @@ def streaming_macd(df: DataFrame, entity_col: str, ts_col: str,
         pdf["macd_signal"] = signal
         yield pdf[[entity_col, ts_col, close_col, "macd", "macd_signal"]]
 
-    from .session import shuffle_partitions
-    n_parts = shuffle_partitions(df.sparkSession)
     return (df.select(entity_col, ts_col, close_col)
-            .repartition(n_parts, entity_col)
+            .repartition(entity_col)
             .mapInPandas(run_partition, out_schema))
 
 

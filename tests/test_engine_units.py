@@ -66,7 +66,7 @@ def test_gate_missing_columns(spark):
 
 
 def test_ta_kernel_matches_native_bollinger(spark):
-    """The applyInPandas kernel's SMA-based Bollinger must equal the native
+    """The mapInPandas kernel's SMA-based Bollinger must equal the native
     window-expression twin (cross-check of the kernel's ordering/grouping)."""
     import numpy as np
 
@@ -118,23 +118,30 @@ def test_ta_vectorized_equals_per_asset_twin(spark):
         assert ((g == w) | (g.isna() & w.isna())).all(), f"{c} diverged"
 
 
-def test_ta_kernel_chunked_batches_bit_equal(spark):
+@pytest.mark.parametrize("shuffle_partitions", ["1", "8"])
+def test_ta_kernel_chunked_batches_bit_equal(spark, shuffle_partitions):
     """The kernel's streaming entity chunker (bounded task memory) must be
     bit-identical across Arrow batch sizes: force tiny batches so entities
-    straddle batch boundaries and the carry-buffer path is exercised."""
+    straddle batch boundaries and the carry-buffer path is exercised.
+    The shuffle-partition count must not move a bit either: at 1 every
+    entity shares one partition, which is what AQE coalescing produces."""
     import pandas as pd
 
     rows = [(int(k), int(i), 100.0 + ((k * 31 + i * 7) % 23))
             for k in range(6) for i in range(40)]
     df = spark.createDataFrame(rows, "k long, i long, close double")
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    parts_key = "spark.sql.shuffle.partitions"
     old = spark.conf.get(key, None)
+    old_parts = spark.conf.get(parts_key)
     spark.conf.set(key, "7")  # 40-row entities span ~6 batches each
+    spark.conf.set(parts_key, shuffle_partitions)
     try:
         tiny = (ta_features(df, "k", ["i"], "close")
                 .toPandas().sort_values(["k", "i"]).reset_index(drop=True))
     finally:
         spark.conf.set(key, old) if old else spark.conf.unset(key)
+        spark.conf.set(parts_key, old_parts)
     whole = (ta_features(df, "k", ["i"], "close")
              .toPandas().sort_values(["k", "i"]).reset_index(drop=True))
     pd.testing.assert_frame_equal(tiny, whole)

@@ -151,7 +151,7 @@ def test_pit_universe_join_broadcasts_universe(spark):
 
 
 @pytest.mark.parametrize("name", [
-    "canonical_part_agg",       # A1: ONE hash aggregate, no per-group Python
+    "canonical_part_agg",       # A1: ONE aggregate, no per-group Python
     "daily_share_and_rank",     # W2+W8 share one per-date exchange
     "rolling_price_stats",      # W5-W7 share one per-entity exchange
     "supplier_declarative_agg", # A2: max_by carries order through partial aggs
@@ -198,6 +198,26 @@ def test_hml_factor_library_plan_single_shuffle(spark):
     p = plan_text(long_short_factor(li, "l_shipdate", "l_extendedprice",
                                     "l_discount", frac=0.3, min_group=10))
     assert shuffles(p) == 1, f"long_short_factor grew extra shuffles:\n{p}"
+
+
+@pytest.mark.parametrize("kernel", ["ta_features", "streaming_macd"])
+def test_python_kernel_exchange_is_coalescable(spark, kernel):
+    """The Python-kernel stages repartition by key alone
+    (``REPARTITION_BY_COL``), which AQE may coalesce: every Python task pays
+    a fixed worker set-up whatever its row count. A user-fixed count
+    (``REPARTITION_BY_NUM``) is left alone by AQE and would run
+    ``spark.sql.shuffle.partitions`` tasks on any input size."""
+    from data_engineering_etl_pipeline_spark.streaming import streaming_macd
+    from data_engineering_etl_pipeline_spark.ta import ta_features
+
+    df = spark.createDataFrame(
+        [(k, i, 100.0 + i) for k in range(3) for i in range(5)],
+        "k long, i long, close double")
+    out = (ta_features(df, "k", ["i"], "close") if kernel == "ta_features"
+           else streaming_macd(df, "k", "i", "close"))
+    p = plan_text(out)
+    assert "REPARTITION_BY_COL" in p, p
+    assert "REPARTITION_BY_NUM" not in p, p
 
 
 def test_feature_matrix_three_shuffles_two_sorts(spark):
