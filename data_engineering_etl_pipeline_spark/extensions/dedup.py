@@ -4,7 +4,8 @@ MinHash+LSH banding, SimHash — the standard public near-dup toolkit
 Ullman MMDS ch.3 banding), each expressed as distributed DataFrame plans.
 
 Scale design:
-- exact dedup: hash-groupBy on a cheap fingerprint, never on raw text;
+- exact dedup: the corpus-wide exchange keys on a cheap fingerprint, never
+  on raw text (text rides as payload where the deduped corpus is kept);
 - near-dup: candidate generation via LSH buckets (equi-join on band hash —
   a plain shuffle join, no cross product), then exact Jaccard verification
   on the candidate pairs only;
@@ -130,12 +131,20 @@ def exact_dedup_keep_first(docs: DataFrame, id_col: str = "doc_id",
     identical text), preserving all input columns — the form a pipeline
     composes (``prepare_training_corpus`` stage 3).
 
-    Same two-phase shape as :func:`exact_dedup_groups`: the corpus-wide
-    exchange keys on ``(xxhash64(text), length)``; docs in single-member
-    fingerprint groups pass through untouched (no text ever shuffles for
-    them), and only multi-member groups pay a row_number window over
-    ``(fp, len, text)`` — candidate-sized — to keep exactly the min-id row
-    per distinct text.
+    One pass over ``docs``: a single exchange keyed on the
+    ``(xxhash64(text), length)`` fingerprint, never on text, then a
+    ``row_number`` window over ``(fp, len, text)`` ordered by id keeps the
+    min-id row per distinct text. The exchange already clusters every
+    window partition (a hash on a subset of the window keys satisfies it),
+    so the window adds a sort, not a second shuffle; text takes part in
+    the window key only to split the rare fingerprint collision.
+
+    The trade: every row's text rides the exchange as payload, where a
+    two-phase plan (fingerprint counts first, text only for multi-member
+    groups) would shuffle text for candidates alone. But the two-phase
+    plan consumes ``docs`` three times — the count, the unique rows and
+    the candidates — and an unpinned upstream lineage (scan, cleaning,
+    PII scrub) re-runs once per consumer. Here it runs once.
     """
     fp = fingerprint if fingerprint is not None else _default_fingerprint(text_col)
     fp_names = docs.select(*fp).columns  # resolved aliases, no execution
@@ -144,26 +153,12 @@ def exact_dedup_keep_first(docs: DataFrame, id_col: str = "doc_id",
         raise ValueError(
             f"exact_dedup_keep_first: fingerprint aliases {sorted(clash)} "
             "collide with input columns — alias them uniquely")
-    base = docs.select("*", *fp)
-    cand_fp = (base.select(F.col(id_col), *[F.col(n) for n in fp_names])
-               .groupBy(*fp_names)
-               .agg(F.count(F.lit(1)).alias("__n"))
-               .filter(F.col("__n") > 1)
-               .select(*fp_names)
-               .withColumn("__dup_cand", F.lit(True)))
-    flagged = _nullsafe_join(base, cand_fp, fp_names, "left").drop(
-        *["__r_" + n for n in fp_names])
-    unique = (flagged.filter(F.col("__dup_cand").isNull())
-              .drop("__dup_cand", *fp_names))
-    # Candidate rows: min-id per exact text. Partitioning by the
-    # fingerprint FIRST keeps the sort keys mostly-fingerprint-discriminated;
-    # text participates only to split the rare collision.
     w = Window.partitionBy(*fp_names, text_col).orderBy(F.col(id_col).asc())
-    keepers = (flagged.filter(F.col("__dup_cand").isNotNull())
-               .withColumn("__rn", F.row_number().over(w))
-               .filter(F.col("__rn") == 1)
-               .drop("__rn", "__dup_cand", *fp_names))
-    return unique.unionByName(keepers)
+    return (docs.select("*", *fp)
+            .repartition(*fp_names)
+            .withColumn("__rn", F.row_number().over(w))
+            .filter(F.col("__rn") == 1)
+            .drop("__rn", *fp_names))
 
 
 def doc_fingerprints(docs: DataFrame, id_col: str = "doc_id",

@@ -22,8 +22,8 @@ Stage-ordering rationale (each choice is load-bearing at 100 TB):
 
 Every stage is one of the repo's verified operators; this module adds no
 new math, only the composition. Its correctness surface is the planted-
-artifact invariants (tests/test_prep_pipeline.py) AND — since late r6 —
-the registry row's chained DuckDB oracle (queries/corpusq.py
+artifact invariants (tests/test_prep_pipeline.py) AND the registry
+row's chained DuckDB oracle (queries/corpusq.py
 ``_prep_oracle``), which reproduces the ENTIRE composition in SQL so the
 driver hash-checks the stage wiring end-to-end.
 """
@@ -66,7 +66,7 @@ def prepare_training_corpus(docs: DataFrame,
     ``benchmark`` (optional) is a DataFrame with a ``text`` column of
     evaluation documents to decontaminate against (13-gram overlap).
 
-    Gopher placement (r4 ADVICE): ``gopher_first=True`` applies the Gopher
+    Gopher placement: ``gopher_first=True`` applies the Gopher
     document rules to the RAW documents before the C4 line filter — the
     ordering the Gopher/MassiveText paper uses, and the one under which the
     bullet-line and ellipsis-line fraction rules can actually fire.
@@ -77,7 +77,7 @@ def prepare_training_corpus(docs: DataFrame,
     / symbol / alpha / stop-word rules. ``gopher_first=True`` IMPLIES the
     filter is on (passing it alone would otherwise be a silent no-op).
 
-    ``quality_clf`` (r7): the LEARNED quality filter (GPT-3/CCNet
+    ``quality_clf``: the LEARNED quality filter (GPT-3/CCNet
     curated-vs-raw recipe) as an additional stage-6 gate —
     ``{"model": fit_logreg_exact output, "idf": the FROZEN fit_tfidf_idf
     table the model was trained under, "dim": hashing dim,
@@ -90,7 +90,7 @@ def prepare_training_corpus(docs: DataFrame,
     stage is unit-verified (extensions/classifier.py documents why libm
     exp cannot meet the cross-engine zero-tolerance hash).
 
-    ``lang_filter`` (r10): language selection with the TRAINED lang-ID
+    ``lang_filter``: language selection with the TRAINED lang-ID
     (``langid.fit_lang_id``) — ``{"model": fit_lang_id output, "keep":
     ["en", ...], "fallback": 'heuristic'|'und' (default 'heuristic')}``.
     Applied after the heuristic quality floor: one scan — Arrow-batched
@@ -102,7 +102,7 @@ def prepare_training_corpus(docs: DataFrame,
     oracle is untouched, and the lang-ID decision itself is
     DuckDB-hash-checked in tests/test_langid.py.
 
-    ``mixture`` (r10): temperature source mixing
+    ``mixture``: temperature source mixing
     (``mixing.temperature_sample``) — ``{"total_budget": tokens,
     "alpha": 0.3, "source_col": 'lang', "salt": ...}``. Runs after
     every quality gate and BEFORE the split (the mixture shapes what
@@ -126,17 +126,17 @@ def prepare_training_corpus(docs: DataFrame,
     # 2. PII scrub (map-only regexp chain).
     scrubbed = cleaned.select(id_col, scrub_pii(text_col).alias(text_col))
 
-    # 3. Exact dedup: keeper = min id per identical text. Two-phase
-    #    fingerprint plan (dedup.exact_dedup_keep_first): the corpus-wide
-    #    exchange keys on xxhash64(text)+length — raw text shuffles only
-    #    for the candidate (multi-member fingerprint) rows.
+    # 3. Exact dedup: keeper = min id per identical text. One pass
+    #    (dedup.exact_dedup_keep_first): the only exchange keys on
+    #    xxhash64(text)+length, with text as payload, so the C4+PII
+    #    prefix runs once per materialization.
     #    Persisted (docs-sized, spillable): the cleaned+scrubbed+deduped
     #    relation feeds BOTH the near-dup pair generation (which
     #    dedup_clusters materializes eagerly) and the final corpus chain —
     #    uncached, the whole C4+PII+dedup prefix would execute once per
     #    consumer (measured 1.9× end-to-end at sf0.1). Released via the
     #    engine-pin contract (caching.release_engine_pins / pin_scope).
-    #    ONE tokenization (r5 VERDICT item 3): the pinned relation carries
+    #    ONE tokenization: the pinned relation carries
     #    the whitespace token array, and every downstream consumer that
     #    needs tokens — near-dup shingles, 13-gram decontamination
     #    shingles, the quality floor's alpha-token fraction — reads THIS
@@ -237,9 +237,9 @@ def prepare_training_corpus(docs: DataFrame,
 
     # 7. Deterministic content-hash split (train_frac of the 32-bit hash
     #    space → train). THE SAME portable-md5 helper as stratified_sample /
-    #    pack_sequences (not a re-implementation — one hash convention,
-    #    r5 review finding): rerun-, repartition-, and engine-stable; no
-    #    RNG state.
+    #    pack_sequences (not a re-implementation: a second copy could
+    #    drift from the md5 recipe the DuckDB oracle reproduces):
+    #    rerun-, repartition-, and engine-stable; no RNG state.
     hv = _portable_hv(F.col(text_col))
     split = F.when(hv < F.lit(float(1 << 32)) * train_frac, "train").otherwise("val")
     # n_tokens is a per-doc map expression — compute it for EVERY row (the

@@ -7,6 +7,10 @@ multi-executor cluster:
 
 - AQE on (runtime partition coalescing, skew-join splitting) — replaces any
   hand-tuned partition counts at 100 TB.
+- Cached and pinned plans may change their output partitioning, so AQE
+  coalesces them like any other plan; otherwise a pin keeps every shuffle
+  partition, and a write from it emits one file per partition and
+  output directory.
 - Arrow on — every pandas-UDF boundary is Arrow-vectorized.
 - UTC session timezone — parity with the DuckDB oracle and with the
   reference's ``dt.normalize()`` midnight-UTC convention
@@ -47,6 +51,8 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
+                "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", driver_mem)

@@ -738,6 +738,27 @@ def test_write_training_shards_manifest_and_layout(spark, tmp_path):
     assert read_shard_manifest(spark, out).count() == 3
 
 
+def test_write_training_shards_from_pin_one_file_per_shard(spark, tmp_path):
+    """A pinned frame written as shards lands in one file per shard
+    directory: AQE may coalesce a cached plan's shuffle like any other
+    (``session.get_spark``), so a small pin does not keep one partition,
+    and hence one file per shard, per ``spark.sql.shuffle.partitions``."""
+    from data_engineering_etl_pipeline_spark.caching import (
+        engine_pin_scope, pin)
+    from data_engineering_etl_pipeline_spark.io import write_training_shards
+
+    df = spark.createDataFrame(
+        [(i, i % 3, 10 + i % 7) for i in range(90)],
+        "doc_id long, shard int, n_tokens long").repartition("doc_id")
+    out = str(tmp_path / "shards")
+    with engine_pin_scope():
+        write_training_shards(pin(df), out)
+    for s in (0, 1, 2):
+        files = [f for f in os.listdir(os.path.join(out, f"shard={s}"))
+                 if f.endswith(".parquet")]
+        assert len(files) == 1, (s, files)
+
+
 def test_shard_manifest_stale_heals_on_next_append(spark, tmp_path):
     """A crash between data write and manifest publish must not leave the
     manifest one batch stale FOREVER (appends merging on top of the stale

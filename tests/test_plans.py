@@ -176,8 +176,8 @@ def test_exact_dedup_shuffles_fingerprints_not_text(spark):
     # phase-2 text agg exists but sits above the candidate semi-join, i.e.
     # every text-keyed exchange is downstream of a Join on the fingerprint.
     # EXACTLY one: the batch leg's collision resolver. The incremental legs
-    # must never add a text-keyed exchange — their within-batch window
-    # partitions by fingerprint-first and the index join keys on
+    # must never add a text-keyed exchange — their within-batch dedup
+    # exchanges on the fingerprint alone and the index join keys on
     # fingerprints alone.
     assert p.count("hashpartitioning(text") == 1, \
         "text-keyed exchanges != 1 — raw documents are shuffling as keys"
@@ -185,6 +185,36 @@ def test_exact_dedup_shuffles_fingerprints_not_text(spark):
     # the absolute bound covers all legs; each leg's exchanges carry
     # fingerprints/ids, never text keys (asserted above)
     assert shuffles(p) <= 16, f"exact dedup grew extra shuffles:\n{p}"
+
+
+def test_exact_dedup_keep_first_scans_once(spark):
+    """The deduped-corpus form runs its input lineage ONCE: over a cleaned
+    and scrubbed parquet scan the plan holds one file scan and one shuffle,
+    keyed on the fingerprint. A plan that feeds the input to several
+    branches (a fingerprint count, the unique rows, the candidates) re-runs
+    the scan and both regex map stages once per branch."""
+    from pyspark.sql import functions as F
+
+    from data_engineering_etl_pipeline_spark.extensions.cleaning import c4_stats
+    from data_engineering_etl_pipeline_spark.extensions.dedup import (
+        exact_dedup_keep_first)
+    from data_engineering_etl_pipeline_spark.extensions.pii import scrub_pii
+
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    cleaned = (docs.select("doc_id", *c4_stats("text"))
+               .filter(F.col("keep_page"))
+               .select("doc_id", F.col("cleaned").alias("text")))
+    scrubbed = cleaned.select("doc_id", scrub_pii("text").alias("text"))
+    p = plan_text(exact_dedup_keep_first(scrubbed, "doc_id", "text"))
+    nodes = [line for line in p.splitlines() if line.strip().startswith("(")]
+    assert sum("Scan parquet" in line for line in nodes) == 1, p
+    assert shuffles(p) == 1, p
+    assert "BroadcastExchange" not in p, p
+    exchanges = [line for line in p.splitlines()
+                 if "hashpartitioning(" in line]
+    assert len(exchanges) == 1, p
+    assert "hashpartitioning(__fp" in exchanges[0], p
+    assert "hashpartitioning(text" not in p, p
 
 
 def test_hml_factor_library_plan_single_shuffle(spark):
