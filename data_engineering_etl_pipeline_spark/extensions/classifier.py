@@ -6,8 +6,10 @@ The standard pipeline (GPT-3 appendix A; CCNet; LLaMA) trains a linear
 classifier to distinguish a curated reference corpus from raw web text and
 keeps documents the classifier scores as reference-like. The features here
 are this repo's ``hashed_tfidf_vectors`` output (or any dense
-``array<float>`` column), so the whole filter — vectorize → fit → score →
-threshold — runs as DataFrame plans.
+``array<float>`` column), so the whole filter — vectorize → fit → gate —
+runs as DataFrame plans. :func:`logreg_gate_fold` is the gate: an exact
+fixed-point keep/drop decision with no exp, so a serial SQL engine
+reproduces it bit-for-bit.
 
 Exactness contract (shared with ``kmeans_update_exact`` /
 ``embedding_moments_exact``): each row's gradient contribution is
@@ -19,18 +21,18 @@ that differ in ulps flip downstream keep/drop decisions near the
 threshold, which at 100 TB means irreproducible corpora). The per-row
 sigmoid uses numpy's libm; on a homogeneous cluster (one numpy build) the
 per-row values are identical everywhere, which is the only requirement —
-the REDUCE never touches floats. Precision of the claim (r7 advisor
-finding): the per-row ``x@w`` BLAS gemv is batch-shape-invariant in
+the REDUCE never touches floats. Precision of the claim: the per-row ``x@w`` BLAS gemv is batch-shape-invariant in
 practice but not IEEE-guaranteed — ``fit_logreg_exact(dot_mode='fold')``
 is the construction-level hatch (fixed index-order accumulation), the
 same trade as ``kmeans_lloyd_refine(assign='fold')``.
 
-Why no DuckDB driver-oracle row: the construction needs exp(), and libm
+Why the FIT has no DuckDB driver-oracle row: it needs exp(), and libm
 exp differs across engines in the last ulp — a floor() boundary can flip,
 so the zero-tolerance hash contract cannot be met cross-engine (the same
 documented reason ``incremental_semantic_dedup`` is unit-verified). The
-verification surface is the numpy-twin bit-equality + relayout-stability
-units in tests/test_classifier.py.
+fit's verification surface is the numpy-twin bit-equality +
+relayout-stability units in tests/test_classifier.py; the gate DECISION
+is on the driver record (the ``quality_classifier_gate`` row).
 
 Plan shape per iteration: ONE map-only Arrow kernel pass over the corpus
 (weights broadcast in the closure, KB-scale), each batch emitting one
@@ -102,8 +104,8 @@ def _grad_partials(df: DataFrame, vec_col: str, label_col: str,
             r = p - y                                   # dlogloss/dz
             gq = (x * r[:, None]) * qf
             # width = n: every batch row int64-sums into one gradient cell
-            # (advisor r7 finding — the per-element check alone lets a
-            # 2^55-band element pass while the batch sum wraps); the bias
+            # (the per-element check alone lets a 2^55-band element pass
+            # while the batch sum wraps); the bias
             # and log-loss sums get the same accumulation-width guard
             _guard_q_magnitude(gq, "fit_logreg_exact", rows=n)
             gw = np.floor(gq).astype(np.int64).sum(axis=0)
@@ -158,7 +160,7 @@ def fit_logreg_exact(df: DataFrame, vec_col: str = "embedding",
     resumed trajectory is byte-identical to the uninterrupted one
     (unit-pinned).
 
-    ``tol``/``patience`` (r7 VERDICT item 5) — deterministic early stop:
+    ``tol``/``patience`` — deterministic early stop:
     after ``patience`` consecutive iterations whose INTEGER loss-sum
     improvement falls below ``tol`` (in mean-log-loss units: the
     comparison is ``prev_sum_q − sum_q < tol·n·q_scale`` over exact
@@ -170,8 +172,8 @@ def fit_logreg_exact(df: DataFrame, vec_col: str = "embedding",
     iteration 6 is real money. Default ``tol=None`` keeps the fixed
     ``n_iters`` schedule.
 
-    Byte-stability precision (r7 advisor finding, the
-    ``kmeans_lloyd_refine`` caveat verbatim): the cross-row REDUCE is
+    Byte-stability precision (the ``kmeans_lloyd_refine`` caveat
+    verbatim): the cross-row REDUCE is
     unconditionally order-independent (integers), but the default
     ``dot_mode='gemm'`` per-row ``x@w`` is a BLAS gemv whose value is
     batch-shape-invariant in practice, NOT IEEE-guaranteed across kernel
@@ -235,8 +237,8 @@ def planted_logreg(seed: int, dim: int) -> dict:
 def logreg_gate_fold(df: DataFrame, model: dict, threshold: float = 0.5,
                      id_col: str = "vec_id", vec_col: str = "embedding",
                      q_scale: int = LOGREG_Q_SCALE) -> DataFrame:
-    """The quality gate's DECISION surface as an exact fixed-point fold
-    (r7 VERDICT item 4): ``(id, z_q, keep)`` where
+    """The learned quality gate as an exact fixed-point fold:
+    ``(id, z_q, keep)`` where
     ``z_q = floor(b·Q) + Σ_i floor(x_i·w_i·Q)`` (each term one
     deterministic IEEE double product, floored — portable; the cross-term
     sum is BIGINT, associativity-free) and
@@ -246,13 +248,12 @@ def logreg_gate_fold(df: DataFrame, model: dict, threshold: float = 0.5,
     ``project_fold(q_scale=...)`` convention). Ties are INTEGER equality
     — identical in every engine, no ulp hazard at the boundary at all.
 
-    This is the verification twin of the production gate
-    (``score_logreg`` + a float threshold): the two decisions can differ
-    only for rows within quantization distance (~dim/Q ≈ 6e-5) of the
-    boundary — where the float gate itself is retraining-noise-unstable.
-    NULL/wrong-length vectors gate NULL (the ``score_logreg`` NULL-score
-    convention: no evidence is a policy decision downstream). Map-only —
-    weights are expression literals, no shuffle, no Python."""
+    It agrees with the float rule ``σ(w·x+b) ≥ t`` except for rows within
+    quantization distance (~dim/Q ≈ 6e-5) of the boundary — where a float
+    gate is itself retraining-noise-unstable. NULL/wrong-length vectors
+    gate NULL (no evidence; keeping or dropping them is a policy decision
+    downstream, the ``quality_score`` convention). Map-only — weights are
+    expression literals, no shuffle, no Python."""
     w = model["weights"]
     dim = len(w)
     b_q = int(math.floor(float(model["bias"]) * q_scale))
@@ -276,29 +277,3 @@ def logreg_gate_fold(df: DataFrame, model: dict, threshold: float = 0.5,
         .otherwise(F.col("__zq")).alias("z_q"),
         F.when(F.col("__mal"), F.lit(None).cast("boolean"))
         .otherwise(F.col("__zq") >= F.lit(thr_q)).alias("keep"))
-
-
-def score_logreg(df: DataFrame, model: dict, vec_col: str = "embedding",
-                 out_col: str = "quality_prob") -> DataFrame:
-    """Map-only scoring: appends ``out_col`` = σ(w·x + b) — the
-    probability the document is reference-like. NULL/wrong-length vectors
-    score NULL (they carry no evidence; a downstream quality floor treats
-    NULL as its own policy decision, same convention as quality_score).
-    Embarrassingly parallel over a 100 TB scan — weights ride the closure,
-    no shuffle, no collect."""
-    w = np.asarray(model["weights"], dtype=np.float64)
-    b = float(model["bias"])
-    dim = w.shape[0]
-
-    @F.pandas_udf("double")
-    def prob(emb: pd.Series) -> pd.Series:
-        out = np.full(len(emb), np.nan)
-        ok = [i for i, v in enumerate(emb)
-              if v is not None and len(v) == dim]
-        if ok:
-            x = np.vstack([np.asarray(emb.iloc[i], dtype=np.float64)
-                           for i in ok])
-            out[ok] = 1.0 / (1.0 + np.exp(-(x @ w + b)))
-        return pd.Series(out)
-
-    return df.withColumn(out_col, prob(F.col(vec_col)))

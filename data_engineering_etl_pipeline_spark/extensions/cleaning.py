@@ -41,9 +41,9 @@ regex, RE2-compatible) so oracles can verify kept-line sets and the cleaned
 text bit-for-bit.
 
 Cross-engine caveats (documented, not papered over): lines split on
-``\\r?\\n`` in BOTH engines, so CRLF pages clean identically (r5 review —
+``\\r?\\n`` in BOTH engines, so CRLF pages clean identically (because
 Java's non-multiline ``$`` matches before a trailing ``\\r`` while RE2's
-does not, so un-normalized lines diverged on the terminal-punctuation and
+does not, un-normalized lines would diverge on the terminal-punctuation and
 ellipsis rules). Two residual divergences on pathological input: Java's
 ``\\s`` includes vertical tab (0x0B) where RE2's does not, and Java's ``$``
 treats U+0085/U+2028/U+2029 (and a lone final ``\\r``) as line
@@ -112,7 +112,7 @@ def c4_stats(text: str | Column,
         cleaned, F.lit(C4_SENTENCE_RE), F.lit(0)))
     has_lorem = F.lower(t).contains("lorem ipsum")
     # "a curly bracket" means either brace: a truncated code fragment can
-    # carry only the closing one (r4 review finding).
+    # carry only the closing one.
     has_brace = t.contains("{") | t.contains("}")
     blocked = F.lit(False)
     for w in (blocklist or []):
@@ -139,7 +139,7 @@ def c4_stats_sql(expr: str, blocklist: list[str] | None = None) -> list[str]:
     has_lorem = f"contains(lower({expr}), 'lorem ipsum')"
     has_brace = f"(contains({expr}, '{{') OR contains({expr}, '}}'))"
     # single quotes doubled: a blocklist word like "don't" must not break
-    # (or inject into) the generated SQL (r4 review finding)
+    # (or inject into) the generated SQL
     blocked = " OR ".join(
         [f"contains(lower({expr}), '{w.lower().replace(chr(39), chr(39) * 2)}')"
          for w in (blocklist or [])]
@@ -247,11 +247,6 @@ def gopher_stats(text: str | Column) -> list[Column]:
         stop_hits.cast("int").alias("n_stop_hits"),
         F.coalesce(keep, F.lit(False)).alias("keep_doc"),
     ]
-
-
-def gopher_keep(text: str | Column) -> Column:
-    """The Gopher verdict alone (for pipeline filter stages)."""
-    return gopher_stats(text)[-1]
 
 
 def gopher_stats_sql(expr: str) -> list[str]:

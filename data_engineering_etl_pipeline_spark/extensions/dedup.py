@@ -4,8 +4,8 @@ MinHash+LSH banding, SimHash — the standard public near-dup toolkit
 Ullman MMDS ch.3 banding), each expressed as distributed DataFrame plans.
 
 Scale design:
-- exact dedup: the corpus-wide exchange keys on a cheap fingerprint, never
-  on raw text (text rides as payload where the deduped corpus is kept);
+- exact dedup: one pass, whose one corpus-wide exchange keys on a cheap
+  fingerprint, never on raw text (text rides as payload);
 - near-dup: candidate generation via LSH buckets (equi-join on band hash —
   a plain shuffle join, no cross product), then exact Jaccard verification
   on the candidate pairs only;
@@ -43,22 +43,24 @@ def _default_fingerprint(text_col: str) -> list:
             F.coalesce(F.length(F.col(text_col)), F.lit(-1)).alias("__fplen")]
 
 
-def _nullsafe_join(left: DataFrame, right: DataFrame, names: list[str],
-                   how: str) -> DataFrame:
-    """Join on ``names`` with NULL-SAFE equality (``<=>``): a NULL text has
-    a NULL length fingerprint, and SQL group semantics put all NULLs in ONE
-    group — a plain equi-join would null-reject those rows and silently
-    drop the NULL-text duplicate group. EqualNullSafe still plans as hash
-    join keys (no nested loop). Right-side key columns are renamed with a
-    ``__r_`` prefix; callers drop them (semi joins carry none)."""
-    r = right
-    for n in names:
-        r = r.withColumnRenamed(n, "__r_" + n)
-    cond = None
-    for n in names:
-        c = F.col(n).eqNullSafe(F.col("__r_" + n))
-        cond = c if cond is None else (cond & c)
-    return left.join(r, cond, how)
+def _fingerprint_exchange(docs: DataFrame, cols: list, text_col: str,
+                          fingerprint) -> tuple[DataFrame, list]:
+    """``docs`` projected to ``cols`` plus the fingerprint columns and
+    hash-partitioned on the fingerprint alone — the one corpus-wide
+    exchange of both exact-dedup operators, so text is payload, never an
+    exchange key. Returns ``(frame, fp_names)``. Plain ``repartition(*keys)``
+    lets AQE coalesce the partitions, and the hash on the fingerprint
+    clusters every ``(fingerprint, text)`` group, so the grouping after it
+    adds no second shuffle."""
+    fp = fingerprint if fingerprint is not None else _default_fingerprint(text_col)
+    proj = docs.select(*cols, *fp)
+    kept, fp_names = proj.columns[:-len(fp)], proj.columns[-len(fp):]
+    clash = set(fp_names) & set(kept)  # resolved aliases, no execution
+    if clash:
+        raise ValueError(
+            f"exact dedup: fingerprint aliases {sorted(clash)} collide "
+            "with input columns — alias them uniquely")
+    return proj.repartition(*fp_names), fp_names
 
 
 def exact_dedup_groups(docs: DataFrame, id_col: str = "doc_id",
@@ -67,57 +69,27 @@ def exact_dedup_groups(docs: DataFrame, id_col: str = "doc_id",
     """Exact-duplicate groups: keeper = min id per identical text; returns
     one row per duplicated text: keeper id + the number of copies.
 
-    Two-phase plan (EXACT text-equality semantics at fingerprint-key
-    shuffle cost — the most-used operator of a 100 TB training-data
-    pipeline must never shuffle raw documents as groupBy keys):
-
-    1. groupBy ``(xxhash64(text), length(text))`` over an ``(id, fp, len)``
-       projection — the corpus-wide exchange carries 12-byte keys + ids,
-       never text. Fingerprint groups with one member are unique docs and
-       are done.
-    2. Docs in multi-member fingerprint groups (true duplicates + the
-       ~2^-64-rare hash collisions) are re-grouped by the RAW text — but
-       only those candidate rows ever shuffle text, and in a dedup regime
-       candidates ≪ corpus. This second pass is what resolves a collision
-       (two different texts sharing a fingerprint end up in different
-       final groups), so the output is bit-identical to a groupBy on text.
+    One pass over ``docs``: a single exchange keyed on the
+    ``(xxhash64(text), length)`` fingerprint (the most-used operator of a
+    training-data pipeline must never hash-shuffle raw documents as keys),
+    then a group-by on ``(fingerprint, text)`` that the exchange already
+    clusters. Text takes part in the group key only to split the rare
+    fingerprint collision (two different texts sharing a fingerprint end
+    up in different groups), so the output is bit-identical to a group-by
+    on text, NULL text included: SQL grouping puts every NULL in one group.
 
     ``fingerprint`` (list of Columns, default xxhash64+length) is
     injectable so tests can force the collision path with a weak hash.
 
-    Cost honesty: phase 2's semi-join broadcasts the candidate-fingerprint
-    list when it fits (AQE converts at runtime); past broadcast size the
-    join falls back to shuffling the candidate docs on the 12-byte
-    fingerprint keys with text as payload — still strictly cheaper than
-    the naive plan (whose shuffle both moves text AND sorts/hashes it as
-    the grouping key) and still restricted to duplicated docs. If even
-    that is too much, widen the fingerprint (e.g. add md5) until the
-    simultaneous-collision probability (~2^-192 per pair) certifies groups
-    without any text movement — the trade every published exact-dedup
-    pipeline makes.
+    The trade, as in :func:`exact_dedup_keep_first`: every row's text rides
+    the exchange as payload. A two-phase plan (fingerprint counts first,
+    text only for multi-member groups) would move less text, but it
+    consumes ``docs`` twice, so an unpinned upstream lineage re-runs.
     """
-    fp = fingerprint if fingerprint is not None else _default_fingerprint(text_col)
-    slim = docs.select(F.col(id_col), *fp)
-    fp_names = slim.columns[1:]  # resolved aliases, no execution
-    clash = set(fp_names) & {id_col, text_col}
-    if clash:
-        raise ValueError(
-            f"exact_dedup_groups: fingerprint aliases {sorted(clash)} "
-            "collide with the id/text columns — alias them uniquely")
-    # Phase 1: fingerprint groups with >1 member — the only corpus-wide
-    # exchange, keyed on the fingerprint columns alone.
-    cand_fp = (slim.groupBy(*fp_names)
-               .agg(F.count(F.lit(1)).alias("__n"))
-               .filter(F.col("__n") > 1)
-               .select(*fp_names))
-    # Phase 2: exact-equality resolution over candidate rows only. The
-    # semi-join keys on the fingerprint (no text, null-safe so the
-    # NULL-text group keeps SQL group semantics); only the surviving
-    # candidate rows carry text into the final (tiny) exchange.
-    cand = _nullsafe_join(docs.select(F.col(id_col), F.col(text_col), *fp),
-                          cand_fp, fp_names, "left_semi")
+    part, fp_names = _fingerprint_exchange(
+        docs, [F.col(id_col), F.col(text_col)], text_col, fingerprint)
     return (
-        cand.groupBy(F.col(text_col))
+        part.groupBy(*fp_names, text_col)
         .agg(F.min(id_col).alias("keep_id"), F.count(F.lit(1)).alias("n_copies"))
         .filter(F.col("n_copies") > 1)
         .select("keep_id", "n_copies")
@@ -146,17 +118,10 @@ def exact_dedup_keep_first(docs: DataFrame, id_col: str = "doc_id",
     the candidates — and an unpinned upstream lineage (scan, cleaning,
     PII scrub) re-runs once per consumer. Here it runs once.
     """
-    fp = fingerprint if fingerprint is not None else _default_fingerprint(text_col)
-    fp_names = docs.select(*fp).columns  # resolved aliases, no execution
-    clash = set(fp_names) & set(docs.columns)
-    if clash:
-        raise ValueError(
-            f"exact_dedup_keep_first: fingerprint aliases {sorted(clash)} "
-            "collide with input columns — alias them uniquely")
+    part, fp_names = _fingerprint_exchange(docs, ["*"], text_col,
+                                           fingerprint)
     w = Window.partitionBy(*fp_names, text_col).orderBy(F.col(id_col).asc())
-    return (docs.select("*", *fp)
-            .repartition(*fp_names)
-            .withColumn("__rn", F.row_number().over(w))
+    return (part.withColumn("__rn", F.row_number().over(w))
             .filter(F.col("__rn") == 1)
             .drop("__rn", *fp_names))
 
@@ -1236,7 +1201,8 @@ def duplicate_window_spans(docs: DataFrame, id_col: str = "doc_id",
     - the window fingerprint is md5 of the window text (hex string) so a
       SQL oracle can recompute it bit-for-bit cross-engine; the production
       swap at 100 TB is ``xxhash64(text) + length`` (8-byte shuffle keys,
-      collision-checked by a second exact pass like ``exact_dedup_groups``);
+      with the window text in the group key to split collisions, like
+      ``exact_dedup_groups``);
     - ONE repartition exchange on the fingerprint feeds BOTH the
       duplicate-count aggregation and the probe side of the flag-back
       left-semi join (the agg and the join reuse the same hash

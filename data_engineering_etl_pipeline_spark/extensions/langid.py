@@ -1,4 +1,4 @@
-"""Trainable language identification (r9 VERDICT item 4): a
+"""Trainable language identification: a
 fastText-style linear classifier over hashed character-n-gram features,
 composed entirely from this repo's existing machinery — the portable
 md5 bucket hash (``corpus._portable_hv``), the exact fixed-point
@@ -10,7 +10,7 @@ not, exactly the ``quality_classifier_gate`` split.
 
 Why this exists next to ``text_stats.predict_lang``: the stopword
 heuristic is fine for en/es/de-class splits but blind to unlisted
-languages and short documents (r9 VERDICT item 4 named it); a trained
+languages and short documents; a trained
 char-n-gram classifier (the public fastText lang-ID recipe, Joulin et
 al. 2016) discriminates on script and sub-word statistics instead of a
 fixed stopword table. The heuristic remains the no-model default AND
@@ -203,8 +203,8 @@ def predict_lang_trained(docs: DataFrame, model: dict,
     vector, no evidence) fall back to ``fallback``:
 
     - ``'heuristic'`` (default): ``text_stats.predict_lang`` — the
-      stopword-hit argmax, giving short docs the list-based guess the
-      r9 verdict asked to keep as the floor;
+      stopword-hit argmax, so short docs keep the list-based guess as
+      their floor;
     - ``'und'``: the undetermined sentinel, for pipelines that prefer
       an honest no-evidence answer.
 
@@ -221,7 +221,7 @@ def predict_lang_trained(docs: DataFrame, model: dict,
       INLINED into every fold, the argmax, and the null checks, so the
       O(dim·len) featurization re-executes once per reference —
       measured 590 s for the 5-language doc_text_stats row at sf0.1
-      (the r10 bench finding) vs ~2 s on the arrow path;
+      vs ~2 s on the arrow path;
     - ``'arrow'`` (default): the staged projection computes only the
       hashed BUCKET array (one md5 per n-gram — O(len), JVM-side), and
       ONE Arrow-batched kernel does the bincount, the relative
@@ -234,7 +234,7 @@ def predict_lang_trained(docs: DataFrame, model: dict,
       K·dim ≈ 6400+ floor terms per row, past whole-stage-codegen's
       expression budget).
 
-    ``carry_cols`` (r12): extra ``docs`` columns preserved verbatim on
+    ``carry_cols``: extra ``docs`` columns preserved verbatim on
     the output, so a map-only caller can fold the prediction into its
     own projection instead of paying a corpus-wide join back on
     ``id_col`` (doc_text_stats previously joined three scans of the
@@ -251,8 +251,7 @@ def predict_lang_trained(docs: DataFrame, model: dict,
         if n_w != model["dim"]:
             # zip_with would pad the shorter side with NULLs and every
             # score would fold to NULL — silently predicting nothing;
-            # refuse loudly (the prepare_training_corpus quality_clf
-            # convention)
+            # refuse loudly instead
             raise ValueError(
                 f"predict_lang_trained: model[{lang!r}] has {n_w} "
                 f"weights but dim={model['dim']} — fit and predict must "
@@ -312,7 +311,7 @@ def predict_lang_trained(docs: DataFrame, model: dict,
         # with one JVM md5 per n-gram; the O(dim·len) frequency-vector
         # expression never exists on this path, and the UDF boundary
         # stops Catalyst from inlining the featurization into every
-        # downstream reference (the 590 s expr-mode bench finding)
+        # downstream reference (590 s in expr mode, measured above)
         bk = char_ngram_buckets(text_col, dim, n, salt)
         staged = (docs.select(F.col(id_col), F.col(text_col),
                               *[F.col(c) for c in extras],

@@ -1,28 +1,23 @@
-"""Source-mixture construction for training corpora (r10): temperature
-mixture weights, deterministic budget allocation, and token-budget
-prefix sampling — the "decide how much of each source goes into the run"
-step every large-scale pretraining pipeline executes after curation
-(temperature sampling ``w_s ∝ n_s^alpha`` — Xue et al. 2021, mT5,
-arXiv:2010.11934 §3.1, following Arivazhagan et al. 2019; fixed
-per-source epoch weights — Gao et al. 2020, The Pile, arXiv:2101.00027
-§1.2; token-budget corpus assembly). The repo's curation
-operators decide WHICH documents survive; this module decides HOW MANY
-tokens of each surviving source the training run consumes.
+"""Token-budget fill for training corpora: the "how many tokens of each
+source does the run consume" step every large-scale pretraining pipeline
+executes after curation (per-source budgets — Gao et al. 2020, The Pile,
+arXiv:2101.00027 §1.2; token-budget corpus assembly). The curation
+operators decide WHICH documents survive; this module decides which of
+them fit each source's budget, in one batch
+(:func:`sample_to_token_budget`) or across daily batches
+(:func:`incremental_token_budget_fill`).
 
 Determinism contract (the ``sampling`` module convention): within a
 source, documents fill the budget in the engine's portable md5 hash
 order of the id + salt — NOT arrival order (which over-selects whatever
 was crawled first) — so the kept set is rerun-, repartition- and
 engine-stable, and a serial SQL engine reproduces the fill DECISION
-bit-for-bit (:func:`token_budget_sql`). The only non-oracle-able piece
-is ``n^alpha`` for fractional ``alpha`` (libm pow — the documented
-``fit_logreg_exact`` class of surface): weight VALUES are unit-checked
-at round-6 tolerance, while budget allocation (given weights) and the
-fill decision (given budgets) are exact-integer and hash-checkable with
-zero tolerance.
+bit-for-bit with zero tolerance (:func:`token_budget_sql`): the fill is
+exact integers end to end.
 
-Plan contract (the r7-verdict scale shape): the corpus NEVER feeds a
-``Window.partitionBy(source)`` full sort. Selection is two-phase like
+Plan contract: the corpus NEVER feeds a ``Window.partitionBy(source)``
+full sort, which at scale would put a whole source on one task.
+Selection is two-phase like
 ``balanced_sample_by_key``: a map-only partition-local prune keeps each
 partition's within-budget prefix PLUS the first budget-crossing row
 (forwarding the crossing row is what makes the prune sound — any
@@ -30,7 +25,7 @@ candidate that is not truly kept then sees forwarded predecessor mass
 exceeding the budget, while truly-kept rows never order after a pruned
 row, so their phase-2 sums are exact); the global per-source cumulative
 sum runs over candidates only, and keeper ids join back as a flag.
-Weight/count tables are sources-sized (KB) — broadcast by nature.
+Budget tables are sources-sized (KB) — broadcast by nature.
 """
 
 from __future__ import annotations
@@ -52,101 +47,6 @@ def _hv(id_col: str, salt: str) -> F.Column:
 def _hv_sql(id_expr: str, salt: str) -> str:
     return (f"CAST('0x' || substr(md5(CAST({id_expr} AS VARCHAR) "
             f"|| '|{salt}'), 1, 8) AS UBIGINT)")
-
-
-def mixture_weights(docs: DataFrame, source_col: str = "lang",
-                    alpha: float = 0.3,
-                    token_col: str | None = None) -> DataFrame:
-    """Per-source temperature mixture weights: ``(source, n, weight)``
-    with ``n`` = document count (or token sum when ``token_col`` is
-    given — the right mass for budget math) and
-    ``weight = n^alpha / Σ_s n_s^alpha`` (mT5 §3.1: ``alpha = 1`` keeps
-    the natural distribution, ``alpha = 0`` is uniform, the usual
-    ``0.2–0.7`` flattens the head so low-resource sources are not
-    drowned). NULL sources form their own group (same as the sampler's
-    NULL-key contract). Per-row token masses are clamped at 0 — the
-    fill's clamp contract (``F.size`` of a NULL array is -1): a negative
-    mass would make ``pow(n, alpha)`` NaN for fractional alpha (crashing
-    ``allocate_budgets``) or silently skew the normalizer (r10 advisor
-    finding).
-
-    Plan: ONE hash agg over the corpus → a sources-sized frame; the
-    normalizing total is a 1-row cross join (broadcast by nature). The
-    ``n^alpha`` double is libm pow — cross-engine portable only to
-    ~1 ulp, so value units compare at ROUND 6 (:func:`mixture_weights_sql`)
-    and anything needing exactness downstream goes through
-    :func:`allocate_budgets` integers instead."""
-    if alpha < 0:
-        raise ValueError(f"mixture_weights: alpha={alpha} must be >= 0")
-    n = (F.count(F.lit(1)) if token_col is None
-         else F.sum(F.greatest(F.coalesce(F.col(token_col), F.lit(0)),
-                               F.lit(0))))
-    agg = docs.groupBy(F.col(source_col).alias("source")) \
-              .agg(n.cast("long").alias("n"))
-    p = F.pow(F.col("n").cast("double"), F.lit(float(alpha)))
-    tot = agg.agg(F.sum(p).alias("__tot"))
-    # zero-mass guard: ANSI mode (Spark 4 default) raises on x/0, and a
-    # corpus whose every source has zero token mass normalizes by 0 —
-    # weights are NULL then (no defined mixture; temperature_sample
-    # maps NULL -> 0.0 budgets)
-    w = F.when(F.col("__tot") > 0, p / F.col("__tot"))
-    return (agg.crossJoin(F.broadcast(tot))
-            .select("source", "n", w.alias("weight")))
-
-
-def mixture_weights_sql(source_expr: str, alpha: float,
-                        token_expr: str | None = None,
-                        table: str = "documents") -> str:
-    """DuckDB twin of :func:`mixture_weights` with ``weight`` at ROUND 6
-    (the libm-pow tolerance documented in the module docstring; ``n`` is
-    exact, including the per-row GREATEST(.., 0) clamp)."""
-    n = ("COUNT(*)" if token_expr is None
-         else f"SUM(GREATEST(COALESCE({token_expr}, 0), 0))")
-    return f"""
-    WITH c AS (
-      SELECT {source_expr} AS source, CAST({n} AS BIGINT) AS n
-      FROM {table} GROUP BY 1
-    )
-    SELECT source, n,
-           CASE WHEN SUM(POW(CAST(n AS DOUBLE), {float(alpha)!r})) OVER () > 0
-                THEN ROUND(POW(CAST(n AS DOUBLE), {float(alpha)!r})
-                     / SUM(POW(CAST(n AS DOUBLE), {float(alpha)!r})) OVER (),
-                     6) END AS weight
-    FROM c
-    """
-
-
-def allocate_budgets(weights: dict, total_budget: int) -> dict:
-    """Integer per-source token budgets from mixture weights by the
-    largest-remainder method: ``base_s = floor(w_s · total)``, then the
-    leftover ``total − Σ base`` goes one token at a time to the largest
-    fractional remainders (ties → source ascending, NULL-source last) —
-    so ``Σ budgets == total_budget`` EXACTLY and the allocation is a
-    pure deterministic function of (weights, total). Driver-side pure
-    Python over a sources-sized dict (the codebook convention — KB-scale
-    metadata, never corpus data). Negative weights are refused; weights
-    need not sum to 1 (they are renormalized)."""
-    if total_budget < 0:
-        raise ValueError(
-            f"allocate_budgets: total_budget={total_budget} must be >= 0")
-    if not weights:
-        return {}
-    if any(w < 0 for w in weights.values()):
-        raise ValueError("allocate_budgets: negative weight")
-    wsum = float(sum(weights.values()))
-    if wsum <= 0.0:
-        return {s: 0 for s in weights}
-    shares = {s: (w / wsum) * total_budget for s, w in weights.items()}
-    out = {s: int(shares[s]) for s in weights}
-    leftover = total_budget - sum(out.values())
-    # ties: source ascending, with None (NULL source) sorted last — a
-    # total order both reruns and documentation can state
-    order = sorted(shares,
-                   key=lambda s: (-(shares[s] - int(shares[s])),
-                                  s is None, s if s is not None else ""))
-    for s in order[:leftover]:
-        out[s] += 1
-    return out
 
 
 def sample_to_token_budget(docs: DataFrame, budgets: dict | int,
@@ -208,8 +108,8 @@ def _fill_keepers(docs: DataFrame, budgets: dict | int, key_col: str,
     carrying its MAX-resolved mass as ``__tok`` — the DECISION grain, so
     per-key spent mass is ``SUM(__tok)`` over keepers: duplicate copies
     charge the budget once, at exactly the mass the keep decision used
-    (r10 advisor finding — summing the per-row flags output would count
-    each copy at its own clamped value). ``broadcastable``: the keeper
+    (summing the per-row flags output instead would count each copy at
+    its own clamped value). ``broadcastable``: the keeper
     set is bounded by a dict budget small enough to hint the flag join."""
     if isinstance(budgets, int):
         if budgets < 0:
@@ -371,7 +271,7 @@ def token_budget_sql(id_expr: str, key_expr: str, token_expr: str,
     def q(s: str) -> str:
         # SQL string literal with '' doubling — repr() would emit
         # double-quoted (identifier) syntax for values containing a
-        # single quote (review finding)
+        # single quote
         return "'" + s.replace("'", "''") + "'"
 
     if budgets:
@@ -383,7 +283,7 @@ def token_budget_sql(id_expr: str, key_expr: str, token_expr: str,
     else:
         # empty dict = every key has budget 0 (the engine path accepts
         # it); 'VALUES ' with no tuples is invalid SQL, so emit a typed
-        # empty relation instead (r10 advisor finding)
+        # empty relation instead
         b_rel = ("(SELECT CAST(NULL AS VARCHAR) AS key, "
                  "CAST(0 AS BIGINT) AS budget WHERE FALSE)")
     hv = _hv_sql("id", q(salt)[1:-1] if "'" in salt else salt)
@@ -404,35 +304,6 @@ def token_budget_sql(id_expr: str, key_expr: str, token_expr: str,
            c.cum <= COALESCE(b.budget, 0) AS kept
     FROM c LEFT JOIN b ON c.key IS NOT DISTINCT FROM b.key
     """
-
-
-def temperature_sample(docs: DataFrame, source_col: str = "lang",
-                       token_col: str = "n_tokens",
-                       total_budget: int = 0, alpha: float = 0.3,
-                       id_col: str = "doc_id",
-                       salt: str = "token-budget-42") -> DataFrame:
-    """The composed mixture step: temperature weights over the ACTUAL
-    per-source token mass (:func:`mixture_weights` with
-    ``token_col``) → integer budgets summing to exactly
-    ``total_budget`` (:func:`allocate_budgets`) → deterministic prefix
-    fill (:func:`sample_to_token_budget`). Returns the fill's
-    ``(id, source, tokens, kept)`` flags.
-
-    The weight collect is sources-sized (the codebook convention); the
-    budget dict is computed driver-side in one deterministic pass, so
-    reruns see identical budgets. A source whose allocated budget is
-    smaller than its smallest document keeps nothing — temperature
-    flattening is a cap, not a guarantee (the mT5 semantics)."""
-    # a corpus whose every source has zero mass yields NULL weights
-    # (Spark 0/0 → NULL): treat as weight 0 so the allocation is the
-    # clear all-zero answer instead of a TypeError (review finding)
-    w = {r["source"]: (r["weight"] if r["weight"] is not None else 0.0)
-         for r in
-         mixture_weights(docs, source_col, alpha, token_col).collect()}
-    budgets = allocate_budgets(w, total_budget)
-    return sample_to_token_budget(docs, budgets, key_col=source_col,
-                                  token_col=token_col, id_col=id_col,
-                                  salt=salt)
 
 
 def incremental_token_budget_fill(batch: DataFrame,
@@ -470,9 +341,9 @@ def incremental_token_budget_fill(batch: DataFrame,
 
     Spent mass is aggregated over the KEEPER entities (one row per kept
     ``(id, key)`` at the MAX-resolved token) — exactly the mass the fill
-    decision charged, so duplicate copies in a batch are counted once
-    (r10 advisor finding), and the pass is one keeper-sized agg instead
-    of a rescan of the corpus-wide flags join (r10 verdict item 5); the
+    decision charged, so duplicate copies in a batch are counted once,
+    and the pass is one keeper-sized agg instead of a rescan of the
+    corpus-wide flags join; the
     pinned keeper frame then feeds the returned flags, so the batch
     pays the two-phase fill exactly once."""
     if any(b < 0 for b in budgets.values()):

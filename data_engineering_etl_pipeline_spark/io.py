@@ -84,15 +84,12 @@ _SCAN_FLOOR_BYTES = 128 * 1024 * 1024
 #:   multiplies per-task/per-batch overhead (interleaved same-session
 #:   A/B at sf0.1: topk 6.9→8.3 s, near_dup 6.9→7.8 s, semantic
 #:   13.5→14.8 s with the floor on — all losses).
-#: Override via spark.sql.graft.scanFloorTables.
-_SCAN_FLOOR_TABLES = "documents"
+_SCAN_FLOOR_TABLES = frozenset({"documents"})
 
 
 def _input_parallelism_floor(df: DataFrame, spark: SparkSession,
                              path: str, name: str) -> DataFrame:
-    tables = spark.conf.get("spark.sql.graft.scanFloorTables",
-                            _SCAN_FLOOR_TABLES)
-    if name not in {t.strip() for t in tables.split(",") if t.strip()}:
+    if name not in _SCAN_FLOOR_TABLES:
         return df
     floor = int(spark.conf.get("spark.sql.graft.scanParallelismFloorBytes",
                                str(_SCAN_FLOOR_BYTES)))
@@ -178,19 +175,18 @@ def write_parquet(df: DataFrame, path: str, mode: str = "overwrite",
     writer.parquet(path)
 
 
-def _fs_for(spark, path: str):
-    """(jvm, fs, jpath) for a path string — the py4j Hadoop-FS triple."""
-    jvm = spark.sparkContext._jvm
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    return jvm, jpath.getFileSystem(hconf), jpath
+def _hadoop_fs(spark: SparkSession, path: str):
+    """Resolve (FileSystem, Path) for any Hadoop-supported scheme."""
+    jpath = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(path)
+    fs = jpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    return fs, jpath
 
 
 def _list_part_files(spark, path: str) -> list[str]:
     """All committed data files under ``path`` (recursive), skipping
     hidden/underscore entries (_SUCCESS, _temporary, .crc). O(files) driver
     listing — the same cost every parquet scan's file index pays."""
-    jvm, fs, jpath = _fs_for(spark, path)
+    fs, jpath = _hadoop_fs(spark, path)
     if not fs.exists(jpath):
         return []
     out = []
@@ -205,7 +201,7 @@ def _list_part_files(spark, path: str) -> list[str]:
 
 def _manifest_versions(spark, root: str) -> list[tuple[int, str]]:
     """Sorted (version_number, dir_name) under a manifest root."""
-    jvm, fs, jroot = _fs_for(spark, root)
+    fs, jroot = _hadoop_fs(spark, root)
     if not fs.exists(jroot):
         return []
     out = []
@@ -237,8 +233,8 @@ def _publish_manifest(manifest: DataFrame, root: str) -> str:
     vname = f"v-{n:08d}"
     manifest.coalesce(1).write.mode("overwrite").parquet(f"{root}/{vname}")
 
-    jvm, fs, jroot = _fs_for(spark, root)
-    jpath = jvm.org.apache.hadoop.fs.Path
+    fs, jroot = _hadoop_fs(spark, root)
+    jpath = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
     tmp, latest = jpath(root, "LATEST.tmp"), jpath(root, "LATEST")
     stream = fs.create(tmp, True)
     stream.write(bytearray(vname.encode("utf-8")))
@@ -265,7 +261,8 @@ def read_shard_manifest(spark: SparkSession, path: str) -> DataFrame:
     to the highest _SUCCESS-committed version; pre-versioned layouts read
     the flat root directly."""
     root = path.rstrip("/") + "_manifest"
-    jvm, fs, jroot = _fs_for(spark, root)
+    fs, _ = _hadoop_fs(spark, root)
+    jvm = spark.sparkContext._jvm
     jpath = jvm.org.apache.hadoop.fs.Path
     latest = jpath(root, "LATEST")
     if fs.exists(latest):
@@ -333,7 +330,7 @@ def write_training_shards(df: DataFrame, path: str, shard_col: str = "shard",
     prior = None
     before: set[str] = set()
     if mode == "append":
-        _, fs, jroot = _fs_for(spark, root)
+        fs, jroot = _hadoop_fs(spark, root)
         if fs.exists(jroot):
             prior = read_shard_manifest(spark, path)
             before = set(_list_part_files(spark, path))
@@ -389,11 +386,8 @@ def snapshot_exists(spark: SparkSession, root: str, date_str: str,
     as a partition-directory check so it works on any Hadoop filesystem.
     The partition value is escaped exactly as Spark's writer escapes it.
     """
-    jvm = spark.sparkContext._jvm
-    jsc = spark.sparkContext._jsc
     escaped = _escape_partition_value(date_str)
-    path = jvm.org.apache.hadoop.fs.Path(f"{root}/{partition_col}={escaped}")
-    fs = path.getFileSystem(jsc.hadoopConfiguration())
+    fs, path = _hadoop_fs(spark, f"{root}/{partition_col}={escaped}")
     return bool(fs.exists(path))
 
 
@@ -426,14 +420,6 @@ def write_daily_snapshot(df: DataFrame, root: str, date_col: str = "snapshot_dat
     finally:
         spark.conf.set(key, prev) if prev else spark.conf.unset(key)
     return True
-
-
-def _hadoop_fs(spark: SparkSession, path: str):
-    """Resolve (FileSystem, Path) for any Hadoop-supported scheme."""
-    jvm = spark.sparkContext._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-    return fs, jpath
 
 
 class TwoTierCache:

@@ -7,11 +7,11 @@ whose close lies outside [low−tol, high+tol] (:46-61); (4) circuit breaker —
 abort the pipeline when row loss exceeds a threshold (default 5%, :30,
 :101-110).
 
-Spark shape: the breaker forces ONE eager action mid-pipeline (a count
-aggregate) — an intentional materialization barrier. Everything else stays
-lazy. At 100 TB the two counts are map-side partial ``count(1)`` aggregates
-over the same scan (Catalyst reuses the exchange under AQE), not two full
-passes over Python.
+Spark shape: the breaker forces ONE eager action mid-pipeline (the
+``aggregates.violation_loss`` aggregate) — an intentional materialization
+barrier. Everything else stays lazy. At 100 TB the total and violation
+counts are map-side partial aggregates over one scan, not two full passes
+over Python.
 """
 
 from __future__ import annotations
@@ -21,6 +21,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .aggregates import violation_loss
 from .relational import ohlc_violation
 from .schema import validate_schema
 
@@ -56,11 +57,10 @@ def apply_gate(df: DataFrame,
     # without contributing to the breaker's loss percentage. Normalize to
     # False (pandas parity: NaN comparisons are False, rows are kept).
     cond = F.coalesce(cond, F.lit(False))
-    stats = df.agg(
-        F.count(F.lit(1)).alias("total"),
-        F.sum(cond.cast("long")).alias("bad"),
-    ).collect()[0]
-    total, bad = stats["total"], stats["bad"] or 0
+    stats = violation_loss(df, cond).first()
+    total, bad = stats["total_rows"], stats["violation_rows"]
+    # trip on the exact ratio, not the rounded loss_pct column: rounding
+    # could move a decision that sits at the boundary
     loss_pct = 100.0 * bad / total if total else 0.0
     if loss_pct > max_loss_pct:
         raise CircuitBreakerTripped(
@@ -71,12 +71,9 @@ def apply_gate(df: DataFrame,
 def gate_report(df: DataFrame, violation: Column,
                 max_loss_pct: float = DEFAULT_MAX_LOSS_PCT) -> DataFrame:
     """Single-row gate summary (total/violations/loss%/would-trip) as a
-    DataFrame — the queryable form of the breaker decision, built ON TOP of
-    ``aggregates.violation_loss`` rather than re-implementing its trio (r5
-    review finding: two verbatim copies had to receive the NULL-predicate
-    fix twice). Empty input reports loss 0.0 / tripped false, agreeing with
-    apply_gate's decision."""
-    from .aggregates import violation_loss
-
+    DataFrame — the queryable form of the breaker decision. Like
+    :func:`apply_gate` it is built on ``aggregates.violation_loss``, so the
+    count / NULL-coalesce / sum trio exists once. Empty input reports loss
+    0.0 / tripped false, agreeing with apply_gate's decision."""
     return violation_loss(df, violation).withColumn(
         "breaker_tripped", F.col("loss_pct") > max_loss_pct)

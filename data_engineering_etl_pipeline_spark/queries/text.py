@@ -68,10 +68,10 @@ from . import register
 def doc_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup — batch AND incremental — in one stage-tagged row.
 
-    ``batch``: the two-phase fingerprint plan (keeper = min doc_id): the
-    corpus-wide exchange groups on (xxhash64(text), length) — 12-byte keys —
-    and only candidate rows (multi-member fingerprint groups) pay the exact
-    text-equality resolver, so raw documents never shuffle as groupBy keys
+    ``batch``: the one-pass fingerprint plan (keeper = min doc_id): the
+    one corpus-wide exchange hashes on (xxhash64(text), length) — 12-byte
+    keys, text as payload — and the group-by on (fingerprint, text) after
+    it needs no second shuffle, so raw documents never shuffle as keys
     (plan pinned in tests/test_plans.py). Deterministic
     duplicates injected (every 7th doc re-appended) so the operator has work
     at every scale factor; output is bit-identical to a groupBy on text.

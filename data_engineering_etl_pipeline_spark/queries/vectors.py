@@ -989,16 +989,15 @@ def _classifier_gate_oracle() -> str:
 @register("quality_classifier_gate", oracle=_classifier_gate_oracle())
 def quality_classifier_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The learned quality classifier's keep/drop DECISION on the driver
-    record (the fit/score surface stays unit-only
-    because libm exp is not cross-engine bit-stable, but the GATE decision
-    sigma(z) >= t <=> z >= logit(t) needs no exp): a planted-model
+    record (the fit stays unit-only because libm exp is not cross-engine
+    bit-stable, but the GATE decision sigma(z) >= t <=> z >= logit(t)
+    needs no exp): a planted-model
     (``classifier.planted_logreg`` — seeded weights, the
     ``planted_projection`` convention) fixed-point fold of w.x+b and the
     boolean keep, bit-portable like the PCA project stage. Value-checks
-    exactly the machinery ``prepare_training_corpus(quality_clf=...)``
-    gates with in production — per-row score fold + threshold compare —
-    under constants both engines embed verbatim. NULL/wrong-length
-    vectors gate NULL (the ``score_logreg`` convention). Plan: map-only
+    ``classifier.logreg_gate_fold``, the one learned gate — per-row score
+    fold + threshold compare — under constants both engines embed
+    verbatim. NULL/wrong-length vectors gate NULL (no evidence). Plan: map-only
     expressions, weights as literals — no shuffle, no Python, no collect
     (a 100 TB gate is one scan)."""
     from ..extensions.classifier import logreg_gate_fold, planted_logreg

@@ -5,7 +5,8 @@ Pins: byte-stable fits under relayout; bit-equality with a driver-side
 numpy twin of the identical quantize→sum→update convention; learning on a
 planted separable fixture (loss strictly decreases, perfect accuracy);
 NULL/wrong-length handling; end-to-end composition with the hashed TF-IDF
-vectorizer (the curated-vs-raw quality-filter recipe).
+vectorizer (the curated-vs-raw quality-filter recipe). The fitted models
+are applied through ``logreg_gate_fold``, the one gate.
 """
 
 from __future__ import annotations
@@ -14,7 +15,7 @@ import numpy as np
 from pyspark.sql import functions as F
 
 from data_engineering_etl_pipeline_spark.extensions.classifier import (
-    LOGREG_Q_SCALE, fit_logreg_exact, score_logreg)
+    LOGREG_Q_SCALE, fit_logreg_exact, logreg_gate_fold)
 
 DIM = 8
 
@@ -37,9 +38,9 @@ def test_learns_separable_blobs_and_loss_decreases(spark):
     losses = model["losses"]
     assert all(losses[i] > losses[i + 1] for i in range(len(losses) - 1)), \
         losses
-    scored = score_logreg(df, model)
-    acc = scored.filter(
-        (F.col("quality_prob") >= 0.5) == (F.col("label") == 1)
+    gated = logreg_gate_fold(df, model, threshold=0.5, id_col="id")
+    acc = gated.join(df, "id").filter(
+        F.col("keep") == (F.col("label") == 1)
     ).count() / df.count()
     assert acc == 1.0
 
@@ -83,10 +84,11 @@ def test_null_and_wrong_length_rows_excluded_from_fit_null_scores(spark):
     clean = fit_logreg_exact(df, dim=DIM, n_iters=3)
     dirty = fit_logreg_exact(df.unionByName(extra), dim=DIM, n_iters=3)
     assert clean == dirty  # degenerate rows contribute nothing
-    scored = {r["id"]: r["quality_prob"]
-              for r in score_logreg(extra, clean).collect()}
-    assert scored[10 ** 6] is None and scored[10 ** 6 + 1] is None
-    assert scored[10 ** 6 + 2] is not None
+    gated = {r["id"]: r["keep"] for r in
+             logreg_gate_fold(extra, clean, threshold=0.5,
+                              id_col="id").collect()}
+    assert gated[10 ** 6] is None and gated[10 ** 6 + 1] is None
+    assert gated[10 ** 6 + 2] is not None
 
 
 def test_quality_filter_composes_with_tfidf_vectorizer(spark):
@@ -113,56 +115,10 @@ def test_quality_filter_composes_with_tfidf_vectorizer(spark):
         [(0, "curated gamma prose with citations"),
          (1, "click here free spam offer")], "doc_id long, text string")
     hv = hashed_tfidf_vectors(held, dim=32, idf=idf)
-    got = {r["doc_id"]: r["quality_prob"]
-           for r in score_logreg(hv, model).collect()}
-    assert got[0] > 0.5 > got[1], got
-
-
-def test_prep_pipeline_with_learned_quality_gate(spark):
-    """prepare_training_corpus(quality_clf=...) applies the learned filter
-    as stage 6b: planted spam docs (which pass the heuristic floor) are
-    dropped, curated docs survive every stage, and the default path
-    (quality_clf=None) keeps both — proving the stage is additive."""
-    from data_engineering_etl_pipeline_spark.extensions.corpus import (
-        fit_tfidf_idf, hashed_tfidf_vectors)
-    from data_engineering_etl_pipeline_spark.extensions.prep import (
-        prepare_training_corpus)
-
-    # three sentences per doc (the C4 page floor), every line >= 5 words
-    cur = [f"The curated {w} corpus reads like careful prose. "
-           f"Each {w} section cites sources and explains context fully. "
-           "Structure and complete sentences appear throughout the text."
-           for w in ("alpha", "beta", "gamma", "delta", "epsilon",
-                     "zeta", "eta", "theta")]
-    raw = [f"Buy now {w} click here for spam offers. "
-           f"Win big {w} prizes now with this limited deal. "
-           "Click the spam link to claim free offers."
-           for w in ("one", "two", "three", "four", "five", "six",
-                     "seven", "eight")]
-    rows = ([(i, t, 1) for i, t in enumerate(cur)]
-            + [(100 + i, t, 0) for i, t in enumerate(raw)])
-    docs = spark.createDataFrame(rows, "doc_id long, text string, label int")
-    idf = fit_tfidf_idf(docs, dim=32)
-    vecs = hashed_tfidf_vectors(docs, dim=32, idf=idf).join(
-        docs.select("doc_id", "label"), "doc_id")
-    from data_engineering_etl_pipeline_spark.extensions.classifier import (
-        fit_logreg_exact)
-    model = fit_logreg_exact(vecs, dim=32, n_iters=25, lr=2.0)
-
-    corpus = docs.select("doc_id", "text")
-    base_ids = {r["doc_id"] for r in
-                prepare_training_corpus(corpus, min_quality=0.0)
-                .select("doc_id").collect()}
-    assert base_ids >= {0, 100}, base_ids  # both kinds pass the heuristics
-
-    clf = {"model": model, "idf": idf, "dim": 32, "threshold": 0.5}
-    got_ids = {r["doc_id"] for r in
-               prepare_training_corpus(corpus, min_quality=0.0,
-                                       quality_clf=clf)
-               .select("doc_id").collect()}
-    assert all(i < 100 for i in got_ids), got_ids   # every spam doc dropped
-    assert got_ids, "curated docs must survive"
-    assert got_ids <= base_ids
+    got = {r["doc_id"]: r["keep"] for r in
+           logreg_gate_fold(hv, model, threshold=0.5,
+                            id_col="doc_id").collect()}
+    assert got[0] is True and got[1] is False, got
 
 
 def test_resume_equals_uninterrupted_fit(spark):
@@ -180,22 +136,6 @@ def test_resume_equals_uninterrupted_fit(spark):
     assert part["losses"] + resumed["losses"] == straight["losses"]
 
 
-def test_quality_clf_dim_mismatch_refused(spark):
-    """r7 review finding: a model/dim mismatch would NULL-score and
-    silently drop the whole corpus — must refuse loudly instead."""
-    import pytest
-
-    from data_engineering_etl_pipeline_spark.extensions.prep import (
-        prepare_training_corpus)
-
-    docs = spark.createDataFrame([(0, "text")], "doc_id long, text string")
-    model = {"weights": [0.0] * 32, "bias": 0.0}
-    with pytest.raises(ValueError, match="32 weights but dim=64"):
-        prepare_training_corpus(
-            docs, quality_clf={"model": model, "idf": [1.0] * 64,
-                               "dim": 64})
-
-
 def test_init_weights_bad_shapes_raise_value_error(spark):
     import pytest
 
@@ -206,7 +146,7 @@ def test_init_weights_bad_shapes_raise_value_error(spark):
 
 
 def test_early_stop_equals_truncated_full_run(spark):
-    """r7 VERDICT item 5: with tol set, the fit stops once the INTEGER
+    """With tol set, the fit stops once the INTEGER
     loss sum stops improving by tol — and the returned model is byte-
     equal to a full run truncated at the last applied update (the stop
     check never applies a partial step). The planted separable fixture
@@ -224,7 +164,7 @@ def test_early_stop_equals_truncated_full_run(spark):
 
 
 def test_dot_mode_fold_learns_and_is_relayout_stable(spark):
-    """The fixed-order per-row dot hatch (r7 advisor finding): same
+    """The fixed-order per-row dot hatch: same
     learning behavior, byte-stable across relayouts by CONSTRUCTION (the
     gemv default is batch-shape-invariant in practice only)."""
     df = _blobs_df(spark)
@@ -246,7 +186,7 @@ def test_gate_fold_matches_float_gate_away_from_boundary(spark):
     import math
 
     from data_engineering_etl_pipeline_spark.extensions.classifier import (
-        logreg_gate_fold, planted_logreg)
+        planted_logreg)
 
     df = _blobs_df(spark, n_per=40)
     model = planted_logreg(909, DIM)

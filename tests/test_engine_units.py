@@ -57,6 +57,17 @@ def test_circuit_breaker_trips(spark):
     cleaned = apply_gate(df, required=["close"], price_cols=["close"],
                          max_loss_pct=15.0)
     assert cleaned.count() == 90
+    # exactly at the threshold does not trip: the breaker fires on loss
+    # strictly above max_loss_pct
+    at_five = spark.createDataFrame(
+        [(3.0, 2.0, 5.0)] * 95 + [(9.0, 2.0, 5.0)] * 5,  # 5% violations
+        "close double, low double, high double")
+    assert apply_gate(at_five, required=["close"], price_cols=["close"],
+                      max_loss_pct=5.0).count() == 95
+    # an empty frame has no loss and does not trip
+    empty = spark.createDataFrame([], "close double, low double, high double")
+    assert apply_gate(empty, required=["close"], price_cols=["close"],
+                      max_loss_pct=5.0).count() == 0
 
 
 def test_gate_missing_columns(spark):
@@ -533,8 +544,8 @@ def test_load_table_restores_nanos_conf(spark, tmp_path):
 def test_exact_dedup_collision_path(spark):
     """Two DISTINCT same-length texts forced onto ONE fingerprint (weak
     injected hash = length only) must come out as two separate duplicate
-    groups — proving the phase-2 exact-equality resolver actually splits
-    colliding fingerprint groups instead of trusting the hash."""
+    groups — proving the text in the group key actually splits colliding
+    fingerprint groups instead of trusting the hash."""
     from pyspark.sql import functions as F
 
     from data_engineering_etl_pipeline_spark.extensions.dedup import (

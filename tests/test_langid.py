@@ -1,4 +1,4 @@
-"""Trainable lang-ID (r9 VERDICT item 4): char-n-gram features through
+"""Trainable lang-ID: char-n-gram features through
 the exact logreg trainer, one-vs-rest, with the quality-gate fixed-point
 decision fold — planted multi-language corpus, heuristic fallback, and
 the DuckDB hash check of the DECISION (the quality_classifier_gate
@@ -18,7 +18,7 @@ from data_engineering_etl_pipeline_spark.extensions.langid import (
 _SCHEMA = "doc_id long, lang string, text string"
 
 # Three languages the stopword heuristic knows plus one it does NOT
-# (Swedish) — the motivating blind spot of r9 VERDICT item 4. Several
+# (Swedish) — the blind spot that motivates a trained model. Several
 # sentences per language; training uses the first four, held-out the rest.
 _CORPUS = {
     "en": [
@@ -152,37 +152,6 @@ def test_decision_fold_hash_matches_duckdb(spark):
     assert got == want
 
 
-def test_prep_pipeline_lang_filter(spark):
-    """r10 composition: prepare_training_corpus(lang_filter=...) keeps
-    exactly the docs whose TRAINED prediction is in `keep`, running the
-    full clean/dedup/pack pipeline around it (the quality_clf stage
-    pattern); off by default so the prep driver oracle is untouched."""
-    from data_engineering_etl_pipeline_spark.extensions.prep import (
-        prepare_training_corpus)
-
-    with engine_pin_scope():
-        train = spark.createDataFrame(_rows("train"), _SCHEMA)
-        model = fit_lang_id(train, langs=["de", "en", "es", "sv"])
-        # three terminally-punctuated sentences per page so the C4 page
-        # filter (>=3 sentences) keeps every doc; ids encode lang
-        docs = spark.createDataFrame(
-            [(i, f"{a}. {b}. {c}.") for i, (a, b, c) in
-             enumerate((_CORPUS[lang][j], _CORPUS[lang][j + 1],
-                        _CORPUS[lang][j + 2])
-                       for lang in ("en", "de", "sv")
-                       for j in (0, 3))],
-            "doc_id long, text string")
-        # ids 0,1 en; 2,3 de; 4,5 sv
-        out = prepare_training_corpus(
-            docs, min_quality=0.01,
-            lang_filter={"model": model, "keep": ["en", "sv"]})
-        kept = sorted(r["doc_id"] for r in out.collect())
-        assert kept == [0, 1, 4, 5]
-        # without the filter all six survive (stage is off by default)
-        out_all = prepare_training_corpus(docs, min_quality=0.01)
-        assert sorted(r["doc_id"] for r in out_all.collect()) == list(range(6))
-
-
 def test_arrow_mode_bit_identical_to_expr_mode(spark):
     """mode='arrow' (the large-K scale path: one Arrow kernel instead of
     K*dim codegen'd floor terms) must reproduce mode='expr' BIT-for-bit
@@ -194,9 +163,8 @@ def test_arrow_mode_bit_identical_to_expr_mode(spark):
         docs_rows = _rows("train") + _rows("test") + [
             (100, None, "z"), (101, None, None)]
         docs = spark.createDataFrame(docs_rows, _SCHEMA)
-        # mode='expr' EXPLICITLY: arrow became the default (the r10
-        # bench regression fix), and defaulting here would compare
-        # arrow against arrow — vacuous (review finding)
+        # mode='expr' EXPLICITLY: arrow is the default, so defaulting
+        # here would compare arrow against arrow — vacuous
         expr = {r["doc_id"]: (r["pred_lang"], r["z_q"]) for r in
                 predict_lang_trained(docs, model, mode="expr").collect()}
         arrow = {r["doc_id"]: (r["pred_lang"], r["z_q"]) for r in

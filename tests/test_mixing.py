@@ -1,9 +1,7 @@
-"""Source-mixture construction (extensions/mixing.py): temperature
-weights, largest-remainder budget allocation, and the two-phase
-token-budget prefix fill — value-checked against DuckDB twins (zero
-tolerance on the integer fill DECISION, round-6 on the libm-pow weight
-VALUES) plus the duplicate/NULL-key/layout contracts the sampling
-family pins.
+"""Token-budget fill (extensions/mixing.py): the two-phase prefix fill,
+one batch and across batches — value-checked against the DuckDB twin
+(zero tolerance on the integer fill DECISION) plus the
+duplicate/NULL-key/layout contracts the sampling family pins.
 """
 
 from __future__ import annotations
@@ -13,8 +11,7 @@ from pyspark.sql import functions as F
 
 from data_engineering_etl_pipeline_spark.caching import engine_pin_scope
 from data_engineering_etl_pipeline_spark.extensions.mixing import (
-    allocate_budgets, mixture_weights, mixture_weights_sql,
-    sample_to_token_budget, temperature_sample, token_budget_sql)
+    sample_to_token_budget, token_budget_sql)
 from data_engineering_etl_pipeline_spark.io import load_table
 
 from .conftest import SF_DIR, assert_matches_oracle, partition_layouts
@@ -39,43 +36,6 @@ def test_token_budget_fill_matches_duckdb_twin(spark, duck):
         sql = (f"SELECT id AS doc_id, key AS lang, tokens AS n_tokens, "
                f"kept FROM ({twin})")
         assert_matches_oracle(got, duck, sql, "token_budget_fill")
-
-
-def test_mixture_weights_match_duckdb_at_round6(spark, duck):
-    """Weight VALUES at the documented round-6 libm-pow tolerance; the
-    count column is exact."""
-    docs = load_table(spark, SF_DIR, "documents")
-    got = (mixture_weights(docs, "lang", alpha=0.3)
-           .select("source", "n", F.round("weight", 6).alias("weight")))
-    assert_matches_oracle(got, duck, mixture_weights_sql("lang", 0.3),
-                          "mixture_weights")
-    # token-mass variant: n = sum of a token column
-    got_t = (mixture_weights(docs.withColumn("nt", F.length("text")),
-                             "lang", alpha=0.7, token_col="nt")
-             .select("source", "n", F.round("weight", 6).alias("weight")))
-    assert_matches_oracle(
-        got_t, duck, mixture_weights_sql("lang", 0.7, "length(text)"),
-        "mixture_weights_tokens")
-
-
-def test_allocate_budgets_exact_total_and_determinism():
-    w = {"en": 0.62, "de": 0.23, "es": 0.15}
-    b = allocate_budgets(w, 1000)
-    assert sum(b.values()) == 1000
-    assert b == allocate_budgets(dict(reversed(list(w.items()))), 1000)
-    # largest remainder: 3 equal weights, total 100 -> 34/33/33 with the
-    # extra token going to the ascending-first source
-    eq = allocate_budgets({"c": 1.0, "a": 1.0, "b": 1.0}, 100)
-    assert eq == {"a": 34, "b": 33, "c": 33}
-    # weights need not sum to 1; None source sorts last at remainder ties
-    assert sum(allocate_budgets({"x": 3.0, None: 3.0}, 7).values()) == 7
-    assert allocate_budgets({"x": 1.0, None: 1.0}, 3) == {"x": 2, None: 1}
-    assert allocate_budgets({}, 10) == {}
-    assert allocate_budgets({"a": 0.0}, 10) == {"a": 0}
-    with pytest.raises(ValueError, match="negative"):
-        allocate_budgets({"a": -0.1}, 10)
-    with pytest.raises(ValueError, match="total_budget"):
-        allocate_budgets({"a": 1.0}, -1)
 
 
 def test_duplicate_copies_share_one_slot_max_token_resolution(spark):
@@ -143,7 +103,7 @@ def test_null_key_group_null_tokens_and_const_budget(spark):
 
 
 def test_two_phase_prune_layout_invariance(spark):
-    """The partition-local prefix prune must be layout-invariant (the r8
+    """The partition-local prefix prune must be layout-invariant (the
     partition_layouts discipline): default spread and coalesce(1) give
     identical kept sets — and both equal the naive single-window Spark
     computation over the same hash order."""
@@ -172,86 +132,10 @@ def test_two_phase_prune_layout_invariance(spark):
     assert {r["id"] for r in naive.collect()} == kept_sets[0][1]
 
 
-def test_temperature_sample_end_to_end(spark):
-    """The composed op: per-source kept token mass never exceeds the
-    allocated budget, budgets sum to exactly the total, and the whole
-    thing is rerun-deterministic."""
-    rows = [(i, ["en", "en", "en", "de"][i % 4], 10 + (i % 5))
-            for i in range(200)]
-    df = spark.createDataFrame(rows, "doc_id long, lang string, nt long")
-    with engine_pin_scope():
-        out = temperature_sample(df, source_col="lang", token_col="nt",
-                                 total_budget=900, alpha=0.5,
-                                 id_col="doc_id", salt="temp-test")
-        got = out.collect()
-    w = {r["source"]: r["weight"] for r in
-         mixture_weights(df, "lang", 0.5, token_col="nt").collect()}
-    budgets = allocate_budgets(w, 900)
-    assert sum(budgets.values()) == 900
-    kept_mass = {}
-    for r in got:
-        if r["kept"]:
-            kept_mass[r["lang"]] = kept_mass.get(r["lang"], 0) + r["nt"]
-    for lang, mass in kept_mass.items():
-        assert mass <= budgets[lang], (lang, mass, budgets)
-    # flattening: de (the rare source) gets a larger budget share than
-    # its natural token share under alpha < 1
-    nat = {r["source"]: r["n"] for r in
-           mixture_weights(df, "lang", 1.0, token_col="nt").collect()}
-    de_nat = nat["de"] / sum(nat.values())
-    assert budgets["de"] / 900 > de_nat
-    with engine_pin_scope():
-        rerun = {(r["doc_id"], r["kept"]) for r in
-                 temperature_sample(df, source_col="lang", token_col="nt",
-                                    total_budget=900, alpha=0.5,
-                                    id_col="doc_id",
-                                    salt="temp-test").collect()}
-    assert rerun == {(r["doc_id"], r["kept"]) for r in got}
-
-
-def test_prep_mixture_stage_composition(spark):
-    """r10 composition: prepare_training_corpus(mixture=...) keeps
-    exactly the docs temperature_sample selects over the cleaned
-    corpus's whitespace-token mass (source read back from the raw
-    frame by id); off by default so the prep driver oracle is
-    untouched."""
-    from data_engineering_etl_pipeline_spark.extensions.prep import (
-        prepare_training_corpus)
-
-    def page(tag):
-        w = [f"{tag}{chr(97 + k)}{chr(97 + (k * 7) % 26)}word"
-             for k in range(18)]
-        return "\n".join((" ".join(w[:6]) + ".", " ".join(w[6:12]) + ".",
-                          " ".join(w[12:]) + "!"))
-
-    rows = [(i, page(f"s{chr(97 + i // 26)}{chr(97 + i % 26)}x"),
-             "en" if i < 24 else "de") for i in range(30)]
-    docs = spark.createDataFrame(rows, "doc_id long, text string, lang string")
-    with engine_pin_scope():
-        base = prepare_training_corpus(docs, min_quality=0.01).toPandas()
-    assert len(base) == 30  # clean corpus: nothing drops without mixture
-    cand_rows = [(int(r["doc_id"]), "en" if r["doc_id"] < 24 else "de",
-                  len(r["text"].split())) for _, r in base.iterrows()]
-    cand = spark.createDataFrame(cand_rows, "doc_id long, lang string, nt long")
-    with engine_pin_scope():
-        exp = {r["doc_id"] for r in
-               temperature_sample(cand, "lang", "nt", total_budget=300,
-                                  alpha=0.5, salt="mix-prep").collect()
-               if r["kept"]}
-        got = {r["doc_id"] for r in prepare_training_corpus(
-            docs, min_quality=0.01,
-            mixture={"total_budget": 300, "alpha": 0.5,
-                     "salt": "mix-prep"}).collect()}
-    # every doc is 18 whitespace tokens: en 432, de 108; sqrt weights
-    # split 300 -> 200/100 -> 11 en + 5 de docs survive
-    assert got == exp
-    assert len(got) == 16
-
-
 def test_negative_tokens_clamped_and_null_ids_never_kept(spark, duck):
-    """Review findings pinned: (a) negative token counts (F.size of a
-    NULL array is -1) are clamped to 0 in BOTH engines — a negative
-    mass would break the prune's monotone-prefix soundness; (b) NULL
+    """(a) Negative token counts (F.size of a NULL array is -1) are
+    clamped to 0 in BOTH engines — a negative mass would break the
+    prune's monotone-prefix soundness; (b) NULL
     ids are never budget candidates (kept=False, consuming nothing)
     and the twin mirrors by excluding them."""
     rows = [(1, "a", -7), (2, "a", 5), (None, "a", 1), (3, "a", 6)]
@@ -277,25 +161,14 @@ def test_negative_tokens_clamped_and_null_ids_never_kept(spark, duck):
     duck.execute("DROP TABLE negrows")
 
 
-def test_quoted_budget_keys_and_all_zero_mass(spark, duck):
-    """Review findings pinned: (a) a budget key containing a single
-    quote must embed as a doubled-quote SQL literal, not repr()'s
-    double-quoted identifier; (b) a corpus whose every source has zero
-    token mass allocates all-zero budgets instead of raising."""
+def test_quoted_budget_keys(duck):
+    """A budget key containing a single quote must embed as a
+    doubled-quote SQL literal, not repr()'s double-quoted identifier."""
     twin = token_budget_sql("id", "k", "t", {"o'neil": 5}, "q-test",
                             table="(SELECT 1 AS id, 'o''neil' AS k, "
                                   "3 AS t)")
     rows = duck.execute(twin).fetchall()
     assert rows == [(1, "o'neil", 3, True)]
-    zero = spark.createDataFrame([(1, "a", 0), (2, "b", None)],
-                                 "doc_id long, lang string, nt long")
-    with engine_pin_scope():
-        out = temperature_sample(zero, source_col="lang", token_col="nt",
-                                 total_budget=100, alpha=0.5)
-        got = {r["doc_id"]: r["kept"] for r in out.collect()}
-    # zero-mass sources get zero budgets; zero-token docs at budget 0
-    # have inclusive cum 0 <= 0 and are kept (they are free)
-    assert got == {1: True, 2: True}
 
 
 def test_incremental_fill_across_batches(spark, duck):
@@ -367,7 +240,7 @@ def test_incremental_fill_across_batches(spark, duck):
 
 
 def test_incremental_fill_duplicate_copies_charge_budget_once(spark):
-    """r10 advisor (medium): a batch carrying duplicate (id, key) copies
+    """A batch carrying duplicate (id, key) copies
     must charge the consumed state ONCE per entity, at the MAX-resolved
     token — not once per copy — or later batches see a silently shrunken
     remaining budget."""
@@ -398,36 +271,8 @@ def test_incremental_fill_duplicate_copies_charge_budget_once(spark):
         assert {r["k"]: r["consumed"] for r in s2.collect()} == {"a": 20}
 
 
-def test_mixture_weights_clamp_negative_mass(spark, duck):
-    """r10 advisor (low): negative per-row token masses (F.size of a
-    NULL array is -1) clamp to 0 in both engines — no NaN weights, no
-    skewed normalizer."""
-    rows = [(1, "a", -3), (2, "a", 10), (3, "b", 5), (4, "b", -1)]
-    df = spark.createDataFrame(rows, "doc_id long, lang string, nt long")
-    got = {r["source"]: (r["n"], round(r["weight"], 6)) for r in
-           mixture_weights(df, "lang", alpha=0.5, token_col="nt").collect()}
-    assert got["a"][0] == 10 and got["b"][0] == 5
-    assert all(w == w for _, w in got.values())  # no NaN
-    duck.execute("CREATE OR REPLACE TABLE negmass(doc_id BIGINT, "
-                 "lang VARCHAR, nt BIGINT)")
-    duck.executemany("INSERT INTO negmass VALUES (?, ?, ?)", rows)
-    want = {r[0]: (r[1], r[2]) for r in duck.execute(
-        mixture_weights_sql("lang", 0.5, "nt", table="negmass")).fetchall()}
-    assert want == got
-    duck.execute("DROP TABLE negmass")
-    # an all-negative source clamps to mass 0 and allocate_budgets
-    # receives a finite weight (0), not NaN
-    neg = spark.createDataFrame([(1, "x", -5)],
-                                "doc_id long, lang string, nt long")
-    with engine_pin_scope():
-        out = temperature_sample(neg, source_col="lang", token_col="nt",
-                                 total_budget=10, alpha=0.5,
-                                 id_col="doc_id")
-        assert [r["kept"] for r in out.collect()] == [True]  # clamped 0 fits
-
-
 def test_token_budget_sql_empty_budgets_valid(spark, duck):
-    """r10 advisor (low): an empty budget dict must emit VALID SQL (a
+    """An empty budget dict must emit VALID SQL (a
     typed empty relation) reproducing the engine's all-budget-0 answer."""
     twin = token_budget_sql("id", "k", "t", {}, "empty-test",
                             table="(SELECT 1 AS id, 'a' AS k, 3 AS t "

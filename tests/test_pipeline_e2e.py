@@ -250,7 +250,6 @@ KEEP = {
     # references that tests compare live code against
     "_ta_one_asset": "pandas reference for ta._ta_partition",
     "epoch_plan_sql": "DuckDB twin of corpus.epoch_plan",
-    "mixture_weights_sql": "DuckDB twin of mixing.mixture_weights",
     "rolling_fingerprint": "expression twin of rolling_fingerprint_udf",
     "top_ngram_fraction": "expression twin of top_ngram_fraction_udf",
     "apply_pca": "BLAS reference project_fold is checked against",

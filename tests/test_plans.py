@@ -165,39 +165,36 @@ def test_single_shuffle_operators(spark, name):
 
 
 def test_exact_dedup_shuffles_fingerprints_not_text(spark):
-    """The corpus-wide exact-dedup exchange must key on
-    the (xxhash64, length) fingerprint — 12-byte keys — never the raw
-    document text. The only text-keyed aggregation left in the plan is the
-    phase-2 collision resolver, which consumes candidate (multi-member
-    fingerprint) rows alone."""
+    """Every exact-dedup exchange must key on the (xxhash64, length)
+    fingerprint — 12-byte keys — never the raw document text. Text takes
+    part only in the group/window keys above the fingerprint exchange,
+    which already clusters them, so it never becomes an exchange key."""
     p = plan_of(spark, "doc_exact_dedup")
-    # phase-1 exchange keys on the fingerprint columns
     assert "hashpartitioning(__fp" in p, f"fingerprint exchange missing:\n{p}"
-    # phase-2 text agg exists but sits above the candidate semi-join, i.e.
-    # every text-keyed exchange is downstream of a Join on the fingerprint.
-    # EXACTLY one: the batch leg's collision resolver. The incremental legs
-    # must never add a text-keyed exchange — their within-batch dedup
-    # exchanges on the fingerprint alone and the index join keys on
-    # fingerprints alone.
-    assert p.count("hashpartitioning(text") == 1, \
-        "text-keyed exchanges != 1 — raw documents are shuffling as keys"
+    # none in any leg: the batch groups and the incremental legs'
+    # within-batch dedup exchange on the fingerprint alone, and the index
+    # join keys on fingerprints alone
+    assert p.count("hashpartitioning(text") == 0, \
+        "text-keyed exchange — raw documents are shuffling as keys"
     # the row is a 3-leg composition (batch + incr_fresh + index), so
     # the absolute bound covers all legs; each leg's exchanges carry
     # fingerprints/ids, never text keys (asserted above)
     assert shuffles(p) <= 16, f"exact dedup grew extra shuffles:\n{p}"
 
 
-def test_exact_dedup_keep_first_scans_once(spark):
-    """The deduped-corpus form runs its input lineage ONCE: over a cleaned
-    and scrubbed parquet scan the plan holds one file scan and one shuffle,
-    keyed on the fingerprint. A plan that feeds the input to several
-    branches (a fingerprint count, the unique rows, the candidates) re-runs
-    the scan and both regex map stages once per branch."""
+@pytest.mark.parametrize("op", ["exact_dedup_keep_first",
+                                "exact_dedup_groups"])
+def test_exact_dedup_scans_once(spark, op):
+    """Both exact-dedup operators (the deduped corpus and the group
+    report) run their input lineage ONCE: over a cleaned and scrubbed
+    parquet scan the plan holds one file scan and one shuffle, keyed on
+    the fingerprint. A plan that feeds the input to several branches (a
+    fingerprint count, the unique rows, the candidates) re-runs the scan
+    and both regex map stages once per branch."""
     from pyspark.sql import functions as F
 
+    from data_engineering_etl_pipeline_spark.extensions import dedup
     from data_engineering_etl_pipeline_spark.extensions.cleaning import c4_stats
-    from data_engineering_etl_pipeline_spark.extensions.dedup import (
-        exact_dedup_keep_first)
     from data_engineering_etl_pipeline_spark.extensions.pii import scrub_pii
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
@@ -205,7 +202,7 @@ def test_exact_dedup_keep_first_scans_once(spark):
                .filter(F.col("keep_page"))
                .select("doc_id", F.col("cleaned").alias("text")))
     scrubbed = cleaned.select("doc_id", scrub_pii("text").alias("text"))
-    p = plan_text(exact_dedup_keep_first(scrubbed, "doc_id", "text"))
+    p = plan_text(getattr(dedup, op)(scrubbed, "doc_id", "text"))
     nodes = [line for line in p.splitlines() if line.strip().startswith("(")]
     assert sum("Scan parquet" in line for line in nodes) == 1, p
     assert shuffles(p) == 1, p

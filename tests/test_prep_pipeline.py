@@ -120,28 +120,3 @@ def test_pipeline_is_deterministic(spark, prepared):
         a = prepared[col].sort_index()
         b = again[col].sort_index()
         assert (a.fillna(-1) == b.fillna(-1)).all(), col
-
-
-def test_gopher_stage_filters_short_docs(spark):
-    """apply_gopher=True adds the Gopher document rules after the quality
-    floor: a C4-clean 60-word doc with stop words survives; a C4-clean
-    15-word doc fails the 50-word floor and is dropped."""
-    def sent(ws):
-        return " ".join(ws) + "."
-    # stop words mid-sentence: a trailing "that." would not exact-match
-    # the lowercased token "that" (documented simplification)
-    w18 = _words("gq", 18)
-    long_ws = (["the"] + w18[:9] + ["that"] + w18[9:])
-    long_doc = _page(sent(long_ws), sent(long_ws), sent(long_ws))
-    short_doc = _page(sent(_words("sq", 5)), sent(_words("tq", 5)),
-                      sent(_words("vq", 5)))
-    df = spark.createDataFrame([(0, long_doc), (1, short_doc)],
-                               "doc_id long, text string")
-    with_g = prepare_training_corpus(
-        df, None, min_quality=0.05, apply_gopher=True,
-        pack_budget=200, n_shards=2).toPandas()
-    without = prepare_training_corpus(
-        df, None, min_quality=0.05,
-        pack_budget=200, n_shards=2).toPandas()
-    assert set(with_g["doc_id"]) == {0}
-    assert set(without["doc_id"]) == {0, 1}

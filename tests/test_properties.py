@@ -270,10 +270,10 @@ _texts_strategy = st.lists(
 @SET
 @given(texts=_texts_strategy, weak=st.booleans())
 def test_exact_dedup_two_phase_equals_text_groupby(spark, texts, weak):
-    """The two-phase fingerprint plan must be bit-identical to a plain
+    """The fingerprint-keyed plan must be bit-identical to a plain
     groupBy on raw text — for both the default xxhash64+length fingerprint
-    and a deliberately colliding weak one (length only), which routes many
-    distinct texts through the phase-2 exact resolver."""
+    and a deliberately colliding weak one (length only), which puts many
+    distinct texts in one fingerprint group for the text key to split."""
     from data_engineering_etl_pipeline_spark.extensions.dedup import (
         exact_dedup_groups, exact_dedup_keep_first)
 
