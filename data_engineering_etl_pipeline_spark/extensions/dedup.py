@@ -104,12 +104,24 @@ def exact_dedup_keep_first(docs: DataFrame, id_col: str = "doc_id",
     composes (``prepare_training_corpus`` stage 3).
 
     One pass over ``docs``: a single exchange keyed on the
-    ``(xxhash64(text), length)`` fingerprint, never on text, then a
-    ``row_number`` window over ``(fp, len, text)`` ordered by id keeps the
-    min-id row per distinct text. The exchange already clusters every
-    window partition (a hash on a subset of the window keys satisfies it),
-    so the window adds a sort, not a second shuffle; text takes part in
-    the window key only to split the rare fingerprint collision.
+    ``(xxhash64(text), length)`` fingerprint, never on text, then a window
+    over the fingerprint alone, ordered by ``(text, id)``. Equal texts sit
+    next to each other in that order with the min id first, so a row is
+    kept when it opens its partition or its text is not null-safe equal to
+    the previous row's — the min-id row per distinct text, NULL text
+    included (the NULLs sort together and ``<=>`` matches them). The
+    exchange already clusters the window partition, so the window adds a
+    sort, not a second shuffle; the text order splits the rare
+    fingerprint collision.
+
+    Why the window is keyed on the fingerprint alone: Catalyst pushes a
+    filter that references only a window's partition columns below the
+    window, and from there below the exchange. With ``text`` among the
+    partition keys, a downstream filter on text (the quality floor) sank
+    under the exchange and re-derived the text there from ``docs``' own
+    expressions, so every regex stage upstream (C4 cleaning, the PII
+    scrub) ran twice per document. The fingerprint columns exist only in
+    this operator, so no filter from above can reference them alone.
 
     The trade: every row's text rides the exchange as payload, where a
     two-phase plan (fingerprint counts first, text only for multi-member
@@ -120,10 +132,13 @@ def exact_dedup_keep_first(docs: DataFrame, id_col: str = "doc_id",
     """
     part, fp_names = _fingerprint_exchange(docs, ["*"], text_col,
                                            fingerprint)
-    w = Window.partitionBy(*fp_names, text_col).orderBy(F.col(id_col).asc())
-    return (part.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn", *fp_names))
+    w = Window.partitionBy(*fp_names).orderBy(F.col(text_col).asc(),
+                                              F.col(id_col).asc())
+    opens_text = (F.row_number().over(w) == 1) | ~F.col(text_col).eqNullSafe(
+        F.lag(text_col).over(w))
+    return (part.withColumn("__keep", opens_text)
+            .filter(F.col("__keep"))
+            .drop("__keep", *fp_names))
 
 
 def doc_fingerprints(docs: DataFrame, id_col: str = "doc_id",

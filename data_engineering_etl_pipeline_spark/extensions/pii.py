@@ -13,7 +13,7 @@ lookarounds) so a DuckDB twin verifies counts AND masked text bit-for-bit.
 Pattern ordering matters: masking runs in the declared order (IPv4 before
 phone so dotted octets are never half-eaten by the phone pattern), and
 both engines apply the identical order, so the output is engine-portable
-by construction. One honest caveat (r5 review): a placeholder's boundary
+by construction. One caveat: a placeholder's boundary
 characters CAN occasionally mint a later match that the raw text lacked —
 e.g. ``foo@bar.com123-45-6789`` masks to ``<EMAIL><SSN>`` because ``>``
 creates the word boundary the SSN pattern needed, while ``pii_counts`` on
@@ -28,9 +28,9 @@ from pyspark.sql import functions as F
 
 # (name, regex, placeholder) — masking applies in THIS order. All patterns
 # RE2-safe (no backreferences/lookarounds). Card covers separated AND
-# contiguous 16-digit PANs; phone covers dashed/dotted, spaced, and
-# (area)-parenthesized forms (r5 review finding: the contiguous PAN — the
-# most common dump form — previously passed through unmasked).
+# contiguous 16-digit PANs (the contiguous PAN is the most common dump
+# form); phone covers dashed/dotted, spaced, and (area)-parenthesized
+# forms.
 PII_PATTERNS: list[tuple[str, str, str]] = [
     ("email", r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}", "<EMAIL>"),
     ("card", r"\b\d{4}[ -]\d{4}[ -]\d{4}[ -]\d{4}\b|\b\d{16}\b", "<CARD>"),
@@ -38,8 +38,7 @@ PII_PATTERNS: list[tuple[str, str, str]] = [
     ("ipv4", r"\b(?:\d{1,3}\.){3}\d{1,3}\b", "<IP>"),
     # both alternatives carry the trailing \b: without it the
     # parenthesized branch masked the first 4 of a longer digit run —
-    # '(555) 123-45678' → '<PHONE>8', leaking a residual digit (r5
-    # advisor finding)
+    # '(555) 123-45678' → '<PHONE>8', leaking a residual digit
     ("phone",
      r"\(\d{3}\)[ -]?\d{3}[-. ]\d{4}\b|\b\d{3}[-. ]\d{3}[-. ]\d{4}\b",
      "<PHONE>"),

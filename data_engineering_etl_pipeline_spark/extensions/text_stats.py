@@ -39,8 +39,7 @@ def punct_ratio(text: str | Column) -> Column:
     Unicode-aware (``\\p{L}\\p{N}`` — Java and RE2 agree on these classes,
     verified cross-engine): the former ASCII class counted every é/中/я as
     punctuation, collapsing quality_score to ~0 for non-English text and
-    silently dropping whole languages at prep's quality floor (r5 review
-    finding)."""
+    silently dropping whole languages at prep's quality floor."""
     t = F.col(text) if isinstance(text, str) else text
     nonspace = F.length(F.regexp_replace(t, r"\s+", ""))
     punct = F.length(F.regexp_replace(t, r"[\p{L}\p{N}\s]", ""))
@@ -71,8 +70,8 @@ def predict_lang(toks: Column) -> Column:
     and higher-order functions are CodegenFallback — no whole-stage
     codegen, no subexpression elimination — so every repeat re-filtered
     the whole token array (~60 interpreted array passes per row,
-    measured as the dominant cost of ``doc_text_stats`` at sf0.1; r12
-    guide §2.3 'don't compute things you throw away'). The fold visits
+    measured as the dominant cost of ``doc_text_stats`` at sf0.1: don't
+    compute what is thrown away). The fold visits
     languages in ascending code order with a strict ``>``, seeded with
     ``(0, 'und')`` — identical semantics: argmax, ties break to the
     alphabetically first language, all-zero (or NULL tokens) → 'und'.
@@ -94,11 +93,11 @@ def quality_score(text: str | Column, toks: Column | None = None) -> Column:
     × alpha-token fraction. Mirrors the 'length/punct/stopword ratio' style
     filters used in public LLM-data pipelines (C4/Gopher rules).
     Alpha = any Unicode letter (``\\p{L}``, cross-engine-identical), so
-    non-Latin prose scores on its merits (r5 review finding).
+    non-Latin prose scores on its merits.
     ``toks``: a precomputed whitespace token array for the same text —
     pass it where the pipeline already materialized the split (must equal
     ``tokens(text)``; prepare_training_corpus threads its shared token
-    projection through here, r5 VERDICT item 3)."""
+    projection through here, so the split is computed once per row)."""
     t = F.col(text) if isinstance(text, str) else text
     if toks is None:
         toks = tokens(t)
@@ -175,8 +174,8 @@ def rolling_fingerprint_udf(text: str | Column, mod: int = 1_000_000_007,
     base^(L−1−j) mod p``: codepoints come from one C-speed UTF-32 decode
     (``ord`` ≡ UTF-32 unit ≡ Spark/DuckDB codepoint, so the same DuckDB
     oracle verifies both), powers from a cached table, and the per-doc work
-    is two elementwise ops + a sum — no per-character Python anywhere
-    (r3 VERDICT item 6 removed the last per-char hot loop). Overflow-safe
+    is two elementwise ops + a sum — no per-character Python anywhere, the
+    hot loop a per-char fold would be on long documents. Overflow-safe
     in int64: cp·p < 2^51 and the final sum of (<mod) terms stays under
     2^63 for any real document. Use this one in pipelines; keep the
     expression form for pure-SQL contexts.
@@ -189,9 +188,9 @@ def rolling_fingerprint_udf(text: str | Column, mod: int = 1_000_000_007,
         for t in texts:
             if t is None:
                 # NULL → NULL, matching the expression fold and the SQL
-                # twin's natural NULL propagation (r5 review finding: the
-                # old NULL→0 here made NULL docs collide with empty docs
-                # and diverge from the documented-equivalent forms)
+                # twin's natural NULL propagation (NULL→0 would make NULL
+                # docs collide with empty docs and diverge from the
+                # documented-equivalent forms)
                 out.append(None)
             elif not t:
                 out.append(0)  # empty → 0, same as the fold
@@ -213,8 +212,8 @@ def duplicate_line_fraction(text: str | Column) -> Column:
     dominated by repeated lines are boilerplate/spam). Empty lines are
     excluded BEFORE the ratio: blank paragraph separators are structure,
     not repetition, and counting them scored ordinary 10-paragraph prose
-    at ~0.42 — past the Gopher 0.3 threshold (r5 review finding; the
-    cleaning.py Gopher twin already filtered them). Pure array
+    at ~0.42 — past the Gopher 0.3 threshold (the cleaning.py Gopher twin
+    filters them the same way). Pure array
     expressions: 1 − distinct/total over the filtered newline split;
     single-line and all-blank docs score 0.0."""
     t = F.col(text) if isinstance(text, str) else text
@@ -262,8 +261,8 @@ def top_ngram_fraction(text: str | Column, n: int = 2) -> Column:
 # Unicode whitespace where Spark's trim() removes ONLY spaces (0x20) and
 # split(limit=-1) KEEPS boundary empty tokens. Any Python-side kernel that
 # claims equality with a `split(trim(text), '\s+')` expression must
-# tokenize with THIS helper, not strip()/\s+ (r4 review finding: the
-# shortcut diverges on any text with trailing newline/tab or NBSP).
+# tokenize with THIS helper, not strip()/\s+ (the shortcut diverges on
+# any text with trailing newline/tab or NBSP).
 _JAVA_WS = __import__("re").compile(r"[ \t\n\x0B\f\r]+")
 
 

@@ -21,9 +21,11 @@ from __future__ import annotations
 
 import os
 from collections.abc import Mapping, Sequence
+from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 STAR_TABLES = (
     "region", "nation", "customer", "supplier", "part",
@@ -254,113 +256,98 @@ def _publish_manifest(manifest: DataFrame, root: str) -> str:
     return vname
 
 
-def read_shard_manifest(spark: SparkSession, path: str) -> DataFrame:
+def read_shard_manifest(spark: SparkSession, path: str,
+                        schema: StructType | None = None) -> DataFrame:
     """Resolve the CURRENT manifest of a :func:`write_training_shards`
     directory: follow the ``LATEST`` pointer; if a publish is mid-flip (or
     the pointed-at version was pruned under a very slow reader), fall back
     to the highest _SUCCESS-committed version; pre-versioned layouts read
-    the flat root directly."""
+    the flat root directly. ``schema``, when the caller knows it (the sink
+    that just published), skips the parquet schema-inference job."""
     root = path.rstrip("/") + "_manifest"
+    reader = spark.read.schema(schema) if schema is not None else spark.read
     fs, _ = _hadoop_fs(spark, root)
     jvm = spark.sparkContext._jvm
     jpath = jvm.org.apache.hadoop.fs.Path
     latest = jpath(root, "LATEST")
     if fs.exists(latest):
-        reader = jvm.java.io.BufferedReader(
+        pointer = jvm.java.io.BufferedReader(
             jvm.java.io.InputStreamReader(fs.open(latest), "UTF-8"))
-        vname = reader.readLine()
-        reader.close()
+        vname = pointer.readLine()
+        pointer.close()
         if vname and fs.exists(jpath(root, vname)):
-            return spark.read.parquet(f"{root}/{vname}")
+            return reader.parquet(f"{root}/{vname}")
     committed = [name for _, name in reversed(_manifest_versions(spark, root))
                  if fs.exists(jpath(root, f"{name}/_SUCCESS"))]
     if committed:
-        return spark.read.parquet(f"{root}/{committed[0]}")
+        return reader.parquet(f"{root}/{committed[0]}")
     # legacy flat (unversioned) layout, or no manifest at all — let the
     # reader surface Spark's own path error in the latter case
-    return spark.read.parquet(root)
+    return reader.parquet(root)
 
 
-def write_training_shards(df: DataFrame, path: str, shard_col: str = "shard",
-                          max_rows_per_file: int | None = None,
-                          mode: str = "overwrite") -> DataFrame:
-    """Training-shard sink: write ``df`` partitioned by ``shard_col`` (the
-    deterministic hash shard that ``corpus.pack_sequences`` assigns), one
-    directory per shard, and return a shard MANIFEST DataFrame
-    ``(shard, n_rows, n_files, n_tokens)`` — the sidecar a training loader
-    reads (via :func:`read_shard_manifest`) to plan epoch mixing without
-    listing or scanning the shards.
+# the directory name Spark's writer gives a NULL (or empty-string)
+# partition value, and reads back as NULL
+_NULL_PARTITION_DIR = "__HIVE_DEFAULT_PARTITION__"
+
+
+def _files_per_partition(files: list[str], col: str) -> dict[str, int]:
+    """Data-file count per ``col=<value>`` directory of a single-level
+    partitioned write, keyed by the unescaped directory value."""
+    out: dict[str, int] = {}
+    prefix = f"{col}="
+    for f in files:
+        d = f.rsplit("/", 2)[-2]
+        if d.startswith(prefix):
+            v = unquote(d[len(prefix):])
+            out[v] = out.get(v, 0) + 1
+    return out
+
+
+def write_training_shards(df: DataFrame, path: str,
+                          shard_col: str = "shard") -> DataFrame:
+    """Training-shard sink: overwrite ``path`` with ``df`` partitioned by
+    ``shard_col`` (the deterministic hash shard that
+    ``corpus.pack_sequences`` assigns), one directory per shard, and return
+    a shard MANIFEST DataFrame ``(shard, n_rows, n_files, n_tokens)`` — the
+    sidecar a training loader reads (via :func:`read_shard_manifest`) to
+    plan epoch mixing without listing or scanning the shards.
 
     Scale shape: ``partitionBy(shard_col)`` keeps the write map-only when
     the upstream already clusters by shard (pack_sequences' window has
-    just sorted within shards, so it does); ``max_rows_per_file`` maps to
-    ``maxRecordsPerFile``, bounding file sizes WITHOUT a repartition —
-    the writer rolls files, no extra exchange.
+    just sorted within shards, so it does).
 
     Every count in the manifest comes from the WRITTEN FILES, never from
     ``df``'s lineage (a recomputed nondeterministic upstream could diverge
-    counts from disk). ``mode='overwrite'``
-    aggregates the directory back (one map-side-combinable groupBy over a
-    cheap columnar scan). ``mode='append'`` lists the directory before and
-    after the write and aggregates exactly the NEW files (``basePath``
-    keeps the shard partition column) — O(batch) scan per ingest — then
-    merges with the prior manifest. The per-shard ``n_files`` column makes
-    the prior manifest self-validating: if the pre-write listing disagrees
-    with the manifest's file total (a previous run crashed between data
-    write and manifest publish, leaving a stale manifest), the merge is
-    abandoned and the manifest REBUILT from the full directory, so staleness
-    heals on the next ingest instead of
-    compounding forever. Publish is versioned + pointer-flip
-    (:func:`_publish_manifest`): readers never observe a missing or torn
-    manifest. Single-writer remains assumed (concurrent ingests need an
-    external lock — unchanged)."""
+    counts from disk): ``n_rows`` and ``n_tokens`` from one
+    map-side-combinable group-by over a column-pruned scan of the written
+    directory, ``n_files`` from the committed-file listing. The scan and
+    the returned manifest are read with the schemas already known here,
+    so neither pays a schema-inference job, and counting files from the
+    listing keeps the aggregate at one shuffle (a distinct count of
+    ``input_file_name()`` would add a second). Publish is versioned +
+    pointer-flip (:func:`_publish_manifest`): readers never observe a
+    missing or torn manifest. Single-writer is assumed (concurrent writers
+    need an external lock)."""
     spark = df.sparkSession
     root = path.rstrip("/") + "_manifest"
+    df.write.mode("overwrite").partitionBy(shard_col).parquet(path)
 
-    def _agg(frame: DataFrame):
-        # input_file_name() must be PROJECTED before the aggregate
-        # (nondeterministic expressions are rejected inside agg args)
-        staged = frame.withColumn("__file", F.input_file_name())
-        agg = [F.count(F.lit(1)).alias("n_rows"),
-               F.countDistinct("__file").alias("n_files")]
-        if "n_tokens" in frame.columns:
-            agg.append(F.sum("n_tokens").cast("long").alias("n_tokens"))
-        return staged.groupBy(shard_col).agg(*agg)
-
-    prior = None
-    before: set[str] = set()
-    if mode == "append":
-        fs, jroot = _hadoop_fs(spark, root)
-        if fs.exists(jroot):
-            prior = read_shard_manifest(spark, path)
-            before = set(_list_part_files(spark, path))
-
-    writer = df.write.mode(mode)
-    if max_rows_per_file:
-        writer = writer.option("maxRecordsPerFile", int(max_rows_per_file))
-    writer.partitionBy(shard_col).parquet(path)
-
-    merged = None
-    if prior is not None and "n_files" in prior.columns:
-        prior_files = prior.agg(F.sum("n_files")).first()[0] or 0
-        if int(prior_files) == len(before):
-            new_files = [f for f in _list_part_files(spark, path)
-                         if f not in before]
-            if not new_files:
-                return prior  # empty batch: manifest already current
-            batch = _agg(spark.read.option("basePath", path)
-                         .parquet(*new_files))
-            both = prior.unionByName(batch, allowMissingColumns=True)
-            sums = [F.sum("n_rows").cast("long").alias("n_rows"),
-                    F.sum("n_files").cast("long").alias("n_files")]
-            if "n_tokens" in both.columns:
-                sums.append(F.sum("n_tokens").cast("long").alias("n_tokens"))
-            merged = both.groupBy(shard_col).agg(*sums)
-        # else: stale/diverged manifest detected — fall through to rebuild
-    manifest = merged if merged is not None else _agg(
-        spark.read.parquet(path))
+    tokens = ["n_tokens"] if "n_tokens" in df.columns else []
+    counts = (spark.read.schema(df.schema).parquet(path)
+              .groupBy(shard_col)
+              .agg(F.count(F.lit(1)).alias("n_rows"),
+                   *[F.sum(c).cast("long").alias(c) for c in tokens]))
+    # a partition value cast to string is its directory name, unescaped
+    files = _files_per_partition(_list_part_files(spark, path), shard_col)
+    dir_value = F.coalesce(F.col(shard_col).cast("string"),
+                           F.lit(_NULL_PARTITION_DIR))
+    n_files = (F.create_map(*[F.lit(x) for kv in files.items() for x in kv])
+               [dir_value] if files else F.lit(None))
+    manifest = counts.select(shard_col, "n_rows",
+                             n_files.cast("long").alias("n_files"), *tokens)
     _publish_manifest(manifest, root)
-    return read_shard_manifest(spark, path)
+    return read_shard_manifest(spark, path, manifest.schema)
 
 
 _PARTITION_ESCAPE_CHARS = set('"#%\'*/:=?\\{[]^') | {

@@ -706,47 +706,68 @@ def test_incremental_exact_dedup_legacy_index_refused(spark):
 
 
 def test_write_training_shards_manifest_and_layout(spark, tmp_path):
-    """The shard sink writes one directory per shard, bounds file sizes via
-    maxRecordsPerFile without a repartition, and the manifest's per-shard
-    row/file/token counts equal the written data exactly."""
+    """The shard sink writes one directory per shard (NULL shards, the
+    unpacked rows, in Spark's NULL directory), and the manifest's per-shard
+    row/file/token counts equal the written data exactly. The input is
+    spread over four partitions, so every shard lands in several files and
+    ``n_files``, which comes from the committed-file listing, is checked
+    against more than the trivial one."""
     import os
 
     from data_engineering_etl_pipeline_spark.io import (read_shard_manifest,
                                                         write_training_shards)
 
-    rows = [(i, i % 3, 10 + i % 7) for i in range(90)]
-    df = spark.createDataFrame(rows, "doc_id long, shard int, n_tokens long")
+    rows = [(i, i % 3 if i % 5 else None, 10 + i % 7) for i in range(90)]
+    df = spark.createDataFrame(
+        rows, "doc_id long, shard int, n_tokens long").repartition(4)
     out = str(tmp_path / "shards")
-    manifest = write_training_shards(df, out, max_rows_per_file=10)
-    got = {r["shard"]: (r["n_rows"], r["n_tokens"])
-           for r in manifest.collect()}
+    manifest = write_training_shards(df, out).collect()
+    got = {r["shard"]: (r["n_rows"], r["n_tokens"]) for r in manifest}
     want = {}
     for _, s, t in rows:
         n, tk = want.get(s, (0, 0))
         want[s] = (n + 1, tk + t)
     assert got == want
-    # layout: one directory per shard, files rolled at <=10 rows; n_files
-    # in the manifest matches the directory exactly (it is the staleness
-    # validator)
-    n_files_got = {r["shard"]: r["n_files"] for r in manifest.collect()}
-    for s in (0, 1, 2):
-        d = os.path.join(out, f"shard={s}")
+    n_files_got = {r["shard"]: r["n_files"] for r in manifest}
+    for s in (0, 1, 2, None):
+        d = os.path.join(out, "shard=" + (
+            "__HIVE_DEFAULT_PARTITION__" if s is None else str(s)))
         files = [f for f in os.listdir(d) if f.endswith(".parquet")]
-        assert len(files) >= 3   # 30 rows / 10 per file
-        assert n_files_got[s] == len(files)
-        assert spark.read.parquet(d).count() == 30
+        assert len(files) > 1, (s, files)
+        assert n_files_got[s] == len(files), (s, files)
+        assert spark.read.parquet(d).count() == want[s][0]
     # manifest readable through the pointer-resolving reader
-    assert read_shard_manifest(spark, out).count() == 3
-    # append ingest: the manifest merges the prior with counts aggregated
-    # from the BATCH'S OWN WRITTEN FILES (O(batch), never df lineage)
-    more = spark.createDataFrame([(100, 0, 5), (101, 1, 6)],
-                                 "doc_id long, shard int, n_tokens long")
-    m2 = {r["shard"]: (r["n_rows"], r["n_tokens"]) for r in
-          write_training_shards(more, out, mode="append").collect()}
-    assert m2[0] == (31, want[0][1] + 5)
-    assert m2[1] == (31, want[1][1] + 6)
-    assert m2[2] == want[2]
-    assert read_shard_manifest(spark, out).count() == 3
+    assert read_shard_manifest(spark, out).count() == 4
+
+
+def test_write_training_shards_job_count(spark, tmp_path):
+    """One shard write costs the write, the aggregate's one shuffle and
+    the manifest write: three Spark jobs, none outside a SQL execution.
+    A job outside every SQL execution is a parquet schema inference (the
+    read-back of the shards or of the manifest); the sink knows both
+    schemas, so it pays none. Counted through the status tracker."""
+    from data_engineering_etl_pipeline_spark.io import write_training_shards
+
+    df = spark.createDataFrame([(i, i % 3, 10 + i % 7) for i in range(30)],
+                               "doc_id long, shard int, n_tokens long")
+    sc = spark.sparkContext
+    group = "shard-sink-job-count"
+    sc.setJobGroup(group, "shard sink jobs")
+    try:
+        write_training_shards(df, str(tmp_path / "shards"))
+    finally:
+        sc.setJobGroup(None, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = set(sc.statusTracker().getJobIdsForGroup(group))
+    executions = spark._jsparkSession.sharedState().statusStore() \
+        .executionsList()
+    in_sql = set()
+    for i in range(executions.size()):
+        it = executions.apply(i).jobs().keysIterator()
+        while it.hasNext():
+            in_sql.add(int(it.next()))
+    assert not jobs - in_sql, f"schema-inference jobs: {sorted(jobs - in_sql)}"
+    assert len(jobs) <= 3, sorted(jobs)
 
 
 def test_write_training_shards_from_pin_one_file_per_shard(spark, tmp_path):
@@ -770,34 +791,6 @@ def test_write_training_shards_from_pin_one_file_per_shard(spark, tmp_path):
         assert len(files) == 1, (s, files)
 
 
-def test_shard_manifest_stale_heals_on_next_append(spark, tmp_path):
-    """A crash between data write and manifest publish must not leave the
-    manifest one batch stale FOREVER (appends merging on top of the stale
-    prior): the prior manifest's n_files total is validated against the
-    pre-write directory listing — a mismatch abandons the merge and rebuilds
-    from the full directory."""
-    from data_engineering_etl_pipeline_spark.io import (read_shard_manifest,
-                                                        write_training_shards)
-
-    df = spark.createDataFrame([(i, i % 2, 3) for i in range(20)],
-                               "doc_id long, shard int, n_tokens long")
-    out = str(tmp_path / "shards")
-    write_training_shards(df, out)
-    # simulate the crashed ingest: data lands, manifest publish never runs
-    orphan = spark.createDataFrame([(100, 0, 7), (101, 1, 9)],
-                                   "doc_id long, shard int, n_tokens long")
-    orphan.write.mode("append").partitionBy("shard").parquet(out)
-    stale = {r["shard"]: r["n_rows"]
-             for r in read_shard_manifest(spark, out).collect()}
-    assert stale == {0: 10, 1: 10}  # manifest is stale, as after a crash
-    # next healthy ingest detects the file-count mismatch and rebuilds
-    batch = spark.createDataFrame([(200, 0, 1)],
-                                  "doc_id long, shard int, n_tokens long")
-    healed = {r["shard"]: (r["n_rows"], r["n_tokens"]) for r in
-              write_training_shards(batch, out, mode="append").collect()}
-    assert healed == {0: (12, 30 + 7 + 1), 1: (11, 30 + 9)}
-
-
 def test_shard_manifest_concurrent_reader_never_sees_gap(spark, tmp_path):
     """During publishes a concurrent reader must always
     resolve SOME complete manifest — never a missing path, never a torn
@@ -812,7 +805,7 @@ def test_shard_manifest_concurrent_reader_never_sees_gap(spark, tmp_path):
     out = str(tmp_path / "shards")
     write_training_shards(df, out)
 
-    valid_totals = {30, 33, 36, 39, 42}  # after each committed append
+    valid_totals = {30, 3, 4, 5, 6}  # the first write, then each rewrite
     errors: list[Exception] = []
     seen: set[int] = set()
     stop = threading.Event()
@@ -832,16 +825,16 @@ def test_shard_manifest_concurrent_reader_never_sees_gap(spark, tmp_path):
     try:
         for b in range(4):
             batch = spark.createDataFrame(
-                [(1000 + 10 * b + i, i, 2) for i in range(3)],
+                [(1000 + 10 * b + i, i % 3, 2) for i in range(3 + b)],
                 "doc_id long, shard int, n_tokens long")
-            write_training_shards(batch, out, mode="append")
+            write_training_shards(batch, out)
     finally:
         stop.set()
         t.join(timeout=30)
     assert not errors, errors
     assert seen <= valid_totals, seen
     final = sum(r["n_rows"] for r in read_shard_manifest(spark, out).collect())
-    assert final == 42
+    assert final == 6
 
 
 def test_daily_snapshot_restores_partition_overwrite_mode(spark, tmp_path):

@@ -182,6 +182,21 @@ def test_exact_dedup_shuffles_fingerprints_not_text(spark):
     assert shuffles(p) <= 16, f"exact dedup grew extra shuffles:\n{p}"
 
 
+def _scrubbed_docs(spark):
+    """The corpus pipeline's input to exact dedup: C4-cleaned, then
+    PII-scrubbed text over one parquet scan of the documents table."""
+    from pyspark.sql import functions as F
+
+    from data_engineering_etl_pipeline_spark.extensions.cleaning import c4_stats
+    from data_engineering_etl_pipeline_spark.extensions.pii import scrub_pii
+
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    cleaned = (docs.select("doc_id", *c4_stats("text"))
+               .filter(F.col("keep_page"))
+               .select("doc_id", F.col("cleaned").alias("text")))
+    return cleaned.select("doc_id", scrub_pii("text").alias("text"))
+
+
 @pytest.mark.parametrize("op", ["exact_dedup_keep_first",
                                 "exact_dedup_groups"])
 def test_exact_dedup_scans_once(spark, op):
@@ -191,18 +206,9 @@ def test_exact_dedup_scans_once(spark, op):
     the fingerprint. A plan that feeds the input to several branches (a
     fingerprint count, the unique rows, the candidates) re-runs the scan
     and both regex map stages once per branch."""
-    from pyspark.sql import functions as F
-
     from data_engineering_etl_pipeline_spark.extensions import dedup
-    from data_engineering_etl_pipeline_spark.extensions.cleaning import c4_stats
-    from data_engineering_etl_pipeline_spark.extensions.pii import scrub_pii
 
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    cleaned = (docs.select("doc_id", *c4_stats("text"))
-               .filter(F.col("keep_page"))
-               .select("doc_id", F.col("cleaned").alias("text")))
-    scrubbed = cleaned.select("doc_id", scrub_pii("text").alias("text"))
-    p = plan_text(getattr(dedup, op)(scrubbed, "doc_id", "text"))
+    p = plan_text(getattr(dedup, op)(_scrubbed_docs(spark), "doc_id", "text"))
     nodes = [line for line in p.splitlines() if line.strip().startswith("(")]
     assert sum("Scan parquet" in line for line in nodes) == 1, p
     assert shuffles(p) == 1, p
@@ -212,6 +218,37 @@ def test_exact_dedup_scans_once(spark, op):
     assert len(exchanges) == 1, p
     assert "hashpartitioning(__fp" in exchanges[0], p
     assert "hashpartitioning(text" not in p, p
+
+
+def test_filter_over_exact_dedup_derives_text_once(spark):
+    """A text filter downstream of ``exact_dedup_keep_first`` (the quality
+    floor of the corpus pipeline) stays above the dedup's exchange, so the
+    cleaned and scrubbed text is derived once per document: every PII
+    placeholder appears in exactly one plan node, and no Filter below the
+    exchange references it. Were ``text`` a partition key of the dedup
+    window, Catalyst would push the filter below the window and the
+    exchange, re-deriving the whole C4 + PII chain there from the raw
+    page."""
+    from data_engineering_etl_pipeline_spark.extensions import dedup
+    from data_engineering_etl_pipeline_spark.extensions.pii import PII_PATTERNS
+    from data_engineering_etl_pipeline_spark.extensions.text_stats import (
+        quality_score)
+
+    kept = dedup.exact_dedup_keep_first(
+        _scrubbed_docs(spark), "doc_id", "text").filter(
+            quality_score("text") >= 0.2)
+    p = plan_text(kept)
+    # node id → its detail block; the plan is one chain, and the formatted
+    # ids number it bottom-up, so "below the exchange" is "a smaller id"
+    nodes = {int(b[1:b.index(")")]): b for b in p.split("\n\n")
+             if b.startswith("(")}
+    exchange = min(i for i, b in nodes.items()
+                   if b.startswith(f"({i}) Exchange"))
+    for _, _, placeholder in PII_PATTERNS:
+        holders = [i for i, b in nodes.items() if placeholder in b]
+        assert len(holders) == 1, (placeholder, holders, p)
+        assert not [i for i in holders if i < exchange
+                    and nodes[i].startswith(f"({i}) Filter")], (placeholder, p)
 
 
 def test_hml_factor_library_plan_single_shuffle(spark):
