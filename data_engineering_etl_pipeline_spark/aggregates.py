@@ -43,6 +43,15 @@ def canonical_aggregate(df: DataFrame,
     takes "any member's value"; we take the first non-null in group-scan
     order, deterministic given the agg's sort-free semantics is acceptable
     because backfill only fires when the chosen row is null).
+
+    All value columns come from the one winning row, so one ``max_by``
+    picks them as a struct. A ``max_by`` per column would build and
+    compare the priority struct once per column per row, on both the
+    partial and the final aggregate side: Spark shares neither the
+    argument nor the comparison across aggregate functions. The struct's
+    fields get positional names (``_0``, ``_1``, …), read back with
+    ``getField``, so a value column's own name (dotted, say) never has to
+    be resolved a second time.
     """
     is_native = (F.col(member_col) == F.col(canonical_col)).cast("int")
     # max_by over a lexicographic priority struct: (native?, priority, member)
@@ -52,11 +61,13 @@ def canonical_aggregate(df: DataFrame,
         F.col(priority_col).alias("prio"),
         F.col(member_col).alias("tie"),
     )
-    aggs: list[Column] = []
-    for c in value_cols:
-        chosen = F.max_by(F.col(c), priority)
-        backfill = F.first(F.col(c), ignorenulls=True)
-        aggs.append(F.coalesce(chosen, backfill).alias(c))
+    chosen = F.max_by(
+        F.struct(*[F.col(c).alias(f"_{i}") for i, c in enumerate(value_cols)]),
+        priority)
+    aggs: list[Column] = [
+        F.coalesce(chosen.getField(f"_{i}"),
+                   F.first(F.col(c), ignorenulls=True)).alias(c)
+        for i, c in enumerate(value_cols)]
     for c in sum_cols:
         aggs.append(F.sum(F.col(c)).alias(c))
     if count_alias:

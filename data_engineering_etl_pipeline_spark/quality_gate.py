@@ -37,8 +37,33 @@ class CircuitBreakerTripped(RuntimeError):
 
 def standardize_precision(df: DataFrame, cols: Sequence[str],
                           decimals: int = PRICE_DECIMALS) -> DataFrame:
-    """Round price columns to a fixed precision (reference :38-44)."""
-    return df.withColumns({c: F.round(F.col(c), decimals) for c in cols})
+    """Round price columns to a fixed precision (reference :38-44).
+
+    Bit for bit ``F.round(c, decimals)``, but a double column skips the
+    round where it cannot change the value. Spark rounds a double as
+    ``BigDecimal.valueOf(x).setScale(d, HALF_UP).doubleValue()``, and
+    ``valueOf`` parses ``Double.toString(x)``. Below 10**17 that string
+    has at most 17 significant digits; above it, JDK 17 may print 18, but
+    every such double is an integer and so is its string. Hence for
+    ``0 <= d <= 16`` and ``|x| >= 10**(16-d)`` the string has at most
+    ``d`` fractional digits, ``setScale`` only pads zeros, and the parse
+    returns ``x``. The gate's prices (d = 16, ``|x| >= 1``) all take the
+    pass-through branch, which saves a BigDecimal per value per plan node
+    the gated frame feeds. NULL, ``|x| < 1`` and -0.0 still take the round
+    branch; NaN and ±inf compare >= any bound in Spark and pass through,
+    which is what Spark's round returns for them. Non-double columns and
+    ``d`` outside [0, 16] (where large values really change, or the bound
+    is no exact double) keep the plain round."""
+    types = dict(df.dtypes)
+
+    def std(c: str) -> Column:
+        rounded = F.round(F.col(c), decimals)
+        if types.get(c) != "double" or not 0 <= decimals <= 16:
+            return rounded
+        return F.when(F.abs(F.col(c)) >= float(10 ** (16 - decimals)),
+                      F.col(c)).otherwise(rounded)
+
+    return df.withColumns({c: std(c) for c in cols})
 
 
 def apply_gate(df: DataFrame,

@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 
 from ..io import load_table
 from ..windows import (dominance_share, pct_change, rank_desc_average,
-                       w_cross, w_entity)
+                       rolling_std, rolling_zscore, w_cross, w_entity)
 from . import register
 
 _FEATURE_MATRIX_SQL = """
@@ -129,43 +129,28 @@ def supplier_feature_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         pct_change("close", 30, we).alias("ret_30d"),
     )
 
-    # One window expression per (aggregate, column) — Spark does NOT dedupe
-    # identical window expressions, so composing rolling_zscore/rolling_std
-    # helpers here would put ~26 agg slots in the Window operator (each
-    # helper re-creates its own count/avg/stddev, and the zscore references
-    # std twice). 13 named slots → a much smaller tree, which also makes
-    # each AQE stage re-optimization cheap (measured ~2× on this query).
-    f30 = we.rowsBetween(-29, 0)
+    # The z-scores and volatility come from the windows helpers, which
+    # emit each sliding aggregate once. Bollinger's inputs are named slots:
+    # bb_width tests and divides by the same 20-row mean, and Spark dedupes
+    # neither identical window expressions nor repeated sub-expressions, so
+    # writing it with rolling_mean/rolling_std would put 8 sliding
+    # aggregates in the Window operator where these 3 do.
     f20 = we.rowsBetween(-19, 0)
     aggs = rets.select(
         "*",
-        *[c for name in ("ret_3d", "ret_7d", "volume") for c in (
-            F.count(name).over(f30).alias(f"__c_{name}"),
-            F.avg(name).over(f30).alias(f"__m_{name}"),
-            F.stddev_samp(name).over(f30).alias(f"__s_{name}"),
-        )],
-        F.count("ret_1d").over(f30).alias("__c_ret_1d"),
-        F.stddev_samp("ret_1d").over(f30).alias("__s_ret_1d"),
+        rolling_zscore("ret_3d", 30, we).alias("ret_3d_z"),
+        rolling_zscore("ret_7d", 30, we).alias("ret_7d_z"),
+        rolling_std("ret_1d", 30, we).alias("volatility_30d"),
+        rolling_zscore("volume", 30, we).alias("vol_z30"),
         F.count("close").over(f20).alias("__c_close"),
         F.avg("close").over(f20).alias("__m_close"),
         F.stddev_samp("close").over(f20).alias("__s_close"),
     )
 
-    def z(name: str, mp: int = 30):
-        mean = F.when(F.col(f"__c_{name}") >= mp, F.col(f"__m_{name}"))
-        std = F.when(F.col(f"__c_{name}") >= mp, F.col(f"__s_{name}"))
-        return F.when(std.isNotNull() & (std != 0),
-                      (F.col(name) - mean) / std)
-
     bb_mid = F.when(F.col("__c_close") >= 20, F.col("__m_close"))
     bb_sd = F.when(F.col("__c_close") >= 20, F.col("__s_close"))
     feat = aggs.select(
-        *rets.columns,
-        z("ret_3d").alias("ret_3d_z"),
-        z("ret_7d").alias("ret_7d_z"),
-        F.when(F.col("__c_ret_1d") >= 30, F.col("__s_ret_1d"))
-         .alias("volatility_30d"),
-        z("volume").alias("vol_z30"),
+        *rets.columns, "ret_3d_z", "ret_7d_z", "volatility_30d", "vol_z30",
         F.when(bb_mid.isNotNull() & (bb_mid != 0), 4 * bb_sd / bb_mid)
          .alias("bb_width"),
     )
@@ -173,7 +158,7 @@ def supplier_feature_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     wc = w_cross("ship_date")
     # pandas rank(method='average') exactly — the reference's
     # mcap_rank_daily semantics (create_market_structure_factors:115-118),
-    # via the shared windows.rank_desc_average helper (r5: one home for
+    # via the shared windows.rank_desc_average helper (the one home for
     # the tie-window-is-a-prefix-of-the-sort invariant); rn_out also keeps
     # the deterministic row_number as mcap_rank.
     ranked = rank_desc_average(feat, "mcap", "ship_date", ["suppkey"],

@@ -41,9 +41,9 @@ def pct_change(col: str, periods: int, w: WindowSpec) -> Column:
     """W3 positional percent change over k rows (reference:
     feature_calculation_functions.py:30-34; k ∈ {1,3,7,14,30}).
     ``try_divide``: a zero previous value yields NULL instead of raising
-    DIVIDE_BY_ZERO under Spark 4's default ANSI mode (r5 review finding —
-    the pandas reference yields inf, which the reference then nulls via
-    its replace-inf convention, so NULL is the faithful port)."""
+    DIVIDE_BY_ZERO under Spark 4's default ANSI mode. The pandas reference
+    yields inf, which it then nulls via its replace-inf convention, so
+    NULL is the faithful port."""
     prev = F.lag(F.col(col), periods).over(w)
     return F.try_divide(F.col(col), prev) - 1
 
@@ -68,19 +68,28 @@ def rolling_std(col: str, n: int, w: WindowSpec, min_periods: int | None = None)
 
 def rolling_zscore(col: str, n: int, w: WindowSpec) -> Column:
     """W6/UD6 rolling z-score with zero-std and ±inf guards (reference:
-    feature_calculation_functions.py:16-21 replaces ±inf with NaN)."""
-    mean = rolling_mean(col, n, w)
-    std = rolling_std(col, n, w)
-    z = (F.col(col) - mean) / std
-    return F.when(std.isNotNull() & (std != 0), z)
+    feature_calculation_functions.py:16-21 replaces ±inf with NaN).
+
+    NULL below ``n`` observations (as :func:`rolling_mean` and
+    :func:`rolling_std`), at zero std and for a NULL value. Built from
+    one ``count``, one ``avg`` and one ``stddev_samp`` over the frame
+    rather than from those two helpers: Spark dedupes neither identical
+    window expressions nor repeated sub-expressions across them, so
+    composing them puts 8 sliding aggregates in the ``Window`` operator
+    where 3 do. ``nullif`` turns a zero std into NULL before the divide,
+    which ANSI mode would otherwise reject."""
+    frame = w.rowsBetween(-(n - 1), 0)
+    x = F.col(col)
+    z = (x - F.avg(x).over(frame)) / F.nullif(F.stddev_samp(x).over(frame),
+                                              F.lit(0.0))
+    return F.when(F.count(x).over(frame) >= n, z)
 
 
 def dominance_share(col: str, w: WindowSpec) -> Column:
     """W8 share of per-date total (reference:
     feature_calculation_functions.py:123-124): ``x / sum(x) over (date)``.
     ``try_divide``: an all-zero date yields NULL shares instead of raising
-    under ANSI mode (r5 review finding; same inf→null convention as
-    pct_change)."""
+    under ANSI mode (the same inf→null convention as pct_change)."""
     return F.try_divide(F.col(col), F.sum(F.col(col)).over(w))
 
 
@@ -122,9 +131,9 @@ def rank_desc_average(df: DataFrame, col: str, keys: Sequence[str] | str,
                       rn_out: str | None = None) -> DataFrame:
     """W2 descending rank with EXACT pandas ``rank(method='average')``
     semantics: min-rank + (ties−1)/2, computed as the mean ``row_number``
-    inside each (keys, col) tie group. ONE implementation for the idiom
-    (r5 review: daily_share_and_rank and supplier_feature_matrix each
-    hand-rolled it, cross-referencing each other).
+    inside each (keys, col) tie group. ``daily_share_and_rank`` and
+    ``supplier_feature_matrix`` both call it, so the tie-window invariant
+    below has one home instead of two hand-rolled copies.
 
     The invariant this helper holds in one place: the tie window's
     (keys, col) clustering is a PREFIX of the row_number sort
@@ -157,10 +166,10 @@ def long_short_factor(df: DataFrame, date_col: str, score_col: str, ret_col: str
     bottom ``frac``; dates with < ``min_group`` scored rows yield null
     (reference: test_data_integrity.py:117-123). Implemented as
     percent_rank + two conditional averages — one shuffle, no per-group
-    Python. NULL-score rows are dropped before ranking (r5 review
-    finding): Spark's ascending sort puts nulls FIRST, which would seat
-    them in the bottom bucket and push real low scores out — while the
-    pandas reference's nsmallest/nlargest excludes NaN entirely.
+    Python. NULL-score rows are dropped before ranking: Spark's ascending
+    sort puts nulls FIRST, which would seat them in the bottom bucket and
+    push real low scores out, while the pandas reference's
+    nsmallest/nlargest excludes NaN entirely.
     """
     pr = percent_rank_asc(score_col, date_col)
     tagged = df.filter(F.col(score_col).isNotNull()).withColumn("__pr", pr)

@@ -164,6 +164,53 @@ def test_single_shuffle_operators(spark, name):
     assert shuffles(p) == 1, f"{name} grew extra shuffles:\n{p}"
 
 
+def plan_nodes(plan: str, name: str) -> list[str]:
+    """The detail blocks of every ``name`` node in a formatted plan."""
+    return [b for b in plan.split("\n\n")
+            if b.strip().split("\n")[0].split(" ")[1:2] == [name]]
+
+
+def test_rolling_window_node_holds_one_aggregate_per_statistic(spark):
+    """A 30-row rolling z-score is one count, one avg and one stddev over
+    its frame, and a 20-row rolling mean one count and one avg: 5 window
+    expressions in the one Window node. Spark dedupes no identical window
+    expressions, so a z-score composed from rolling_mean/rolling_std
+    emits 8 on its own, each a sliding aggregate evaluated per row."""
+    from data_engineering_etl_pipeline_spark.windows import (rolling_mean,
+                                                             rolling_zscore,
+                                                             w_entity)
+
+    df = spark.createDataFrame([(1, i, float(i)) for i in range(3)],
+                               "k long, i long, x double")
+    w = w_entity("k", "i")
+    p = plan_text(df.select("*", rolling_zscore("x", 30, w).alias("z"),
+                            rolling_mean("x", 20, w).alias("m")))
+    windows = plan_nodes(p, "Window")
+    assert len(windows) == 1, p
+    assert windows[0].count("windowspecdefinition") == 5, windows[0]
+
+
+def test_canonical_aggregate_one_max_by_per_side(spark):
+    """canonical_aggregate picks every value column with ONE max_by over a
+    struct of them, so each aggregate side builds and compares the
+    priority struct once per row, not once per value column."""
+    from data_engineering_etl_pipeline_spark.aggregates import (
+        canonical_aggregate)
+
+    df = spark.createDataFrame(
+        [("a", "a", 1, 1.0, 2.0, 0.5, 1.5, 9.0, 3.0)],
+        "c string, m string, d long, open double, high double, low double, "
+        "close double, mcap double, vol double")
+    p = plan_text(canonical_aggregate(
+        df, "c", "m", "d", ["open", "high", "low", "close", "mcap"], ["vol"],
+        "mcap", count_alias="n"))
+    sides = [line for node in plan_nodes(p, "SortAggregate")
+             for line in node.splitlines() if line.startswith("Functions")]
+    assert len(sides) == 2, p
+    for line in sides:
+        assert line.count("max_by(") == 1, line
+
+
 def test_exact_dedup_shuffles_fingerprints_not_text(spark):
     """Every exact-dedup exchange must key on the (xxhash64, length)
     fingerprint — 12-byte keys — never the raw document text. Text takes

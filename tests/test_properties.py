@@ -102,6 +102,66 @@ def test_canonical_aggregate_properties(spark, members):
     assert len(out) == len(pdf[["canonical_id", "d"]].drop_duplicates())
 
 
+_ROUND_DECIMALS = (0, 4, 16, -2)
+
+
+def _fixed_round_inputs() -> list[float | None]:
+    """Inputs every example of the round property carries: ±inf, NaN,
+    NULL, ±0.0, each fast-path bound 10**(16-d) and its neighbours one and
+    two ulps away on both signs, plus 2,000 seeded random bit patterns."""
+    import math
+    import random as _r
+    import struct
+
+    vals: list[float | None] = [math.inf, -math.inf, math.nan, None, 0.0,
+                                -0.0, 0.5, -0.123456789012345678]
+    for d in _ROUND_DECIMALS:
+        t = float(10 ** (16 - d))
+        near = [t, math.nextafter(t, 0.0), math.nextafter(t, math.inf)]
+        near += [math.nextafter(near[1], 0.0), math.nextafter(near[2], math.inf)]
+        vals += near + [-v for v in near]
+    rnd = _r.Random(16)
+    return vals + [struct.unpack("<d", struct.pack("<Q", rnd.getrandbits(64)))[0]
+                   for _ in range(2000)]
+
+
+@SET
+@given(bits=st.lists(st.integers(0, 2**64 - 1), max_size=40),
+       small=st.lists(st.floats(-1, 1, exclude_min=True, exclude_max=True),
+                      max_size=20))
+def test_standardize_precision_is_bitwise_round(spark, bits, small):
+    """The gate's pass-through branch (``|x| >= 10**(16-d)`` returns x)
+    must be invisible: for each d the column equals ``F.round(x, d)`` bit
+    for bit (sign of zero included; NaN stays NaN), over random bit
+    patterns, values in (-1, 1), the bounds ±1-2 ulps, ±inf, NaN and
+    NULL."""
+    import math
+    import struct
+
+    from data_engineering_etl_pipeline_spark.quality_gate import (
+        standardize_precision)
+
+    drawn = [struct.unpack("<d", struct.pack("<Q", b))[0] for b in bits]
+    vals = _fixed_round_inputs() + drawn + small
+    df = spark.createDataFrame([(i, v) for i, v in enumerate(vals)],
+                               "i long, x double")
+    for d in _ROUND_DECIMALS:
+        df = df.withColumn(f"std{d}", F.col("x")).withColumn(
+            f"want{d}", F.round("x", d))
+        df = standardize_precision(df, [f"std{d}"], d)
+    got = df.collect()
+    assert len(got) == len(vals)
+
+    def bits_of(v):
+        return (None if v is None else "nan" if math.isnan(v)
+                else struct.pack("<d", v))
+
+    for r in got:
+        for d in _ROUND_DECIMALS:
+            assert bits_of(r[f"std{d}"]) == bits_of(r[f"want{d}"]), (
+                d, r["x"], r[f"std{d}"], r[f"want{d}"])
+
+
 @SET
 @given(rows=st.lists(st.tuples(st.integers(0, 2), st.integers(0, 50),
                                st.floats(-10, 10, allow_nan=False, width=32)),
