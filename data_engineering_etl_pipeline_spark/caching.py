@@ -1,14 +1,14 @@
-"""Engine-owned persist lifecycle (r5 VERDICT item 6).
+"""Engine-owned persist lifecycle: the engine releases what it pins.
 
 Several operators persist an intermediate that a LAZY result plan cannot
 unpersist behind itself — the tokenized-docs projection feeding both sides
 of a near-dup self-join, the deduped prefix of ``prepare_training_corpus``,
 the TF-IDF vectorizer with three consumers, the fetched fact of the live
-refresh. Before r6 the release obligation was a docstring convention
-("call ``spark.catalog.clearCache()`` when done"), which a long-lived
-session composing several pipelines WILL eventually forget — accumulating
-docs-sized pinned relations — and which is too blunt anyway (``clearCache``
-also wipes caches the CALLER owns).
+refresh. Left as a docstring convention ("call
+``spark.catalog.clearCache()`` when done"), the release obligation is
+one a long-lived session composing several pipelines WILL eventually
+forget — accumulating docs-sized pinned relations — and which is too
+blunt anyway (``clearCache`` also wipes caches the CALLER owns).
 
 This module makes the engine's pins first-class:
 
@@ -29,11 +29,12 @@ lost). Plans with non-deterministic stages (an injected network fetcher,
 ``rand()``) can recompute to DIFFERENT rows after an early release — so
 ``release_engine_pins`` is a session-level operation for a quiesced
 driver (bench calls it BETWEEN queries), not something to fire while
-another thread is mid-plan over a pinned relation (r6 advisor finding:
-the old docstring claimed "always safe", which the live-refresh fetch
-pin exactly contradicts).
+another thread is mid-plan over a pinned relation: "always safe" does
+not hold for the live refresh's fetch pin, whose recompute re-invokes the
+fetcher.
 
-Thread model (r6 advisor finding): the registry is lock-guarded, and
+Thread model: several pipelines may share one session from different
+threads, so the registry is lock-guarded, and
 :func:`engine_pin_scope` tracks per-thread — a scope exiting on one
 thread releases exactly the pins ITS thread took inside the window,
 never pins another pipeline's thread registered concurrently.

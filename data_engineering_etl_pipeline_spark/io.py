@@ -438,11 +438,9 @@ class TwoTierCache:
     it carries KB-scale config, same as the reference's ``dict`` branch.
     """
 
-    def __init__(self, spark: SparkSession, lake_dir: str,
-                 promote: bool = True) -> None:
+    def __init__(self, spark: SparkSession, lake_dir: str) -> None:
         self.spark = spark
         self.lake_dir = lake_dir.rstrip("/")
-        self.promote = promote
         self._session: dict[str, DataFrame] = {}
 
     def _paths(self, name: str) -> tuple[str, str]:
@@ -459,10 +457,8 @@ class TwoTierCache:
             return self._session[name]
         pq_path, js_path = self._paths(name)
         if self._exists(pq_path):
-            df = self.spark.read.parquet(pq_path)
-            if self.promote:
-                df = df.persist()
-                self._session[name] = df
+            df = self.spark.read.parquet(pq_path).persist()
+            self._session[name] = df
             return df
         if self._exists(js_path):
             return self._read_json(js_path)
@@ -474,12 +470,11 @@ class TwoTierCache:
         pq_path, js_path = self._paths(name)
         if isinstance(data, DataFrame):
             data.write.mode("overwrite").parquet(pq_path)
-            if self.promote:
-                # re-read so the session tier caches the durable bytes
-                # (and later gets dedupe with the lake representation)
-                self.invalidate(name)
-                df = self.spark.read.parquet(pq_path).persist()
-                self._session[name] = df
+            # re-read so the session tier caches the durable bytes
+            # (and later gets dedupe with the lake representation)
+            self.invalidate(name)
+            df = self.spark.read.parquet(pq_path).persist()
+            self._session[name] = df
         elif isinstance(data, Mapping):
             import json
 

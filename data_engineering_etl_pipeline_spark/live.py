@@ -45,10 +45,10 @@ def live_world(spark: SparkSession, coins: Sequence[str], n_days: int = 30,
     # dedupe common subtrees — uncached, one action re-invokes the fetcher
     # ~4x (4x API traffic with a real rate-limited HTTP fetcher), and a
     # new day arriving between re-executions could stamp the snapshot with
-    # a different day than the one that picked the universe — a torn world
-    # (r5 review finding). Engine-pin contract: refresh_world_snapshot
-    # releases it scoped around its write; a caller driving live_world's
-    # lazy result directly owns the release (caching.release_engine_pins).
+    # a different day than the one that picked the universe — a torn
+    # world. Engine-pin contract: refresh_world_snapshot releases it
+    # scoped around its write; a caller driving live_world's lazy result
+    # directly owns the release (caching.release_engine_pins).
     from .caching import pin
 
     fact = pin(canonicalize(
@@ -91,12 +91,12 @@ def refresh_world_snapshot(spark: SparkSession, out_root: str,
     partitions are untouched, re-runs of the same state are no-ops in
     content). Returns the world that was written.
 
-    Pin lifecycle (r6 review finding): the fetched fact pinned inside
-    live_world is released when this function returns — a scheduler
-    calling this daily in one long-lived session must not accumulate a
-    fact cache per run. The write inside the scope fully materializes the
-    world; re-executing the RETURNED frame afterwards recomputes (and
-    re-fetches) — read the written snapshot back instead for cheap reuse."""
+    Pin lifecycle: the fetched fact pinned inside live_world is
+    released when this function returns — a scheduler calling this daily
+    in one long-lived session must not accumulate a fact cache per run.
+    The write inside the scope fully materializes the world;
+    re-executing the RETURNED frame afterwards recomputes (and re-fetches)
+    — read the written snapshot back instead for cheap reuse."""
     from .caching import engine_pin_scope
 
     with engine_pin_scope():

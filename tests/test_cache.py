@@ -79,19 +79,10 @@ def test_invalidate_keeps_lake_copy(spark):
         cache.clear()
 
 
-def test_no_promote_mode_stays_lazy(spark):
-    with tempfile.TemporaryDirectory() as lake:
-        cache = TwoTierCache(spark, lake, promote=False)
-        cache.set("t", _df(spark))
-        got = cache.get("t")
-        assert got.storageLevel == StorageLevel.NONE
-        assert got.count() == 3
-
-
 def test_cache_type_switching_set_honors_last_write(spark, tmp_path):
     """set(name, df) then set(name, dict): get must return the dict — the
     session tier is invalidated and the stale parquet shadow deleted
-    (get probes parquet before json; r5 review finding)."""
+    (get probes parquet before json, so a stale parquet would win)."""
     from data_engineering_etl_pipeline_spark.io import TwoTierCache
 
     cache = TwoTierCache(spark, str(tmp_path / "lake"))

@@ -247,6 +247,8 @@ KEEP = {
     "refresh_world_snapshot": "live pipeline: daily world re-snapshot",
     "with_retry": "live pipeline: the fetcher's 429 retry/backoff",
     "TwoTierCache": "the reference's DataPersistenceLayer",
+    "read_market_api": ("S4 paginated-API scan; tier-1 cross-checks it "
+                        "against fetch_history_distributed"),
     # references that tests compare live code against
     "_ta_one_asset": "pandas reference for ta._ta_partition",
     "epoch_plan_sql": "DuckDB twin of corpus.epoch_plan",

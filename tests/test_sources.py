@@ -11,15 +11,12 @@ from pyspark.sql import functions as F
 
 from data_engineering_etl_pipeline_spark.sources import (
     CHUNK_DAYS, SyntheticMarketReader, chunk_table, fetch_history_distributed,
-    register_sources, synthetic_fetch, with_retry)
+    read_market_api, register_sources, synthetic_fetch, with_retry)
 
 
 @pytest.fixture(scope="module")
 def market_df(spark):
-    register_sources(spark)
-    return (spark.read.format("synthetic_market_api")
-            .option("coins", "btc,eth,sol")
-            .option("n_days", "400").load())
+    return read_market_api(spark, ["btc", "eth", "sol"], n_days=400)
 
 
 def test_datasource_rows_and_schema(market_df):
@@ -47,12 +44,33 @@ def test_datasource_partitions_are_pages():
 
 
 def test_datasource_deterministic(spark, market_df):
-    again = (spark.read.format("synthetic_market_api")
-             .option("coins", "btc,eth,sol")
-             .option("n_days", "400").load())
+    # a second read re-registers the already registered format
+    again = read_market_api(spark, ["btc", "eth", "sol"], n_days=400)
     a = sorted(map(tuple, market_df.collect()))
     b = sorted(map(tuple, again.collect()))
     assert a == b
+
+
+def test_register_sources_defers_registration(spark, monkeypatch):
+    """Set-up registers nothing (the first registration in a JVM starts a
+    Python lookup process); every read_market_api call registers once."""
+    from pyspark.sql.datasource import DataSourceRegistration
+
+    calls = []
+    real = DataSourceRegistration.register
+
+    def counting(self, cls):
+        calls.append(cls)
+        return real(self, cls)
+
+    monkeypatch.setattr(DataSourceRegistration, "register", counting)
+    register_sources(spark)
+    assert calls == []
+    df = read_market_api(spark, ["btc"], n_days=3)
+    assert len(calls) == 1
+    read_market_api(spark, ["btc"], n_days=3)
+    assert len(calls) == 2
+    assert df.count() == 3
 
 
 def test_mapinpandas_fetch_matches_datasource(spark, market_df):
