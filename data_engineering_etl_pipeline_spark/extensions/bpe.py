@@ -84,7 +84,7 @@ def train_bpe(word_freq: DataFrame, n_merges: int = 200,
     most frequent pair everywhere, repeat. Ties break lexicographically so
     the merge list is deterministic. Stops early when no pair repeats.
 
-    ``min_freq`` is the 100 TB scale path (r11 VERDICT item 1a): a
+    ``min_freq`` is the 100 TB scale path: a
     DISTRIBUTED frequency-floor prefilter (one map-side ``freq >= k``
     filter, executed before — and fused by Catalyst into — the guarded
     collect), the SentencePiece / HF-tokenizers convention for web-scale
@@ -101,7 +101,7 @@ def train_bpe(word_freq: DataFrame, n_merges: int = 200,
         word_freq = word_freq.filter(F.col("freq") >= int(min_freq))
     # ONE job enforces the guard AND fetches the table: collect through the
     # limit probe (a separate count() probe would run the corpus-sized
-    # word aggregation twice — r4 review finding).
+    # word aggregation twice).
     rows = word_freq.limit(vocab_row_budget + 1).collect()
     if len(rows) > vocab_row_budget:
         raise ValueError(
@@ -148,8 +148,8 @@ def bpe_sql_ctes(n_merges: int, min_freq: int = 1,
                  corpus_cte: str = "bpe_corpus",
                  text_expr: str = "text") -> tuple[str, str, str]:
     """DuckDB twin of ``word_frequencies`` + ``train_bpe`` (+ the final
-    per-word segmentation state), as a bounded-rounds UNROLLED CTE chain —
-    the r11 VERDICT item 1b hash: the merge-sequence DECISION (argmax pair
+    per-word segmentation state), as a bounded-rounds UNROLLED CTE chain,
+    so the merge sequence is hash-checkable: the DECISION (argmax pair
     count, ties lexicographic, stop when nothing repeats) is
     SQL-reproducible because the loop is deterministic and bounded.
 
@@ -258,7 +258,7 @@ def bpe_segment(text: str | Column,
         # Tokenize EXACTLY like word_frequencies' split(trim(text),'\s+')
         # + empty-token filter — a Python strip()/\s+ shortcut diverges on
         # trailing newlines/tabs and NBSP, so the encoder would segment
-        # words the trainer never counted (r4 review finding).
+        # words the trainer never counted.
         from .text_stats import java_ws_tokens
 
         cache: dict[str, list[str]] = {}

@@ -21,10 +21,9 @@ that differ in ulps flip downstream keep/drop decisions near the
 threshold, which at 100 TB means irreproducible corpora). The per-row
 sigmoid uses numpy's libm; on a homogeneous cluster (one numpy build) the
 per-row values are identical everywhere, which is the only requirement —
-the REDUCE never touches floats. Precision of the claim: the per-row ``x@w`` BLAS gemv is batch-shape-invariant in
-practice but not IEEE-guaranteed — ``fit_logreg_exact(dot_mode='fold')``
-is the construction-level hatch (fixed index-order accumulation), the
-same trade as ``kmeans_lloyd_refine(assign='fold')``.
+the REDUCE never touches floats. Precision of the claim: the per-row
+``x@w`` BLAS gemv is batch-shape-invariant in practice but not
+IEEE-guaranteed (see ``fit_logreg_exact``).
 
 Why the FIT has no DuckDB driver-oracle row: it needs exp(), and libm
 exp differs across engines in the last ulp — a floor() boundary can flip,
@@ -59,30 +58,13 @@ from .similarity import _guard_q_magnitude
 LOGREG_Q_SCALE = 1 << 20
 
 
-def _fold_gemv(x: "np.ndarray", w: "np.ndarray", b: float) -> "np.ndarray":
-    """Fixed-order per-row dot: accumulate coordinates in INDEX order
-    (``z += x[:, i]·w_i``), so the per-row value is a deterministic
-    left-associated chain regardless of Arrow batch shape — the audit-
-    replay hatch for ``dot_mode='fold'`` (the ``kmeans_lloyd_refine``
-    ``assign='fold'`` convention). The BLAS gemv default is batch-shape-
-    invariant in practice but not IEEE-guaranteed across kernel paths."""
-    z = np.full(len(x), float(b), dtype=np.float64)
-    for i in range(x.shape[1]):
-        z += x[:, i] * w[i]
-    return z
-
-
 def _grad_partials(df: DataFrame, vec_col: str, label_col: str,
                    w: np.ndarray, b: float, dim: int,
-                   q_scale: int, decimal_sums: bool = False,
-                   dot_mode: str = "gemm") -> DataFrame:
+                   q_scale: int, decimal_sums: bool = False) -> DataFrame:
     """One epoch's quantized gradient/loss partials: rows ``(pos, n, s)``
     with pos in [0, dim) the weight gradient cells, pos = dim the bias
     cell, pos = dim+1 the summed quantized log-loss. NULL vectors,
     wrong-length vectors, and NULL labels are excluded."""
-    if dot_mode not in ("gemm", "fold"):
-        raise ValueError(f"_grad_partials: dot_mode={dot_mode!r} "
-                         "(want 'gemm' or 'fold')")
     qf = float(q_scale)
     wl = w.copy()
     bl = float(b)
@@ -98,8 +80,7 @@ def _grad_partials(df: DataFrame, vec_col: str, label_col: str,
                            for v, _ in keep])
             y = np.asarray([float(t) for _, t in keep], dtype=np.float64)
             n = len(x)
-            z = (x @ wl + bl if dot_mode == "gemm"
-                 else _fold_gemv(x, wl, bl))
+            z = x @ wl + bl
             p = 1.0 / (1.0 + np.exp(-z))
             r = p - y                                   # dlogloss/dz
             gq = (x * r[:, None]) * qf
@@ -140,8 +121,7 @@ def fit_logreg_exact(df: DataFrame, vec_col: str = "embedding",
                      init_weights: list[float] | None = None,
                      init_bias: float = 0.0,
                      tol: float | None = None,
-                     patience: int = 1,
-                     dot_mode: str = "gemm") -> dict:
+                     patience: int = 1) -> dict:
     """Full-batch gradient-descent logistic regression over the corpus.
 
     Full-batch (not SGD) is the deliberate choice: the gradient is a pure
@@ -174,15 +154,12 @@ def fit_logreg_exact(df: DataFrame, vec_col: str = "embedding",
 
     Byte-stability precision (the ``kmeans_lloyd_refine`` caveat
     verbatim): the cross-row REDUCE is
-    unconditionally order-independent (integers), but the default
-    ``dot_mode='gemm'`` per-row ``x@w`` is a BLAS gemv whose value is
-    batch-shape-invariant in practice, NOT IEEE-guaranteed across kernel
-    paths — a z landing within one ulp of a ``floor(g·2^20)`` boundary
-    could in principle flip under a relayout that changes Arrow batch
-    shapes. Where the guarantee must be construction-level (audit
-    replays), ``dot_mode='fold'`` accumulates each row's dot in fixed
-    index order — batch-shape-invariant by construction, same trade as
-    ``kmeans_lloyd_refine(assign='fold')``."""
+    unconditionally order-independent (integers), but the per-row
+    ``x@w`` is a BLAS gemv whose value is batch-shape-invariant in
+    practice, NOT IEEE-guaranteed across kernel paths — a z landing
+    within one ulp of a ``floor(g·2^20)`` boundary could in principle
+    flip under a relayout that changes Arrow batch shapes
+    (``test_fit_is_byte_stable_under_relayout`` pins the practice)."""
     w = (np.zeros(dim, dtype=np.float64) if init_weights is None
          else np.asarray(init_weights, dtype=np.float64).copy())
     if w.shape != (dim,):
@@ -197,8 +174,7 @@ def fit_logreg_exact(df: DataFrame, vec_col: str = "embedding",
     for _ in range(max(0, int(n_iters))):
         rows = {r["pos"]: r for r in
                 _grad_partials(df, vec_col, label_col, w, b, dim,
-                               q_scale, decimal_sums,
-                               dot_mode=dot_mode).collect()}
+                               q_scale, decimal_sums).collect()}
         if not rows:
             raise ValueError("fit_logreg_exact: no labeled vectors to fit")
         n = rows[0]["n"]

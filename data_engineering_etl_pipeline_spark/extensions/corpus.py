@@ -420,44 +420,10 @@ def dsir_topk(raw: DataFrame, target: DataFrame, k: int,
             .limit(k))
 
 
-def _idf_from_buckets(base: DataFrame, dim: int) -> "np.ndarray":
-    """The idf aggregate over an already-bucketed relation (``__b`` =
-    hashed bucket arrays). ONE corpus pass fits the whole idf table: a
-    sentinel bucket (-1) prepended to every non-null bucket array makes
-    n_docs just another row of the (≤ dim+1)-row document-frequency
-    table, instead of a second eager count() scan."""
-    dfreq = (base.filter(F.col("__b").isNotNull())
-             .select(F.explode(F.concat(
-                 F.array(F.lit(-1)), F.array_distinct("__b"))).alias("__k"))
-             .groupBy("__k").agg(F.count(F.lit(1)).alias("__df"))
-             .collect())
-    counts = {r["__k"]: r["__df"] for r in dfreq}
-    n_docs = counts.pop(-1, 0)
-    idf = np.ones(dim, dtype=np.float64)
-    for k_, df_ in counts.items():
-        idf[k_] = np.log((1.0 + n_docs) / (1.0 + df_)) + 1.0
-    return idf
-
-
-def fit_tfidf_idf(docs: DataFrame, text_col: str = "text", dim: int = 256,
-                  salt: str = "tfidf-v1") -> "np.ndarray":
-    """Fit the smoothed-idf table of :func:`hashed_tfidf_vectors` on a
-    reference corpus and return it as a ``dim``-length float64 vector —
-    the FIT half of the fit/apply split an INCREMENTAL pipeline needs:
-    a daily batch must be vectorized under the frozen day-1 idf, or
-    identical text would map to different vectors across days (each
-    day's df/N drift would re-weight every bucket) and no cross-batch
-    signature could ever match. KB-scale (≤ dim+1 aggregate rows reach
-    the driver); broadcast-ships inside the vectorizer closure."""
-    base = docs.select(hashed_ngram_buckets(text_col, dim, salt).alias("__b"))
-    return _idf_from_buckets(base, dim)
-
-
 def hashed_tfidf_vectors(docs: DataFrame, id_col: str = "doc_id",
                          text_col: str = "text", dim: int = 256,
                          salt: str = "tfidf-v1",
-                         out_col: str = "embedding",
-                         idf: "np.ndarray | None" = None) -> DataFrame:
+                         out_col: str = "embedding") -> DataFrame:
     """L2-normalized hashed TF-IDF document vectors: ``(id, embedding)``
     with ``embedding`` an ``array<float>`` of length ``dim`` — the
     feature-hashing vectorizer (Weinberger et al. 2009) over the same
@@ -484,34 +450,35 @@ def hashed_tfidf_vectors(docs: DataFrame, id_col: str = "doc_id",
     corpus-wide actions are the scan passes — nothing data-sized ever
     shuffles or reaches the driver.
 
-    ``idf``: a precomputed :func:`fit_tfidf_idf` table — pass the frozen
-    reference-corpus fit when vectorizing INCREMENTAL batches (then this call
-    is fully map-only: no fit pass at all), omit for the one-shot self-fit. The
-    self-fit path TOKENIZES ONCE: the bucket relation is engine-pinned
-    (caller-release contract) so the eager idf aggregate materializes it and
-    the vectorizer pass reads the cache instead of re-running tokenize+md5 over
-    the corpus — the measured dominant cost of this operator. That cache is
-    CORPUS-SIZED (same order as the text itself, MEMORY_AND_DISK) — a trade
-    sized for the one-shot/benchmark shape, NOT the deployment default: a
-    100 TB pipeline should ``fit_tfidf_idf`` once on the reference corpus and pass
-    the frozen table on every apply — zero pin, zero fit pass, and
-    byte-identical vectors whenever the apply corpus equals the fit corpus
-    (fit-once/apply-daily == self-fit, unit-proven in tests/test_corpus_ops.py)
-    — which is also the ONLY correct convention across batches (each day's df/N
-    drift would otherwise re-weight every bucket; see
-    :func:`fit_tfidf_idf`)."""
+    The fit TOKENIZES ONCE: the bucket relation is engine-pinned
+    (caller-release contract) so the eager idf aggregate materializes it
+    and the vectorizer pass reads the cache instead of re-running
+    tokenize+md5 over the corpus — the measured dominant cost of this
+    operator. That cache is CORPUS-SIZED (same order as the text itself,
+    MEMORY_AND_DISK). The idf is fitted on ``docs`` itself, so vectors
+    are comparable only within one call: vectorize batches that must be
+    compared (day 1 ∪ day 2, train ∪ held-out) together, or each call's
+    df/N would re-weight every bucket."""
     from pyspark.sql.functions import pandas_udf
 
-    base = docs.select(F.col(id_col),
-                       hashed_ngram_buckets(text_col, dim, salt).alias("__b"))
-    if idf is None:
-        from ..caching import pin
-        base = pin(base)
-        idf = _idf_from_buckets(base, dim)
-    elif len(idf) != dim:
-        raise ValueError(
-            f"hashed_tfidf_vectors: idf length {len(idf)} != dim {dim} — "
-            "fit and apply must share the hashing dimension")
+    from ..caching import pin
+
+    base = pin(docs.select(
+        F.col(id_col), hashed_ngram_buckets(text_col, dim, salt).alias("__b")))
+    # ONE corpus pass fits the whole idf table: a sentinel bucket (-1)
+    # prepended to every non-null bucket array makes n_docs just another
+    # row of the (≤ dim+1)-row document-frequency table, instead of a
+    # second eager count() scan
+    dfreq = (base.filter(F.col("__b").isNotNull())
+             .select(F.explode(F.concat(
+                 F.array(F.lit(-1)), F.array_distinct("__b"))).alias("__k"))
+             .groupBy("__k").agg(F.count(F.lit(1)).alias("__df"))
+             .collect())
+    counts = {r["__k"]: r["__df"] for r in dfreq}
+    n_docs = counts.pop(-1, 0)
+    idf = np.ones(dim, dtype=np.float64)
+    for k_, df_ in counts.items():
+        idf[k_] = np.log((1.0 + n_docs) / (1.0 + df_)) + 1.0
 
     @pandas_udf("array<float>")
     def vectorize(buckets: pd.Series) -> pd.Series:

@@ -24,12 +24,10 @@ Scale shapes:
   iteration is one map-only Arrow pass + a model-sized integer reduce —
   byte-stable under any partitioning; the feature projection is
   engine-pinned once and shared by all K fits;
-- prediction is one corpus scan, no shuffle, no collect: the default
-  ``mode='arrow'`` stages the hashed bucket array as a pure expression
-  (one JVM md5 per n-gram) and computes all K scores in ONE
-  Arrow-batched kernel; ``mode='expr'`` is the zero-Python variant but
-  beware Catalyst inlining the shared frequency vector into every fold
-  (see ``predict_lang_trained``).
+- prediction is one corpus scan, no shuffle, no collect: the staged
+  projection computes the hashed bucket array as a pure expression
+  (one JVM md5 per n-gram) and ONE Arrow-batched kernel computes all K
+  scores (see ``predict_lang_trained``).
 
 Decision portability: per-language scores are the quality-gate fold
 ``z_q = floor(b·Q) + Σ_i floor(freq_i · w_i · Q)`` — each term one
@@ -115,8 +113,7 @@ def fit_lang_id(labeled: DataFrame, lang_col: str = "lang",
                 text_col: str = "text", langs: list[str] | None = None,
                 dim: int = LANGID_DIM, n: int = LANGID_N,
                 salt: str = LANGID_SALT, n_iters: int = 40, lr: float = 4.0,
-                l2: float = 0.0, tol: float | None = None,
-                dot_mode: str = "gemm") -> dict:
+                l2: float = 0.0, tol: float | None = None) -> dict:
     """Train the lang-ID model one-vs-rest: for each language, an exact
     fixed-point logistic regression (``fit_logreg_exact`` — gradients
     reduce as integers, so every per-language model is byte-identical
@@ -149,7 +146,7 @@ def fit_lang_id(labeled: DataFrame, lang_col: str = "lang",
             "__y", (F.col("__lang") == lang).cast("double"))
         models[lang] = fit_logreg_exact(
             lab, vec_col="__v", label_col="__y", dim=dim,
-            n_iters=n_iters, lr=lr, l2=l2, tol=tol, dot_mode=dot_mode)
+            n_iters=n_iters, lr=lr, l2=l2, tol=tol)
     return {"langs": list(langs), "models": models, "dim": dim, "n": n,
             "salt": salt}
 
@@ -175,25 +172,11 @@ def planted_lang_id(langs, seed: int, dim: int = LANGID_DIM,
             "dim": dim, "n": n, "salt": salt}
 
 
-def _zq_fold(vec: Column, weights: list[float], bias: float,
-             q_scale: int) -> Column:
-    """The quality-gate fixed-point score fold over a dense double
-    vector: ``floor(b·Q) + Σ_i floor(v_i · w_i · Q)`` — BIGINT sum of
-    per-term floors, the ``logreg_gate_fold`` construction."""
-    b_q = int(math.floor(float(bias) * q_scale))
-    wl = F.array(*[F.lit(float(w)) for w in weights])
-    qf = F.lit(float(q_scale))
-    return F.aggregate(
-        F.zip_with(vec, wl, lambda a, c: F.floor(a * c * qf)),
-        F.lit(b_q).cast("long"), lambda acc, x: acc + x)
-
-
 def predict_lang_trained(docs: DataFrame, model: dict,
                          id_col: str = "doc_id", text_col: str = "text",
                          out_col: str = "pred_lang",
                          fallback: str = "heuristic",
                          q_scale: int = LOGREG_Q_SCALE,
-                         mode: str = "arrow",
                          carry_cols: tuple[str, ...] = ()) -> DataFrame:
     """Predict languages with a :func:`fit_lang_id` model: ``(id,
     pred_lang, z_q)`` where ``pred_lang`` is the argmax language of the
@@ -213,26 +196,20 @@ def predict_lang_trained(docs: DataFrame, model: dict,
     ``lang_id_scores_sql`` is the DuckDB twin (hash-checked in
     tests/test_langid.py).
 
-    ``mode`` picks the score-fold execution, BIT-identical outputs:
-
-    - ``'expr'``: K pure-expression folds, zero Python. Fine for a
-      handful of languages on MODEST corpora, but beware Catalyst's
-      project collapsing: the shared ``__v`` frequency-vector alias is
-      INLINED into every fold, the argmax, and the null checks, so the
-      O(dim·len) featurization re-executes once per reference —
-      measured 590 s for the 5-language doc_text_stats row at sf0.1
-      vs ~2 s on the arrow path;
-    - ``'arrow'`` (default): the staged projection computes only the
-      hashed BUCKET array (one md5 per n-gram — O(len), JVM-side), and
-      ONE Arrow-batched kernel does the bincount, the relative
-      frequencies (the same exact IEEE ``count/total`` divisions), and
-      all K quantized scores with the identical per-term
-      ``floor((freq_i · w_ki) · Q)`` float64 products and int64 sums —
-      order-matched to the expression fold, so equality is by
-      construction (unit-pinned). One vectorized pass whatever K is;
-      also the large-K path (a 100-language model in expr mode is
-      K·dim ≈ 6400+ floor terms per row, past whole-stage-codegen's
-      expression budget).
+    Execution: the staged projection computes only the hashed BUCKET
+    array (one md5 per n-gram — O(len), JVM-side), and ONE
+    Arrow-batched kernel does the bincount, the relative frequencies
+    (the same exact IEEE ``count/total`` divisions as
+    :func:`char_freq_vector`), and all K quantized scores with per-term
+    ``floor((freq_i · w_ki) · Q)`` float64 products and int64 sums —
+    the fold :func:`lang_id_scores_sql` spells out. One vectorized pass
+    whatever K is. The kernel boundary also matters: as a pure
+    expression the shared frequency vector is inlined by Catalyst into
+    every fold, the argmax and the null checks, so the O(dim·len)
+    featurization re-executed once per reference (measured 590 s for
+    the 5-language doc_text_stats row at sf0.1 vs ~2 s here), and a
+    100-language model would be K·dim ≈ 6400+ floor terms per row,
+    past whole-stage-codegen's expression budget.
 
     ``carry_cols``: extra ``docs`` columns preserved verbatim on
     the output, so a map-only caller can fold the prediction into its
@@ -249,77 +226,58 @@ def predict_lang_trained(docs: DataFrame, model: dict,
     for lang in langs:
         n_w = len(model["models"][lang]["weights"])
         if n_w != model["dim"]:
-            # zip_with would pad the shorter side with NULLs and every
-            # score would fold to NULL — silently predicting nothing;
-            # refuse loudly instead
+            # the kernel would fail on the first batch, mid-job, with a
+            # numpy broadcast error; refuse loudly at plan time instead
             raise ValueError(
                 f"predict_lang_trained: model[{lang!r}] has {n_w} "
                 f"weights but dim={model['dim']} — fit and predict must "
                 "share the hashing dimension")
     dim, n, salt = model["dim"], model["n"], model["salt"]
-    if mode not in ("expr", "arrow"):
-        raise ValueError(
-            f"predict_lang_trained: mode={mode!r} (want 'expr' or 'arrow')")
     # carried columns ride the staged projection and the final select;
     # id/text are already staged, so drop them from the extras list
     extras = [c for c in carry_cols if c not in (id_col, text_col)]
     out_carry = [c for c in carry_cols if c != id_col]
-    if mode == "expr":
-        v = char_freq_vector(text_col, dim, n, salt)
-        staged = docs.select(F.col(id_col), F.col(text_col),
-                             *[F.col(c) for c in extras], v.alias("__v"))
-        zcols = {lang: _zq_fold(F.col("__v"),
-                                model["models"][lang]["weights"],
-                                model["models"][lang]["bias"], q_scale)
-                 for lang in langs}
-        no_features = F.col("__v").isNull()
-    else:
-        from pyspark.sql.functions import pandas_udf
+    w_mat = np.asarray(
+        [model["models"][lang]["weights"] for lang in langs],
+        dtype=np.float64)
+    b_q = np.asarray(
+        [int(math.floor(float(model["models"][lang]["bias"])
+                        * q_scale)) for lang in langs],
+        dtype=np.int64)
+    qf = float(q_scale)
 
-        w_mat = np.asarray(
-            [model["models"][lang]["weights"] for lang in langs],
-            dtype=np.float64)
-        b_q = np.asarray(
-            [int(math.floor(float(model["models"][lang]["bias"])
-                            * q_scale)) for lang in langs],
-            dtype=np.int64)
-        qf = float(q_scale)
-        ndim = dim
+    @F.pandas_udf("array<long>")
+    def all_scores(buckets: pd.Series) -> pd.Series:
+        out = []
+        for arr in buckets:
+            if arr is None or len(arr) == 0:
+                # NULL text or feature-less: no evidence → NULL
+                # scores (the NULL-frequency-vector convention)
+                out.append(None)
+                continue
+            bk = np.asarray(arr, dtype=np.int64)
+            counts = np.bincount(bk, minlength=dim)[:dim]
+            # the exact IEEE division of char_freq_vector's
+            # count/total, then per-term (x_i * w_ki) * Q floored —
+            # the SQL twin's product order — and an
+            # associativity-free int64 sum per language
+            x = counts.astype(np.float64) / np.float64(len(bk))
+            terms = np.floor((x[None, :] * w_mat) * qf)
+            out.append((terms.astype(np.int64).sum(axis=1)
+                        + b_q).tolist())
+        return pd.Series(out)
 
-        @pandas_udf("array<long>")
-        def all_scores(buckets: pd.Series) -> pd.Series:
-            out = []
-            for arr in buckets:
-                if arr is None or len(arr) == 0:
-                    # NULL text or feature-less: no evidence → NULL
-                    # scores (the NULL-frequency-vector convention)
-                    out.append(None)
-                    continue
-                bk = np.asarray(arr, dtype=np.int64)
-                counts = np.bincount(bk, minlength=ndim)[:ndim]
-                # the exact IEEE division of char_freq_vector's
-                # count/total, then per-term (x_i * w_ki) * Q floored —
-                # the expression fold's product order — and an
-                # associativity-free int64 sum per language
-                x = counts.astype(np.float64) / np.float64(len(bk))
-                terms = np.floor((x[None, :] * w_mat) * qf)
-                out.append((terms.astype(np.int64).sum(axis=1)
-                            + b_q).tolist())
-            return pd.Series(out)
-
-        # the staged projection carries only the BUCKET array — O(len)
-        # with one JVM md5 per n-gram; the O(dim·len) frequency-vector
-        # expression never exists on this path, and the UDF boundary
-        # stops Catalyst from inlining the featurization into every
-        # downstream reference (590 s in expr mode, measured above)
-        bk = char_ngram_buckets(text_col, dim, n, salt)
-        staged = (docs.select(F.col(id_col), F.col(text_col),
-                              *[F.col(c) for c in extras],
-                              bk.alias("__bk"))
-                  .withColumn("__z", all_scores(F.col("__bk"))))
-        zcols = {lang: F.element_at(F.col("__z"), i + 1)
-                 for i, lang in enumerate(langs)}
-        no_features = F.col("__z").isNull()
+    # the staged projection carries only the BUCKET array — O(len)
+    # with one JVM md5 per n-gram; the UDF boundary stops Catalyst from
+    # inlining the featurization into every downstream reference
+    bk = char_ngram_buckets(text_col, dim, n, salt)
+    staged = (docs.select(F.col(id_col), F.col(text_col),
+                          *[F.col(c) for c in extras],
+                          bk.alias("__bk"))
+              .withColumn("__z", all_scores(F.col("__bk"))))
+    zcols = {lang: F.element_at(F.col("__z"), i + 1)
+             for i, lang in enumerate(langs)}
+    no_features = F.col("__z").isNull()
     best = F.greatest(*zcols.values()) if len(zcols) > 1 \
         else next(iter(zcols.values()))
     pred: Column = F.lit(None).cast("string")

@@ -1,7 +1,7 @@
 """Deterministic quota-bounded balanced sampling over ANY key column —
-the generic two-phase selection behind ``cluster_balanced_sample`` (r8:
-the machinery generalized so domain caps, language caps, and cluster caps
-are one operator applied to different keys — the head-flattening step
+the generic two-phase selection behind ``cluster_balanced_sample`` (one
+operator, so domain caps, language caps, and cluster caps are the same
+selection applied to different keys — the head-flattening step
 every large-scale training-data pipeline runs, whether the head is a hot
 topic cluster, a crawl-dominating domain, or an over-represented
 language).
@@ -15,7 +15,7 @@ exactly (``DENSE_RANK() OVER (PARTITION BY key ORDER BY hash, id)`` —
 dense so duplicate ``(id, key)`` copies share one rank; see
 :func:`quota_rank_sql`).
 
-Plan contract (the r7-verdict scale fix): the corpus NEVER feeds a
+Plan contract (the scale point): the corpus NEVER feeds a
 ``Window.partitionBy(key)`` sort — that shape shuffles every row into
 n_keys reducer partitions and fully sorts each group (a handful of
 monster tasks at 100 TB when only ``quota`` rows per key matter).
@@ -42,10 +42,10 @@ KEEPER_BROADCAST_ROWS = 4_000_000
 def quota_rank_sql(id_expr: str, key_expr: str, salt: str) -> str:
     """DuckDB twin of :func:`balanced_sample_by_key`'s selection order —
     ``DENSE_RANK() OVER (PARTITION BY key ORDER BY md5-rank, id)`` with
-    the engine's portable 32-bit md5 convention. ONE builder (r8 review
-    finding: the rank SQL had grown three hand-maintained copies across
-    oracles and tests; a change to the hv definition must update exactly
-    one place). DENSE_RANK, not ROW_NUMBER (r8 VERDICT item 6): copies of
+    the engine's portable 32-bit md5 convention. ONE builder for every
+    oracle and test (hand-maintained copies of the rank SQL drift; a
+    change to the hv definition must update exactly one place).
+    DENSE_RANK, not ROW_NUMBER: copies of
     one ``(id, key)`` share the ``(hv, id)`` order tuple and therefore
     one rank, while distinct ids always rank apart (ties break by id) —
     so ``rank <= quota`` admits exactly the engine's top-quota DISTINCT
@@ -59,7 +59,7 @@ def quota_rank_sql(id_expr: str, key_expr: str, salt: str) -> str:
 
 def _partition_local_quota_prune(ranked: DataFrame, quota: int,
                                  key_col: str, id_col: str) -> DataFrame:
-    """Phase 1 of the two-phase quota selection (r7 VERDICT item 1):
+    """Phase 1 of the two-phase quota selection:
     within each INPUT partition, keep only the ``quota`` best DISTINCT
     ids per key in the global ranking order (``__hv`` asc, ``id_col``
     asc) — one map-only Arrow pass carrying a bounded running top set, NO
@@ -71,13 +71,13 @@ def _partition_local_quota_prune(ranked: DataFrame, quota: int,
     dense rank over them equals the global dense rank over the corpus.
 
     Duplicate ``(id, key)`` copies are collapsed BEFORE the quota head
-    (r8 VERDICT item 1: copies share one ``(__hv, id)`` rank, so keeping
+    (copies share one ``(__hv, id)`` rank, so keeping
     any one copy is lossless, and counting them against the quota would
     evict a distinct id that belongs in the global top-quota). The
     running state is ONE compacted frame filtered by a vectorized
     groupby-cumcount — not a per-key dict of DataFrames — so long-tail
     key distributions (most keys under quota) cost one frame of at most
-    quota·n_keys rows, not n_keys pandas objects (r8 advisor finding).
+    quota·n_keys rows, not n_keys pandas objects.
     Memory per task is bounded by one Arrow batch + that running frame,
     independent of partition size."""
     schema = ranked.schema
@@ -110,8 +110,8 @@ def balanced_sample_by_key(df: DataFrame, quota_per_key: int,
     ``(id_col, key_col)``. ``(id, key)`` is the row identity: copies of
     one pair share one quota slot and one flag, an id under two keys is
     judged independently per key, and the keeper set is deduped before
-    the flag join so the output NEVER has more rows than the input (r8
-    review finding). NULL keys form their own group (a crawl record with
+    the flag join so the output NEVER has more rows than the input.
+    NULL keys form their own group (a crawl record with
     no domain is still head-cappable).
 
     The selection order is the portable md5 of ``id_col`` + ``salt``
@@ -131,7 +131,7 @@ def balanced_sample_by_key(df: DataFrame, quota_per_key: int,
         1, 8), 16, 10).cast("long")
     cand = _partition_local_quota_prune(
         base.withColumn("__hv", hv), quota_per_key, key_col, id_col)
-    # Duplicate-id hygiene (r8 review finding): copies of one (id, key)
+    # Duplicate-id hygiene: copies of one (id, key)
     # must not consume several quota slots or rank nondeterministically
     # between equal (hv, id) ties, and the keeper set must be UNIQUE per
     # (id, key) — a duplicated keeper would fan the flag join out and

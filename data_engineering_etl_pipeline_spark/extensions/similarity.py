@@ -514,48 +514,33 @@ def hyperplane_lsh_buckets(df: DataFrame, id_col: str = "vec_id",
 
 def _multi_table_buckets(df: DataFrame, id_col: str, vec_col: str,
                          n_planes: int, n_tables: int, dim: int,
-                         carry: tuple[str, ...] = (),
-                         sig_mode: str = "arrow") -> DataFrame:
-    """(id, *carry, table, bucket) for all LSH tables in ONE scan. Both
-    modes use IDENTICAL seeded-Gaussian plane constants (table t =
-    ``hyperplanes(100 + t)``'s stream) — choose by portability need:
+                         carry: tuple[str, ...] = ()) -> DataFrame:
+    """(id, *carry, table, bucket) for all LSH tables in ONE scan, with
+    seeded-Gaussian plane constants (table t = ``hyperplanes(100 + t)``'s
+    stream).
 
-    ``arrow`` (default, the 100 TB path): an Arrow-vectorized pandas UDF —
-    one numpy matmul per batch computes every plane dot for every table
-    (a (batch × dim) @ (dim × planes·tables) BLAS call). The pure-
-    expression alternative at production widths (16×4) is correct but
-    Janino-compile-bound: ~2 s per extra table per stage at dim=64 —
-    compile cost, not data cost. Map-only; constant-time in the plan.
-
-    ``fold`` (the oracle-portable config, the minhash ``md5``
-    precedent): per-table plane dots with LEFT-ASSOCIATED index-order
-    accumulation whose SIGNS a DuckDB literal chain reproduces (the
+    The signatures are oracle-portable (the minhash ``md5`` precedent):
+    per-table plane dots with LEFT-ASSOCIATED index-order accumulation
+    whose SIGNS a DuckDB literal chain reproduces (the
     ``embedding_lsh_near_dup`` parity argument; BLAS blocked summation
-    carries no such guarantee near zero dots). The fold
-    signatures are computed by an Arrow kernel whose ``np.cumsum``
-    prefix scan performs the IDENTICAL float64 addition sequence as the
-    ``aggregate(zip_with(...))`` expressions it replaces — same
-    products, same addition order, bit-equal dots (the leading ``0.0 +``
-    of the expression fold can only change the sign of zero, which
-    ``>= 0`` cannot observe — the :func:`_plane_sign_bits` argument).
-    The expression form evaluated on Spark's INTERPRETED path at
-    ~1.2 ms/row for 8×2×64 (measured: the three fold passes were ~7 s
-    of embedding_semantic_dedup's sf0.1 cost); the kernel is one
-    elementwise product + prefix scan per batch. Equality incl. the
-    NULL/short/NaN conventions is unit-pinned
+    carries no such guarantee near zero dots). An Arrow kernel computes
+    them: it adds the per-term float64 products in index order, starting
+    from ``0.0``, which is the IDENTICAL addition sequence of the
+    ``aggregate(zip_with(...))`` expression fold — same products, same
+    order, bit-equal dots. The expression form evaluated on Spark's
+    INTERPRETED path at ~1.2 ms/row for 8×2×64 (measured: the three fold
+    passes were ~7 s of embedding_semantic_dedup's sf0.1 cost), and at
+    production widths (16×4) it is Janino-compile-bound; the kernel is
+    ``dim`` vectorized multiply-adds per batch, holding one
+    (batch × planes·tables) accumulator. Map-only; constant-time in the
+    plan. Equality incl. the NULL/short/NaN conventions is unit-pinned
     (tests/test_similarity_recall.py::test_fold_kernel_matches_fold_expressions).
-    NULL/short/NULL-element vectors bucket 0 per table (NULL dots fail
-    ``>= 0``) where arrow's zero-row convention buckets all-ones —
-    callers mixing modes on NULL-bearing corpora must not (documented,
-    not reachable from the registry row, whose inputs are non-NULL).
+    NULL and wrong-length vectors bucket 0 in every table (the
+    expression fold's NULL dot fails ``>= 0``).
 
     ``carry`` names extra ``df`` columns to keep on the exploded rows
     (so callers like the signature-index builder need no corpus-sized
     join-back)."""
-    if sig_mode not in ("arrow", "fold"):
-        raise ValueError(
-            f"_multi_table_buckets: sig_mode={sig_mode!r} not in "
-            "('arrow', 'fold')")
     planes = []
     for t in range(n_tables):
         rnd = random.Random(100 + t)
@@ -564,42 +549,35 @@ def _multi_table_buckets(df: DataFrame, id_col: str, vec_col: str,
     pmat = np.asarray(planes, dtype=np.float64).reshape(n_tables * n_planes, dim)
     weights = (1 << np.arange(n_planes, dtype=np.int64))
 
-    if sig_mode == "fold":
-        @F.pandas_udf("array<long>")
-        def sigs(emb: pd.Series) -> pd.Series:
-            rows = np.zeros((len(emb), dim), dtype=np.float64)
-            ok = np.zeros(len(emb), dtype=bool)
-            for r, v in enumerate(emb):
-                if v is None or len(v) != dim:
-                    continue  # expression fold: NULL dot -> every bit 0
-                rows[r] = np.asarray(v, dtype=np.float64)
-                ok[r] = True
-            # exact twin of the expression fold: same per-term float64
-            # products, then a sequential prefix scan — cumsum computes
-            # every prefix, so its addition order IS the fold's
-            # left-to-right order (pairwise/SIMD reassociation is
-            # impossible for a scan). A NaN dot sets the bit, matching
-            # Spark's NaN-greatest comparison semantics (NaN >= 0 is
-            # TRUE in SQL, probe-confirmed). One documented divergence:
-            # a NULL ELEMENT inside a non-NULL vector reaches this
-            # kernel as NaN (Arrow has no per-element null here), so it
-            # signs like NaN where the expression fold's NULL dot gave
-            # bit 0 — unreachable from every registry input (non-NULL
-            # dense vectors) and pinned in the kernel-equality unit.
-            prods = rows[:, None, :] * pmat[None, :, :]  # n × (T·P) × dim
-            d = np.cumsum(prods, axis=2)[:, :, -1]
-            bits = ((d >= 0) | np.isnan(d)) & ok[:, None]
-            sig = (bits.reshape(len(emb), n_tables, n_planes)
-                   * weights).sum(axis=2)
-            return pd.Series(list(sig))
-    else:
-        @F.pandas_udf("array<long>")
-        def sigs(emb: pd.Series) -> pd.Series:
-            m = _vec_matrix(emb, dim)
-            d = m @ pmat.T                               # n × (tables·planes)
-            bits = (d >= 0).reshape(len(m), n_tables, n_planes)
-            sig = (bits * weights).sum(axis=2)           # n × tables
-            return pd.Series(list(sig))
+    @F.pandas_udf("array<long>")
+    def sigs(emb: pd.Series) -> pd.Series:
+        rows = np.zeros((len(emb), dim), dtype=np.float64)
+        ok = np.zeros(len(emb), dtype=bool)
+        for r, v in enumerate(emb):
+            if v is None or len(v) != dim:
+                continue  # expression fold: NULL dot -> every bit 0
+            rows[r] = np.asarray(v, dtype=np.float64)
+            ok[r] = True
+        # exact twin of the expression fold: the same per-term float64
+        # products, added to a 0.0 start one index at a time, so every
+        # dot is the fold's left-to-right chain (a matmul or a reduction
+        # may reassociate; elementwise adds cannot). The accumulator is
+        # batch × (T·P); materializing every product first would be dim
+        # times that per batch. A NaN dot sets the bit, matching
+        # Spark's NaN-greatest comparison semantics (NaN >= 0 is TRUE in
+        # SQL, probe-confirmed). One documented divergence: a NULL
+        # ELEMENT inside a non-NULL vector reaches this kernel as NaN
+        # (Arrow has no per-element null here), so it signs like NaN
+        # where the expression fold's NULL dot gave bit 0 — unreachable
+        # from every registry input (non-NULL dense vectors) and pinned
+        # in the kernel-equality unit.
+        d = np.zeros((len(emb), n_tables * n_planes), dtype=np.float64)
+        for i in range(dim):
+            d += rows[:, i, None] * pmat[None, :, i]
+        bits = ((d >= 0) | np.isnan(d)) & ok[:, None]
+        sig = (bits.reshape(len(emb), n_tables, n_planes)
+               * weights).sum(axis=2)
+        return pd.Series(list(sig))
 
     tagged = df.select(F.col(id_col), *[F.col(c) for c in carry],
                        sigs(F.col(vec_col)).alias("__sigs"))
@@ -1601,8 +1579,7 @@ _SIG_INDEX_COLS = ("table", "bucket", "keep_id", "keep_vec", "keep_inv",
 def embedding_signature_index(df: DataFrame, id_col: str = "vec_id",
                               vec_col: str = "embedding", n_planes: int = 16,
                               n_tables: int = 4,
-                              dim: int = VECTOR_DIM,
-                              sig_mode: str = "arrow") -> DataFrame:
+                              dim: int = VECTOR_DIM) -> DataFrame:
     """The persistable SEMANTIC dedup index — the embedding twin of
     ``dedup.doc_fingerprints``: one row per (keeper, LSH table) with
     ``(table, bucket, keep_id, keep_vec)``, where ``keep_vec`` is the
@@ -1623,14 +1600,12 @@ def embedding_signature_index(df: DataFrame, id_col: str = "vec_id",
     ``incremental_semantic_dedup`` can REFUSE a config-mismatched index
     instead of silently matching nothing. Built
     map-only: signatures and carried columns come from one scan, no
-    join-back. ``sig_mode='fold'`` builds the signatures with the
-    bit-portable fold expressions instead of the Arrow matmul (the
-    oracle config — see ``_multi_table_buckets``); an index must be
-    ingested under the SAME mode it was built with."""
+    join-back. The signatures are the bit-portable fold of
+    ``_multi_table_buckets`` (a NULL or wrong-length vector buckets 0 in
+    every table)."""
     staged = with_vec_inv(df, vec_col, "keep_vec", "keep_inv", dim)
     sigs = _multi_table_buckets(staged, id_col, vec_col, n_planes, n_tables,
-                                dim, carry=("keep_vec", "keep_inv"),
-                                sig_mode=sig_mode)
+                                dim, carry=("keep_vec", "keep_inv"))
     out = sigs.select(
         F.col(id_col).alias("keep_id"), "table", "bucket", "keep_vec",
         "keep_inv", F.lit(n_planes).alias("planes"),
@@ -1651,8 +1626,7 @@ def incremental_semantic_dedup(batch: DataFrame, index: DataFrame,
                                id_col: str = "vec_id",
                                vec_col: str = "embedding",
                                n_planes: int = 16, n_tables: int = 4,
-                               dim: int = VECTOR_DIM,
-                               sig_mode: str = "arrow"
+                               dim: int = VECTOR_DIM
                                ) -> tuple[DataFrame, DataFrame]:
     """Incremental SEMANTIC dedup — the daily-ingest form of embedding
     near-dup removal, mirroring ``dedup.incremental_exact_dedup``'s
@@ -1669,8 +1643,8 @@ def incremental_semantic_dedup(batch: DataFrame, index: DataFrame,
     ``caching.release_engine_pins()`` (or wrap the batch in
     ``caching.engine_pin_scope()``) after materializing both outputs:
     each call pins two batch-sized relations, and an unreleased stream
-    accumulates one pinned full-payload batch per micro-batch (review
-    finding; the streaming e2e test is the reference pattern).
+    accumulates one pinned full-payload batch per micro-batch (the
+    streaming e2e test is the reference pattern).
 
     Plan: ONE pinned signature pass over the batch — CARRYING each row's
     double vector and inverse norm (the disk-for-stages trade
@@ -1692,24 +1666,14 @@ def incremental_semantic_dedup(batch: DataFrame, index: DataFrame,
     is not re-examined when a later batch would have clustered them
     differently — ingest order is part of the semantics.
 
-    Verification split: under the DEFAULT
-    ``sig_mode='arrow'`` the multi-table signatures come from a numpy
-    MATMUL, whose blocked/pairwise summation is not the left-associated
-    index-order accumulation a SQL literal chain evaluates — near-zero
-    plane dots can sign-flip by ulps between the two, so that path stays
-    unit-covered (exact copies drop, idempotent replay, disk==memory
-    index — contracts that need no summation-order agreement). Under
-    ``sig_mode='fold'`` the signatures are the bit-portable fold
-    expressions (the ``embedding_lsh_near_dup`` parity argument), and
-    the WHOLE cross-batch keeper decision is hash-verified by the
-    driver: the ``incr_fresh``/``index`` grains of the
+    Verification: the multi-table signatures are the bit-portable fold
+    of ``_multi_table_buckets`` (the ``embedding_lsh_near_dup`` parity
+    argument), so the WHOLE cross-batch keeper decision is hash-verified
+    by the driver: the ``incr_fresh``/``index`` grains of the
     ``embedding_semantic_dedup`` row (queries/vectors.py) recompute
     signatures, buckets, within-batch closure, and the carried-vector
     cosine verify in DuckDB — replayed-copy drop, zero-tail-mutant
-    threshold decision, and sign-flip survival end-to-end. An index
-    must be ingested under the SAME mode it was built with (signatures
-    agree between modes except within reassociation ulps of a zero
-    plane dot, but the contract is per-mode)."""
+    threshold decision, and sign-flip survival end-to-end."""
     from ..caching import pin
     from .dedup import dedup_clusters
 
@@ -1764,8 +1728,7 @@ def incremental_semantic_dedup(batch: DataFrame, index: DataFrame,
     staged = with_vec_inv(batch.select(F.col(id_col), F.col(vec_col)),
                           vec_col, "v", "i", dim)
     sigs = pin(_multi_table_buckets(
-        staged, id_col, "v", n_planes, n_tables, dim, carry=("v", "i"),
-        sig_mode=sig_mode))
+        staged, id_col, "v", n_planes, n_tables, dim, carry=("v", "i")))
 
     # (a) within-batch: bucket join with the exact verify FUSED into the
     # join filter (identical _exact_verify_tail expression — dot·ia·ib,

@@ -1,4 +1,4 @@
-"""URL/domain-level curation (r8 — the web-crawl half of the §2.11
+"""URL/domain-level curation (the web-crawl half of the §2.11
 training-data pipeline): URL canonicalization, registered-domain
 extraction, URL-keyed exact dedup, per-domain document caps, and domain
 blocklist filtering — the standard pre-text curation steps of the public
@@ -50,7 +50,7 @@ _PATH_RE = r"^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*([^?#]*)"
 #: anchored to the PRE-fragment region: a bare r"\?..." would match a '?'
 #: inside the fragment and resurrect fragment content as the query
 #: ('https://ex.com/a#x?b=1' must canonicalize like '/a', not '/a?b=1')
-#: — r8 review finding, shared constant so the DuckDB twin agrees
+#: — a shared constant so the DuckDB twin agrees
 _QUERY_RE = r"^[^#]*?\?([^#]*)"
 
 
@@ -188,8 +188,8 @@ def with_registered_domain_psl(docs: DataFrame, suffixes: DataFrame,
                                suffix_col: str = "suffix",
                                host_col: str | None = None,
                                max_suffix_labels: int = 4) -> DataFrame:
-    """Registered domain backed by a CALLER-SUPPLIED public-suffix table
-    (r8 VERDICT item 4): ``docs`` plus an ``out_col`` column holding the
+    """Registered domain backed by a CALLER-SUPPLIED public-suffix table:
+    ``docs`` plus an ``out_col`` column holding the
     PSL registered domain of each row's URL (or bare ``host_col`` when
     given). ``suffixes`` is a one-column DataFrame of suffixes — the
     public-suffix list is deployment DATA (a file you mount and refresh),
@@ -202,8 +202,7 @@ def with_registered_domain_psl(docs: DataFrame, suffixes: DataFrame,
     label; a host that IS a public suffix exactly has no registrable
     part → ``''`` (the '' host convention); a host whose TLD is unlisted
     falls back to the implicit ``*`` rule (TLD = the suffix → registered
-    = last two labels). Rule classes (r9 VERDICT item 2 — the real PSL
-    file loads as-is now):
+    = last two labels). Rule classes (so the real PSL file loads as-is):
 
     - plain rows match their exact label suffix;
     - WILDCARD rows (``*.ck``, stored as parent ``ck`` with
@@ -218,11 +217,11 @@ def with_registered_domain_psl(docs: DataFrame, suffixes: DataFrame,
 
     ``suffixes`` may carry an optional ``kind`` column
     ('rule'|'wildcard'|'exception' — :func:`load_suffix_rows` emits it);
-    without one, every row is a plain rule (the pre-r10 shape). The
+    without one, every row is a plain rule. The
     table is ``.distinct()``-ed after normalization: duplicate entries
     (easy to produce unioning ICANN+private lists) would otherwise fan
     out every matching corpus row through the left joins — silent row
-    inflation (r9 ADVICE finding).
+    inflation.
 
     Plan shape — map-only at any corpus scale: candidate suffixes of
     depth 1..``max_suffix_labels`` are sliced from the host labels
@@ -232,8 +231,7 @@ def with_registered_domain_psl(docs: DataFrame, suffixes: DataFrame,
     shuffles (an explode + groupBy longest-match would re-shuffle the
     corpus by id). Entries deeper than ``max_suffix_labels`` labels
     (wildcard parents: ``max_suffix_labels − 1``) are IGNORED — they
-    can never match a candidate slice (r9 ADVICE finding; the old
-    docstring claimed truncated matching, which was wrong);
+    can never match a candidate slice (there is no truncated matching);
     :func:`load_suffix_rows` refuses them loudly so a mounted PSL file
     either fits the cap or tells you to raise it."""
     host = (F.lower(F.trim(F.col(host_col))) if host_col is not None
@@ -355,14 +353,14 @@ def load_suffix_rows(entries,
     ``*.ck`` becomes ``('ck', 'wildcard')`` (the stored suffix is the
     wildcard PARENT), ``!www.ck`` becomes ``('www.ck', 'exception')``,
     everything else ``(s, 'rule')`` — the three rule classes
-    :func:`with_registered_domain_psl` matches (r9 VERDICT item 2; the
-    pre-r10 loader refused wildcard/exception lines, which made the real
-    publicsuffix.org file unloadable since wildcards cannot be expanded
-    without enumerating hosts). Entries whose match depth exceeds
+    :func:`with_registered_domain_psl` matches (wildcards are stored, not
+    expanded: expanding them would need an enumeration of hosts, and
+    refusing them would make the real publicsuffix.org file
+    unloadable). Entries whose match depth exceeds
     ``max_suffix_labels`` (rule/exception: label count; wildcard: parent
     labels + 1) are REFUSED loudly — deeper entries would be silently
-    ignored by the matcher (r9 ADVICE finding); raise the cap on both
-    calls if a deployment needs them. Returns rows ready for
+    ignored by the matcher; raise the cap on both calls if a deployment
+    needs them. Returns rows ready for
     ``createDataFrame(..., 'suffix string, kind string')``; duplicates
     are dropped here AND re-dropped by the matcher."""
     rows: list[tuple[str, str]] = []
@@ -448,12 +446,12 @@ def filter_blocklisted(docs: DataFrame, blocklist: DataFrame,
     """Drop rows whose registered domain is blocklisted — broadcast LEFT
     ANTI join (C4's URL-blocklist step). The blocklist is MB-scale by
     nature; the corpus streams map-side through the join. BOTH sides
-    normalize to the registered domain (r8 review finding: real
-    blocklists carry full hosts like ``www.evil.com`` or
-    ``bad.evil.com``; lowercasing alone would leave such entries silently
-    inert — asymmetric key spaces block nothing and raise nothing), so
-    ``evil.co.uk`` blocks ``a.evil.co.uk`` and a ``bad.evil.com`` entry
-    blocks the whole ``evil.com`` registered domain. Deployments needing
+    normalize to the registered domain (real blocklists carry full
+    hosts like ``www.evil.com`` or ``bad.evil.com``; lowercasing alone
+    would leave such entries silently inert — asymmetric key spaces
+    block nothing and raise nothing), so ``evil.co.uk`` blocks
+    ``a.evil.co.uk`` and a ``bad.evil.com`` entry blocks the whole
+    ``evil.com`` registered domain. Deployments needing
     exact-host granularity match on :func:`extract_host` instead.
     ``keep_domain_col`` forwards the computed registered domain on the
     survivors (it is already evaluated for the join — re-deriving it
@@ -468,8 +466,8 @@ def filter_blocklisted(docs: DataFrame, blocklist: DataFrame,
     it blocks pages served at the apex host itself (``https://github.io/x``,
     whose registered domain is also '' and so can never match a
     domain-keyed anti join) via a third broadcast anti join on the exact
-    host (r9 ADVICE finding — the apex gap closed rather than
-    documented). The r8 lesson again: an entry class that silently
+    host (the apex gap closed rather than documented). The rule
+    throughout: an entry class that silently
     blocks nothing is worse than either refusing it or giving it its
     obvious meaning."""
     bl_host = F.regexp_replace(

@@ -32,7 +32,7 @@ def register(name: str, oracle: str | None = None):
 
 # `vectors` registers before `text` so that, if the registry ever exceeds
 # the driver's 50-entry check budget again, the embedding family is not the
-# silently-dropped tail (r2 VERDICT finding). Keep len(QUERIES) <= 50 —
+# silently-dropped tail. Keep len(QUERIES) <= 50 —
 # tests/test_pipeline_e2e.py pins the budget.
 from . import (analytics, core, events, features, joins, pipeline,  # noqa: E402
                quality, scalars, sqlq, tech, vectors, text, corpusq)  # noqa: F401

@@ -106,7 +106,7 @@ def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
            ROUND(SUM(l_quantity), 2) AS l_quantity,
            ROUND(AVG(l_extendedprice), 4) AS l_extendedprice,
            ROUND(MIN(l_discount), 4) AS l_discount,
-           -- skip-NULL last/first, mirroring agg_dict (r5 review: the old
+           -- skip-NULL last/first, mirroring agg_dict (a
            -- positional ord=cnt/ord=1 pick would return NULL where the
            -- engine returns the last/first NON-NULL value — latent
            -- divergence on any future fixture with NULL cells). max_by

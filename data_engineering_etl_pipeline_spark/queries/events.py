@@ -15,8 +15,8 @@ from . import register
 
 
 #: the sliding-window (1 h / 30 min) assignment CTEs, shared by the
-#: registry oracle and the standalone library twin (r8 review finding: a
-#: verbatim second copy could silently diverge on a future edit)
+#: registry oracle and the standalone library twin (a verbatim second
+#: copy could silently diverge on a future edit)
 _WINDOW_GRID_CTES = """grid AS (
       SELECT ts, value,
              date_trunc('hour', ts)
@@ -29,10 +29,11 @@ _WINDOW_GRID_CTES = """grid AS (
       WHERE ts >= u.ws AND ts < u.ws + INTERVAL 60 MINUTE
     )"""
 
-#: event_time_windows' value oracle — registry slot consolidated in r8
-#: (headroom plan #3: tumbling/sliding became grains of `user_sessions`);
-#: the standalone builder keeps this full hash-checked twin as a unit
-#: (tests/test_queries_oracle.py) and stays in the library surface.
+#: event_time_windows' value oracle — its registry slot was folded into
+#: `user_sessions` (tumbling/sliding are grains there, which frees a slot
+#: under the driver's 50-entry cap); the standalone builder keeps this
+#: full hash-checked twin as a unit (tests/test_queries_oracle.py) and
+#: stays in the library surface.
 EVENT_TIME_WINDOWS_ORACLE = """
     WITH """ + _WINDOW_GRID_CTES + """
     SELECT 'tumbling' AS kind, date_trunc('hour', ts) AS window_start,
@@ -51,16 +52,15 @@ EVENT_TIME_WINDOWS_ORACLE = """
 def event_time_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling (1 h, keyed by event_type) AND sliding (1 h window / 30 min
     slide — every event lands in exactly 2 windows) event-time aggregation
-    in one registry row (r4 consolidation of the former
-    ``hourly_event_windows`` + ``sliding_event_windows`` rows; both window
-    families stay independently verified, united by name with a ``kind``
-    tag). ``F.window`` has identical semantics batch vs
-    readStream+watermark (§2.9) — the streaming twin and the late-data-drop
-    contract are pinned in tests/test_streaming.py; the sliding oracle
-    builds the window assignment explicitly from the 30-minute grid.
-    Left the driver registry in r8 (headroom plan #3: both window grains
-    ride ``user_sessions`` now); the full value oracle stays hash-checked
-    as a unit via ``EVENT_TIME_WINDOWS_ORACLE``."""
+    in one function (both window families stay independently verified,
+    united by name with a ``kind`` tag). ``F.window`` has identical
+    semantics batch vs readStream+watermark (§2.9) — the streaming twin
+    and the late-data-drop contract are pinned in
+    tests/test_streaming.py; the sliding oracle builds the window
+    assignment explicitly from the 30-minute grid.
+    Not a driver registry row: both window grains ride ``user_sessions``;
+    the full value oracle stays hash-checked as a unit via
+    ``EVENT_TIME_WINDOWS_ORACLE``."""
     ev = load_table(spark, sf_dir, "events")
     tumbling = (windowed_agg(ev, "ts", "1 hour", keys=["event_type"])
                 .select(F.lit("tumbling").alias("kind"),
@@ -115,14 +115,15 @@ def event_time_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The §2.9 event-time aggregation family in ONE stage-tagged row
-    (r8 — headroom plan #3, the ``media_pipeline`` pattern): gap-based
+    (the ``media_pipeline`` pattern, one slot under the driver's
+    50-entry cap): gap-based
     sessionization (30-min gap via lag + running sum, the batch twin of
-    ``session_window``) as the ``session`` grain, plus the former
-    ``event_time_windows`` row's tumbling (1 h, keyed by event_type) and
+    ``session_window``) as the ``session`` grain, plus
+    ``event_time_windows``' tumbling (1 h, keyed by event_type) and
     sliding (1 h / 30 min — every event in exactly 2 windows) grains.
     All three aggregate the same events table by user/time; the
-    discriminator column keeps every former value surface hashed under
-    one registry slot. Streaming twins (readStream + watermark ==
+    discriminator column keeps every grain's values hashed under one
+    registry slot. Streaming twins (readStream + watermark ==
     these batch forms) stay pinned in tests/test_streaming.py; the
     standalone window builder keeps its full oracle as a unit
     (``EVENT_TIME_WINDOWS_ORACLE``)."""
@@ -156,23 +157,22 @@ def user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def event_type_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A5/A7/F15 per-type profile in one registry row (r3 VERDICT
-    consolidation: the former ``event_type_freq`` + ``props_json_extract``
-    rows merged to free slots under the driver's 50-entry cap — same single
-    hash aggregate, one scan instead of two).
+    """A5/A7/F15 per-type profile in one registry row (frequency table
+    and JSON extraction share one slot under the driver's 50-entry cap —
+    one hash aggregate, one scan).
 
     A7 frequency table (reference value_counts, cg_attributes…py:155), A5
     distinct count (reference nunique, historical_data_etl.py:196 — at
     100 TB swap countDistinct for approx_count_distinct, HLL map-side
     combinable; exact here to match the oracle — the swap is a TESTED
-    contract since r12: rel err 0.067 at rsd=0.05 on sf0.1, asserted
+    contract: rel err 0.067 at rsd=0.05 on sf0.1, asserted
     ≤ 2×rsd in tests/test_scale_toolkit.py), and F15 nested-JSON
     flatten (reference parse_asset_metadata, pipeline_helpers.py:107-156):
     a typed field extracted from the JSON payload and aggregated in the
     same pass."""
     ev = load_table(spark, sf_dir, "events")
     ks = F.get_json_object("props", "$.k")
-    # regex-guarded cast (r5 review): a plain .cast('long') THROWS under
+    # regex-guarded cast: a plain .cast('long') THROWS under
     # Spark 4's default ANSI mode on any non-integral k (DuckDB would
     # round it instead) — both engines now treat non-integral k as NULL in
     # the sum, and null_k counts EXTRACTION failures (missing/invalid
@@ -241,7 +241,7 @@ def user_value_macd(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     # (user, ts)-unique restriction as ONE window count over the same
     # user_id clustering the MACD kernel needs — the old groupBy + self-
-    # join shuffled the full events table twice (r5 review finding); the
+    # join shuffled the full events table twice; the
     # oracle's own COUNT(*) OVER formulation mirrors this shape.
     w = Window.partitionBy("user_id", "ts")
     ev = (ev.withColumn("__c", F.count(F.lit(1)).over(w))
@@ -278,8 +278,8 @@ def purchase_last_view_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     no built-in for. Implemented as the union + sort + last(ignorenulls)
     carry-forward plan (`relational.asof_join`): ONE shuffle of |L|+|R|
     rows, no range join, no per-key pair explosion — the 100 TB shape.
-    Oracle: DuckDB's native ASOF LEFT JOIN. ``duplicates='resolve_max'``
-    (r5 review): two view rows sharing (user, ts) would otherwise make the
+    Oracle: DuckDB's native ASOF LEFT JOIN. ``duplicates='resolve_max'``:
+    two view rows sharing (user, ts) would otherwise make the
     carried value NONDETERMINISTIC run-to-run — the fixture currently has
     none, so this is hash-neutral, and if a regeneration introduces one,
     our side stays deterministic (DuckDB's ASOF picks arbitrarily on dup

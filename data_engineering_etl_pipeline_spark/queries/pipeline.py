@@ -8,7 +8,7 @@ eager pandas stages with per-coin fetch loops; here Catalyst sees the whole
 lineage, the fetch fans out one task per API page, and the only shuffles are
 the universe aggregation and the final canonical groupBy.
 
-DuckDB oracles (r5 VERDICT item 5): the source is the deterministic
+DuckDB oracles: the source is the deterministic
 synthetic fetcher, not a parquet table — but the fetcher is a closed-form
 md5/floor recipe (`sources.synthetic_fetch`), so the oracle rebuilds the
 fact table arithmetically in a SQL CTE and value-checks the FULL pipeline,
@@ -169,7 +169,7 @@ def market_history_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # monthly top-N canonical ids by mean market cap (universe build,
     # A3+W1+O3). A canonical's daily cap is its MAX member listing, not the
     # SUM: btc/btc_alt are duplicate listings of ONE asset, so summing
-    # would double-weight dual-listed coins in the ranking (r5 review) —
+    # would double-weight dual-listed coins in the ranking —
     # the same max-member convention canonical_aggregate applies one stage
     # later via priority_col.
     canon_daily = (fact.groupBy("canonical_id", "day")
@@ -210,7 +210,7 @@ def live_world_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole-world recompute — latest-day top-N universe → members' full
     history → canonical aggregation → snapshot-date stamp. ``sf_dir``
     unused (connector-sourced, like market_history_pipeline); hash-checked
-    against the closed-form fact oracle since r6, and the
+    against the closed-form fact oracle, and the
     overwrite-idempotency behavior is pinned in tests/test_live_refresh.py."""
     from ..live import live_world
 

@@ -15,8 +15,8 @@ from . import register
 
 # Precedence-ordered taxonomy over part types (star-schema analog of the
 # reference's crypto category taxonomy, cg_attributes…py:45-80). Classified
-# per-row inside scalar_function_suite (UD5); the former standalone
-# `part_taxonomy` aggregate row was retired in the r4 registry consolidation.
+# per-row inside scalar_function_suite (UD5), which checks every row's class
+# rather than a per-class aggregate.
 _PART_TAXONOMY = [
     ("Premium Metal", ["STEEL", "COPPER"]),
     ("Coated", ["ANODIZED", "PLATED", "POLISHED"]),
@@ -101,11 +101,9 @@ _PART_TAXONOMY = [
 def scalar_function_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F1-F12/F16 scalar-function suite plus the UD5 precedence taxonomy
     and the P8/P9/P11/F17/F18 null-handling family in one registry row
-    (r3/r4 VERDICT consolidation: the former ``order_date_parts`` +
-    ``part_string_funcs`` + ``part_taxonomy`` + ``customer_null_handling``
-    rows merged to free registry slots under the driver's 50-entry cap; the
-    classifier and the null-handling columns are checked per-row here —
-    strictly stronger than the retired per-class/per-segment aggregates).
+    (one slot under the driver's 50-entry cap; the classifier and the
+    null-handling columns are checked per-row here — strictly stronger
+    than per-class/per-segment aggregates).
 
     Date family on orders (reference pd.to_datetime().dt
     pipeline_helpers.py:213,243; month truncation universe…py:153;
@@ -159,9 +157,9 @@ def scalar_function_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         "bal_or_null",
         F.coalesce("bal_or_null", F.lit(0.0)).alias("bal_filled"),
         F.col("bal_or_null").isNull().alias("bal_is_null"),
-        # null-SKIPPING aggregation semantics stay oracle-pinned (the
-        # retired row's AVG check, kept as a per-row window aggregate —
-        # r4 review finding: the merge had dropped it)
+        # null-SKIPPING aggregation semantics stay oracle-pinned: a
+        # per-segment AVG, kept as a per-row window aggregate so the
+        # per-row check covers it
         F.round(F.avg("bal_or_null").over(
             Window.partitionBy("segment_canon")), 4).alias("seg_avg_nonnull"),
     )

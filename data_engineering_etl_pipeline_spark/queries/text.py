@@ -917,8 +917,7 @@ _MD5_32 = """list_sum(list_transform(range(0, 8), i ->
     WHERE dp * ia.iv * ib.iv >= 0.9
     """,
 )
-def doc_tfidf_near_dup(spark: SparkSession, sf_dir: str,
-                       idf=None) -> DataFrame:
+def doc_tfidf_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Text→similarity bridge: text
     → hashed TF-IDF vectors (extensions/corpus.py hashed_tfidf_vectors —
     md5 unigram+bigram feature hashing, smoothed idf, l2-normalized
@@ -933,14 +932,7 @@ def doc_tfidf_near_dup(spark: SparkSession, sf_dir: str,
     float32 quantization of the stored vector (CAST ... AS FLOAT), the
     inverse norms of the quantized vectors, and the sparse pairwise dot —
     so both the vectorizer and the near-dup machinery are hash-checked
-    end-to-end.
-
-    ``idf``: optional frozen :func:`fit_tfidf_idf` table — the driver row
-    self-fits (sf-bench-appropriate: one corpus in hand, one pass), but a
-    DEPLOYMENT running this shape daily at 100 TB should fit once on the
-    reference corpus and pass the frozen table here, which makes vectorization
-    fully map-only and skips the corpus-sized self-fit pin entirely
-    (byte-identical vectors — unit-proven in tests/test_corpus_ops.py)."""
+    end-to-end."""
     from ..extensions.corpus import hashed_tfidf_vectors
     from ..extensions.similarity import cosine_near_dup_pairs
 
@@ -955,8 +947,7 @@ def doc_tfidf_near_dup(spark: SparkSession, sf_dir: str,
     # 1.8× end-to-end at sf0.1). Exchange reuse cannot help across actions,
     # so this is the persist-not-replan case — same caller-release
     # contract as ngram_jaccard_pairs.
-    vecs = pin(hashed_tfidf_vectors(doubled, id_col="doc_id", dim=64,
-                                    idf=idf))
+    vecs = pin(hashed_tfidf_vectors(doubled, id_col="doc_id", dim=64))
     return cosine_near_dup_pairs(vecs, threshold=0.9, id_col="doc_id",
                                  vec_col="embedding", dim=64)
 

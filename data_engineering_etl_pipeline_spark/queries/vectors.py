@@ -393,8 +393,8 @@ def embedding_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ``incr_fresh``/``index``: the operator a continuous
     embedding pipeline runs DAILY
-    (:func:`similarity.incremental_semantic_dedup` under the PORTABLE
-    ``sig_mode='fold'`` config, 8 planes × 2 tables, threshold 0.94 —
+    (:func:`similarity.incremental_semantic_dedup`, whose fold
+    signatures are bit-portable, at 8 planes × 2 tables, threshold 0.94 —
     the ``doc_minhash_lsh`` md5-config precedent applied to the
     semantic family). Day-1 corpus → carried-vector signature index;
     day-2 ingest = replayed exact copies (every 7th, id+1e6 — cosine 1,
@@ -449,17 +449,16 @@ def embedding_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
                                                      lambda x: -x))))
     # pinned: the day-1 index subtree feeds BOTH the cross-batch candidate
     # join and the updated-index union below — unpinned, the fold
-    # signature expressions (the row's priciest codegen) would run twice
+    # signature kernel would run twice
     # (the builder's attached manifest makes the ingest config check
     # metadata-only, so the pin materializes once)
     from ..caching import pin
 
     index = pin(embedding_signature_index(dv, n_planes=_ISD_PLANES,
-                                          n_tables=_ISD_TABLES,
-                                          sig_mode="fold"))
+                                          n_tables=_ISD_TABLES))
     fresh, updated = incremental_semantic_dedup(
         day2, index, threshold=_ISD_THRESHOLD, n_planes=_ISD_PLANES,
-        n_tables=_ISD_TABLES, sig_mode="fold")
+        n_tables=_ISD_TABLES)
     incr = fresh.select(F.lit("incr_fresh").alias("stage"), "vec_id",
                         nl.alias("keeper_id"))
     idx = (updated.select("keep_id").distinct()

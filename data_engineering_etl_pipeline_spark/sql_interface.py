@@ -19,7 +19,7 @@ def register_star_views(spark: SparkSession, sf_dir: str,
     """Create/replace one temp view per star table (idempotent; views are
     lazy — no data moves until a query runs). Updates the ``run_sql`` memo
     so a direct call here cannot leave a later ``run_sql`` trusting views
-    that point at a different scale factor (r5 advisor finding)."""
+    that point at a different scale factor."""
     for t in tables:
         load_table(spark, sf_dir, t).createOrReplaceTempView(t)
     # partial registration (tables ⊂ STAR_TABLES) must NOT mark the whole
@@ -34,10 +34,10 @@ def register_star_views(spark: SparkSession, sf_dir: str,
 #: last-registered sf_dir per SparkSession — registration is memoized
 #: (ten driver-side schema reads per call otherwise) but re-runs whenever
 #: the TARGET sf_dir changes, so views never go stale across scale factors
-#: in one session (r5 review finding). Keyed on the SESSION, not the
-#: applicationId: temp views are per-session state, and a sibling from
-#: ``spark.newSession()`` shares the appId but NOT the views (r5 advisor
-#: finding). WeakValueDictionary so dead sessions don't pin memo entries.
+#: in one session. Keyed on the SESSION, not the applicationId: temp
+#: views are per-session state, and a sibling from
+#: ``spark.newSession()`` shares the appId but NOT the views.
+#: WeakValueDictionary so dead sessions don't pin memo entries.
 import weakref
 
 _REGISTERED: dict[int, str] = {}
@@ -49,7 +49,7 @@ def run_sql(spark: SparkSession, sf_dir: str, sql: str) -> DataFrame:
     key = id(spark)
     # prune memo entries whose session died (the weak map forgot them) —
     # without this the int-keyed dict grows with session churn and a
-    # recycled id() could resurrect a stale sf_dir (r6 review finding)
+    # recycled id() could resurrect a stale sf_dir
     for k in [k for k in _REGISTERED if k not in _SESSIONS]:
         _REGISTERED.pop(k, None)
     # id() can be recycled after a session is garbage-collected; the weak

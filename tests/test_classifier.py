@@ -94,9 +94,11 @@ def test_null_and_wrong_length_rows_excluded_from_fit_null_scores(spark):
 def test_quality_filter_composes_with_tfidf_vectorizer(spark):
     """The full curated-vs-raw recipe: texts with the curated marker
     vocabulary vs noise texts → hashed TF-IDF → fit → the classifier
-    separates held-out texts of both kinds."""
+    separates held-out texts of both kinds. Train and held-out texts are
+    vectorized in ONE call, so both sides share one idf."""
+    from data_engineering_etl_pipeline_spark.caching import engine_pin_scope
     from data_engineering_etl_pipeline_spark.extensions.corpus import (
-        fit_tfidf_idf, hashed_tfidf_vectors)
+        hashed_tfidf_vectors)
 
     cur = [f"curated {w} prose with careful structure and citations"
            for w in ("alpha", "beta", "gamma", "delta", "epsilon",
@@ -107,18 +109,19 @@ def test_quality_filter_composes_with_tfidf_vectorizer(spark):
     rows = ([(i, t, 1) for i, t in enumerate(cur)]
             + [(100 + i, t, 0) for i, t in enumerate(raw)])
     docs = spark.createDataFrame(rows, "doc_id long, text string, label int")
-    idf = fit_tfidf_idf(docs, dim=32)  # FROZEN: train and apply must share it
-    vecs = hashed_tfidf_vectors(docs, dim=32, idf=idf).join(
-        docs.select("doc_id", "label"), "doc_id")
-    model = fit_logreg_exact(vecs, dim=32, n_iters=25, lr=2.0)
     held = spark.createDataFrame(
-        [(0, "curated gamma prose with citations"),
-         (1, "click here free spam offer")], "doc_id long, text string")
-    hv = hashed_tfidf_vectors(held, dim=32, idf=idf)
-    got = {r["doc_id"]: r["keep"] for r in
-           logreg_gate_fold(hv, model, threshold=0.5,
-                            id_col="doc_id").collect()}
-    assert got[0] is True and got[1] is False, got
+        [(1000, "curated gamma prose with citations"),
+         (1001, "click here free spam offer")], "doc_id long, text string")
+    with engine_pin_scope():  # the self-fit pins the bucket relation
+        allv = hashed_tfidf_vectors(
+            docs.select("doc_id", "text").unionByName(held), dim=32)
+        vecs = allv.join(docs.select("doc_id", "label"), "doc_id")
+        model = fit_logreg_exact(vecs, dim=32, n_iters=25, lr=2.0)
+        hv = allv.join(held.select("doc_id"), "doc_id")
+        got = {r["doc_id"]: r["keep"] for r in
+               logreg_gate_fold(hv, model, threshold=0.5,
+                                id_col="doc_id").collect()}
+    assert got[1000] is True and got[1001] is False, got
 
 
 def test_resume_equals_uninterrupted_fit(spark):
@@ -161,22 +164,6 @@ def test_early_stop_equals_truncated_full_run(spark):
     assert stopped["weights"] == full["weights"]
     assert stopped["bias"] == full["bias"]
     assert stopped["losses"][:k - 1] == full["losses"]
-
-
-def test_dot_mode_fold_learns_and_is_relayout_stable(spark):
-    """The fixed-order per-row dot hatch: same
-    learning behavior, byte-stable across relayouts by CONSTRUCTION (the
-    gemv default is batch-shape-invariant in practice only)."""
-    df = _blobs_df(spark)
-    a = fit_logreg_exact(df.repartition(11), dim=DIM, n_iters=5,
-                         dot_mode="fold")
-    b = fit_logreg_exact(df.coalesce(1), dim=DIM, n_iters=5,
-                         dot_mode="fold")
-    assert a == b
-    assert a["losses"] == sorted(a["losses"], reverse=True)
-    import pytest
-    with pytest.raises(ValueError, match="dot_mode"):
-        fit_logreg_exact(df, dim=DIM, n_iters=1, dot_mode="blas")
 
 
 def test_gate_fold_matches_float_gate_away_from_boundary(spark):

@@ -657,12 +657,9 @@ def test_hashed_tfidf_self_fit_tokenizes_once(spark):
     the returned vectorizer plan reads the CACHE instead of re-running
     tokenize+md5 over the corpus — regression pin: the plan must read an
     InMemoryTableScan, and exactly one engine pin must have been taken
-    (released here, the caller-release contract). The precomputed-idf
-    apply path stays pin-free (fully map-only)."""
+    (released here, the caller-release contract)."""
     import contextlib
     import io
-
-    import numpy as np
 
     from data_engineering_etl_pipeline_spark.caching import (
         release_engine_pins)
@@ -680,54 +677,6 @@ def test_hashed_tfidf_self_fit_tokenizes_once(spark):
         vecs.explain("formatted")
     assert "InMemoryTableScan" in buf.getvalue()
     assert release_engine_pins() == 1
-
-    # frozen-idf apply: map-only, no pin taken
-    applied = hashed_tfidf_vectors(docs, id_col="doc_id", dim=32,
-                                   idf=np.ones(32))
-    assert applied.count() > 0
-    assert release_engine_pins() == 0
-
-
-def test_fit_once_apply_daily_equals_self_fit_bytewise(spark):
-    """The 100 TB path — fit_tfidf_idf once on the
-    reference corpus, then apply the frozen table — produces vectors
-    BYTE-IDENTICAL to the one-shot self-fit over the same corpus (so
-    switching a deployment from the self-fit pin to the frozen-idf path
-    changes nothing downstream), and the same frozen table vectorizes a
-    later batch without any fit pass or corpus pin."""
-    import numpy as np
-
-    from data_engineering_etl_pipeline_spark.caching import (
-        release_engine_pins)
-    from data_engineering_etl_pipeline_spark.extensions.corpus import (
-        fit_tfidf_idf, hashed_tfidf_vectors)
-    from data_engineering_etl_pipeline_spark.io import load_table
-
-    from .conftest import SF_DIR
-
-    docs = load_table(spark, SF_DIR, "documents").select("doc_id", "text")
-    self_fit = {r["doc_id"]: r["embedding"] for r in
-                hashed_tfidf_vectors(docs, dim=64).collect()}
-    release_engine_pins()
-
-    idf = fit_tfidf_idf(docs, dim=64)
-    frozen = {r["doc_id"]: r["embedding"] for r in
-              hashed_tfidf_vectors(docs, dim=64, idf=idf).collect()}
-    assert release_engine_pins() == 0  # frozen path took NO corpus pin
-    assert self_fit.keys() == frozen.keys()
-    for k in self_fit:
-        a = np.asarray(self_fit[k], dtype=np.float32)
-        b = np.asarray(frozen[k], dtype=np.float32)
-        assert a.tobytes() == b.tobytes(), k
-
-    # day-2 batch under the frozen day-1 idf: identical text -> identical
-    # vector (the cross-batch signature-match requirement)
-    day2 = docs.limit(20).withColumn("doc_id", F.col("doc_id") + 10_000_000)
-    got2 = {r["doc_id"] - 10_000_000: r["embedding"] for r in
-            hashed_tfidf_vectors(day2, dim=64, idf=idf).collect()}
-    for k, v in got2.items():
-        assert (np.asarray(v, dtype=np.float32).tobytes()
-                == np.asarray(frozen[k], dtype=np.float32).tobytes()), k
 
 
 def test_epoch_plan_matches_duckdb_and_is_a_permutation(spark, duck):

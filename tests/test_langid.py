@@ -152,29 +152,6 @@ def test_decision_fold_hash_matches_duckdb(spark):
     assert got == want
 
 
-def test_arrow_mode_bit_identical_to_expr_mode(spark):
-    """mode='arrow' (the large-K scale path: one Arrow kernel instead of
-    K*dim codegen'd floor terms) must reproduce mode='expr' BIT-for-bit
-    - same per-term float64 product order, same int64 sums, same argmax
-    - across feature-bearing, feature-less, and NULL rows."""
-    with engine_pin_scope():
-        train = spark.createDataFrame(_rows("train"), _SCHEMA)
-        model = fit_lang_id(train)
-        docs_rows = _rows("train") + _rows("test") + [
-            (100, None, "z"), (101, None, None)]
-        docs = spark.createDataFrame(docs_rows, _SCHEMA)
-        # mode='expr' EXPLICITLY: arrow is the default, so defaulting
-        # here would compare arrow against arrow — vacuous
-        expr = {r["doc_id"]: (r["pred_lang"], r["z_q"]) for r in
-                predict_lang_trained(docs, model, mode="expr").collect()}
-        arrow = {r["doc_id"]: (r["pred_lang"], r["z_q"]) for r in
-                 predict_lang_trained(docs, model, mode="arrow").collect()}
-        assert expr == arrow
-        import pytest as _pytest
-        with _pytest.raises(ValueError, match="mode"):
-            predict_lang_trained(docs, model, mode="gpu")
-
-
 def test_planted_lang_id_deterministic_and_per_language():
     """planted_lang_id (the doc_text_stats pred_lang_trained driver
     grain's model) must be reproducible from its seed alone — both

@@ -258,7 +258,6 @@ KEEP = {
     # the train half of live predict paths
     "fit_logreg_exact": "trains the model logreg_gate_fold applies",
     "fit_lang_id": "trains the model predict_lang_trained applies",
-    "fit_tfidf_idf": "fits the frozen idf hashed_tfidf_vectors accepts",
     "fit_pca_exact": "fits the model project_fold applies",
     # drive live operators as streams in tests/test_streaming.py
     "stream_events": "streaming source for the live operators",

@@ -636,7 +636,7 @@ def test_incremental_semantic_dedup_fused_verify_join_census(spark):
              if re.search(r"\(\d+\)\s+\S*(Join|CartesianProduct)", l)]
     assert len(joins) == 5, f"join census changed ({len(joins)}):\n" + \
         "\n".join(joins)
-    # (ArrowEvalPython nodes ARE expected here: the default sig_mode
-    # runs the documented Arrow signature kernel — the pin is the join
-    # census, not Python-freedom)
+    # (ArrowEvalPython nodes ARE expected here: the signatures come
+    # from the documented Arrow kernel — the pin is the join census,
+    # not Python-freedom)
     assert "CartesianProduct" not in p and "BroadcastNestedLoopJoin" not in p

@@ -387,10 +387,10 @@ def test_incremental_semantic_dedup_daily_ingest(spark):
 
 
 def test_fold_kernel_matches_fold_expressions(spark):
-    """`sig_mode='fold'` signatures are computed by an Arrow kernel
-    whose np.cumsum prefix scan must perform the IDENTICAL float64
-    addition sequence as the `aggregate(zip_with(...))` expression folds
-    it replaced (the oracle-portability contract). Pin bucket-for-bucket
+    """The LSH signatures are computed by an Arrow kernel whose
+    index-order accumulation must perform the IDENTICAL float64 addition
+    sequence as the `aggregate(zip_with(...))` expression folds it
+    replaced (the oracle-portability contract). Pin bucket-for-bucket
     equality against the expression form on adversarial inputs: seeded
     dense vectors, the all-zero vector (signed-zero dots — every bit
     set), a negated pair, NULL vector, short vector (both bucket 0 per
@@ -398,9 +398,9 @@ def test_fold_kernel_matches_fold_expressions(spark):
     The ONE documented divergence: a NULL element inside a non-NULL
     vector crosses the Arrow boundary as NaN, so the kernel signs it
     like NaN (all-ones) where the expression fold's NULL dot gave 0 —
-    unreachable from every registry input, pinned here explicitly. If a
-    future numpy vectorizes cumsum with a reassociating scan, this test
-    is the tripwire."""
+    unreachable from every registry input, pinned here explicitly. If the
+    kernel's accumulation is ever reassociated (a matmul, a reduction),
+    this test is the tripwire."""
     from data_engineering_etl_pipeline_spark.extensions.similarity import (
         _multi_table_buckets, _plane_sign_bits)
 
@@ -414,7 +414,7 @@ def test_fold_kernel_matches_fold_expressions(spark):
              (105, [float("nan")] + rows[2][1][1:])]  # NaN element
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     got = {(r.vec_id, r.table): r.bucket for r in _multi_table_buckets(
-        df, "vec_id", "embedding", 8, 2, 64, sig_mode="fold").collect()}
+        df, "vec_id", "embedding", 8, 2, 64).collect()}
     staged = df.withColumn(
         "__mtv", F.transform(F.col("embedding"), lambda x: x.cast("double")))
     sig_arr = F.array(*[_plane_sign_bits(F.col("__mtv"), 100 + t, 8, 64)
@@ -433,50 +433,6 @@ def test_fold_kernel_matches_fold_expressions(spark):
     # the documented NULL-element divergence: NaN through Arrow (kernel)
     # vs NULL dot (expression fold)
     assert got[(104, 0)] == all_ones and exp[(104, 0)] == 0
-
-
-def test_fold_signatures_agree_with_arrow_and_drive_ingest(spark):
-    """The bit-portable `sig_mode='fold'`
-    signature expressions must agree bucket-for-bucket with the Arrow
-    matmul path on real embeddings (same seeded plane constants; a
-    disagreement means a plane dot sat within reassociation ulps of
-    zero — never observed, and the planted driver config's margins are
-    measured ≥ 1e-4), and the fold-mode ingest must honor the same
-    contracts as arrow mode (replayed copies drop, sign-flips survive).
-    An unknown mode is refused."""
-    import pytest as _pytest
-
-    from data_engineering_etl_pipeline_spark.extensions.similarity import (
-        _multi_table_buckets, embedding_signature_index,
-        incremental_semantic_dedup)
-
-    emb = load_table(spark, SF_DIR, "embeddings").select("vec_id", "embedding")
-    arrow = {(r.vec_id, r.table): r.bucket for r in _multi_table_buckets(
-        emb, "vec_id", "embedding", 8, 2, 64, sig_mode="arrow").collect()}
-    fold = {(r.vec_id, r.table): r.bucket for r in _multi_table_buckets(
-        emb, "vec_id", "embedding", 8, 2, 64, sig_mode="fold").collect()}
-    assert arrow == fold and len(fold) == 2 * emb.count()
-
-    index = embedding_signature_index(emb, n_planes=8, n_tables=2,
-                                      sig_mode="fold")
-    batch = (emb.filter(F.col("vec_id") % 7 == 0)
-             .withColumn("vec_id", F.col("vec_id") + 1000000)
-             .unionByName(
-                 emb.filter(F.col("vec_id") % 9 == 0)
-                 .withColumn("vec_id", F.col("vec_id") + 2000000)
-                 .withColumn("embedding", F.transform(F.col("embedding"),
-                                                      lambda x: -x))))
-    fresh, _ = incremental_semantic_dedup(batch, index, threshold=0.94,
-                                          n_planes=8, n_tables=2,
-                                          sig_mode="fold")
-    fresh_ids = {r.vec_id for r in fresh.select("vec_id").collect()}
-    assert not any(1000000 <= i < 2000000 for i in fresh_ids)
-    assert {i for i in fresh_ids if i >= 2000000} == {
-        r.vec_id + 2000000 for r in
-        emb.filter(F.col("vec_id") % 9 == 0).select("vec_id").collect()}
-    with _pytest.raises(ValueError, match="sig_mode"):
-        _multi_table_buckets(emb, "vec_id", "embedding", 8, 2, 64,
-                             sig_mode="blas")
 
 
 def test_incremental_semantic_dedup_refuses_config_mismatch(spark):
@@ -675,18 +631,18 @@ def test_cluster_balanced_sample_flattens_planted_clusters(spark):
 
 def test_tfidf_bridge_drives_incremental_semantic_dedup(spark):
     """The advertised text→vector bridge COMPOSED with
-    the daily-ingest semantic dedup, end-to-end on text: day 1 fits the
-    idf, vectorizes the corpus (hashed TF-IDF), and builds the signature
-    index; day 2 vectorizes a TEXT batch under the FROZEN day-1 idf (the
-    fit/apply split — a re-fit idf would re-weight every bucket and no
-    cross-batch signature could match) and drops (a) exact text replays
-    and (b) case-rewritten copies, which are vector-identical under the
+    the daily-ingest semantic dedup, end-to-end on text: day 1 ∪ day 2
+    are vectorized (hashed TF-IDF) in ONE self-fit call and split by id
+    (one idf for both days — a per-day idf would re-weight every bucket
+    and no cross-batch signature could match); day 1 builds the
+    signature index, and the day-2 TEXT batch drops (a) exact text
+    replays and (b) case-rewritten copies, which are vector-identical under the
     lowercasing tokenizer but raw-text-distinct — the class of near-dup
     incremental EXACT dedup provably readmits (asserted as the contrast).
     Distinct fresh text survives; replay against the updated index is
     empty (idempotent ingest)."""
     from data_engineering_etl_pipeline_spark.extensions.corpus import (
-        fit_tfidf_idf, hashed_tfidf_vectors)
+        hashed_tfidf_vectors)
     from data_engineering_etl_pipeline_spark.extensions.dedup import (
         doc_fingerprints, incremental_exact_dedup)
     from data_engineering_etl_pipeline_spark.extensions.similarity import (
@@ -695,10 +651,6 @@ def test_tfidf_bridge_drives_incremental_semantic_dedup(spark):
     DIM = 128
     docs = (load_table(spark, SF_DIR, "documents")
             .select("doc_id", "text").filter(F.col("text").isNotNull()))
-    idf = fit_tfidf_idf(docs, dim=DIM)
-    vec1 = hashed_tfidf_vectors(docs, dim=DIM, idf=idf)
-    index = embedding_signature_index(vec1, id_col="doc_id", dim=DIM)
-
     replay = (docs.filter(F.col("doc_id") % 13 == 0)
               .select((F.col("doc_id") + 1000000).alias("doc_id"), "text"))
     shouted = (docs.filter(F.col("doc_id") % 17 == 0)
@@ -714,9 +666,10 @@ def test_tfidf_bridge_drives_incremental_semantic_dedup(spark):
         "doc_id long, text string")
     batch_docs = (replay.unionByName(shouted).unionByName(fresh_docs)
                   .unionByName(pair))
-    # day-2 vectorization: map-only (no fit pass) under the frozen idf
-    batch = batch_docs.join(
-        hashed_tfidf_vectors(batch_docs, dim=DIM, idf=idf), "doc_id")
+    allv = hashed_tfidf_vectors(docs.unionByName(batch_docs), dim=DIM)
+    vec1 = allv.join(docs.select("doc_id"), "doc_id", "left_semi")
+    index = embedding_signature_index(vec1, id_col="doc_id", dim=DIM)
+    batch = batch_docs.join(allv, "doc_id")
 
     fresh, updated = incremental_semantic_dedup(
         batch, index, id_col="doc_id", dim=DIM)
