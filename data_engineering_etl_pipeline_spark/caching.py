@@ -61,13 +61,12 @@ _LOCK = threading.RLock()
 _SCOPES = threading.local()
 
 
-def pin(df: DataFrame,
-        level: StorageLevel = StorageLevel.MEMORY_AND_DISK) -> DataFrame:
-    """Persist ``df`` at ``level`` and register it as an ENGINE pin that
-    :func:`release_engine_pins` will drop. MEMORY_AND_DISK default: at
+def pin(df: DataFrame) -> DataFrame:
+    """Persist ``df`` at MEMORY_AND_DISK and register it as an ENGINE pin
+    that :func:`release_engine_pins` will drop. MEMORY_AND_DISK: at
     100 TB an engine intermediate must spill like a shuffle write, not
     evict and recompute."""
-    out = df.persist(level)
+    out = df.persist(StorageLevel.MEMORY_AND_DISK)
     with _LOCK:
         _PINNED.append(out)
         for collector in getattr(_SCOPES, "stack", ()):

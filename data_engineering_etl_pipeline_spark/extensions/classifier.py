@@ -59,13 +59,12 @@ LOGREG_Q_SCALE = 1 << 20
 
 
 def _grad_partials(df: DataFrame, vec_col: str, label_col: str,
-                   w: np.ndarray, b: float, dim: int,
-                   q_scale: int, decimal_sums: bool = False) -> DataFrame:
+                   w: np.ndarray, b: float, dim: int) -> DataFrame:
     """One epoch's quantized gradient/loss partials: rows ``(pos, n, s)``
     with pos in [0, dim) the weight gradient cells, pos = dim the bias
     cell, pos = dim+1 the summed quantized log-loss. NULL vectors,
     wrong-length vectors, and NULL labels are excluded."""
-    qf = float(q_scale)
+    qf = float(LOGREG_Q_SCALE)
     wl = w.copy()
     bl = float(b)
 
@@ -108,20 +107,16 @@ def _grad_partials(df: DataFrame, vec_col: str, label_col: str,
 
     part = df.select(vec_col, label_col).mapInPandas(
         gen, "pos int, n long, s long")
-    acc = F.col("s").cast("decimal(38,0)") if decimal_sums else F.col("s")
     return part.groupBy("pos").agg(F.sum("n").alias("n"),
-                                   F.sum(acc).alias("sum_q"))
+                                   F.sum("s").alias("sum_q"))
 
 
 def fit_logreg_exact(df: DataFrame, vec_col: str = "embedding",
                      label_col: str = "label", dim: int = 64,
-                     n_iters: int = 20, lr: float = 1.0, l2: float = 0.0,
-                     q_scale: int = LOGREG_Q_SCALE,
-                     decimal_sums: bool = False,
+                     n_iters: int = 20, lr: float = 1.0,
                      init_weights: list[float] | None = None,
                      init_bias: float = 0.0,
-                     tol: float | None = None,
-                     patience: int = 1) -> dict:
+                     tol: float | None = None) -> dict:
     """Full-batch gradient-descent logistic regression over the corpus.
 
     Full-batch (not SGD) is the deliberate choice: the gradient is a pure
@@ -140,14 +135,13 @@ def fit_logreg_exact(df: DataFrame, vec_col: str = "embedding",
     resumed trajectory is byte-identical to the uninterrupted one
     (unit-pinned).
 
-    ``tol``/``patience`` — deterministic early stop:
-    after ``patience`` consecutive iterations whose INTEGER loss-sum
-    improvement falls below ``tol`` (in mean-log-loss units: the
-    comparison is ``prev_sum_q − sum_q < tol·n·q_scale`` over exact
-    integers, so the stopping decision is byte-stable like everything
-    else), the loop breaks WITHOUT applying that iteration's update — the
-    returned weights equal a full run truncated at the last applied step
-    (unit-pinned). At 100 TB each iteration is a full corpus scan;
+    ``tol`` — deterministic early stop: at the first iteration whose
+    INTEGER loss-sum improvement falls below ``tol`` (in mean-log-loss
+    units: the comparison is ``prev_sum_q − sum_q < tol·n·LOGREG_Q_SCALE``
+    over exact integers, so the stopping decision is byte-stable like
+    everything else), the loop breaks WITHOUT applying that iteration's
+    update — the returned weights equal a full run truncated at the last
+    applied step (unit-pinned). At 100 TB each iteration is a full corpus scan;
     scanning 14 more times after the quantized loss plateaued at
     iteration 6 is real money. Default ``tol=None`` keeps the fixed
     ``n_iters`` schedule.
@@ -168,13 +162,12 @@ def fit_logreg_exact(df: DataFrame, vec_col: str = "embedding",
     b = float(init_bias)
     losses: list[float] = []
     n = 0
-    qf = float(q_scale)
+    qf = float(LOGREG_Q_SCALE)
     prev_loss_q: int | None = None
-    stall = 0
     for _ in range(max(0, int(n_iters))):
         rows = {r["pos"]: r for r in
-                _grad_partials(df, vec_col, label_col, w, b, dim,
-                               q_scale, decimal_sums).collect()}
+                _grad_partials(df, vec_col, label_col, w, b,
+                               dim).collect()}
         if not rows:
             raise ValueError("fit_logreg_exact: no labeled vectors to fit")
         n = rows[0]["n"]
@@ -183,14 +176,10 @@ def fit_logreg_exact(df: DataFrame, vec_col: str = "embedding",
         gb = rows[dim]["sum_q"] / (n * qf)
         loss_q = int(rows[dim + 1]["sum_q"])
         losses.append(loss_q / (n * qf))
-        if tol is not None and prev_loss_q is not None:
-            stall = (stall + 1
-                     if float(prev_loss_q - loss_q) < tol * n * qf else 0)
-        prev_loss_q = loss_q
-        if tol is not None and stall >= max(1, int(patience)):
+        if (tol is not None and prev_loss_q is not None
+                and float(prev_loss_q - loss_q) < tol * n * qf):
             break  # plateau: this iteration's update is NOT applied
-        if l2:
-            grad = grad + l2 * w
+        prev_loss_q = loss_q
         w = w - lr * grad
         b = b - lr * gb
     return {"weights": [float(t) for t in w], "bias": float(b),
@@ -211,11 +200,12 @@ def planted_logreg(seed: int, dim: int) -> dict:
 
 
 def logreg_gate_fold(df: DataFrame, model: dict, threshold: float = 0.5,
-                     id_col: str = "vec_id", vec_col: str = "embedding",
-                     q_scale: int = LOGREG_Q_SCALE) -> DataFrame:
+                     id_col: str = "vec_id",
+                     vec_col: str = "embedding") -> DataFrame:
     """The learned quality gate as an exact fixed-point fold:
     ``(id, z_q, keep)`` where
-    ``z_q = floor(b·Q) + Σ_i floor(x_i·w_i·Q)`` (each term one
+    ``z_q = floor(b·Q) + Σ_i floor(x_i·w_i·Q)``, with
+    ``Q = LOGREG_Q_SCALE`` (each term one
     deterministic IEEE double product, floored — portable; the cross-term
     sum is BIGINT, associativity-free) and
     ``keep = z_q ≥ floor(logit(threshold)·Q)`` — the keep/drop rule
@@ -232,15 +222,15 @@ def logreg_gate_fold(df: DataFrame, model: dict, threshold: float = 0.5,
     expression literals, no shuffle, no Python."""
     w = model["weights"]
     dim = len(w)
-    b_q = int(math.floor(float(model["bias"]) * q_scale))
+    b_q = int(math.floor(float(model["bias"]) * LOGREG_Q_SCALE))
     if not 0.0 < threshold < 1.0:
         raise ValueError(f"logreg_gate_fold: threshold {threshold} must "
                          "be in (0, 1) — it is a probability")
     thr_q = int(math.floor(math.log(threshold / (1.0 - threshold))
-                           * q_scale))
+                           * LOGREG_Q_SCALE))
     v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
     wl = F.array(*[F.lit(float(x)) for x in w])
-    qf = F.lit(float(q_scale))
+    qf = F.lit(float(LOGREG_Q_SCALE))
     zq = F.aggregate(F.zip_with(v, wl, lambda a, c: F.floor(a * c * qf)),
                      F.lit(b_q).cast("long"), lambda acc, x: acc + x)
     malformed = (F.col(vec_col).isNull()

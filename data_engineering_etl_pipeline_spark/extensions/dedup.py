@@ -679,7 +679,6 @@ def incremental_minhash_lsh_dedup(new_docs: DataFrame, index: DataFrame,
                                   text_col: str = "text", n: int = 3,
                                   num_perm: int = 64, bands: int = 16,
                                   threshold: float = 0.5, seed: int = 42,
-                                  driver_budget: int = 1_000_000,
                                   hash_fn: str = "xxhash64"
                                   ) -> tuple[DataFrame, DataFrame]:
     """Incremental MinHash-LSH near-dup dedup — the continuous-crawl form
@@ -771,9 +770,10 @@ def incremental_minhash_lsh_dedup(new_docs: DataFrame, index: DataFrame,
 
     # (a) within-batch: LSH candidates -> exact-verify tail (the batch
     # path's machinery over the SAME pinned tokens) -> components ->
-    # min-id keeper. driver_budget: daily-batch pair lists are small; the
-    # exact driver union-find skips the iterative machinery's fixed
-    # multi-job overhead (same composition as incremental_semantic_dedup).
+    # min-id keeper. A 1M-pair driver budget: daily-batch pair lists are
+    # small; the exact driver union-find skips the iterative machinery's
+    # fixed multi-job overhead (same composition as
+    # incremental_semantic_dedup).
     left = band_rows.select(F.col(id_col).alias("id_a"), "band", "bh")
     right = band_rows.select(F.col(id_col).alias("id_b"), "band", "bh")
     cand = (left.join(right, ["band", "bh"])
@@ -781,7 +781,7 @@ def incremental_minhash_lsh_dedup(new_docs: DataFrame, index: DataFrame,
             .select("id_a", "id_b").distinct())
     pairs = _verify_pairs(tok, id_col, n, cand, threshold)
     comp = dedup_clusters(pairs.select("id_a", "id_b"),
-                          driver_budget=driver_budget)
+                          driver_budget=1_000_000)
     drops = (comp.filter(F.col("member_id") != F.col("cluster_id"))
              .select(F.col("member_id").alias(id_col)))
     # no broadcast hints on drops/hits: both are batch-derived with no

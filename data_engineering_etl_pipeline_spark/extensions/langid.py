@@ -112,8 +112,7 @@ def char_freq_vector(text_col: str | Column, dim: int = LANGID_DIM,
 def fit_lang_id(labeled: DataFrame, lang_col: str = "lang",
                 text_col: str = "text", langs: list[str] | None = None,
                 dim: int = LANGID_DIM, n: int = LANGID_N,
-                salt: str = LANGID_SALT, n_iters: int = 40, lr: float = 4.0,
-                l2: float = 0.0, tol: float | None = None) -> dict:
+                salt: str = LANGID_SALT) -> dict:
     """Train the lang-ID model one-vs-rest: for each language, an exact
     fixed-point logistic regression (``fit_logreg_exact`` — gradients
     reduce as integers, so every per-language model is byte-identical
@@ -124,7 +123,7 @@ def fit_lang_id(labeled: DataFrame, lang_col: str = "lang",
 
     ``langs`` defaults to the distinct labels (one KB-scale collect).
     The feature projection is computed ONCE and engine-pinned — the K
-    one-vs-rest fits (each ``n_iters`` passes) share it instead of
+    one-vs-rest fits (40 passes each) share it instead of
     re-running the char-n-gram expression per fit; callers release via
     ``caching.release_engine_pins()`` / ``engine_pin_scope()`` (the
     standard engine-pin contract). Rows with NULL labels or feature-less
@@ -146,7 +145,7 @@ def fit_lang_id(labeled: DataFrame, lang_col: str = "lang",
             "__y", (F.col("__lang") == lang).cast("double"))
         models[lang] = fit_logreg_exact(
             lab, vec_col="__v", label_col="__y", dim=dim,
-            n_iters=n_iters, lr=lr, l2=l2, tol=tol)
+            n_iters=40, lr=4.0)
     return {"langs": list(langs), "models": models, "dim": dim, "n": n,
             "salt": salt}
 
@@ -176,7 +175,6 @@ def predict_lang_trained(docs: DataFrame, model: dict,
                          id_col: str = "doc_id", text_col: str = "text",
                          out_col: str = "pred_lang",
                          fallback: str = "heuristic",
-                         q_scale: int = LOGREG_Q_SCALE,
                          carry_cols: tuple[str, ...] = ()) -> DataFrame:
     """Predict languages with a :func:`fit_lang_id` model: ``(id,
     pred_lang, z_q)`` where ``pred_lang`` is the argmax language of the
@@ -242,9 +240,9 @@ def predict_lang_trained(docs: DataFrame, model: dict,
         dtype=np.float64)
     b_q = np.asarray(
         [int(math.floor(float(model["models"][lang]["bias"])
-                        * q_scale)) for lang in langs],
+                        * LOGREG_Q_SCALE)) for lang in langs],
         dtype=np.int64)
-    qf = float(q_scale)
+    qf = float(LOGREG_Q_SCALE)
 
     @F.pandas_udf("array<long>")
     def all_scores(buckets: pd.Series) -> pd.Series:
@@ -298,8 +296,7 @@ def predict_lang_trained(docs: DataFrame, model: dict,
         .otherwise(best).alias("z_q"))
 
 
-def lang_id_scores_sql(model: dict,
-                       q_scale: int = LOGREG_Q_SCALE) -> dict[str, str]:
+def lang_id_scores_sql(model: dict) -> dict[str, str]:
     """DuckDB twins of the per-language score folds — same char-n-gram
     bucket hash (the ``_MD5_32`` digit fold), same relative
     frequencies, same per-term ``FLOOR(freq * w * Q)`` association,
@@ -309,10 +306,10 @@ def lang_id_scores_sql(model: dict,
     — a ``DOUBLE[]`` column callers build once with
     :func:`char_freq_sql`."""
     out = {}
-    q = float(q_scale)
+    q = float(LOGREG_Q_SCALE)
     for lang in sorted(model["langs"]):
         m = model["models"][lang]
-        b_q = int(math.floor(float(m["bias"]) * q_scale))
+        b_q = int(math.floor(float(m["bias"]) * LOGREG_Q_SCALE))
         chain = " + ".join(
             f"CAST(FLOOR(freq[{i + 1}]*{m['weights'][i]!r}*{q!r}) AS BIGINT)"
             for i in range(model["dim"]))

@@ -38,8 +38,7 @@ VECTOR_DIM = 64  # driver embeddings table dimension (TESTDATA.md)
 
 # Max rows the exact-GEMM path will collect as its broadcast build side
 # (~10M rows × 64 float64 ≈ 5 GB — the same order as a generous
-# spark.sql.autoBroadcastJoinThreshold). Override per-session with
-# spark.sql.graft.blasBroadcastRows.
+# spark.sql.autoBroadcastJoinThreshold).
 _BLAS_BROADCAST_ROWS = 10_000_000
 
 
@@ -229,16 +228,14 @@ def gemm_cosine_topk(base: DataFrame, queries: DataFrame, k: int = 5,
         F.col(id_col), "v", "i")
     qv = with_vec_inv(queries, vec_col, "vq", "iq", dim).select(
         F.col(query_id_col), "vq", "iq")
-    budget = int(spark.conf.get(
-        "spark.sql.graft.blasBroadcastRows", str(_BLAS_BROADCAST_ROWS)))
+    budget = _BLAS_BROADCAST_ROWS
     # one pass decides AND fetches (see _blas_candidate_pairs)
     qpdf = qv.limit(budget + 1).toPandas()
     if len(qpdf) > budget:
         raise ValueError(
             f"gemm_cosine_topk: query side exceeds the broadcast budget of "
             f"{budget} rows — it is collected like a broadcast join build "
-            "side. Swap base/queries or raise "
-            "spark.sql.graft.blasBroadcastRows.")
+            "side. Swap base/queries.")
     q_ids = qpdf[query_id_col].to_numpy()
     q_unit = _unit_matrix(qpdf, "vq", "iq", dim)
     bc = spark.sparkContext.broadcast((q_ids, q_unit))
@@ -290,8 +287,7 @@ def _blas_candidate_pairs(v: DataFrame, id_col: str, threshold: float,
     shared.
     """
     spark = v.sparkSession
-    budget = int(spark.conf.get(
-        "spark.sql.graft.blasBroadcastRows", str(_BLAS_BROADCAST_ROWS)))
+    budget = _BLAS_BROADCAST_ROWS
     # ONE pass decides AND fetches: a separate limit(budget+1).count()
     # probe would pay a full extra job over the build relation per call —
     # at corpus scale a whole scan just to count. limit+collect
@@ -310,8 +306,7 @@ def _blas_candidate_pairs(v: DataFrame, id_col: str, threshold: float,
             "over block pairs, no driver collect) or bucket_signatures= "
             "(e.g. from hyperplane_lsh_buckets) so candidates come from an "
             "equi-join instead; the exact verification tail is identical "
-            "either way. (Raise spark.sql.graft.blasBroadcastRows to "
-            "override.)")
+            "either way.")
     ids = build[id_col].to_numpy()
     unit = _unit_matrix(build, "v", "i", dim)
     bc = spark.sparkContext.broadcast((ids, unit))
@@ -588,31 +583,32 @@ def _multi_table_buckets(df: DataFrame, id_col: str, vec_col: str,
 
 def fit_ivf_centroids(base: DataFrame, vec_col: str = "embedding",
                       n_centroids: int = 16, seed: int = 42,
-                      max_iter: int = 8, sample_size: int = 100_000,
                       dim: int = VECTOR_DIM) -> list[list[float]]:
-    """IVF coarse quantizer: seeded Lloyd's k-means over a bounded SAMPLE of
-    vectors, normalized and iterated driver-side in numpy.
+    """IVF coarse quantizer: seeded Lloyd's k-means (8 iterations) over a
+    bounded SAMPLE of 100,000 vectors, normalized and iterated driver-side
+    in numpy.
 
     This is the Faiss training recipe: a codebook is KB-scale and needs only
     a corpus sample, so at 100 TB the cluster's job is just the (cheap,
     pushed-down) sample scan — a distributed iterative fit would launch
-    max_iter full jobs to compute the same few KB.
+    one full job per iteration to compute the same few KB.
 
     The sample is a seeded Bernoulli draw over the WHOLE corpus — ``limit``
     would take the first partitions in scan order, training the codebook on
     one file's distribution (arrival-time / source skew at scale). The
     ``count()`` sizing pass is parquet-metadata-cheap; the 1.25 oversample
     covers Bernoulli variance before the final ``limit`` trim."""
-    x = _sample_unit_matrix(base, vec_col, seed, sample_size, dim)
-    return _fit_ivf_from_matrix(x, n_centroids, seed, max_iter)
+    x = _sample_unit_matrix(base, vec_col, seed, dim)
+    return _fit_ivf_from_matrix(x, n_centroids, seed)
 
 
 def _sample_unit_matrix(base: DataFrame, vec_col: str, seed: int,
-                        sample_size: int, dim: int) -> np.ndarray:
+                        dim: int) -> np.ndarray:
     """Training preamble of the IVF fit: one corpus-wide
     Bernoulli sample of UNIT vectors as a numpy matrix (codebooks are
     KB-scale — only a sample is needed). Null and zero-norm vectors are
     excluded: they have no direction to train on."""
+    sample_size = 100_000
     prepped = with_vec_inv(base, vec_col, "vb", "ib", dim).select("vb", "ib")
     n_rows = prepped.count()
     frac = min(1.0, (sample_size * 1.25) / max(n_rows, 1))
@@ -641,12 +637,12 @@ def _sample_unit_matrix(base: DataFrame, vec_col: str, seed: int,
     return x
 
 
-def _fit_ivf_from_matrix(x: np.ndarray, n_centroids: int, seed: int,
-                         max_iter: int) -> list[list[float]]:
+def _fit_ivf_from_matrix(x: np.ndarray, n_centroids: int,
+                         seed: int) -> list[list[float]]:
     rng = np.random.RandomState(seed)
     k = min(n_centroids, len(x))
     cent = x[rng.choice(len(x), size=k, replace=False)]
-    for _ in range(max_iter):
+    for _ in range(8):
         # unit sphere: nearest centroid = max dot product
         assign = np.argmax(x @ cent.T, axis=1)
         for j in range(k):
@@ -877,8 +873,7 @@ def cosine_cross_pairs(left: DataFrame, right: DataFrame,
                 .cogroup(rrep.groupBy("__lg", "__rg"))
                 .applyInPandas(score, schema=schema))
     else:
-        budget = int(spark.conf.get(
-            "spark.sql.graft.blasBroadcastRows", str(_BLAS_BROADCAST_ROWS)))
+        budget = _BLAS_BROADCAST_ROWS
         # one pass decides AND fetches (see _blas_candidate_pairs)
         rpdf = rv.limit(budget + 1).toPandas()
         if len(rpdf) > budget:
@@ -1120,27 +1115,25 @@ def _assign_with_vec(df: DataFrame, vec_col: str,
 
 def kmeans_update_exact(assigned: DataFrame, vec_col: str = "embedding",
                         cid_col: str = "cid",
-                        q_scale: int = KMEANS_Q_SCALE,
-                        decimal_sums: bool = False,
                         dim: int | None = None) -> DataFrame:
     """ONE exact Lloyd M-step, distributed: per-(cluster, coordinate)
     member count, fixed-point coordinate sum, and the mean coordinate.
 
     Returns ``(cid, pos, n_members, sum_q, coord)`` — k·dim rows — where
-    ``sum_q = Σ floor(x·q_scale)`` over the cluster's members (exact
-    integer arithmetic: the SAME value under any partitioning, AQE
+    ``sum_q = Σ floor(x·KMEANS_Q_SCALE)`` over the cluster's members
+    (exact integer arithmetic: the SAME value under any partitioning, AQE
     re-plan, or task retry — float means are none of those) and
-    ``coord = sum_q / (n_members · q_scale)``, one float division per
-    output cell. NULL vectors contribute nothing (no direction to learn).
+    ``coord = sum_q / (n_members · KMEANS_Q_SCALE)``, one float division
+    per output cell. NULL vectors contribute nothing (no direction to learn).
 
     Plan shape: quantize + posexplode are map-only; the ONE exchange keys
     on (cid, pos) — k·dim distinct keys, so map-side partial aggregation
     collapses the shuffle to O(partitions · k · dim) rows no matter the
     corpus size. This is the 100 TB M-step: the reduce is codebook-sized.
 
-    ``decimal_sums=True`` accumulates in DECIMAL(38,0) — needed only past
-    ~2^43 rows/cluster at the default scale (BIGINT sum of n·2^20·|x|max
-    would overflow); costs ~2× on the tiny reduce, nothing on the scan.
+    The sums are BIGINT: past ~2^43 unit-vector rows per cluster
+    (n·2^20·|x|max ≥ 2^63) Spark's ANSI mode fails the job with
+    ``ARITHMETIC_OVERFLOW`` rather than return a wrapped ``sum_q``.
 
     ``dim``: when given, wrong-length vectors are excluded along with
     NULLs (a truncated vector would otherwise contribute to fewer (cid,
@@ -1148,30 +1141,27 @@ def kmeans_update_exact(assigned: DataFrame, vec_col: str = "embedding",
     The refinement loop always passes it; raw callers that guarantee
     fixed-width input may skip the comparison."""
     v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    q = F.transform(v, lambda x: F.floor(x * F.lit(float(q_scale))))
+    q = F.transform(v, lambda x: F.floor(x * F.lit(float(KMEANS_Q_SCALE))))
     valid = F.col(vec_col).isNotNull()
     if dim is not None:
         valid = valid & (F.size(F.col(vec_col)) == dim)
     ex = (assigned.filter(valid)
           .select(F.col(cid_col).alias("cid"),
                   F.posexplode(q).alias("pos", "__q")))
-    acc = (F.col("__q").cast("decimal(38,0)") if decimal_sums
-           else F.col("__q"))
     return (ex.groupBy("cid", "pos")
             .agg(F.count(F.lit(1)).alias("n_members"),
-                 F.sum(acc).alias("sum_q"))
+                 F.sum("__q").alias("sum_q"))
             .withColumn("coord",
                         F.col("sum_q").cast("double")
-                        / (F.col("n_members") * F.lit(float(q_scale)))))
+                        / (F.col("n_members")
+                           * F.lit(float(KMEANS_Q_SCALE)))))
 
 
 def kmeans_lloyd_refine(df: DataFrame,
                         init_centroids: list[list[float]],
                         n_iters: int = 4, vec_col: str = "embedding",
-                        dim: int = VECTOR_DIM, assign: str = "gemm",
-                        normalize: bool = True,
-                        q_scale: int = KMEANS_Q_SCALE,
-                        decimal_sums: bool = False) -> list[list[float]]:
+                        dim: int = VECTOR_DIM,
+                        assign: str = "gemm") -> list[list[float]]:
     """Distributed Lloyd refinement over the FULL corpus: iterate
     (map-only nearest-centroid assignment → exact fixed-point M-step →
     collect the k·dim codebook) from a given initialization.
@@ -1206,31 +1196,30 @@ def kmeans_lloyd_refine(df: DataFrame,
     codebook-sized (cid, pos) partial-agg reduce of
     :func:`kmeans_update_exact` and the driver transfer is k·dim rows.
     Empty clusters keep their previous centroid (the standard Lloyd
-    convention — deterministic, no reseeding RNG). ``normalize=True``
-    projects each new centroid to the unit sphere (spherical k-means, the
-    :func:`_fit_ivf_from_matrix` convention — max-dot assignment is only
-    a true nearest-centroid rule on the sphere); zero-norm means keep the
-    previous centroid."""
+    convention — deterministic, no reseeding RNG). Each new centroid is
+    projected to the unit sphere (spherical k-means, the
+    :func:`_fit_ivf_from_matrix` convention — max-dot assignment is
+    only a true nearest-centroid rule on the sphere); zero-norm means
+    keep the previous centroid."""
     cents = [list(map(float, c)) for c in init_centroids]
     k = len(cents)
     for _ in range(max(0, int(n_iters))):
         assigned = _assign_with_vec(df.select(vec_col), vec_col, cents,
                                     assign=assign)
-        upd = kmeans_update_exact(assigned, vec_col=vec_col,
-                                  q_scale=q_scale,
-                                  decimal_sums=decimal_sums, dim=dim)
+        upd = kmeans_update_exact(assigned, vec_col=vec_col, dim=dim)
         rows = upd.select("cid", "pos", "n_members", "sum_q").collect()
         nxt = [list(c) for c in cents]
         counts = {}
         for r in rows:
             if 0 <= r["cid"] < k and 0 <= r["pos"] < dim:
                 nxt[r["cid"]][r["pos"]] = (
-                    float(r["sum_q"]) / (r["n_members"] * float(q_scale)))
+                    float(r["sum_q"])
+                    / (r["n_members"] * float(KMEANS_Q_SCALE)))
                 counts[r["cid"]] = r["n_members"]
         for j in range(k):
             if j not in counts:
                 nxt[j] = list(cents[j])  # empty cluster: keep centroid
-            elif normalize:
+            else:
                 n = float(np.linalg.norm(np.asarray(nxt[j])))
                 nxt[j] = ([float(x) / n for x in nxt[j]] if n > 0
                           else list(cents[j]))
@@ -1243,8 +1232,8 @@ def _guard_q_magnitude(scaled: "np.ndarray", what: str,
     """Quantization-overflow guard shared by the exact-accumulation
     kernels: ``astype(int64)`` of a float ≥ 2^63 wraps silently to
     INT64_MIN (numpy raises nothing), which would poison an 'exact' sum
-    with no symptom. Refuse loudly instead — the fix is a smaller
-    q_scale (or pre-normalized vectors), and the message says so.
+    with no symptom. Refuse loudly instead — the fix is pre-normalized
+    vectors, and the message says so.
 
     ``rows`` is the ACCUMULATION WIDTH: how many per-row values the
     kernel int64-sums into one cell after the cast (a per-element check
@@ -1258,18 +1247,16 @@ def _guard_q_magnitude(scaled: "np.ndarray", what: str,
         raise ValueError(
             f"{what}: quantized magnitude {m:.3g} x {width} accumulated "
             "rows >= 2^62 — the in-kernel int64 sum could wrap silently. "
-            "Lower q_scale or normalize the vector column first.")
+            "Normalize the vector column first.")
 
 
 def embedding_moments_exact(df: DataFrame, vec_col: str = "embedding",
-                            dim: int = VECTOR_DIM,
-                            q_scale: int = KMEANS_Q_SCALE,
-                            block: int = 256,
-                            decimal_sums: bool = False) -> DataFrame:
+                            dim: int = VECTOR_DIM) -> DataFrame:
     """Exact first + second moments of an embedding column, distributed:
     ``(i, j, n, sum_q)`` where rows with ``j >= i`` carry the fixed-point
-    second-moment sums ``Σ floor(x_i·x_j·q_scale)`` (upper triangle) and
-    rows with ``j = -1`` the first-moment sums ``Σ floor(x_i·q_scale)``.
+    second-moment sums ``Σ floor(x_i·x_j·KMEANS_Q_SCALE)`` (upper
+    triangle) and rows with ``j = -1`` the first-moment sums
+    ``Σ floor(x_i·KMEANS_Q_SCALE)``.
 
     The same exactness contract as :func:`kmeans_update_exact`: per-row
     quantization is deterministic IEEE (double product × a power of two,
@@ -1283,17 +1270,16 @@ def embedding_moments_exact(df: DataFrame, vec_col: str = "embedding",
     d(d+1)/2 + d partial frame per batch; the only exchange carries those
     codebook-sized partials to a (i, j) sum — O(batches · d²) rows no
     matter the corpus size. NULL and wrong-length vectors are excluded
-    (no moment to contribute). ``block`` caps the b×d×d outer-product
-    scratch (256·64·64·8B ≈ 8 MB).
+    (no moment to contribute). Blocks of 256 rows cap the b×d×d
+    outer-product scratch (256·64·64·8B ≈ 8 MB).
 
     Overflow policy (shared across the exact-accumulation family):
     per-cell quantized magnitudes ≥ 2^62 are REFUSED loudly in the kernel
-    (a silent int64 wrap would poison an 'exact' table);
-    ``decimal_sums=True`` switches the cross-batch reduce to
-    DECIMAL(38,0) for corpora past ~2^43 valid rows at the default scale
-    — same escape hatch as :func:`kmeans_update_exact`, same cost (only
-    the codebook-sized reduce pays)."""
-    qf = float(q_scale)
+    (a silent int64 wrap would poison an 'exact' table); the cross-batch
+    reduce is a BIGINT sum, which ANSI mode fails with
+    ``ARITHMETIC_OVERFLOW`` past ~2^43 valid rows, as in
+    :func:`kmeans_update_exact`."""
+    qf = float(KMEANS_Q_SCALE)
     iu = np.triu_indices(dim)
 
     def gen(batches):
@@ -1305,8 +1291,8 @@ def embedding_moments_exact(df: DataFrame, vec_col: str = "embedding",
             x = np.vstack(vecs)
             n = len(x)
             acc2 = np.zeros((dim, dim), dtype=np.int64)
-            for s in range(0, n, block):
-                xb = x[s:s + block]
+            for s in range(0, n, 256):
+                xb = x[s:s + 256]
                 prod = np.einsum("bi,bj->bij", xb, xb) * qf
                 # width = n: acc2 accumulates EVERY batch row into one
                 # int64 cell across the block loop
@@ -1324,22 +1310,18 @@ def embedding_moments_exact(df: DataFrame, vec_col: str = "embedding",
             })
 
     part = df.select(vec_col).mapInPandas(gen, "i int, j int, n long, s long")
-    acc = (F.col("s").cast("decimal(38,0)") if decimal_sums
-           else F.col("s"))
     return part.groupBy("i", "j").agg(F.sum("n").alias("n"),
-                                      F.sum(acc).alias("sum_q"))
+                                      F.sum("s").alias("sum_q"))
 
 
 def covariance_exact(df: DataFrame, vec_col: str = "embedding",
-                     dim: int = VECTOR_DIM,
-                     q_scale: int = KMEANS_Q_SCALE,
-                     block: int = 256,
-                     decimal_sums: bool = False) -> DataFrame:
+                     dim: int = VECTOR_DIM) -> DataFrame:
     """Upper-triangle covariance cells
     ``(i, j, n, sum_q, sum_qi, sum_qj, cov)`` with
-    ``cov = sum_q/(n·Q) − (sum_qi/(n·Q))·(sum_qj/(n·Q))`` — every float op
-    a fixed-order function of exact integers, so the cell values (not just
-    their rounding) are engine-portable.
+    ``cov = sum_q/(n·Q) − (sum_qi/(n·Q))·(sum_qj/(n·Q))``, with
+    ``Q = KMEANS_Q_SCALE`` — every float op a fixed-order function of
+    exact integers, so the cell values (not just their rounding) are
+    engine-portable.
 
     Single-pass: the Arrow kernel carries each cell's two first-moment
     partials ON the triangle row (d² extra BIGINTs per batch — codebook
@@ -1348,7 +1330,7 @@ def covariance_exact(df: DataFrame, vec_col: str = "embedding",
     shape needed two self-joins, and Catalyst does not dedupe the common
     kernel subplan — it would re-run the O(n·d²) scan kernel THREE times
     (caught by the plan pin, tests/test_plans.py)."""
-    qf = float(q_scale)
+    qf = float(KMEANS_Q_SCALE)
     iu = np.triu_indices(dim)
 
     def gen(batches):
@@ -1360,8 +1342,8 @@ def covariance_exact(df: DataFrame, vec_col: str = "embedding",
             x = np.vstack(vecs)
             n = len(x)
             acc2 = np.zeros((dim, dim), dtype=np.int64)
-            for s in range(0, n, block):
-                xb = x[s:s + block]
+            for s in range(0, n, 256):
+                xb = x[s:s + 256]
                 prod = np.einsum("bi,bj->bij", xb, xb) * qf
                 # width = n: acc2 accumulates EVERY batch row into one
                 # int64 cell across the block loop
@@ -1378,14 +1360,9 @@ def covariance_exact(df: DataFrame, vec_col: str = "embedding",
 
     part = df.select(vec_col).mapInPandas(
         gen, "i int, j int, n long, s long, si long, sj long")
-
-    def acc(c):
-        return F.col(c).cast("decimal(38,0)") if decimal_sums else F.col(c)
-
     agg = (part.groupBy("i", "j")
-           .agg(F.sum("n").alias("n"), F.sum(acc("s")).alias("sum_q"),
-                F.sum(acc("si")).alias("sum_qi"),
-                F.sum(acc("sj")).alias("sum_qj")))
+           .agg(F.sum("n").alias("n"), F.sum("s").alias("sum_q"),
+                F.sum("si").alias("sum_qi"), F.sum("sj").alias("sum_qj")))
     denom = F.col("n") * F.lit(qf)
     return agg.select("i", "j", "n", "sum_q", "sum_qi", "sum_qj",
                       (F.col("sum_q").cast("double") / denom
@@ -1395,9 +1372,7 @@ def covariance_exact(df: DataFrame, vec_col: str = "embedding",
 
 
 def fit_pca_exact(df: DataFrame, vec_col: str = "embedding",
-                  n_components: int = 8, dim: int = VECTOR_DIM,
-                  q_scale: int = KMEANS_Q_SCALE,
-                  decimal_sums: bool = False) -> dict:
+                  n_components: int = 8, dim: int = VECTOR_DIM) -> dict:
     """PCA fit over the FULL corpus via the exact distributed moment table
     (not a driver sample): collect the d(d+1)/2 + d moment cells, build
     the covariance in numpy, ``eigh``, keep the top ``n_components``.
@@ -1414,11 +1389,10 @@ def fit_pca_exact(df: DataFrame, vec_col: str = "embedding",
 
     Returns ``{"mean", "components" (n_components×dim, row-major),
     "eigvals", "n"}``."""
-    rows = embedding_moments_exact(df, vec_col, dim, q_scale,
-                                   decimal_sums=decimal_sums).collect()
+    rows = embedding_moments_exact(df, vec_col, dim).collect()
     if not rows:
         raise ValueError("fit_pca_exact: no non-null vectors to fit on")
-    qf = float(q_scale)
+    qf = float(KMEANS_Q_SCALE)
     n = rows[0]["n"]
     s1 = np.zeros(dim)
     s2 = np.zeros((dim, dim))

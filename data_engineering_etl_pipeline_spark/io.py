@@ -20,7 +20,7 @@ overwrites only the day it recomputes (dynamic partition overwrite).
 from __future__ import annotations
 
 import os
-from collections.abc import Mapping, Sequence
+from collections.abc import Mapping
 from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
@@ -71,7 +71,6 @@ def require_utc_session(spark: SparkSession) -> None:
 #: occupy the cluster, whatever the cluster is. Filters and projections
 #: still reach the scan — Catalyst pushes both through Repartition
 #: (PushedFilters plan pins re-verified in tests/test_plans.py).
-#: Override via spark.sql.graft.scanParallelismFloorBytes (0 disables).
 _SCAN_FLOOR_BYTES = 128 * 1024 * 1024
 
 #: Tables the floor applies to: the ones whose consumers do heavy PER-ROW
@@ -93,10 +92,6 @@ def _input_parallelism_floor(df: DataFrame, spark: SparkSession,
                              path: str, name: str) -> DataFrame:
     if name not in _SCAN_FLOOR_TABLES:
         return df
-    floor = int(spark.conf.get("spark.sql.graft.scanParallelismFloorBytes",
-                               str(_SCAN_FLOOR_BYTES)))
-    if floor <= 0:
-        return df
     try:
         if os.path.isdir(path):
             total = sum(
@@ -106,7 +101,7 @@ def _input_parallelism_floor(df: DataFrame, spark: SparkSession,
             total = os.path.getsize(path)
     except OSError:
         return df  # non-local FS: the driver star tables are local files
-    if total >= floor:
+    if total >= _SCAN_FLOOR_BYTES:
         return df
     return df.repartition(spark.sparkContext.defaultParallelism)
 
@@ -168,13 +163,10 @@ def normalize_event_ts(df: DataFrame, ts_col: str = "ts") -> DataFrame:
     return df
 
 
-def write_parquet(df: DataFrame, path: str, mode: str = "overwrite",
-                  partition_by: Sequence[str] | None = None) -> None:
-    """S2 parquet sink (reference: pipeline_helpers.py:81 et al.)."""
-    writer = df.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
+def write_parquet(df: DataFrame, path: str) -> None:
+    """S2 parquet sink, overwriting ``path`` (reference:
+    pipeline_helpers.py:81 et al.)."""
+    df.write.mode("overwrite").parquet(path)
 
 
 def _hadoop_fs(spark: SparkSession, path: str):

@@ -69,14 +69,13 @@ def standardize_precision(df: DataFrame, cols: Sequence[str],
 def apply_gate(df: DataFrame,
                required: Sequence[str],
                price_cols: Sequence[str],
-               violation: Column | None = None,
-               max_loss_pct: float = DEFAULT_MAX_LOSS_PCT,
-               decimals: int = PRICE_DECIMALS) -> DataFrame:
-    """Full gate. Returns the cleaned DataFrame or raises
+               max_loss_pct: float = DEFAULT_MAX_LOSS_PCT) -> DataFrame:
+    """Full gate: rounds ``price_cols`` to ``PRICE_DECIMALS`` and drops
+    ``ohlc_violation()`` rows. Returns the cleaned DataFrame or raises
     :class:`CircuitBreakerTripped` / ``ValueError`` (missing columns)."""
     validate_schema(df, required)
-    df = standardize_precision(df, price_cols, decimals)
-    cond = ohlc_violation() if violation is None else violation
+    df = standardize_precision(df, price_cols, PRICE_DECIMALS)
+    cond = ohlc_violation()
     # Null-price rows make the raw predicate NULL: sum(cast) would not count
     # them but filter(~cond) would silently DROP them — rows vanishing
     # without contributing to the breaker's loss percentage. Normalize to

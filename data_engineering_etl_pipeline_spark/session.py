@@ -58,9 +58,6 @@ def get_spark(
         .config("spark.driver.memory", driver_mem)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.filterPushdown", "true")
-        # testdata events.parquet stores TIMESTAMP(NANOS) which the vectorized
-        # reader rejects; read as long and convert (io.load_table).
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # reliable checkpoints (dedup.dedup_clusters' fault-tolerant
         # backend) write per-round snapshot files; let the ContextCleaner
         # delete them when the superseded RDD is GC'd instead of leaking

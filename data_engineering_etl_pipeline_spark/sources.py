@@ -185,16 +185,16 @@ def chunk_table(spark: SparkSession, coins: Sequence[str], start_day: int,
 def fetch_history_distributed(spark: SparkSession, coins: Sequence[str],
                               start_day: int = _EPOCH_DAY0, n_days: int = 365,
                               chunk_days: int = CHUNK_DAYS,
-                              fetcher: Callable = synthetic_fetch,
-                              parallelism: int | None = None) -> DataFrame:
+                              fetcher: Callable = synthetic_fetch) -> DataFrame:
     """S5 chunked time-series ingestion as ``mapInPandas`` over the chunk
     table: each executor task 'fetches' its pages and emits rows. With a
-    real HTTP fetcher this is IO-bound — repartition to the desired
-    concurrent-request budget, not the core count."""
+    real HTTP fetcher this is IO-bound, so the task count is a
+    concurrent-request budget (one per coin, at most 64), not the core
+    count."""
     import pandas as pd
 
     chunks = chunk_table(spark, coins, start_day, n_days, chunk_days)
-    n_parts = parallelism or max(1, min(64, len(coins)))
+    n_parts = max(1, min(64, len(coins)))
     # partition on the FULL (coin, chunk) key: keying on coin_id alone
     # collapses a one-coin/long-history fetch into one serial task — the
     # unit of parallelism is the API page/chunk, not the coin
@@ -211,17 +211,17 @@ def fetch_history_distributed(spark: SparkSession, coins: Sequence[str],
 
 
 def with_retry(fetcher: Callable, retries: int = 3, backoff_s: float = 65.0,
-               is_rate_limited: Callable[[Exception], bool] | None = None,
                sleeper: Callable[[float], None] = time.sleep) -> Callable:
     """S11 retry/backoff wrapper (reference: universe_generation_pipeline.py:
-    53-76 — 3 retries, 65 s sleep on HTTP 429). Driver/executor-side connector
-    concern, engine-agnostic; ``sleeper`` injectable for tests.
+    53-76 — 3 retries, 65 s sleep on HTTP 429, a 1 s sleep on any other
+    error; an error is a 429 when its message contains "429").
+    Driver/executor-side connector concern, engine-agnostic; ``sleeper``
+    injectable for tests.
     ``retries`` counts TOTAL attempts and must be >= 1 — retries=0 would
     otherwise run zero attempts and raise a bare TypeError from ``raise
     None``."""
     if retries < 1:
         raise ValueError("with_retry: retries counts total attempts, need >= 1")
-    limited = is_rate_limited or (lambda e: "429" in str(e))
 
     def wrapped(*args, **kwargs):
         last: Exception | None = None
@@ -231,7 +231,7 @@ def with_retry(fetcher: Callable, retries: int = 3, backoff_s: float = 65.0,
             except Exception as e:  # noqa: BLE001 — connector boundary
                 last = e
                 if attempt < retries - 1:
-                    sleeper(backoff_s if limited(e) else 1.0)
+                    sleeper(backoff_s if "429" in str(e) else 1.0)
         raise last  # type: ignore[misc]
 
     return wrapped

@@ -24,8 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 
-def stream_events(spark: SparkSession, sf_dir: str,
-                  max_files_per_trigger: int | None = None) -> DataFrame:
+def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source streaming read of the driver ``events`` table.
 
     ``ts`` is normalized to session-zoned TIMESTAMP exactly as the batch
@@ -78,10 +77,7 @@ def stream_events(spark: SparkSession, sf_dir: str,
             os.link(path, staged)
         except OSError:
             shutil.copyfile(path, staged)
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    df = reader.parquet(stage)
+    df = spark.readStream.schema(schema).parquet(stage)
     # shared normalization with io.load_table — batch is the streaming
     # oracle, so the two must use literally the same code. (The nanosAsLong
     # conf set above is deliberately NOT restored here, unlike the batch

@@ -21,8 +21,8 @@ from .windows import top_k_per_group
 
 
 def monthly_top_n(df: DataFrame, date_col: str, id_col: str, value_col: str,
-                  n: int, agg: str = "avg") -> DataFrame:
-    """Monthly top-N members by aggregated value.
+                  n: int) -> DataFrame:
+    """Monthly top-N members by average value.
 
     Plan shape: one hash-agg shuffle on ``(month, id)`` (map-side partial agg
     first), then one window shuffle on ``month`` for row_number — both tiny
@@ -31,11 +31,10 @@ def monthly_top_n(df: DataFrame, date_col: str, id_col: str, value_col: str,
     (reference: universe_generation_pipeline.py:159-161; SURVEY §7.4 h3).
     Output: ``month (date), <id_col>, agg_value, rank``.
     """
-    agg_fn = {"avg": F.avg, "mean": F.avg, "sum": F.sum}[agg]
     monthly = (
         df.withColumn("month", F.trunc(F.col(date_col), "MM"))
         .groupBy("month", id_col)
-        .agg(F.round(agg_fn(F.col(value_col)), 4).alias("agg_value"))
+        .agg(F.round(F.avg(F.col(value_col)), 4).alias("agg_value"))
     )
     return (
         top_k_per_group(monthly, ["month"], "agg_value", n,

@@ -48,22 +48,21 @@ def pct_change(col: str, periods: int, w: WindowSpec) -> Column:
     return F.try_divide(F.col(col), prev) - 1
 
 
-def rolling_mean(col: str, n: int, w: WindowSpec, min_periods: int | None = None) -> Column:
-    """W5 rolling mean with pandas ``min_periods`` semantics: null until the
-    frame holds ``min_periods`` observations (pandas ``rolling(n)`` defaults
-    min_periods=n — SURVEY §7.4 hazard 2)."""
+def rolling_mean(col: str, n: int, w: WindowSpec) -> Column:
+    """W5 rolling mean with pandas ``rolling(n)`` semantics: null until the
+    frame holds ``n`` observations (pandas' default ``min_periods=n`` —
+    SURVEY §7.4 hazard 2)."""
     frame = w.rowsBetween(-(n - 1), 0)
-    mp = n if min_periods is None else min_periods
     cnt = F.count(F.col(col)).over(frame)
-    return F.when(cnt >= mp, F.avg(F.col(col)).over(frame))
+    return F.when(cnt >= n, F.avg(F.col(col)).over(frame))
 
 
-def rolling_std(col: str, n: int, w: WindowSpec, min_periods: int | None = None) -> Column:
-    """W5/W7 rolling sample std (pandas default ddof=1 ⇔ ``stddev_samp``)."""
+def rolling_std(col: str, n: int, w: WindowSpec) -> Column:
+    """W5/W7 rolling sample std (pandas default ddof=1 ⇔ ``stddev_samp``),
+    null until the frame holds ``n`` observations."""
     frame = w.rowsBetween(-(n - 1), 0)
-    mp = n if min_periods is None else min_periods
     cnt = F.count(F.col(col)).over(frame)
-    return F.when(cnt >= mp, F.stddev_samp(F.col(col)).over(frame))
+    return F.when(cnt >= n, F.stddev_samp(F.col(col)).over(frame))
 
 
 def rolling_zscore(col: str, n: int, w: WindowSpec) -> Column:
@@ -149,13 +148,13 @@ def rank_desc_average(df: DataFrame, col: str, keys: Sequence[str] | str,
     return out if rn_out else out.drop(rn)
 
 
-def percent_rank_asc(col: str, keys: Sequence[str] | str,
-                     tiebreak: Sequence[str] | None = None) -> Column:
+def percent_rank_asc(col: str, keys: Sequence[str] | str) -> Column:
     """W13/O4 percent_rank for top-/bottom-fraction selection (reference:
-    test_data_integrity.py:117-123 nlargest/nsmallest(0.3·n))."""
+    test_data_integrity.py:117-123 nlargest/nsmallest(0.3·n)). Ties share
+    a rank, so no tiebreak column is needed for a deterministic result."""
     ks = [keys] if isinstance(keys, str) else list(keys)
-    order = [F.col(col).asc()] + [F.col(c).asc() for c in (tiebreak or [])]
-    return F.percent_rank().over(Window.partitionBy(*ks).orderBy(*order))
+    return F.percent_rank().over(
+        Window.partitionBy(*ks).orderBy(F.col(col).asc()))
 
 
 def long_short_factor(df: DataFrame, date_col: str, score_col: str, ret_col: str,

@@ -63,12 +63,13 @@ def normalize(df: pd.DataFrame) -> pd.DataFrame:
 
 def partition_layouts(df):
     """Yield ``(label, frame)`` pairs: the frame under default partitioning
-    AND forced into ONE partition (r8 VERDICT item 2). Partition-local
+    AND forced into ONE partition. Partition-local
     kernels (mapInPandas prunes, in-batch dedup phases, GEMM batchers)
     tested only on local[32]'s default spread see ~1 row per partition for
     tiny Hypothesis inputs, so adversarial CO-LOCATION — duplicate keys or
     ids landing in one task — never occurs and a kernel that mishandles it
-    (the r8 balanced-sample duplicate-prune bug) passes every property.
+    (as the balanced sampler's duplicate-copy prune once did, see
+    test_sampling.py) passes every property.
     Keyed per-partition-kernel properties must run under both layouts."""
     yield "default", df
     yield "coalesce(1)", df.coalesce(1)

@@ -84,10 +84,11 @@ def test_bpe_vocab_budget_guard(spark):
 
 
 def test_bpe_min_freq_floor_is_the_scale_path(spark):
-    """r11 VERDICT item 1a: the distributed frequency floor (a) drops
-    sub-floor words BEFORE the guarded collect, so a table that would
-    refuse the budget trains fine under a floor, and (b) changes the
-    learned merges exactly as filtering the table by hand would."""
+    """The distributed frequency floor is what lets BPE train past the
+    driver budget: it (a) drops sub-floor words BEFORE the guarded
+    collect, so a table that would refuse the budget trains fine under a
+    floor, and (b) changes the learned merges exactly as filtering the
+    table by hand would."""
     base = _paper_corpus(spark)
     # 40 unique rare words sharing the (q, z) pair: without a floor they
     # dominate pair counts; with freq floor 2 they vanish entirely.
@@ -113,8 +114,8 @@ def test_bpe_min_freq_floor_is_the_scale_path(spark):
 
 
 def test_bpe_merge_sequence_matches_unrolled_sql_twin(spark, duck):
-    """r11 VERDICT item 1b: the merge-sequence DECISION hash-matches a
-    bounded-rounds DuckDB twin (replace-per-round over chr(31)-wrapped
+    """The merge-sequence DECISION has a cross-engine check: it
+    hash-matches a bounded-rounds DuckDB twin (replace-per-round over chr(31)-wrapped
     symbol strings) on a planted corpus with adjacent-repeat adversaries
     ([a,a,a] must merge non-overlapping → [aa, a]) and a tie round."""
     from data_engineering_etl_pipeline_spark.extensions.bpe import (

@@ -67,7 +67,9 @@ def test_c4_hand_cases(spark):
     # doc 3: 2 kept lines -> 2 sentences < 3 -> page dropped
     assert out[3]["n_kept"] == 2 and out[3]["keep_page"] is False
     assert out[4]["n_kept"] == 3 and out[4]["keep_page"] is True
-    # doc 6: close brace alone must trip the page drop (r4 review finding)
+    # doc 6: a close brace alone must trip the page drop (C4's "curly
+    # bracket" rule means either brace: a truncated code fragment can hold
+    # only the "}")
     assert out[6]["has_brace"] is True and out[6]["keep_page"] is False
     # doc 5: the 4-word line is dropped, the 5-word line kept
     assert out[5]["n_kept"] == 3
@@ -174,8 +176,8 @@ def test_c4_sql_twin_matches_spark(spark):
 
 def test_c4_and_gopher_crlf_pages_match_unix_and_sql_twin(spark):
     """CRLF pages must clean identically to their \\n twins AND match the
-    DuckDB twin bit-for-bit (r5 review: Java's non-multiline $ matches
-    before a trailing \\r while RE2's does not — lines are now split on
+    DuckDB twin bit-for-bit (Java's non-multiline $ matches before a
+    trailing \\r while RE2's does not — lines are now split on
     \\r?\\n in both engines, so the terminal-punctuation and ellipsis
     rules see \\r-free lines)."""
     unix = ("This is a fine first sentence with words.\n"

@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 
 from data_engineering_etl_pipeline_spark.extensions.corpus import (
     bm25_scores, lm_cross_entropy, pack_sequences, stratified_sample)
+from data_engineering_etl_pipeline_spark import io as engine_io
 from data_engineering_etl_pipeline_spark.io import load_table
 from .conftest import SF_DIR, assert_matches_oracle
 
@@ -193,7 +194,7 @@ def _plan(df) -> str:
     return buf.getvalue()
 
 
-def test_corpus_ops_plans_stay_jvm_side(spark):
+def test_corpus_ops_plans_stay_jvm_side(spark, monkeypatch):
     """BM25 / packing / sampling / LM are pure Catalyst plans — no Python
     evaluation nodes anywhere (the ops must stream through codegen at
     100 TB), and the sampler adds no shuffle at all (map-only filter).
@@ -202,20 +203,17 @@ def test_corpus_ops_plans_stay_jvm_side(spark):
     absent at scale (pinned separately in
     test_plans.py::test_small_scan_parallelism_floor) — this pin is
     about the OPERATORS' own shape."""
-    spark.conf.set("spark.sql.graft.scanParallelismFloorBytes", "0")
-    try:
-        docs = load_table(spark, SF_DIR, "documents")
-        for df in (bm25_scores(docs, QUERY),
-                   pack_sequences(docs, budget=512, n_shards=8),
-                   lm_cross_entropy(docs),
-                   stratified_sample(docs, "lang", {"en": 0.5}, "doc_id")):
-            p = _plan(df)
-            assert "Python" not in p and "ArrowEval" not in p, p
-        sample_plan = _plan(
-            stratified_sample(docs, "lang", {"en": 0.5}, "doc_id"))
-        assert "Exchange" not in sample_plan, sample_plan
-    finally:
-        spark.conf.unset("spark.sql.graft.scanParallelismFloorBytes")
+    monkeypatch.setattr(engine_io, "_SCAN_FLOOR_BYTES", 0)
+    docs = load_table(spark, SF_DIR, "documents")
+    for df in (bm25_scores(docs, QUERY),
+               pack_sequences(docs, budget=512, n_shards=8),
+               lm_cross_entropy(docs),
+               stratified_sample(docs, "lang", {"en": 0.5}, "doc_id")):
+        p = _plan(df)
+        assert "Python" not in p and "ArrowEval" not in p, p
+    sample_plan = _plan(
+        stratified_sample(docs, "lang", {"en": 0.5}, "doc_id"))
+    assert "Exchange" not in sample_plan, sample_plan
 
 
 _CONTAM_SQL = """

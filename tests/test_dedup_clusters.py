@@ -65,11 +65,11 @@ def test_clusters_on_real_pairs(spark):
 
 
 def test_reliable_checkpoint_backend_equals_local(spark):
-    """r6 VERDICT item 1: the fault-tolerant RELIABLE checkpoint backend
-    (durable per-round snapshots — what a cluster run uses, where a lost
-    executor must not kill the loop) produces output identical to the
-    single-JVM localCheckpoint fast path, on a graph deep enough to
-    iterate several rounds."""
+    """The fault-tolerant RELIABLE checkpoint backend (durable per-round
+    snapshots — what a cluster run uses, where a lost executor must not
+    kill the loop) produces output identical to the single-JVM
+    localCheckpoint fast path, on a graph deep enough to iterate several
+    rounds."""
     edge_list = [(1, 2), (2, 3), (3, 4), (4, 5), (5, 6), (6, 7), (7, 8),
                  (20, 21), (21, 22), (30, 31)]
     df = spark.createDataFrame(edge_list, "id_a long, id_b long")

@@ -533,7 +533,7 @@ def test_load_table_restores_nanos_conf(spark, tmp_path):
     from pyspark.errors.exceptions.captured import AnalysisException
     with pytest.raises(AnalysisException, match="PARQUET_TYPE_ILLEGAL"):
         spark.read.parquet(str(tmp_path / "events.parquet")).schema
-    spark.conf.set(key, "true")  # leave the shared session as get_spark built it
+    spark.conf.unset(key)
     # current driver testdata stores micros: loader passes it through intact
     real = load_table(spark, os.environ.get("SPARK_GRAFT_TEST_SF_DIR",
                                             "/root/testdata/sf0.001"), "events")

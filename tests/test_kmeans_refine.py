@@ -1,5 +1,5 @@
 """Distributed Lloyd refinement (similarity.kmeans_lloyd_refine) and its
-exact fixed-point M-step (kmeans_update_exact): the r7 operator that makes
+exact fixed-point M-step (kmeans_update_exact): the operator that makes
 the corpus-level k-means partition repartition-/retry-stable.
 
 What the units pin:
@@ -165,9 +165,9 @@ def test_cluster_balanced_sample_refine_iters_keeps_invariants(spark):
 
 
 def test_degenerate_vectors_dropped_from_refine_both_kernels(spark):
-    """r7 review finding: a wrong-length vector crashed the gemm vstack
-    and silently voted truncated coordinates into cluster k-1 on the fold
-    path. Both kernels must now produce the codebook of the clean corpus
+    """A wrong-length vector once crashed the gemm vstack and silently
+    voted truncated coordinates into cluster k-1 on the fold path. Both
+    kernels must now produce the codebook of the clean corpus
     with NULL/short/long rows present, and agree with each other."""
     df = _blob_df(spark)
     dirty = df.unionByName(spark.createDataFrame(
@@ -184,8 +184,8 @@ def test_degenerate_vectors_dropped_from_refine_both_kernels(spark):
 
 
 def test_quantization_overflow_refused_loudly(spark):
-    """r7 review finding: astype(int64) of a float >= 2^63 wraps silently
-    to INT64_MIN — the exact-accumulation kernels must refuse instead."""
+    """astype(int64) of a float >= 2^63 wraps silently to INT64_MIN —
+    the exact-accumulation kernels must refuse instead."""
     import pytest
 
     from data_engineering_etl_pipeline_spark.extensions.similarity import (
@@ -197,3 +197,17 @@ def test_quantization_overflow_refused_loudly(spark):
         embedding_moments_exact(df, dim=2).collect()
     with pytest.raises(Exception, match="2\\^62"):
         covariance_exact(df, dim=2).collect()
+
+
+def test_exact_sum_overflow_fails_loudly(spark):
+    """The M-step's cross-row sums are BIGINT: three 1-dim vectors of 2^42
+    quantize to 2^62 each at KMEANS_Q_SCALE = 2^20, so their sum passes
+    2^63. Spark's ANSI mode must fail the job with ARITHMETIC_OVERFLOW
+    rather than return a wrapped ``sum_q``."""
+    import pytest
+
+    assert KMEANS_Q_SCALE == 1 << 20
+    df = spark.createDataFrame([(0, [float(2 ** 42)])] * 3,
+                               "cid int, embedding array<double>")
+    with pytest.raises(Exception, match="ARITHMETIC_OVERFLOW"):
+        kmeans_update_exact(df).collect()

@@ -66,7 +66,8 @@ def test_live_world_universe_is_latest_day_topn(spark):
 
 
 def test_live_world_values_match_pandas_oracle(spark):
-    """Cell-level value check (r2 VERDICT item 10): recompute the ENTIRE
+    """Cell-level value check (shape and membership checks alone would pass
+    a wrong price pick or volume sum): recompute the ENTIRE
     re-derived world in plain pandas from the same deterministic synthetic
     fetcher and compare every (canonical_id, day) cell — price pick
     (native-first, then max-mcap, member-desc tiebreak), volume sum,
@@ -117,9 +118,10 @@ def test_live_world_values_match_pandas_oracle(spark):
 
 def test_refresh_world_releases_engine_pins(spark, tmp_path):
     """A scheduler runs refresh_world_snapshot daily in one session; each
-    run must NOT accumulate a pinned fetched-fact relation (r6 review
-    finding) — the write inside the scope fully materializes the world, so
-    scoped release is safe."""
+    run must NOT accumulate a pinned fetched-fact relation (one cached fact
+    per day would grow the executors' storage without bound) — the write
+    inside the scope fully materializes the world, so scoped release is
+    safe."""
     import data_engineering_etl_pipeline_spark.caching as caching
     from data_engineering_etl_pipeline_spark.live import refresh_world_snapshot
 

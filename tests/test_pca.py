@@ -1,5 +1,5 @@
 """PCA over exact distributed moments (similarity.embedding_moments_exact /
-fit_pca_exact / apply_pca): the r7 whitening/rotation operator.
+fit_pca_exact / apply_pca): the whitening/rotation operator.
 
 Pins: hand-computed moment sums; byte-stable fits under relayout (the
 property the sample-based fits cannot give); bit-equality with a

@@ -87,9 +87,9 @@ def test_pii_plan_is_pure_codegen(spark):
 
 
 def test_pii_contiguous_card_and_phone_forms(spark):
-    """r5 review recall fixes: contiguous 16-digit PANs (the most common
-    dump form), spaced phones, and (area)-parenthesized phones are counted
-    AND masked — and both engines agree via the shared pattern table."""
+    """Recall on the common dump forms: contiguous 16-digit PANs (the
+    most common dump form), spaced phones, and (area)-parenthesized phones
+    are counted AND masked — and both engines agree via the shared pattern table."""
     import duckdb
 
     from data_engineering_etl_pipeline_spark.extensions.pii import (
@@ -124,7 +124,7 @@ def test_pii_contiguous_card_and_phone_forms(spark):
 def test_pii_phone_does_not_partial_mask_longer_digit_runs(spark):
     """'(555) 123-45678' is NOT a phone number; without the trailing word
     boundary the parenthesized branch masked the first 4 of the 5 trailing
-    digits, leaking '<PHONE>8' (r5 advisor finding). Both engines must
+    digits, leaking '<PHONE>8'. Both engines must
     agree: no match, text unchanged."""
     import duckdb
 

@@ -321,3 +321,155 @@ def test_every_package_function_is_reachable():
         f"{len(dead)} package functions no registry row, pipeline or "
         f"workload reaches (delete them, call them, or KEEP them with a "
         f"reason): {dead}")
+
+
+#: Switches no call site sets that stay on purpose, one reason each.
+UNSET_OK = {
+    "refresh_world_snapshot.fetcher": (
+        "the live_refresh workload (ROADMAP item 3) will pass a seeded "
+        "fetcher"),
+}
+
+
+def test_every_switch_has_a_setter():
+    """An option nothing sets is dead code the reachability guard cannot
+    see: the function it sits on is reachable, the branch it selects is
+    not. For every parameter of a top-level package function whose
+    default is ``None``, ``True`` or ``False``, some call site must set
+    it, by keyword or by position, or ``UNSET_OK`` must name it with a
+    reason. Call sites count in the package, ``__spark_entry__.py``,
+    ``bench.py``, ``perfbench/`` (``tr.call(layer, fn, *args, **kw)``
+    calls ``fn``), ``scripts/`` and ``tests/``. A ``**d`` argument sets
+    the keys of the dict literals assigned to ``d``; a starred argument
+    whose contents cannot be read sets every parameter it may reach.
+    Calls match by name, so the check over-approximates who sets what. A
+    pass-through, an argument that is the caller's own parameter
+    (``x=x``), sets the callee's parameter only if the caller's parameter
+    is itself set."""
+    def is_switch(default):
+        return isinstance(default, ast.Constant) and any(
+            default.value is v for v in (None, True, False))
+
+    def params_of(fn):
+        """{parameter: its default node or None} and the positional
+        names."""
+        a = fn.args
+        pos = a.posonlyargs + a.args
+        out = dict.fromkeys(p.arg for p in pos)
+        out.update(zip((p.arg for p in pos[len(pos) - len(a.defaults):]),
+                       a.defaults))
+        out.update(zip((p.arg for p in a.kwonlyargs), a.kw_defaults))
+        return out, [p.arg for p in pos]
+
+    sigs, switches = {}, set()    # name -> [(positional names, params)]
+    for path in _walk(_PKG):
+        for stmt in _parse(path).body:
+            if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                params, pos = params_of(stmt)
+                sigs.setdefault(stmt.name, []).append((pos, params))
+                switches |= {(stmt.name, p) for p, d in params.items()
+                             if is_switch(d)}
+
+    direct, edges = set(), set()   # edges: (callee key, caller key)
+
+    def source(value, scopes):
+        """The caller parameter ``value`` passes through, or None."""
+        if isinstance(value, ast.Name):
+            for key, params, _ in reversed(scopes):
+                if value.id in params:
+                    has_default = params[value.id] is not None
+                    return (key, value.id) if key and has_default else None
+        return None
+
+    def unpacked(value, scopes):
+        """(keyword, value) pairs a ``**value`` argument passes, or None
+        when they cannot be read."""
+        found = None
+        if isinstance(value, ast.Name):
+            for _, _, node in reversed(scopes):
+                found = [a.value for a in ast.walk(node)
+                         if isinstance(a, ast.Assign) and any(
+                             getattr(t, "id", None) == value.id
+                             for t in a.targets)] or None
+                if found:
+                    break
+        if not found:
+            return None
+        out = []
+        for v in found:
+            for n in ast.walk(v):
+                if isinstance(n, ast.Dict):
+                    out += [(k.value, x) for k, x in zip(n.keys, n.values)
+                            if isinstance(k, ast.Constant)]
+                elif (isinstance(n, ast.Call)
+                      and getattr(n.func, "id", None) == "dict"):
+                    out += [(k.arg, k.value) for k in n.keywords if k.arg]
+        return out
+
+    def record(call, scopes):
+        f, args = call.func, call.args
+        name = getattr(f, "id", None) or getattr(f, "attr", None)
+        if (name == "call" and isinstance(f, ast.Attribute)
+                and len(args) >= 2):
+            target = getattr(args[1], "id", None) or getattr(
+                args[1], "attr", None)
+            if target in sigs:
+                name, args = target, args[2:]
+        for pos, params in sigs.get(name, ()):
+            given = []
+            for i, arg in enumerate(args):
+                if isinstance(arg, ast.Starred):
+                    direct.update((name, p) for p in pos[i:])
+                    break
+                if i < len(pos):
+                    given.append((pos[i], arg))
+            for kw in call.keywords:
+                if kw.arg is not None:
+                    given.append((kw.arg, kw.value))
+                    continue
+                pairs = unpacked(kw.value, scopes)
+                if pairs is None:
+                    direct.update((name, p) for p in params)
+                else:
+                    given += pairs
+            for param, value in given:
+                src = source(value, scopes)
+                if src:
+                    edges.add(((name, param), src))
+                else:
+                    direct.add((name, param))
+
+    def visit(node, scopes, top):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                key = child.name if top else None
+                visit(child, scopes + [(key, params_of(child)[0], child)],
+                      False)
+                continue
+            if isinstance(child, ast.Call):
+                record(child, scopes)
+            visit(child, scopes, False)
+
+    sites = (list(_walk(_PKG)) + list(_walk("perfbench"))
+             + list(_walk("scripts")) + list(_walk("tests"))
+             + [os.path.join(_ROOT, "__spark_entry__.py"),
+                os.path.join(_ROOT, "bench.py")])
+    for path in sites:
+        tree = _parse(path)
+        visit(tree, [(None, {}, tree)],
+              path.startswith(os.path.join(_ROOT, _PKG) + os.sep))
+
+    # an UNSET_OK parameter stands for its future caller, so what it
+    # passes on counts as set
+    done = direct | {tuple(k.split(".")) for k in UNSET_OK}
+    while True:
+        more = {callee for callee, caller in edges
+                if caller in done and callee not in done}
+        if not more:
+            break
+        done |= more
+    unset = sorted(f"{f}.{p}" for f, p in switches - done)
+    assert not unset, (
+        f"{len(unset)} switches no call site sets (make the default the "
+        f"code, set them where they are used, or name them in UNSET_OK "
+        f"with a reason): {unset}")

@@ -14,24 +14,23 @@ import io
 
 import pytest
 
+from data_engineering_etl_pipeline_spark import io as engine_io
 from data_engineering_etl_pipeline_spark.queries import QUERIES
 from .conftest import SF_DIR
 
 
 @pytest.fixture(autouse=True)
-def _floor_off(spark):
+def _floor_off(monkeypatch):
     """Pin the AT-SCALE plan shape: the io.load_table input-parallelism
     floor repartitions sub-128 MB documents scans — a deliberate
     small-input-only exchange that is structurally absent at 100 TB
     (where scans have thousands of splits). Disabling it here keeps
     every shuffle-count pin about the operator's own shape; the floor
     itself is pinned by test_small_scan_parallelism_floor below."""
-    spark.conf.set("spark.sql.graft.scanParallelismFloorBytes", "0")
-    yield
-    spark.conf.unset("spark.sql.graft.scanParallelismFloorBytes")
+    monkeypatch.setattr(engine_io, "_SCAN_FLOOR_BYTES", 0)
 
 
-def test_small_scan_parallelism_floor(spark):
+def test_small_scan_parallelism_floor(spark, monkeypatch):
     """The input-parallelism floor: a small documents scan gains
     EXACTLY one round-robin repartition right above the scan (guide §2.5
     — the testdata ships single-row-group parquet, which otherwise scans
@@ -43,7 +42,7 @@ def test_small_scan_parallelism_floor(spark):
 
     from data_engineering_etl_pipeline_spark.io import load_table
 
-    spark.conf.unset("spark.sql.graft.scanParallelismFloorBytes")
+    monkeypatch.undo()  # the floor back on: _floor_off turned it off
     docs = load_table(spark, SF_DIR, "documents").filter(
         F.col("doc_id") > 10).select("doc_id")
     p = plan_text(docs)

@@ -88,9 +88,9 @@ def test_incremental_url_dedup_composition(spark):
 
 
 def test_colocated_duplicate_copies_do_not_evict_distinct_ids(spark):
-    """r8 VERDICT item 1 exact repro: duplicate (id, key) copies
-    CO-LOCATED in one partition must not consume several phase-1 quota
-    slots — a key with <= quota distinct ids keeps ALL of them, whatever
+    """Exact repro of the duplicate-copy prune bug: duplicate (id, key)
+    copies CO-LOCATED in one partition must not consume several phase-1
+    quota slots — a key with <= quota distinct ids keeps ALL of them, whatever
     the hash order. On unfixed code, 3 copies of each id in coalesce(1)
     filled head(quota) with copies of the best-hash id and silently
     dropped the other distinct id from the candidate set."""
@@ -120,11 +120,10 @@ def test_colocated_duplicate_copies_do_not_evict_distinct_ids(spark):
 
 
 def test_quota_rank_sql_dense_rank_matches_engine_on_duplicates(spark, duck):
-    """r8 VERDICT item 6: the SQL twin uses DENSE_RANK so its kept set
-    equals the engine's top-quota DISTINCT ids on DUPLICATE-bearing
-    inputs too (copies of one (id, key) share the (hv, id) order tuple
-    and therefore one rank). Duplicates co-located via coalesce(1) — the
-    adversarial layout of the r8 prune bug."""
+    """The SQL twin uses DENSE_RANK so its kept set equals the engine's
+    top-quota DISTINCT ids on DUPLICATE-bearing inputs too (copies of one
+    (id, key) share the (hv, id) order tuple and therefore one rank). Duplicates co-located via coalesce(1) — the
+    adversarial layout of the duplicate-copy prune bug."""
     from data_engineering_etl_pipeline_spark.extensions.sampling import (
         quota_rank_sql)
 
@@ -146,8 +145,8 @@ def test_quota_rank_sql_dense_rank_matches_engine_on_duplicates(spark, duck):
 
 
 def test_duplicate_ids_share_one_slot_and_never_inflate_rows(spark):
-    """r8 review finding: duplicate-id copies must not fan the flag join
-    out (output rows > input rows) nor consume several quota slots."""
+    """Duplicate-id copies must not fan the flag join out (output rows >
+    input rows) nor consume several quota slots."""
     rows = ([(i, "a") for i in range(10)]
             + [(3, "a"), (3, "a"), (7, "b"), (7, "a")])
     df = spark.createDataFrame(rows, "id long, k string")

@@ -102,22 +102,20 @@ def test_bucketed_near_dup_finds_planted_duplicates(spark):
         assert rows.get((vid, vid + 1000000)) == 1.0
 
 
-def test_blas_exact_path_refuses_oversized_build_side(spark):
+def test_blas_exact_path_refuses_oversized_build_side(spark, monkeypatch):
     """The exact-GEMM near-dup path must refuse a build side past the
     broadcast budget with the bucket_signatures guidance, not collect it
     toward a driver OOM."""
     import pytest
 
+    from data_engineering_etl_pipeline_spark.extensions import similarity
     from data_engineering_etl_pipeline_spark.extensions.similarity import (
         cosine_near_dup_pairs)
 
     emb = load_table(spark, SF_DIR, "embeddings")
-    spark.conf.set("spark.sql.graft.blasBroadcastRows", "10")
-    try:
-        with pytest.raises(ValueError, match="bucket_signatures"):
-            cosine_near_dup_pairs(emb, threshold=0.95).collect()
-    finally:
-        spark.conf.unset("spark.sql.graft.blasBroadcastRows")
+    monkeypatch.setattr(similarity, "_BLAS_BROADCAST_ROWS", 10)
+    with pytest.raises(ValueError, match="bucket_signatures"):
+        cosine_near_dup_pairs(emb, threshold=0.95).collect()
 
 
 def _doubled_embeddings(spark):
@@ -208,30 +206,28 @@ def test_blocked_gemm_pairs_equals_broadcast_path(spark):
         assert got == want, f"n_blocks={B} diverged"
 
 
-def test_blocked_path_survives_broadcast_budget(spark):
+def test_blocked_path_survives_broadcast_budget(spark, monkeypatch):
     """Past the broadcast budget the collect-based exact path must refuse
     (pointing at n_blocks / bucket_signatures), while the blocked path runs
     the same corpus to the same answer — the guard's escape hatch is real."""
     import pytest
 
+    from data_engineering_etl_pipeline_spark.extensions import similarity
     from data_engineering_etl_pipeline_spark.extensions.similarity import (
         cosine_near_dup_pairs)
 
     doubled = _doubled(spark)
-    spark.conf.set("spark.sql.graft.blasBroadcastRows", "10")
-    try:
-        with pytest.raises(ValueError, match="n_blocks"):
-            cosine_near_dup_pairs(doubled).collect()
-        got = cosine_near_dup_pairs(doubled, n_blocks=4)
-        planted = [r.vec_id for r in
-                   doubled.filter((F.col("vec_id") % 7 == 0)
-                                  & (F.col("vec_id") < 1000000)).collect()]
-        rows = {(r.id_a, r.id_b): r.cosine for r in got.collect()}
-        assert planted
-        for vid in planted:
-            assert rows.get((vid, vid + 1000000)) == 1.0
-    finally:
-        spark.conf.unset("spark.sql.graft.blasBroadcastRows")
+    monkeypatch.setattr(similarity, "_BLAS_BROADCAST_ROWS", 10)
+    with pytest.raises(ValueError, match="n_blocks"):
+        cosine_near_dup_pairs(doubled).collect()
+    got = cosine_near_dup_pairs(doubled, n_blocks=4)
+    planted = [r.vec_id for r in
+               doubled.filter((F.col("vec_id") % 7 == 0)
+                              & (F.col("vec_id") < 1000000)).collect()]
+    rows = {(r.id_a, r.id_b): r.cosine for r in got.collect()}
+    assert planted
+    for vid in planted:
+        assert rows.get((vid, vid + 1000000)) == 1.0
 
 
 def test_gemm_topk_bit_equals_brute(spark):

@@ -213,7 +213,7 @@ def test_http_fetcher_distributed_matches_in_process(spark):
 
 def test_http_fetcher_429_retry_contract():
     """with_retry around the HTTP client on the real boundary: urllib's
-    HTTPError for a 429 matches the default is_rate_limited probe, the
+    HTTPError for a 429 matches with_retry's "429" probe, the
     backoff sleeps fire, and the payload parses after recovery."""
     srv, base, hits = _make_history_server(flaky_429s=2)
     sleeps = []
