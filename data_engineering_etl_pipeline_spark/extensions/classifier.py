@@ -113,10 +113,7 @@ def _grad_partials(df: DataFrame, vec_col: str, label_col: str,
 
 def fit_logreg_exact(df: DataFrame, vec_col: str = "embedding",
                      label_col: str = "label", dim: int = 64,
-                     n_iters: int = 20, lr: float = 1.0,
-                     init_weights: list[float] | None = None,
-                     init_bias: float = 0.0,
-                     tol: float | None = None) -> dict:
+                     n_iters: int = 20, lr: float = 1.0) -> dict:
     """Full-batch gradient-descent logistic regression over the corpus.
 
     Full-batch (not SGD) is the deliberate choice: the gradient is a pure
@@ -125,26 +122,8 @@ def fit_logreg_exact(df: DataFrame, vec_col: str = "embedding",
     Returns ``{"weights", "bias", "losses", "n"}`` where ``losses`` is the
     per-iteration mean log-loss (from the exact quantized sums — itself
     byte-stable, and non-increasing on any data for a small enough lr;
-    unit-pinned on the planted fixture).
-
-    ``init_weights``/``init_bias`` are the resume hatch (the
-    ``kmeans_lloyd_refine(init_centroids=...)`` convention): the entire
-    loop state is the KB-scale model, so a job killed after k of n
-    iterations restarts with the last recorded weights and runs the
-    remaining n−k — and because every step is exact-deterministic, the
-    resumed trajectory is byte-identical to the uninterrupted one
-    (unit-pinned).
-
-    ``tol`` — deterministic early stop: at the first iteration whose
-    INTEGER loss-sum improvement falls below ``tol`` (in mean-log-loss
-    units: the comparison is ``prev_sum_q − sum_q < tol·n·LOGREG_Q_SCALE``
-    over exact integers, so the stopping decision is byte-stable like
-    everything else), the loop breaks WITHOUT applying that iteration's
-    update — the returned weights equal a full run truncated at the last
-    applied step (unit-pinned). At 100 TB each iteration is a full corpus scan;
-    scanning 14 more times after the quantized loss plateaued at
-    iteration 6 is real money. Default ``tol=None`` keeps the fixed
-    ``n_iters`` schedule.
+    unit-pinned on the planted fixture). The weights start at zero and
+    the loop runs exactly ``n_iters`` steps.
 
     Byte-stability precision (the ``kmeans_lloyd_refine`` caveat
     verbatim): the cross-row REDUCE is
@@ -154,16 +133,11 @@ def fit_logreg_exact(df: DataFrame, vec_col: str = "embedding",
     within one ulp of a ``floor(g·2^20)`` boundary could in principle
     flip under a relayout that changes Arrow batch shapes
     (``test_fit_is_byte_stable_under_relayout`` pins the practice)."""
-    w = (np.zeros(dim, dtype=np.float64) if init_weights is None
-         else np.asarray(init_weights, dtype=np.float64).copy())
-    if w.shape != (dim,):
-        raise ValueError(f"fit_logreg_exact: init_weights shape "
-                         f"{w.shape} != ({dim},)")
-    b = float(init_bias)
+    w = np.zeros(dim, dtype=np.float64)
+    b = 0.0
     losses: list[float] = []
     n = 0
     qf = float(LOGREG_Q_SCALE)
-    prev_loss_q: int | None = None
     for _ in range(max(0, int(n_iters))):
         rows = {r["pos"]: r for r in
                 _grad_partials(df, vec_col, label_col, w, b,
@@ -174,12 +148,7 @@ def fit_logreg_exact(df: DataFrame, vec_col: str = "embedding",
         grad = np.asarray([rows[i]["sum_q"] for i in range(dim)],
                           dtype=np.float64) / (n * qf)
         gb = rows[dim]["sum_q"] / (n * qf)
-        loss_q = int(rows[dim + 1]["sum_q"])
-        losses.append(loss_q / (n * qf))
-        if (tol is not None and prev_loss_q is not None
-                and float(prev_loss_q - loss_q) < tol * n * qf):
-            break  # plateau: this iteration's update is NOT applied
-        prev_loss_q = loss_q
+        losses.append(int(rows[dim + 1]["sum_q"]) / (n * qf))
         w = w - lr * grad
         b = b - lr * gb
     return {"weights": [float(t) for t in w], "bias": float(b),

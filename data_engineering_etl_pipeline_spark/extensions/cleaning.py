@@ -9,10 +9,10 @@ rules that produced the "Colossal Clean Crawled Corpus":
 - drop any line containing the word "javascript";
 - drop any PAGE containing "lorem ipsum";
 - drop any PAGE containing a curly bracket (code);
-- drop any PAGE whose cleaned text has fewer than 3 sentences;
-- (optional) drop any page containing a word from a caller-supplied
-  blocklist (C4 used the public "List of Dirty, Naughty ..." list; the
-  list itself is a parameter here, empty by default).
+- drop any PAGE whose cleaned text has fewer than 3 sentences.
+
+C4's page-level word blocklist (the public "List of Dirty, Naughty ..."
+list) is not applied: no pipeline here supplies one.
 
 Gopher — Rae et al. 2021 (arXiv:2112.11446, Appendix A1.1), the
 MassiveText document-level quality rules:
@@ -98,8 +98,7 @@ def c4_kept_lines_sql(expr: str) -> str:
             f"l -> {_line_keep_sql('l')})")
 
 
-def c4_stats(text: str | Column,
-             blocklist: list[str] | None = None) -> list[Column]:
+def c4_stats(text: str | Column) -> list[Column]:
     """The full per-page C4 cleaning verdict as named columns:
     ``n_lines, n_kept, cleaned, n_sentences, has_lorem, has_brace,
     keep_page``. ``cleaned`` is the kept lines re-joined with newlines;
@@ -114,11 +113,7 @@ def c4_stats(text: str | Column,
     # "a curly bracket" means either brace: a truncated code fragment can
     # carry only the closing one.
     has_brace = t.contains("{") | t.contains("}")
-    blocked = F.lit(False)
-    for w in (blocklist or []):
-        blocked = blocked | F.lower(t).contains(w.lower())
-    keep = ((n_sent >= C4_MIN_SENTENCES)
-            & ~has_lorem & ~has_brace & ~blocked)
+    keep = (n_sent >= C4_MIN_SENTENCES) & ~has_lorem & ~has_brace
     return [
         F.size(F.split(t, r"\r?\n")).cast("int").alias("n_lines"),
         F.size(kept).cast("int").alias("n_kept"),
@@ -130,7 +125,7 @@ def c4_stats(text: str | Column,
     ]
 
 
-def c4_stats_sql(expr: str, blocklist: list[str] | None = None) -> list[str]:
+def c4_stats_sql(expr: str) -> list[str]:
     """DuckDB twin of :func:`c4_stats` over the SQL expression ``expr`` —
     identical rules, identical column names."""
     kept = c4_kept_lines_sql(expr)
@@ -138,12 +133,6 @@ def c4_stats_sql(expr: str, blocklist: list[str] | None = None) -> list[str]:
     n_sent = f"len(regexp_extract_all({cleaned}, '{C4_SENTENCE_RE}'))"
     has_lorem = f"contains(lower({expr}), 'lorem ipsum')"
     has_brace = f"(contains({expr}, '{{') OR contains({expr}, '}}'))"
-    # single quotes doubled: a blocklist word like "don't" must not break
-    # (or inject into) the generated SQL
-    blocked = " OR ".join(
-        [f"contains(lower({expr}), '{w.lower().replace(chr(39), chr(39) * 2)}')"
-         for w in (blocklist or [])]
-    ) or "FALSE"
     return [
         f"CAST(len(string_split_regex({expr}, '\\r?\\n')) AS INT) AS n_lines",
         f"CAST(len({kept}) AS INT) AS n_kept",
@@ -152,7 +141,7 @@ def c4_stats_sql(expr: str, blocklist: list[str] | None = None) -> list[str]:
         f"{has_lorem} AS has_lorem",
         f"{has_brace} AS has_brace",
         f"({n_sent} >= {C4_MIN_SENTENCES} AND NOT {has_lorem} AND NOT "
-        f"{has_brace} AND NOT ({blocked})) AS keep_page",
+        f"{has_brace}) AS keep_page",
     ]
 
 

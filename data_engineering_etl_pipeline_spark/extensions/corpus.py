@@ -124,8 +124,7 @@ def lm_cross_entropy(docs: DataFrame, id_col: str = "doc_id",
 
 
 def perplexity_buckets(docs: DataFrame, id_col: str = "doc_id",
-                       text_col: str = "text", k: float = 0.1,
-                       approx_accuracy: int | None = None) -> DataFrame:
+                       text_col: str = "text", k: float = 0.1) -> DataFrame:
     """CCNet-style perplexity bucketing (Wenzek et al. 2020,
     arXiv:1911.00359 §4.3): score every document with the corpus-trained
     bigram-LM cross-entropy (:func:`lm_cross_entropy`) and assign it to
@@ -137,28 +136,18 @@ def perplexity_buckets(docs: DataFrame, id_col: str = "doc_id",
     Compose with :func:`stratified_sample` on ``ppl_bucket`` for the
     paper's per-bucket downsampling (keep head, thin tail).
 
-    Plan shape: the tercile cutoffs are ONE exact-percentile aggregate over the
-    docs-sized score relation (a 1-row broadcast); at 100 TB pass
-    ``approx_accuracy`` to swap ``percentile`` for ``approx_percentile``
-    (KLL-family sketch, map-side combinable) — same plan, and the swap is a
-    TESTED contract (tests/test_scale_toolkit.py): each approximate cutoff's
-    RANK in the exact score distribution is within ``n / approx_accuracy`` of
-    the target tercile rank (Spark's documented deterministic bound), so only
-    rank-adjacent docs can change bucket. The score relation is PERSISTED
-    (docs-sized: id + two numbers) — it feeds both the cutoff aggregate and the
-    output, and uncached the whole corpus-trained LM (bigram explode +
-    vocabulary aggs + data-sized scoring join, the family's most expensive job)
-    would execute twice. Same caller-release contract as
-    ngram_jaccard_pairs."""
+    Plan shape: the tercile cutoffs are ONE exact-percentile aggregate over
+    the docs-sized score relation (a 1-row broadcast). The score relation
+    is PERSISTED (docs-sized: id + two numbers) — it feeds both the cutoff
+    aggregate and the output, and uncached the whole corpus-trained LM
+    (bigram explode + vocabulary aggs + data-sized scoring join, the
+    family's most expensive job) would execute twice. Same caller-release
+    contract as ngram_jaccard_pairs."""
     from ..caching import pin
 
     lw = pin(lm_cross_entropy(docs, id_col, text_col, k))
     probs = F.array(F.lit(1.0 / 3.0), F.lit(2.0 / 3.0))
-    if approx_accuracy is None:
-        cuts = lw.agg(F.percentile("xent", probs).alias("__c"))
-    else:
-        cuts = lw.agg(F.percentile_approx(
-            "xent", probs, F.lit(int(approx_accuracy))).alias("__c"))
+    cuts = lw.agg(F.percentile("xent", probs).alias("__c"))
     bucket = (F.when(F.col("xent").isNull(), F.lit(None).cast("string"))
               .when(F.col("xent") <= F.element_at("__c", 1), "head")
               .when(F.col("xent") <= F.element_at("__c", 2), "middle")

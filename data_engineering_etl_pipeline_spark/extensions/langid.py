@@ -110,9 +110,8 @@ def char_freq_vector(text_col: str | Column, dim: int = LANGID_DIM,
 
 
 def fit_lang_id(labeled: DataFrame, lang_col: str = "lang",
-                text_col: str = "text", langs: list[str] | None = None,
-                dim: int = LANGID_DIM, n: int = LANGID_N,
-                salt: str = LANGID_SALT) -> dict:
+                text_col: str = "text", dim: int = LANGID_DIM,
+                n: int = LANGID_N, salt: str = LANGID_SALT) -> dict:
     """Train the lang-ID model one-vs-rest: for each language, an exact
     fixed-point logistic regression (``fit_logreg_exact`` — gradients
     reduce as integers, so every per-language model is byte-identical
@@ -121,7 +120,7 @@ def fit_lang_id(labeled: DataFrame, lang_col: str = "lang",
     "n", "salt"}`` — KB-scale, JSON-serializable (persist it like any
     codebook).
 
-    ``langs`` defaults to the distinct labels (one KB-scale collect).
+    ``langs`` is the sorted distinct labels (one KB-scale collect).
     The feature projection is computed ONCE and engine-pinned — the K
     one-vs-rest fits (40 passes each) share it instead of
     re-running the char-n-gram expression per fit; callers release via
@@ -130,10 +129,9 @@ def fit_lang_id(labeled: DataFrame, lang_col: str = "lang",
     text are excluded from every fit (the kernel's NULL handling)."""
     from ..caching import pin
 
-    if langs is None:
-        langs = sorted(r[0] for r in
-                       labeled.select(lang_col).distinct().collect()
-                       if r[0] is not None)
+    langs = sorted(r[0] for r in
+                   labeled.select(lang_col).distinct().collect()
+                   if r[0] is not None)
     if not langs:
         raise ValueError("fit_lang_id: no languages to fit")
     vecs = pin(labeled.select(
@@ -146,7 +144,7 @@ def fit_lang_id(labeled: DataFrame, lang_col: str = "lang",
         models[lang] = fit_logreg_exact(
             lab, vec_col="__v", label_col="__y", dim=dim,
             n_iters=40, lr=4.0)
-    return {"langs": list(langs), "models": models, "dim": dim, "n": n,
+    return {"langs": langs, "models": models, "dim": dim, "n": n,
             "salt": salt}
 
 

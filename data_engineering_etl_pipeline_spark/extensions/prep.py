@@ -48,13 +48,9 @@ from .text_stats import quality_score, token_count_regex
 def prepare_training_corpus(docs: DataFrame,
                             benchmark: DataFrame | None = None, *,
                             id_col: str = "doc_id", text_col: str = "text",
-                            min_quality: float = 0.05,
-                            near_dup_threshold: float = 0.8,
                             near_dup_max_df: int | None = 10000,
-                            train_frac: float = 0.9,
                             pack_budget: int = 2048,
-                            n_shards: int = 64,
-                            portable_shard: bool = False) -> DataFrame:
+                            n_shards: int = 64) -> DataFrame:
     """Run the full preparation pipeline; returns the packed training set:
     ``(id, text, split, n_tokens, shard, pack_id)`` where ``text`` is the
     cleaned+scrubbed form, ``split`` ∈ {train, val} by content hash, and
@@ -92,10 +88,10 @@ def prepare_training_corpus(docs: DataFrame,
                 .withColumn("__toks",
                             F.split(F.trim(F.col(text_col)), r"\s+")))
 
-    # 4. Near-dup dedup: trigram-Jaccard pairs → connected components →
-    #    drop every non-minimum member.
+    # 4. Near-dup dedup: trigram-Jaccard pairs at Jaccard >= 0.8 →
+    #    connected components → drop every non-minimum member.
     pairs = ngram_jaccard_pairs(exact, id_col, text_col,
-                                n=3, threshold=near_dup_threshold,
+                                n=3, threshold=0.8,
                                 max_df=near_dup_max_df, tokens_col="__toks")
     # driver_budget: modest pair lists resolve with an exact driver-side
     # union-find instead of paying the iterative machinery's per-round job
@@ -116,15 +112,15 @@ def prepare_training_corpus(docs: DataFrame,
 
     # 6. Quality floor (pure column expression over the shared tokens).
     kept = deduped.filter(
-        quality_score(text_col, toks=F.col("__toks")) >= min_quality)
+        quality_score(text_col, toks=F.col("__toks")) >= 0.05)
 
-    # 7. Deterministic content-hash split (train_frac of the 32-bit hash
+    # 7. Deterministic content-hash split (90% of the 32-bit hash
     #    space → train). THE SAME portable-md5 helper as stratified_sample /
     #    pack_sequences (not a re-implementation: a second copy could
     #    drift from the md5 recipe the DuckDB oracle reproduces):
     #    rerun-, repartition-, and engine-stable; no RNG state.
     hv = _portable_hv(F.col(text_col))
-    split = F.when(hv < F.lit(float(1 << 32)) * train_frac, "train").otherwise("val")
+    split = F.when(hv < F.lit(float(1 << 32)) * 0.9, "train").otherwise("val")
     # n_tokens is a per-doc map expression — compute it for EVERY row (the
     # documented output contract; a val loader budgets by it too), and let
     # packing reuse it via tokens_col instead of re-splitting. (It counts
@@ -135,15 +131,13 @@ def prepare_training_corpus(docs: DataFrame,
                .withColumn("n_tokens", token_count_regex(text_col)))
 
     # 8. Token-budget packing of the train split only (val ships unpacked
-    #    rows with shard/pack_id null via the left join).
-    #    ``portable_shard`` forwards to pack_sequences (md5 shard instead of
-    #    xxhash64) — the oracle convention that lets the registry row's
-    #    DuckDB twin reproduce shard/pack_id bit-for-bit; production keeps
-    #    the cheaper JVM hash.
+    #    rows with shard/pack_id null via the left join). The md5 shard
+    #    (``portable_shard``, not xxhash64) lets the registry row's DuckDB
+    #    twin reproduce shard/pack_id bit-for-bit.
     packs = pack_sequences(labeled.filter(F.col("split") == "train"),
                            budget=pack_budget, n_shards=n_shards,
                            id_col=id_col, text_col=text_col,
                            tokens_col="n_tokens",
-                           portable_shard=portable_shard)
+                           portable_shard=True)
     return (labeled.join(packs.select(id_col, "shard", "pack_id"),
                          id_col, "left"))

@@ -811,22 +811,18 @@ def semantic_dedup(df: DataFrame, threshold: float = 0.95,
 def cosine_cross_pairs(left: DataFrame, right: DataFrame,
                        threshold: float = 0.95, left_id: str = "vec_id",
                        right_id: str = "bench_id",
-                       vec_col: str = "embedding", dim: int = VECTOR_DIM,
-                       n_blocks: int | None = None) -> DataFrame:
+                       vec_col: str = "embedding",
+                       dim: int = VECTOR_DIM) -> DataFrame:
     """EXACT bipartite cosine pairs: every ``(left_id, right_id, cosine)``
     with cosine ≥ threshold between two DIFFERENT relations — the
     cross-corpus member of the GEMM family (self-all-pairs is
     ``cosine_near_dup_pairs``).
 
-    Default plan collects the RIGHT side as the GEMM build matrix (budget-
+    The plan collects the RIGHT side as the GEMM build matrix (budget-
     guarded like ``_blas_candidate_pairs`` — right is typically the small
-    benchmark). ``n_blocks=B`` switches to a cogrouped block-pair form
-    (``pmod(xxhash64(id), B)`` blocks on each side, one BLAS matmul per
-    block pair, threshold emission): nothing collected, per-task memory one
-    (left-block × right-block) cell, for the regime where BOTH sides are
-    corpus-scale. Both paths emit with the standard 1e-6 BLAS margin and
-    share one exact codegen verify tail — results are bit-identical to a
-    theta cross-join.
+    benchmark) and streams the left side map-side against it. Candidates
+    are emitted with the standard 1e-6 BLAS margin and pass one exact
+    codegen verify tail — results are bit-identical to a theta cross-join.
     """
     if left_id == right_id:
         raise ValueError(
@@ -842,62 +838,31 @@ def cosine_cross_pairs(left: DataFrame, right: DataFrame,
     r_type = rv.schema[right_id].dataType.simpleString()
     schema = f"{left_id} {l_type}, {right_id} {r_type}"
 
-    if n_blocks is not None:
-        B = int(n_blocks)
-        if B < 1:
-            # same guard as blocked_gemm_pairs: pmod(x, 0) dies
-            # deep in the job under ANSI (or NULL-keys to an EMPTY result
-            # without it — a fully contaminated corpus reported clean)
-            raise ValueError("cosine_cross_pairs: n_blocks must be >= 1")
-        lrep = (lv.withColumn("__lg", F.pmod(F.xxhash64(F.col(left_id)),
-                                             F.lit(B)))
-                .withColumn("__rg", F.explode(
-                    F.sequence(F.lit(0), F.lit(B - 1)))))
-        rrep = (rv.withColumn("__rg", F.pmod(F.xxhash64(F.col(right_id)),
-                                             F.lit(B)))
-                .withColumn("__lg", F.explode(
-                    F.sequence(F.lit(0), F.lit(B - 1)))))
+    budget = _BLAS_BROADCAST_ROWS
+    # one pass decides AND fetches (see _blas_candidate_pairs)
+    rpdf = rv.limit(budget + 1).toPandas()
+    if len(rpdf) > budget:
+        raise ValueError(
+            f"cosine_cross_pairs: right side exceeds the broadcast "
+            f"budget of {budget} rows — swap sides so the smaller "
+            "relation is the right one.")
+    r_ids = rpdf[right_id].to_numpy()
+    r_unit = _unit_matrix(rpdf, "vq", "iq", dim)
+    bc = spark.sparkContext.broadcast((r_ids, r_unit))
 
-        def score(_key, lpdf, rpdf):
-            if not len(lpdf) or not len(rpdf):
-                return pd.DataFrame({left_id: lpdf[left_id][:0],
-                                     right_id: rpdf[right_id][:0]})
-            sims = (_unit_matrix(lpdf, "v", "i", dim)
-                    @ _unit_matrix(rpdf, "vq", "iq", dim).T)
+    def score_stream(batches):
+        ids_r, ur = bc.value
+        for pdf in batches:
+            if not len(pdf) or not len(ids_r):
+                continue
+            sims = _unit_matrix(pdf, "v", "i", dim) @ ur.T
             ii, jj = np.nonzero(sims >= margin)
-            return pd.DataFrame({
-                left_id: lpdf[left_id].to_numpy()[ii],
-                right_id: rpdf[right_id].to_numpy()[jj]})
+            if len(ii):
+                yield pd.DataFrame({
+                    left_id: pdf[left_id].to_numpy()[ii],
+                    right_id: ids_r[jj]})
 
-        cand = (lrep.groupBy("__lg", "__rg")
-                .cogroup(rrep.groupBy("__lg", "__rg"))
-                .applyInPandas(score, schema=schema))
-    else:
-        budget = _BLAS_BROADCAST_ROWS
-        # one pass decides AND fetches (see _blas_candidate_pairs)
-        rpdf = rv.limit(budget + 1).toPandas()
-        if len(rpdf) > budget:
-            raise ValueError(
-                f"cosine_cross_pairs: right side exceeds the broadcast "
-                f"budget of {budget} rows — pass n_blocks= for the "
-                "cogrouped block form (no collect), or swap sides.")
-        r_ids = rpdf[right_id].to_numpy()
-        r_unit = _unit_matrix(rpdf, "vq", "iq", dim)
-        bc = spark.sparkContext.broadcast((r_ids, r_unit))
-
-        def score_stream(batches):
-            ids_r, ur = bc.value
-            for pdf in batches:
-                if not len(pdf) or not len(ids_r):
-                    continue
-                sims = _unit_matrix(pdf, "v", "i", dim) @ ur.T
-                ii, jj = np.nonzero(sims >= margin)
-                if len(ii):
-                    yield pd.DataFrame({
-                        left_id: pdf[left_id].to_numpy()[ii],
-                        right_id: ids_r[jj]})
-
-        cand = lv.mapInPandas(score_stream, schema=schema)
+    cand = lv.mapInPandas(score_stream, schema=schema)
 
     # shared tail; candidates broadcast so the corpus-sized left streams
     # map-side (margin-hit-sized candidate set — the flag_contaminated
@@ -988,8 +953,7 @@ def cluster_balanced_sample(df: DataFrame, quota_per_cluster: int,
                             vec_col: str = "embedding", seed: int = 42,
                             dim: int = VECTOR_DIM,
                             centroids: list[list[float]] | None = None,
-                            assign: str = "gemm",
-                            refine_iters: int = 0) -> DataFrame:
+                            assign: str = "gemm") -> DataFrame:
     """Cluster-balanced curation sampling: partition the embedding space
     with the k-means coarse quantizer and keep at most
     ``quota_per_cluster`` rows per cluster — the standard flattening of
@@ -1042,25 +1006,11 @@ def cluster_balanced_sample(df: DataFrame, quota_per_cluster: int,
     (:func:`_nearest_centroid_fold`) so a DuckDB oracle reproduces every
     assignment AND the quota ranking exactly; ``'gemm'`` (default) is the
     production path — identical partition semantics, matmul-summation
-    ulps may flip exact centroid ties.
-
-    ``refine_iters``: run that many distributed Lloyd refinement
-    passes (:func:`kmeans_lloyd_refine`) over the FULL corpus before
-    assigning. With a partitioning-independent init (``centroids=``
-    :func:`planted_centroids` or a frozen prior codebook) this closes the
-    relayout caveat above: the refined boundaries are byte-stable under
-    any repartitioning AND minimize corpus-level (not sample-level)
-    quantization error. Costs ``refine_iters`` scans; each reduce is
-    codebook-sized."""
+    ulps may flip exact centroid ties."""
     if quota_per_cluster < 0:
         raise ValueError("cluster_balanced_sample: quota must be >= 0")
     if centroids is None:
         centroids = fit_ivf_centroids(df, vec_col, n_clusters, seed, dim=dim)
-    if refine_iters > 0:
-        centroids = kmeans_lloyd_refine(df.select(vec_col), centroids,
-                                        n_iters=refine_iters,
-                                        vec_col=vec_col, dim=dim,
-                                        assign=assign)
     if assign == "fold":
         assigned = _nearest_centroid_fold(df.select(id_col, vec_col),
                                           id_col, vec_col, centroids)
@@ -1449,8 +1399,7 @@ def planted_projection(seed: int, n_components: int,
 
 
 def project_fold(df: DataFrame, model: dict, id_col: str = "vec_id",
-                 vec_col: str = "embedding",
-                 q_scale: int | None = None) -> DataFrame:
+                 vec_col: str = "embedding", *, q_scale: int) -> DataFrame:
     """Expression-form projection twin of :func:`apply_pca` for
     oracle-checkable configurations. Output long-form — one row per
     (vector, component). NULL/wrong-length vectors are dropped (the
@@ -1458,23 +1407,13 @@ def project_fold(df: DataFrame, model: dict, id_col: str = "vec_id",
     Production projection stays on the BLAS kernel; this is the
     verification twin.
 
-    Two modes:
-    - ``q_scale=None``: float fold ``Σ_i (x_i − μ_i)·w_ki`` in index
-      order → ``(id, pos, coord)``. Deterministic within ONE engine, but
-      NOT cross-engine bit-portable: measured, DuckDB reassociates
-      long float ``+`` chains (up to ~20 ulp vs strict left-association),
-      so chain VALUES differ across engines even with identical literals
-      — only sign/comparison consumers (LSH bits, argmax assignment)
-      survive that, which is exactly how the seeded-constants oracles use
-      chains. Use this mode for within-engine work and the BLAS-agreement
-      unit.
-    - ``q_scale=int`` (the driver-row mode): exact fixed-point —
-      per element ``q_i = floor((x_i−μ_i)·w_ki·q_scale)`` (one
-      deterministic IEEE product per term, portable), summed as BIGINT
-      (associativity-free) → ``(id, pos, sum_q, coord=sum_q/q_scale)``.
-      BIT-equal across engines with zero tolerance, the
-      :func:`kmeans_update_exact` convention; quantization error ≤
-      dim/q_scale ≈ 6e-5 at the defaults."""
+    Exact fixed-point: per element ``q_i = floor((x_i−μ_i)·w_ki·q_scale)``
+    (one deterministic IEEE product per term, portable), summed as BIGINT
+    (associativity-free) → ``(id, pos, sum_q, coord=sum_q/q_scale)``.
+    BIT-equal across engines with zero tolerance, the
+    :func:`kmeans_update_exact` convention — a float fold would not be:
+    DuckDB reassociates long float ``+`` chains by up to ~20 ulp.
+    Quantization error ≤ dim/q_scale ≈ 6e-5 at dim 64, q_scale 2^20."""
     mu = model["mean"]
     comps = model["components"]
     dim = len(mu)
@@ -1483,46 +1422,30 @@ def project_fold(df: DataFrame, model: dict, id_col: str = "vec_id",
     centered = F.zip_with(v, mu_lit, lambda a, b: a - b)
     clean = df.filter(F.col(vec_col).isNotNull()
                       & (F.size(F.col(vec_col)) == dim))
+    qf = F.lit(float(q_scale))
     scores = []
     for w in comps:
         wl = F.array(*[F.lit(float(x)) for x in w])
         terms = F.zip_with(centered, wl, lambda a, b: a * b)
-        if q_scale is None:
-            scores.append(F.aggregate(terms, F.lit(0.0),
-                                      lambda acc, x: acc + x))
-        else:
-            qf = F.lit(float(q_scale))
-            scores.append(F.aggregate(
-                F.transform(terms, lambda t: F.floor(t * qf)),
-                F.lit(0).cast("long"), lambda acc, x: acc + x))
+        scores.append(F.aggregate(
+            F.transform(terms, lambda t: F.floor(t * qf)),
+            F.lit(0).cast("long"), lambda acc, x: acc + x))
     # ONE scan: all component folds in a single projection, then a
     # posexplode over the k scores (k rows out per vector)
     staged = clean.select(F.col(id_col), F.array(*scores).alias("__ys"))
-    if q_scale is None:
-        return staged.select(F.col(id_col),
-                             F.posexplode(F.col("__ys")).alias("pos",
-                                                               "coord"))
     out = staged.select(F.col(id_col),
                         F.posexplode(F.col("__ys")).alias("pos", "sum_q"))
-    return out.withColumn(
-        "coord", F.col("sum_q").cast("double") / F.lit(float(q_scale)))
+    return out.withColumn("coord", F.col("sum_q").cast("double") / qf)
 
 
 def apply_pca(df: DataFrame, model: dict, vec_col: str = "embedding",
-              out_col: str = "pca", whiten: bool = False,
-              eps: float = 1e-12) -> DataFrame:
-    """Map-only PCA projection: ``y = (x − mean) @ componentsᵀ``, optionally
-    whitened (each output dim scaled by 1/√eigval, variance-1 outputs —
-    the preprocessing that makes Euclidean ≈ Mahalanobis for downstream
-    ANN/dedup). Arrow-batched matmul per batch, model broadcast in the
+              out_col: str = "pca") -> DataFrame:
+    """Map-only PCA projection: ``y = (x − mean) @ componentsᵀ``.
+    Arrow-batched matmul per batch, model broadcast in the
     closure (KB-scale); embarrassingly parallel over a 100 TB scan — no
     shuffle, no collect. NULL/wrong-length vectors project to NULL."""
     mu = np.asarray(model["mean"], dtype=np.float64)
     wmat = np.asarray(model["components"], dtype=np.float64).T  # dim×k
-    if whiten:
-        scale = 1.0 / np.sqrt(np.maximum(np.asarray(model["eigvals"],
-                                                    dtype=np.float64), eps))
-        wmat = wmat * scale[None, :]
     dim = mu.shape[0]
 
     @F.pandas_udf("array<double>")

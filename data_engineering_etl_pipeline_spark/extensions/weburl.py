@@ -411,8 +411,7 @@ def url_dedup_keep_first(docs: DataFrame, url_col: str = "url",
 
 def domain_balanced_sample(docs: DataFrame, quota_per_domain: int,
                            url_col: str = "url", id_col: str = "doc_id",
-                           seed: int = 42,
-                           suffixes: DataFrame | None = None) -> DataFrame:
+                           seed: int = 42) -> DataFrame:
     """Per-domain document cap — ``(id, domain, kept)`` flagging at most
     ``quota_per_domain`` rows per registered domain, selected by the
     portable hash order (deterministic, engine-reproducible; NOT crawl
@@ -421,18 +420,11 @@ def domain_balanced_sample(docs: DataFrame, quota_per_domain: int,
     (``sampling.balanced_sample_by_key``) with the domain as the key:
     map-only prune → candidate-sized rank → keeper flag join. Domain
     cardinality is unknown a priori, so no broadcast hint (AQE decides
-    from the actual candidate size). ``suffixes`` (optional) keys the cap
-    by the PSL registered domain (:func:`with_registered_domain_psl`) —
-    without it, ``github.io``-class private suffixes mis-group every user
-    site under one capped key; the heuristic stays the no-data default."""
+    from the actual candidate size). The key is the heuristic
+    :func:`registered_domain`."""
     from .sampling import balanced_sample_by_key
-    if suffixes is None:
-        keyed = docs.select(F.col(id_col),
-                            registered_domain(url_col).alias("domain"))
-    else:
-        keyed = with_registered_domain_psl(
-            docs.select(F.col(id_col), F.col(url_col)), suffixes,
-            url_col=url_col, out_col="domain").select(id_col, "domain")
+    keyed = docs.select(F.col(id_col),
+                        registered_domain(url_col).alias("domain"))
     return balanced_sample_by_key(
         keyed, quota_per_domain, key_col="domain", id_col=id_col,
         salt=f"domain-balance-{seed}")
@@ -441,8 +433,7 @@ def domain_balanced_sample(docs: DataFrame, quota_per_domain: int,
 def filter_blocklisted(docs: DataFrame, blocklist: DataFrame,
                        url_col: str = "url",
                        blocked_domain_col: str = "domain",
-                       keep_domain_col: str | None = None,
-                       suffixes: DataFrame | None = None) -> DataFrame:
+                       keep_domain_col: str | None = None) -> DataFrame:
     """Drop rows whose registered domain is blocklisted — broadcast LEFT
     ANTI join (C4's URL-blocklist step). The blocklist is MB-scale by
     nature; the corpus streams map-side through the join. BOTH sides
@@ -455,50 +446,13 @@ def filter_blocklisted(docs: DataFrame, blocklist: DataFrame,
     exact-host granularity match on :func:`extract_host` instead.
     ``keep_domain_col`` forwards the computed registered domain on the
     survivors (it is already evaluated for the join — re-deriving it
-    downstream would pay the regex stack again). ``suffixes`` (optional)
-    normalizes BOTH sides with the PSL (:func:`with_registered_domain_psl`)
-    instead of the heuristic — a ``user.github.io`` blocklist entry then
-    blocks exactly that user site, not all of ``github.io`` — and an
-    entry that IS a public suffix (``github.io`` itself, whose registered
-    domain is '') gets SUFFIX semantics: it blocks every site directly
-    under it, matched as a second broadcast anti join on the doc domain's
-    parent (registered domain minus its first label == the suffix), AND
-    it blocks pages served at the apex host itself (``https://github.io/x``,
-    whose registered domain is also '' and so can never match a
-    domain-keyed anti join) via a third broadcast anti join on the exact
-    host (the apex gap closed rather than documented). The rule
-    throughout: an entry class that silently
-    blocks nothing is worse than either refusing it or giving it its
-    obvious meaning."""
+    downstream would pay the regex stack again)."""
     bl_host = F.regexp_replace(
         F.lower(F.trim(F.col(blocked_domain_col))), r"^www\.", "")
-    if suffixes is None:
-        dom = docs.withColumn("__dom", registered_domain(url_col))
-        bl = F.broadcast(blocklist.select(
-            registered_domain_from_host(bl_host).alias("__dom")).distinct())
-        out = dom.join(bl, "__dom", "left_anti")
-    else:
-        dom = with_registered_domain_psl(docs, suffixes, url_col=url_col,
-                                         out_col="__dom")
-        bl_norm = with_registered_domain_psl(
-            blocklist.select(bl_host.alias("__h")), suffixes,
-            host_col="__h", out_col="__dom")
-        bl_reg = F.broadcast(
-            bl_norm.filter(F.col("__dom") != "").select("__dom").distinct())
-        sfx_entries = (bl_norm
-                       .filter((F.col("__dom") == "") & (F.col("__h") != ""))
-                       .select("__h").distinct())
-        bl_sfx = F.broadcast(sfx_entries.select(
-            F.col("__h").alias("__parent")))
-        bl_apex = F.broadcast(sfx_entries.select(
-            F.col("__h").alias("__host")))
-        out = (dom.join(bl_reg, "__dom", "left_anti")
-               .withColumn("__parent",
-                           F.regexp_replace("__dom", r"^[^.]+\.", ""))
-               .join(bl_sfx, "__parent", "left_anti")
-               .withColumn("__host", extract_host(url_col))
-               .join(bl_apex, "__host", "left_anti")
-               .drop("__parent", "__host"))
+    dom = docs.withColumn("__dom", registered_domain(url_col))
+    bl = F.broadcast(blocklist.select(
+        registered_domain_from_host(bl_host).alias("__dom")).distinct())
+    out = dom.join(bl, "__dom", "left_anti")
     if keep_domain_col is None:
         return out.drop("__dom")
     return out.withColumnRenamed("__dom", keep_domain_col)

@@ -768,8 +768,7 @@ def prep_training_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("doc_id", F.col("doc_id") + 1000000))
     bench = pages.filter(F.col("doc_id").isin([3, 17, 42])).select("text")
     out = prepare_training_corpus(
-        doubled, bench, near_dup_threshold=0.8, near_dup_max_df=50,
-        pack_budget=512, n_shards=8, portable_shard=True)
+        doubled, bench, near_dup_max_df=50, pack_budget=512, n_shards=8)
     nul = F.lit(None)
     doc_rows = out.select(
         F.lit("doc").alias("stage"), "doc_id", "split",

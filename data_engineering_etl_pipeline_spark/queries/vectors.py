@@ -859,7 +859,7 @@ _PCA_MOMENTS_ORACLE = f"""
 @register("embedding_pca_moments", oracle=_PCA_MOMENTS_ORACLE)
 def embedding_pca_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact distributed covariance of the embedding corpus — the fit
-    surface of the PCA/whitening operator (``similarity.fit_pca_exact``
+    surface of the PCA operator (``similarity.fit_pca_exact``
     / ``apply_pca``, the OPQ-ish rotation step embedding-curation
     pipelines run before cosine dedup or PQ): upper-triangle cells
     ``(i, j, n, sum_q, sum_qi, sum_qj, cov)``.
@@ -873,7 +873,7 @@ def embedding_pca_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB's serial cross-join twin BIT-FOR-BIT, zero tolerance, no
     rounding anywhere. The eigendecomposition itself is k·d driver-side
     work verified against a numpy twin in tests/test_pca.py (byte-stable
-    fit under relayout, orthonormal components, whitened covariance = I).
+    fit under relayout, orthonormal components).
 
     Plan shape (pinned): one mapInPandas pass, ONE exchange on (i, j) —
     d(d+1)/2 + d keys with map-side partial sums, so the covariance

@@ -37,9 +37,20 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .io import require_utc_session
 
     require_utc_session(spark)  # the ntz→timestamp cast below needs UTC
-    # Runtime-set so the read works in any session (see io.load_table).
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    # Runtime-set so the read works in any session (see io.load_table). A
+    # streaming source resolves the physical type per micro-batch for the
+    # life of the query, so when ``ts`` really is TIMESTAMP(NANOS) (it
+    # arrives as bigint) the conf must stay set; otherwise the prior value
+    # is restored, so the read leaks nothing into later batch reads.
+    conf_key = "spark.sql.legacy.parquet.nanosAsLong"
+    prev = spark.conf.get(conf_key, None)
+    spark.conf.set(conf_key, "true")
     schema = spark.read.parquet(path).schema
+    if schema["ts"].dataType.simpleString() != "bigint":
+        if prev is None:
+            spark.conf.unset(conf_key)
+        else:
+            spark.conf.set(conf_key, prev)
     # The driver stores the table as a single FILE; the file-stream source
     # requires a DIRECTORY (its basePath). Stage a link/copy into a scratch
     # dir once per (process, sf_dir) — a test-harness shim only; a real lake
@@ -79,10 +90,7 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
             shutil.copyfile(path, staged)
     df = spark.readStream.schema(schema).parquet(stage)
     # shared normalization with io.load_table — batch is the streaming
-    # oracle, so the two must use literally the same code. (The nanosAsLong
-    # conf set above is deliberately NOT restored here, unlike the batch
-    # loader: a streaming source resolves the physical type per micro-batch
-    # for the life of the query, so an early restore would break it.)
+    # oracle, so the two must use literally the same code.
     from .io import normalize_event_ts
 
     return normalize_event_ts(df)

@@ -124,48 +124,6 @@ def test_quality_filter_composes_with_tfidf_vectorizer(spark):
     assert got[1000] is True and got[1001] is False, got
 
 
-def test_resume_equals_uninterrupted_fit(spark):
-    """Kill-and-resume determinism: 3 iterations then 4 more from the
-    recorded weights == 7 straight — byte equality (the whole loop state
-    is the KB-scale model; every step is exact-deterministic)."""
-    df = _blobs_df(spark)
-    straight = fit_logreg_exact(df, dim=DIM, n_iters=7, lr=0.5)
-    part = fit_logreg_exact(df, dim=DIM, n_iters=3, lr=0.5)
-    resumed = fit_logreg_exact(df, dim=DIM, n_iters=4, lr=0.5,
-                               init_weights=part["weights"],
-                               init_bias=part["bias"])
-    assert resumed["weights"] == straight["weights"]
-    assert resumed["bias"] == straight["bias"]
-    assert part["losses"] + resumed["losses"] == straight["losses"]
-
-
-def test_init_weights_bad_shapes_raise_value_error(spark):
-    import pytest
-
-    df = _blobs_df(spark, n_per=5)
-    for bad in (0.5, [[0.0] * DIM]):
-        with pytest.raises(ValueError, match="init_weights shape"):
-            fit_logreg_exact(df, dim=DIM, n_iters=1, init_weights=bad)
-
-
-def test_early_stop_equals_truncated_full_run(spark):
-    """With tol set, the fit stops once the INTEGER
-    loss sum stops improving by tol — and the returned model is byte-
-    equal to a full run truncated at the last applied update (the stop
-    check never applies a partial step). The planted separable fixture
-    must actually stop before n_iters for a coarse tol."""
-    df = _blobs_df(spark)
-    stopped = fit_logreg_exact(df, dim=DIM, n_iters=40, lr=1.0, tol=0.01)
-    k = len(stopped["losses"])
-    assert k < 40, "planted fixture should plateau well before 40 scans"
-    # k iterations ran; the k-th recorded the loss and then broke without
-    # updating, so k-1 updates were applied
-    full = fit_logreg_exact(df, dim=DIM, n_iters=k - 1, lr=1.0)
-    assert stopped["weights"] == full["weights"]
-    assert stopped["bias"] == full["bias"]
-    assert stopped["losses"][:k - 1] == full["losses"]
-
-
 def test_gate_fold_matches_float_gate_away_from_boundary(spark):
     """logreg_gate_fold (the oracle-able DECISION surface): agrees with
     the float gate sigma(z) >= t wherever |z - logit(t)| exceeds the

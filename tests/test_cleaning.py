@@ -49,9 +49,9 @@ PAGES = [
 ]
 
 
-def _spark_rows(spark, blocklist=None):
+def _spark_rows(spark):
     df = spark.createDataFrame(PAGES, "doc_id long, text string")
-    out = df.select("doc_id", *c4_stats("text", blocklist=blocklist))
+    out = df.select("doc_id", *c4_stats("text"))
     return {r["doc_id"]: r.asDict() for r in out.collect()}
 
 
@@ -75,13 +75,6 @@ def test_c4_hand_cases(spark):
     assert out[5]["n_kept"] == 3
     assert "Only four words" not in out[5]["cleaned"]
     assert "Exactly five words" in out[5]["cleaned"]
-
-
-def test_c4_blocklist_drops_page(spark):
-    out = _spark_rows(spark, blocklist=["schedule"])
-    # pages 4 contains 'schedule'; line rules unchanged, page verdict flips
-    assert out[4]["n_kept"] == 3 and out[4]["keep_page"] is False
-    assert out[0]["keep_page"] is True
 
 
 _GOOD = ("the quick brown fox jumps over that lazy dog with style and grace "
@@ -162,12 +155,12 @@ def test_c4_sql_twin_matches_spark(spark):
     adversarial pages (same check as the doc_c4_line_filter oracle, harder
     inputs)."""
     sdf = (spark.createDataFrame(PAGES, "doc_id long, text string")
-           .select("doc_id", *c4_stats("text", blocklist=["schedule", "don't"]))
+           .select("doc_id", *c4_stats("text"))
            .toPandas().sort_values("doc_id").reset_index(drop=True))
     con = duckdb.connect()
     con.execute("CREATE TABLE pages (doc_id BIGINT, text VARCHAR)")
     con.executemany("INSERT INTO pages VALUES (?, ?)", PAGES)
-    cols = ",\n".join(c4_stats_sql("text", blocklist=["schedule", "don't"]))
+    cols = ",\n".join(c4_stats_sql("text"))
     odf = (con.execute(f"SELECT doc_id, {cols} FROM pages").df()
            .sort_values("doc_id").reset_index(drop=True))
     for c in sdf.columns:

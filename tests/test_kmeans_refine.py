@@ -9,9 +9,7 @@ What the units pin:
 - agreement with a driver-side numpy twin implementing the identical
   quantize→sum→normalize convention;
 - Lloyd semantics: planted-blob recovery, empty clusters keeping their
-  centroid, NULL vectors excluded from the update;
-- the cluster_balanced_sample(refine_iters=...) wiring keeps the sampling
-  invariants (quota cap, full coverage).
+  centroid, NULL vectors excluded from the update.
 """
 
 from __future__ import annotations
@@ -22,8 +20,8 @@ import numpy as np
 from pyspark.sql import functions as F
 
 from data_engineering_etl_pipeline_spark.extensions.similarity import (
-    KMEANS_Q_SCALE, _assign_with_vec, cluster_balanced_sample,
-    kmeans_lloyd_refine, kmeans_update_exact, planted_centroids)
+    KMEANS_Q_SCALE, _assign_with_vec, kmeans_lloyd_refine,
+    kmeans_update_exact, planted_centroids)
 from data_engineering_etl_pipeline_spark.io import load_table
 
 from .conftest import SF_DIR
@@ -146,22 +144,6 @@ def test_null_vectors_excluded_from_update(spark):
     out = kmeans_update_exact(df).collect()
     assert all(r["n_members"] == 1 for r in out), out
     assert len(out) == 4  # 2 clusters x 2 coords; the NULL row vanished
-
-
-def test_cluster_balanced_sample_refine_iters_keeps_invariants(spark):
-    emb = load_table(spark, SF_DIR, "embeddings").select("vec_id",
-                                                         "embedding")
-    n = emb.count()
-    out = cluster_balanced_sample(
-        emb, quota_per_cluster=3, id_col="vec_id", dim=64, seed=321,
-        centroids=planted_centroids(321, 4, 64), refine_iters=2)
-    rows = out.collect()
-    assert len(rows) == n  # full coverage: every row flagged
-    per = {}
-    for r in rows:
-        if r["kept"]:
-            per[r["cid"]] = per.get(r["cid"], 0) + 1
-    assert per and all(v <= 3 for v in per.values()), per
 
 
 def test_degenerate_vectors_dropped_from_refine_both_kernels(spark):

@@ -91,8 +91,9 @@ def test_featureless_docs_fall_back(spark):
     falls back to the stopword heuristic (default) or 'und', with NULL
     z_q either way; fallback values are validated, not guessed."""
     with engine_pin_scope():
-        train = spark.createDataFrame(_rows("train"), _SCHEMA)
-        model = fit_lang_id(train, langs=["de", "en"])
+        train = spark.createDataFrame(
+            [r for r in _rows("train") if r[1] in ("de", "en")], _SCHEMA)
+        model = fit_lang_id(train)
         docs = spark.createDataFrame(
             [(1, None, None), (2, None, "z"), (3, None, "the of and to a"),
              (4, None, "der und von das den")],

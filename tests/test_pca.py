@@ -1,11 +1,11 @@
 """PCA over exact distributed moments (similarity.embedding_moments_exact /
-fit_pca_exact / apply_pca): the whitening/rotation operator.
+fit_pca_exact / apply_pca): the rotation operator.
 
 Pins: hand-computed moment sums; byte-stable fits under relayout (the
 property the sample-based fits cannot give); bit-equality with a
 driver-side numpy twin of the identical quantize→sum→eigh convention;
-orthonormal components with descending eigenvalues; whitened projected
-covariance = identity; NULL/wrong-length vector handling.
+orthonormal components with descending eigenvalues; NULL/wrong-length
+vector handling.
 """
 
 from __future__ import annotations
@@ -91,17 +91,6 @@ def test_components_orthonormal_eigvals_descending(spark):
     assert all(ev[i] >= ev[i + 1] for i in range(len(ev) - 1))
 
 
-def test_whitened_projection_has_identity_covariance(spark):
-    emb = load_table(spark, SF_DIR, "embeddings")
-    model = fit_pca_exact(emb, n_components=6, dim=64)
-    proj = apply_pca(emb, model, whiten=True)
-    p = np.asarray([list(r["pca"]) for r in proj.select("pca").collect()
-                    if r["pca"] is not None])
-    # population covariance of the whitened scores is I up to the ~1e-6
-    # fixed-point quantization of the fitted moments
-    assert np.allclose(np.cov(p.T, bias=True), np.eye(6), atol=1e-2)
-
-
 def test_apply_matches_numpy_and_propagates_null(spark):
     emb = load_table(spark, SF_DIR, "embeddings")
     model = fit_pca_exact(emb, n_components=5, dim=64)
@@ -157,15 +146,16 @@ def test_covariance_exact_cell_identity(spark):
 
 
 def test_project_fold_matches_blas_apply(spark):
-    """The bit-portable fold projection twin and the production BLAS
-    kernel agree to float precision on the planted orthonormal model
-    (different summation orders — allclose, not byte equality; the byte
-    contract is fold-vs-SQL, held by the driver row's zero-tolerance
-    hash)."""
+    """The bit-portable fixed-point projection twin and the production
+    BLAS kernel agree within the documented quantization bound on the
+    planted orthonormal model: each of the ``dim`` floored terms loses
+    less than ``1/q_scale``, plus float slack for the different summation
+    orders (the byte contract is fold-vs-SQL, held by the driver row's
+    zero-tolerance hash)."""
     from data_engineering_etl_pipeline_spark.extensions.similarity import (
         planted_projection, project_fold)
     from data_engineering_etl_pipeline_spark.queries.vectors import (
-        _PCA_DIM, _PCA_PROJ_K, _PCA_PROJ_SEED)
+        _PCA_DIM, _PCA_PROJ_K, _PCA_PROJ_SEED, _PCA_Q)
 
     emb = load_table(spark, SF_DIR, "embeddings").select("vec_id",
                                                          "embedding")
@@ -173,14 +163,15 @@ def test_project_fold_matches_blas_apply(spark):
     # change there cannot silently leave this unit validating a stale one
     model = planted_projection(_PCA_PROJ_SEED, _PCA_PROJ_K, _PCA_DIM)
     fold = {(r["vec_id"], r["pos"]): r["coord"]
-            for r in project_fold(emb, model).collect()}
+            for r in project_fold(emb, model, q_scale=int(_PCA_Q)).collect()}
     blas = apply_pca(emb, model, out_col="pca").collect()
+    bound = _PCA_DIM / _PCA_Q + 1e-9
     n_checked = 0
     for r in blas:
         if r["pca"] is None:
             continue
         for k, y in enumerate(r["pca"]):
-            assert abs(fold[(r["vec_id"], k)] - y) < 1e-9
+            assert abs(fold[(r["vec_id"], k)] - y) < bound
             n_checked += 1
     assert n_checked > 0 and len(fold) == n_checked
 

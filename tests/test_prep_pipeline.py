@@ -73,8 +73,7 @@ def prepared(spark):
     df = spark.createDataFrame(docs, "doc_id long, text string")
     bench = spark.createDataFrame(benchmark, "text string")
     out = prepare_training_corpus(
-        df, bench, min_quality=0.05, near_dup_threshold=0.8,
-        train_frac=0.8, pack_budget=40, n_shards=2).toPandas()
+        df, bench, pack_budget=40, n_shards=2).toPandas()
     return out.set_index("doc_id", drop=False)
 
 
@@ -112,8 +111,7 @@ def test_pipeline_is_deterministic(spark, prepared):
     df = spark.createDataFrame(docs, "doc_id long, text string").repartition(5)
     bench = spark.createDataFrame(benchmark, "text string")
     again = prepare_training_corpus(
-        df, bench, min_quality=0.05, near_dup_threshold=0.8,
-        train_frac=0.8, pack_budget=40, n_shards=2).toPandas()
+        df, bench, pack_budget=40, n_shards=2).toPandas()
     again = again.set_index("doc_id", drop=False)
     assert set(again.index) == set(prepared.index)
     for col in ("text", "split", "n_tokens", "shard", "pack_id"):

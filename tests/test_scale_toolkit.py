@@ -34,39 +34,6 @@ def test_approx_count_distinct_within_rsd_contract(spark):
         assert rel <= 2 * rsd, (et, approx[et], n, rel)
 
 
-def test_perplexity_buckets_approx_accuracy_contract(spark):
-    """perplexity_buckets(approx_accuracy=N) (extensions/corpus.py): each
-    approximate tercile cutoff's RANK in the exact xent distribution must
-    be within n/N of the target rank — Spark's documented deterministic
-    percentile_approx guarantee — and therefore at most 2*(n/N + 1) docs
-    may change bucket vs the exact path. Measured at sf0.1 / N=1000:
-    rank errors 4.7 and 2.3 against the 5.0 bound, bucket diffs ≤ 7."""
-    import bisect
-
-    from data_engineering_etl_pipeline_spark.extensions.corpus import (
-        lm_cross_entropy, perplexity_buckets)
-
-    acc = 1000
-    docs = spark.read.parquet(f"{SF01}/documents.parquet")
-    lw = lm_cross_entropy(docs)
-    xs = sorted(r["xent"] for r in lw.select("xent").collect()
-                if r["xent"] is not None)
-    n = len(xs)
-    cuts = lw.agg(F.percentile_approx(
-        "xent", F.array(F.lit(1 / 3), F.lit(2 / 3)),
-        F.lit(acc)).alias("c")).collect()[0]["c"]
-    for p, cut in zip((1 / 3, 2 / 3), cuts):
-        rank = bisect.bisect_right(xs, cut)
-        assert abs(rank - p * n) <= n / acc + 1, (p, cut, rank, p * n)
-
-    exact = {r["doc_id"]: r["ppl_bucket"]
-             for r in perplexity_buckets(docs).collect()}
-    approx = {r["doc_id"]: r["ppl_bucket"]
-              for r in perplexity_buckets(docs, approx_accuracy=acc).collect()}
-    diffs = sum(1 for d in exact if exact[d] != approx[d])
-    assert diffs <= 2 * (n / acc + 1), diffs
-
-
 def test_split_profile_approx_percentile_swap_contract(spark):
     """corpus_split_profile's documented swap (queries/text.py): the exact
     per-(split, lang) length percentile becomes percentile_approx at

